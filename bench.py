@@ -1,692 +1,257 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
+"""Benchmark harness: runs the headline queries (``headline=True`` in the
+registry) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
-Methodology: steady-state timing — table footers are warmed and each
-query runs once unmeasured (plan compilation, codegen, broadcast build)
-then once measured. That isolates execution cost from one-time JVM/session
-overhead, which is what matters for a long-running serving deployment.
+Methodology: steady-state timing with the protocol of tools/measure.py.
+Table footers are warmed; each query runs once unmeasured (plan
+compilation, codegen, broadcast and artifact builds) and is then timed
+in two interleaved laps over the whole set, keeping the min. Slow and
+regressed queries are re-measured, and regressions that survive are
+re-measured again in a fresh session. The full per-query map goes to
+BENCH_DETAIL.json.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
-from nabatshy_spark.catalog import TABLES, load
-from nabatshy_spark.plans.queries import QUERIES
-from nabatshy_spark.session import get_spark
+from nabatshy_spark import artifacts
+from nabatshy_spark.plans.queries import HEADLINE, QUERIES
+from tools.measure import measure, sf_number, use_scaled_spans, warm_session
 
-HEADLINE = [
-    # reference-surface analytics
-    "pricing_summary",
-    "endpoint_stats",
-    "service_dependency",
-    "combined_metrics",
-    "region_nation_rollup",
-    "trace_rollup",
-    "dynamic_buckets",
-    "search_page",
-    "error_rate_by_priority",
-    "hourly_heatmap",
-    # span-native surface (on the scaled ~660k-span table): the
-    # reference's own read path — membership scans over attr arrays and
-    # the richest metrics route — carries bench weight, not just
-    # extensions.
-    "spans_endpoint_latency",
-    "spans_service_dependency",
-    "spans_attr_pair",
-    "spans_attr_negation",
-    "spans_search_metrics",
-    # training-data pipeline operators
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk",
-    "text_stats",
-    "text_tfidf_top_terms",
-    "sample_hash",
-    "event_funnel",
-    # round 2 additions
-    "search_page_keyset",
-    "decontaminate_corpus",
-    "kmeans_embeddings",
-    "audio_wav_features",
-    "bucketed_revenue_join",
-    "zorder_pruning_stats",
-    "dedup_incremental",
-    # HLL twin carries the headline slot: the exact 4×count_distinct
-    # form (profile_orders) is the EXPAND-×5 plan — audit-only, still
-    # oracle-checked, but not the 100 TB default.
-    "profile_orders_approx",
-    "sliding_window_counts",
-    "curate_corpus",
-    # round 2, second batch
-    "continuous_aggregate",
-    "text_search_and",
-    "pagerank_trade",
-    "chunk_documents",
-    "corpus_split",
-    "vocab_top_terms",
-    "embedding_quantize",
-    "latest_event_per_user",
-    # round 2, third batch
-    "shipping_priority",
-    "local_supplier_volume",
-    "text_search_bm25",
-    "embedding_gram",
-    "orders_diff_summary",
-    "cohort_retention",
-    "hourly_latency_percentiles",
-    "rolling_user_value",
-    "spans_critical_path",
-    # round 3 additions
-    "boilerplate_scrub",
-    "quality_model_scores",
-    "sample_token_mixture",
-    "trade_triangles",
-    # round 3, second batch
-    "text_search_phrase",
-    "repeated_ngram_docs",
-    "frequent_part_pairs",
-    "dedup_cluster_stats",
-    # round 3, third batch
-    "data_quality_report",
-    "value_trends",
-    "approx_revenue_estimate",
-    "spans_concurrency",
-    "spans_self_time",
-    "spans_error_root_cause",
-    "customer_rfm_segments",
-    "top_session_paths",
-    "trade_reach_hops",
-    # round 4 additions
-    "er_part_pairs",
-    "er_part_clusters",
-    "dup_ngram_coverage",
-    "dup_span_chars",
-    "embedding_norm_stats",
-    "ewma_user_value",
-    "vocab_zipf_slope",
-    "image_dup_groups",
-    "spans_apdex",
-    "sql_order_priority_check",
-    "sql_nation_trade_volume",
-    # round 4, second batch
-    "dedup_keep_best",
-    "sql_market_share",
-    "sql_customer_distribution",
-    "sql_discounted_revenue",
-    "sql_returned_item_report",
-    "spans_error_budget",
-    "source_overlap_matrix",
-    "token_count_histogram",
-    "curation_funnel",
-    "spans_top_endpoints_per_service",
-    "spans_duration_histogram",
-    "spans_latency_trend",
-    "hourly_event_forecast",
-    "ab_test_lift",
-    "join_skew_report",
-    "video_scene_changes",
-    "langid_confusion",
-    "spans_anomalous_traces",
-    "sql_order_backlog",
-    "audience_overlap",
-    "user_stickiness",
-    "brand_affinity",
-    "conversion_attribution",
-    "supplier_concentration",
-    "user_type_scd2",
-    "sql_top_customers_per_nation",
-    "revenue_gini",
-    "doc_token_entropy",
-    "user_burstiness",
-    "events_dow_hour_profile",
-    "order_priority_sla",
-    "length_quality_correlation",
-    # round 5 additions
-    "sql_important_parts",
-    "sql_supplier_part_variety",
-    "sql_promo_part_suppliers",
-    "gopher_rule_flags",
-    "export_shard_plan",
-    "k_anonymity_audit",
-    "weighted_median_price",
-    "feature_spine_join",
-    "km_churn_survival",
-    "benford_price_audit",
-    "stream_batch_parity_rollup",
-    "scd2_point_in_time_join",
-    "heaps_law_fit",
-    "did_purchase_lift",
-    "embedding_label_drift",
-    "decontaminate_semantic",
-    "epoch_shuffle_order",
-    "padding_efficiency",
-    "sql_brand_qty_revenue",
-    "parquet_layout_audit",
-    "search_eval_ndcg",
-    "partition_size_advisor",
-    # round-5 closing additions
-    "dsir_selection",
-    "search_hard_negatives",
-    "l_diversity_audit",
-    "spans_burn_rate_alerts",
-    "spans_retry_storms",
-    "spans_clock_skew_audit",
-    "lpa_trade_communities",
-    "spans_mad_outliers",
-    "spans_tail_sampling",
-    "association_rules_parts",
-    "spans_attr_facets",
-    "customer_reorder_intervals",
-    "embedding_pca_variance",
-    "supplier_scorecard",
-    "discount_elasticity_by_brand",
-    "spans_error_pareto",
-    "spans_trace_shapes",
-    "vocab_oov_rate_by_source",
-    "user_lifecycle_states",
-    # round 6 additions
-    "mv_incremental_refresh",
-    "hll_user_rollup",
-    "ann_threshold_search",
-    "blocklist_term_hits",
-    "cohort_ltv_curve",
-    "spans_dependency_drift",
-    "cluster_safe_split",
-    "column_stats_profile",
-    "table_checksum_audit",
-    "priority_sample_docs",
-    "pareto_suppliers",
-    "fuzzy_name_pairs",
-    "spans_overlap_pairs",
-    "join_size_estimate",
-    # round 7 additions
-    "stratified_kfold_assignment",
-    "class_balance_resample",
-    "knn_label_eval",
-    "embedding_outlier_mahal",
-    "spans_service_busy_time",
-    "dictionary_encoding_advisor",
-    "degree_distribution_trade",
-    "weighted_percentiles_brand",
-    "image_dhash_near_dups",
-    "kcore_trade_pruning",
-    "event_value_twap",
-    "part_abc_classes",
-    "psi_order_value_drift",
-    "compression_quality_flags",
-    "supplier_single_source_risk",
-    "embedding_label_separation",
-    "percentile_accuracy_audit",
-    # round-8 relational additions (minhash_dedup_eval is excluded: an
-    # eval gate running 3 full dedup configs + the exact differential —
-    # 23 s at sf0.1 by design, not a throughput query)
-    "sales_rollup_cube",
-    "orders_pivot_status_by_year",
-    "part_size_price_unpivot",
-    "range_join_price_bands",
-    "supplier_balance_quartiles",
-    "customer_order_streaks",
-    "bloom_pruned_fact_join",
-    "customer_yearly_setops",
-    "nation_revenue_yoy_growth",
-    "sequence_packing_plan",
-    "spans_latency_exemplars",
-    "chi2_priority_returnflag",
-    # round 9 additions: exact-substring dedup (Lee et al. ExactSubstr)
-    "longest_dup_substrings",
-    "dup_substring_doc_stats",
-    "exactsubstr_cut_plan",
-    "intra_doc_repeats",
-    "exactsubstr_source_coverage",
-    "decontaminate_exactsubstr",
-    # round 10 additions: bounded-output entity resolution
-    # (er_topk_eval is excluded like minhash_dedup_eval: an audit gate
-    # that deliberately pays the quadratic all-pairs twin's cost)
-    "er_part_topk",
-    "exactsubstr_rewrite_preview",
-    # round 11: the document-ER bounded contract + its cluster rollup
-    # (er_doc_topk_eval is excluded like er_topk_eval/minhash_dedup_eval:
-    # an audit gate that deliberately pays the exact uncapped twin's cost)
-    "er_doc_topk",
-    "er_doc_clusters",
-]
-
-# Headline queries added THIS round — each gets an automatic
-# fresh-session solo adjudication on its first recorded sweep (VERDICT
-# r10 task #3). Reset when a new round adds queries.
-NEW_THIS_ROUND = ["er_doc_topk", "er_doc_clusters"]
+# The driver keeps only the last 2000 bytes of stdout and parses the
+# final JSON line from that tail; 400 bytes stay free for whatever the
+# JVM writes after our print.
+LINE_BUDGET = 1600
+# Regression gates vs the previous recorded round: only bases of at
+# least 0.2 s, where 25% is signal rather than scheduler jitter.
+MIN_BASE_S = 0.2
+REGRESSION = 1.25
 
 
-def _ensure_scaled_spans(sf: float) -> None:
-    """Point the span-native queries at a span table sized to the sf
-    (~10 spans per sf0.001-trace-unit, ≈660k spans at sf0.1 — the same
-    order as lineitem) so they exercise real parallelism; the committed
-    1.1k-row fixture remains the correctness/oracle source."""
-    import tempfile
-
-    from tools.gen_spans_fixture import write_scaled
-
-    n_traces = max(250, int(1_500_000 * sf))
-    path = os.path.join(tempfile.gettempdir(), f"nabatshy_spans_{n_traces}tr")
-    os.environ["NABATSHY_SPANS_PATH"] = write_scaled(path, n_traces)
-
-
-def _prev_bench(here: str) -> tuple[int | None, dict[str, float]]:
-    """Latest BENCH_r{N}.json in the repo root → (round, per-query times)."""
-    import glob
-    import re
-
-    best: tuple[int, dict[str, float], float | None] | None = None
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
+def _prev_bench() -> tuple[int | None, dict[str, float], bool]:
+    """Latest BENCH_r{N}.json in the repo root → (round, per-query
+    times, whether the map covers the whole sweep)."""
+    best: tuple[int, dict[str, float], float | None, int | None] | None = None
+    for p in glob.glob(os.path.join(HERE, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if not m:
             continue
         try:
             with open(p) as fh:
                 data = json.load(fh)
-            # the driver wraps our JSON line under "parsed" (which is
-            # null when the line overflowed its tail buffer — r4)
-            q = (
-                data.get("queries")
-                or (data.get("parsed") or {}).get("queries")
-                or {}
-            )
-            tot = data.get("value") or (data.get("parsed") or {}).get("value")
         except (OSError, json.JSONDecodeError):
             continue
-        if not q:
-            continue
+        # the driver wraps our JSON line under "parsed" (null when the
+        # line overflowed its tail buffer)
+        line = data if data.get("queries") else (data.get("parsed") or {})
+        q = line.get("queries") or {}
         n = int(m.group(1))
-        if best is None or n > best[0]:
-            best = (n, {k: float(v) for k, v in q.items()}, tot)
+        if q and (best is None or n > best[0]):
+            q = {k: float(v) for k, v in q.items()}
+            best = (n, q, line.get("value"), line.get("n_queries"))
     if best is None:
-        return (None, {})
-    # The recorded JSON line folds the fast tail to fit the driver's
-    # 2000-byte stdout buffer, so it carries only the slowest ~50
-    # queries. The committed BENCH_DETAIL.json holds the FULL per-query
-    # map — but it is overwritten by EVERY bench run (including local
-    # sf0.01 iterations and post-record re-runs), so it may not come
-    # from the run that produced the latest BENCH_r{N} line. Merge it
-    # only when its stamped headline total matches that line's value
-    # (ADVICE r7): a mixed-run baseline makes the >25% regression
-    # detector re-measure the wrong queries or miss real regressions.
+        return (None, {}, False)
+    n, line_q, total, n_queries = best
+    # The recorded line folds the fast tail, so it carries only the
+    # slowest ~50 queries. BENCH_DETAIL.json holds the full map but is
+    # overwritten by every bench run; merge it only when its stamped
+    # total equals the line's value (same run), otherwise the regression
+    # gates would re-measure the wrong queries.
     try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as fh:
+        with open(os.path.join(HERE, "BENCH_DETAIL.json")) as fh:
             detail = json.load(fh)
         same_run = (
             detail.get("total") is not None
-            and best[2] is not None
-            and abs(float(detail["total"]) - float(best[2])) < 1e-6
+            and total is not None
+            and abs(float(detail["total"]) - float(total)) < 1e-6
         )
         if detail.get("sf") == 0.1 and detail.get("queries") and same_run:
             merged = {k: float(v) for k, v in detail["queries"].items()}
-            merged.update(best[1])  # the recorded line stays canonical
-            return (best[0], merged)
+            merged.update(line_q)  # the recorded line stays canonical
+            return (n, merged, True)
     except (OSError, json.JSONDecodeError):
         pass
-    return (best[0], best[1])
+    return (n, line_q, n_queries is not None and len(line_q) >= n_queries)
+
+
+def _regressed(timings: dict[str, float], prev: dict[str, float], cap: int) -> list[str]:
+    """The ``cap`` worst ratios among queries slower than REGRESSION x
+    their previous time."""
+    return sorted(
+        (
+            k
+            for k, v in timings.items()
+            if k in prev and prev[k] >= MIN_BASE_S and v > REGRESSION * prev[k]
+        ),
+        key=lambda k: timings[k] / prev[k],
+        reverse=True,
+    )[:cap]
+
+
+def _artifact_root() -> str | None:
+    """A fresh per-run artifact root, so every fingerprint-keyed artifact
+    is rebuilt (and its build time recorded) this run instead of timing
+    warm reads of a possibly stale build. An explicit
+    SPARK_GRAFT_ARTIFACT_DIR is respected (correctness-only runs)."""
+    if "SPARK_GRAFT_ARTIFACT_DIR" in os.environ:
+        return None
+    # Crashed runs leave their roots behind; sweep ones older than 6 h.
+    tmp = tempfile.gettempdir()
+    cutoff = time.time() - 6 * 3600
+    for e in os.listdir(tmp):
+        if e.startswith("nabatshy_bench_artifacts_"):
+            p = os.path.join(tmp, e)
+            try:
+                if os.stat(p).st_mtime < cutoff:
+                    shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass
+    root = tempfile.mkdtemp(prefix="nabatshy_bench_artifacts_")
+    os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = root
+    return root
+
+
+def _line(timings: dict[str, float], total: float, sf, top_n: int) -> str:
+    by_cost = sorted(timings, key=timings.get, reverse=True)
+    rest = by_cost[top_n:]
+    payload = {
+        "metric": "headline_queries_total_sec",
+        "value": total,
+        "unit": "sec",
+        "queries": {k: timings[k] for k in by_cost[:top_n]},
+        "sf": sf,
+        "n_queries": len(timings),
+        "omitted_fast_queries": len(rest),
+        "omitted_fast_sec": round(sum(timings[k] for k in rest), 4),
+        # once-per-corpus build cost, not part of `value`
+        "artifact_build_sec": round(sum(artifacts.BUILD_TIMES.values()), 4),
+        "detail": "BENCH_DETAIL.json",
+    }
+    return json.dumps(payload, separators=(",", ":"))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    sf_num = float(sf) if sf.replace(".", "").isdigit() else 0.1
-    # Per-RUN artifact root (ADVICE r9): fingerprint-keyed artifacts
-    # (shared ngram pairs, substring runs, IVF indexes, rollups,
-    # layouts) otherwise persist across bench runs and sessions, so
-    # consumer timings silently measure warm reads of a possibly
-    # pre-regression build. A fresh root forces every artifact to be
-    # rebuilt THIS run — the build happens during the first consumer's
-    # unmeasured warm lap, its cost is recorded per-artifact from
-    # artifacts.BUILD_TIMES into BENCH_DETAIL.json, and the measured
-    # laps stay steady-state consumer reads. An explicit
-    # SPARK_GRAFT_ARTIFACT_DIR is respected (escape hatch for
-    # correctness-only runs that want the warm cache).
-    import shutil
-    import tempfile
-
-    from nabatshy_spark import artifacts
-
-    run_artifact_dir = None
-    if "SPARK_GRAFT_ARTIFACT_DIR" not in os.environ:
-        # Crashed earlier runs leave their roots behind (each run uses
-        # a fresh one, so artifacts' own in-root GC never revisits
-        # them) — sweep siblings older than 6 h before creating ours,
-        # bounding /tmp growth to one run's artifacts plus recents.
-        tmp = tempfile.gettempdir()
-        cutoff = time.time() - 6 * 3600
-        for e in os.listdir(tmp):
-            if e.startswith("nabatshy_bench_artifacts_"):
-                p = os.path.join(tmp, e)
-                try:
-                    if os.stat(p).st_mtime < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
-        run_artifact_dir = tempfile.mkdtemp(prefix="nabatshy_bench_artifacts_")
-        os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = run_artifact_dir
+    run_artifact_dir = _artifact_root()
     artifacts.BUILD_TIMES.clear()
-    _ensure_scaled_spans(sf_num)
-    spark = get_spark("nabatshy_bench")
+    use_scaled_spans(sf_number(sf_dir))
+    spark = warm_session("nabatshy_bench", sf_dir)
 
-    # Warm footers/schemas once so scans measure data, not metadata.
-    for t in TABLES:
-        load(spark, sf_dir, t).count()
+    def timed(name: str, **kw) -> float:
+        return measure(spark, lambda: QUERIES[name](spark, sf_dir), **kw)
 
-    # Two INTERLEAVED full laps over the headline set, min per query
-    # (VERDICT r10 task #5): the previous back-to-back min-of-2 sampled
-    # both measurements at the same sweep position, so ambient host/JVM
-    # drift over a ~3-minute sweep showed up as per-query swings up to
-    # 2× (curate_corpus 5.36 sweep vs 3.49 solo) and kept forcing
-    # manual adjudication. With the two samples taken a full lap apart,
-    # slow-varying drift hits each query in at most one lap and the min
-    # cancels it; the run cost is unchanged (warm + 2 measured runs per
-    # query either way).
-    import gc
-
-    names = [n for n in HEADLINE if n in QUERIES]
-    timings: dict[str, float] = {}
-    # Per-lap samples, recorded verbatim into BENCH_DETAIL (VERDICT r11
-    # task #6): two-lap agreement is the cheap adjudication signal for
-    # a mover on an untouched path — laps that agree mean the query is
-    # really that fast/slow; laps that disagree mean sweep-position
-    # noise the min already discounts.
+    # Two interleaved laps rather than back-to-back runs: slow host/JVM
+    # drift over the sweep then hits each query in at most one lap and
+    # the min cancels it. Lap 0 also carries the warm run.
+    names = [n for n in QUERIES if n in HEADLINE]
     lap_times: dict[str, list[float]] = {}
     for lap in range(2):
         for i, name in enumerate(names, start=1):
-            if lap == 0:
-                # warm: compile + codegen (+ any artifact build, which
-                # is recorded separately via artifacts.BUILD_TIMES)
-                QUERIES[name](spark, sf_dir).collect()
-            # Clear BEFORE the timed run, not only between queries:
-            # operators that persist() internally (minhash/jaccard/
-            # shingle relations) would otherwise serve the lap-0
-            # measurement from the warm lap's cache via Spark's
-            # cache-manager plan matching — the round-10 decontaminate
-            # adjudication, closed in the protocol itself (round 11).
-            # This also drops earlier queries' leftover cached copies,
-            # so each query measures its own cost, not GC debt.
-            spark.catalog.clearCache()
-            # clearCache does NOT free localCheckpoint RDD blocks —
-            # those are only released by the ContextCleaner once the
-            # Python-side DataFrame refs die. Collect them promptly,
-            # and periodically ask the JVM for a full GC, so a
-            # 100+-query run doesn't build up storage-memory debt that
-            # inflates later measurements (observed: identical queries
-            # 8x slower at slot ~65 than solo).
-            gc.collect()
-            if i % 10 == 0:
-                spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).collect()
-            elapsed = time.perf_counter() - t0
-            lap_times.setdefault(name, []).append(round(elapsed, 4))
-            timings[name] = round(
-                min(timings.get(name, float("inf")), elapsed), 4
-            )
+            t = timed(name, warm=lap == 0, jvm_gc=i % 10 == 0)
+            lap_times.setdefault(name, []).append(round(t, 4))
+    timings = {k: min(v) for k, v in lap_times.items()}
 
-    # Outlier re-measure: a 100+-query single-JVM sweep shows transient
-    # mid-run inflation (same query 4-8x slower in-sequence than solo,
-    # not attributable to the query itself — see SCALE.md round-4/5
-    # notes). Re-measure the slowest queries after a full GC and keep
-    # the min; steady-state per-query cost is the metric, not
-    # position-in-sweep luck.
+    # Re-measure the slowest queries and the worst regressors (min-of-2
+    # more after a full GC): a long single-JVM sweep shows transient
+    # mid-run inflation that is position-in-sweep luck, not query cost.
+    # The regressor cap keeps an environmental shift of the whole sweep
+    # from doubling the run.
     spark.sparkContext._jvm.System.gc()
-    prev_round, prev = _prev_bench(os.path.dirname(os.path.abspath(__file__)))
-    # Also re-measure any query that regressed >25% vs the previous
-    # round's recorded time (only where the base is big enough for 25%
-    # to be signal, not scheduler jitter): round 6 left three
-    # unexplained +0.5 s deltas on untouched queries; with this rule
-    # sweep-position noise can't masquerade as a regression — a delta
-    # that survives min-of-4-with-GC is real.
-    regressed = sorted(
-        (
-            k
-            for k, v in timings.items()
-            if k in prev and prev[k] >= 0.2 and v > 1.25 * prev[k]
-        ),
-        key=lambda k: timings[k] / prev[k],
-        reverse=True,
-    )
-    # Cap the regression re-measure: when a large fraction of the sweep
-    # "regresses" the shift is environmental (JVM/host variance), and
-    # re-running everything would double bench wall time — re-measure
-    # only the 20 worst ratios; min-of-4 on those separates real
-    # regressions from the global shift.
-    regressed = regressed[:20]
+    prev_round, prev, prev_full = _prev_bench()
     slowest = sorted(timings, key=timings.get, reverse=True)[:10]
-    remeasured = list(dict.fromkeys(slowest + regressed))
+    remeasured = list(dict.fromkeys(slowest + _regressed(timings, prev, 20)))
     for name in remeasured:
-        best = timings[name]
-        for _ in range(2):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
-            # Clear between the two runs too — otherwise run 2 can hit
-            # cache/GC state left by run 1 and the min isn't a clean
-            # steady-state sample (ADVICE r5).
-            spark.catalog.clearCache()
-            import gc
-
-            gc.collect()
-        timings[name] = round(best, 4)
+        timings[name] = round(min(timings[name], timed(name, runs=2)), 4)
 
     total = round(sum(timings.values()), 4)
-    # Per-query delta vs the previous round's recorded bench: the
-    # headline set grows round over round, so the comparable signal is
-    # per-query, not the total.
-    delta = {
-        k: round(v - prev[k], 4) for k, v in timings.items() if k in prev
-    }
+    delta = {k: round(v - prev[k], 4) for k, v in timings.items() if k in prev}
 
-    # --- post-sweep SOLO adjudication (VERDICT r8 task #2) ---------------
-    # The in-sweep re-measure above still runs inside a JVM carrying a
-    # 100+-query session's storage/GC debt, so a final recorded round
-    # could ship an unexplained >1.5x mover that only a manual solo
-    # re-measure would adjudicate (r8 shipped exactly one). Close the
-    # protocol hole structurally: any common query still >1.5x its
-    # previous-round time after the sweep gets re-measured in a FRESH
-    # SparkSession (stop + rebuild, footers re-warmed), fresh lineage
-    # per lap, clearCache+gc, min-of-4 — and the solo number is written
-    # into BENCH_DETAIL.json BESIDE the sweep number. The sweep number
-    # stays canonical in `queries` (the recorded metric is the sweep);
-    # the solo number is the adjudication evidence: solo ~= prev means
-    # sweep-position noise, solo >> prev means a real regression with
-    # the session variable eliminated.
-    # Only meaningful at the recorded-round scale: the prev baseline is
-    # sf0.1, so comparing any other corpus against it would trigger (or
-    # mask) movers spuriously. Gate on the literal dir-name SF — the
-    # sf_num fallback maps ANY non-numeric dir name to 0.1, which would
-    # enable this pass for an arbitrary corpus.
-    # 1.25x gate (VERDICT r11 task #6 — was 1.5x): r11 shipped two
-    # >25% regressions on untouched paths (endpoint_stats 0.69x,
-    # weighted_percentiles_brand 0.76x) with no adjudication line
-    # because both sat under the old gate. The [:15] cap still bounds
-    # solo time when ambient drift moves a broad slice of the sweep.
-    movers = (
-        sorted(
-            (
-                k
-                for k, v in timings.items()
-                if k in prev and prev[k] >= 0.2 and v > 1.25 * prev[k]
-            ),
-            key=lambda k: timings[k] / prev[k],
-            reverse=True,
-        )[:15]
-        if sf == "0.1"
-        else []
-    )
-    # A query with NO previous-round entry bypassed the >1.5x gate
-    # entirely, so its FIRST recorded number was never solo-checked —
-    # er_part_topk entered the r10 books at 7.11 s sweep vs 2.96 s
-    # same-protocol solo with nobody required to reconcile that
-    # (VERDICT r10 task #3). Every first-timer now gets the same
-    # fresh-session solo re-measure and adjudication line as a mover.
-    # The list is EXPLICIT (updated alongside HEADLINE), not inferred
-    # from absence in the previous baseline: the prev map degrades to
-    # the recorded line's slowest ~50 whenever BENCH_DETAIL.json is
-    # from a different run (any intermediate local sweep overwrites
-    # it), and inferring "new" from that flagged ~150 established
-    # queries in one measured run — a 20-minute solo flood.
+    # Fresh-session solo adjudication, only at the recorded scale (the
+    # baseline is sf0.1): every query still past the regression gate,
+    # and every query with no previous time, is re-measured min-of-4 in
+    # a new session so the session's storage/GC debt is ruled out. The
+    # sweep number stays canonical; the solo number is the evidence.
+    # First-timers need the previous full per-query map: against the
+    # truncated line every fast query would look new.
+    at_scale = sf == "0.1"
+    movers = _regressed(timings, prev, 15) if at_scale else []
     first_timers = (
-        [k for k in NEW_THIS_ROUND if k in timings and k not in prev]
-        if sf == "0.1" and prev
-        else []
+        [k for k in timings if k not in prev] if at_scale and prev_full else []
     )
     solo_targets = list(dict.fromkeys(movers + first_timers))
     solo: dict[str, float] = {}
     if solo_targets:
         spark.stop()
-        spark = get_spark("nabatshy_bench_solo")
-        for t in TABLES:
-            load(spark, sf_dir, t).count()
-
+        spark = warm_session("nabatshy_bench_solo", sf_dir)
         for name in solo_targets:
-            QUERIES[name](spark, sf_dir).collect()  # warm compile/codegen
-            best = float("inf")
-            for _ in range(4):
-                spark.catalog.clearCache()
-                gc.collect()
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).collect()
-                best = min(best, time.perf_counter() - t0)
-            solo[name] = round(best, 4)
-    here = os.path.dirname(os.path.abspath(__file__))
-    # Persistent adjudication log (VERDICT r9 task #7): BENCH_DETAIL is
-    # overwritten by EVERY bench run, so a mover flagged in the
-    # builder's pre-validation sweep but band-interior in the driver's
-    # final sweep would leave its solo evidence only in prose. Append
-    # each run's flagged movers + fresh-session solo numbers here; the
-    # verdict can read every adjudication from this one file.
-    if solo_targets:
-        with open(os.path.join(here, "BENCH_ADJUDICATIONS.jsonl"), "a") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                        "baseline_round": prev_round,
-                        # "prev": null marks a first-timer (no previous
-                        # round entry — adjudicated on entry, task #3).
-                        "movers": {
-                            k: {
-                                "sweep": timings[k],
-                                "prev": prev.get(k),
-                                "solo": solo.get(k),
-                            }
-                            for k in solo_targets
-                        },
-                    },
-                    sort_keys=True,
-                )
-                + "\n"
-            )
+            solo[name] = round(timed(name, runs=4, warm=True), 4)
+        # BENCH_DETAIL is overwritten by every run; this log keeps every
+        # run's adjudications.
+        with open(os.path.join(HERE, "BENCH_ADJUDICATIONS.jsonl"), "a") as fh:
+            record = {
+                "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                "sf": sf_val,
+                "baseline_round": prev_round,
+                # "prev": null marks a first-timer
+                "movers": {
+                    k: {"sweep": timings[k], "prev": prev.get(k), "solo": solo.get(k)}
+                    for k in solo_targets
+                },
+            }
+            fh.write(json.dumps(record, sort_keys=True) + "\n")
+
     detail_payload = {
-                "queries": timings,
-                # Per-artifact build seconds for every fingerprint-keyed
-                # artifact built THIS run (fresh per-run root, so all of
-                # them). Builds run inside warm laps by design: headline
-                # timings are steady-state consumer reads, build cost is
-                # visible here instead of hidden in whichever query
-                # touched the cold artifact first (VERDICT r9 task #2).
-                "artifact_builds": dict(artifacts.BUILD_TIMES),
-                # Run stamp: _prev_bench merges this file into the
-                # latest BENCH_r{N} baseline only when this total
-                # equals that line's recorded value (same-run proof).
-                "total": total,
-                "prev_round": prev_round,
-                "delta_vs_prev": delta,
-                # Which queries got the min-of-4 outlier re-measure (all
-                # others are min-of-2): deltas for these partly reflect
-                # the measurement policy, so it's recorded, not hidden.
-                "remeasured": remeasured,
-                # Fresh-session min-of-4 numbers for every common query
-                # that ended the sweep >1.25x its previous-round time —
-                # the structural fix for unadjudicated movers (VERDICT
-                # r8 task #2; gate lowered r12). Empty dict = no such
-                # movers.
-                "solo_adjudication": solo,
-                # Both interleaved-lap samples per query (VERDICT r11
-                # task #6): the recorded time is their min; agreement
-                # between laps distinguishes a real shift from
-                # sweep-position noise without a solo run.
-                "lap_times": lap_times,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "queries": timings,
+        # per-artifact build seconds (fresh root: every artifact built
+        # this run, inside the warm lap)
+        "artifact_builds": dict(artifacts.BUILD_TIMES),
+        # run stamp: _prev_bench merges this file only into the
+        # BENCH_r{N} line with the same value
+        "total": total,
+        "prev_round": prev_round,
+        "delta_vs_prev": delta,
+        # min-of-4 instead of min-of-2 for these
+        "remeasured": remeasured,
+        "solo_adjudication": solo,
+        # False: only the truncated recorded line was available, so no
+        # query was flagged as a first-timer
+        "prev_map_full": prev_full,
+        "lap_times": lap_times,
+        "sf": sf_val,
     }
-    with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
-        json.dump(detail_payload, fh, indent=1, sort_keys=True)
-    # Per-ROUND copy of the full map (VERDICT r11 task #2): BENCH_DETAIL
-    # is overwritten by every bench run at every sf, so the recorded
-    # round's full per-query map was unrecoverable whenever a later
-    # local run clobbered it — PERF then mistook the 2000-byte line's
-    # slowest-50 fold for dropped/new queries. At the recorded scale,
-    # also write BENCH_DETAIL_r{N}.json (N = the round after the latest
-    # recorded baseline); additions-only, the one-line stdout contract
-    # is untouched.
-    if sf == "0.1" and prev_round is not None:
-        with open(
-            os.path.join(here, f"BENCH_DETAIL_r{prev_round + 1}.json"), "w"
-        ) as fh:
+    outs = ["BENCH_DETAIL.json"]
+    if at_scale and prev_round is not None:
+        # per-round copy: later local runs overwrite BENCH_DETAIL.json
+        outs.append(f"BENCH_DETAIL_r{prev_round + 1}.json")
+    for out in outs:
+        with open(os.path.join(HERE, out), "w") as fh:
             json.dump(detail_payload, fh, indent=1, sort_keys=True)
 
-    # The driver keeps only the LAST 2000 BYTES of stdout and parses the
-    # final JSON line from that tail — round 4's line (105-query map +
-    # delta map) overflowed it and the round was recorded with
-    # parsed=null. Keep the final line under budget: report the slowest
-    # queries individually and fold the fast tail into one aggregate;
-    # the full per-query map is committed as BENCH_DETAIL.json.
-    # 400-byte margin inside the 2000-byte tail: anything the JVM
-    # writes to stdout after our print eats from the same budget.
-    LINE_BUDGET = 1600
-    by_cost = sorted(timings, key=timings.get, reverse=True)
-
-    def _line(top_n: int) -> str:
-        top = {k: timings[k] for k in by_cost[:top_n]}
-        rest = [k for k in by_cost[top_n:]]
-        payload = {
-            "metric": "headline_queries_total_sec",
-            "value": total,
-            "unit": "sec",
-            "queries": top,
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "n_queries": len(timings),
-            "omitted_fast_queries": len(rest),
-            "omitted_fast_sec": round(sum(timings[k] for k in rest), 4),
-            # Total artifact-build seconds this run (fresh per-run
-            # artifact root; per-artifact lines in BENCH_DETAIL.json).
-            # NOT included in `value`: builds are once-per-corpus jobs,
-            # `value` is the steady-state consumer sweep.
-            "artifact_build_sec": round(
-                sum(artifacts.BUILD_TIMES.values()), 4
-            ),
-            "detail": "BENCH_DETAIL.json",
-        }
-        return json.dumps(payload, separators=(",", ":"))
-
+    # Report the slowest queries individually and fold the fast tail
+    # into one aggregate until the line fits the budget.
     n = len(timings)
-    line = _line(n)
+    line = _line(timings, total, sf_val, n)
     while n > 1 and len(line) > LINE_BUDGET:
         n -= 1
-        line = _line(n)
+        line = _line(timings, total, sf_val, n)
     print(line)
-    # The per-run artifact root served its purpose (fresh builds,
-    # measured); zorder/bucketed layouts in it are full table copies,
-    # so leaving it would grow /tmp by GBs per run.
+    # zorder/bucketed layouts in the artifact root are full table copies
     if run_artifact_dir is not None:
-        import shutil
-
         shutil.rmtree(run_artifact_dir, ignore_errors=True)
 
 

@@ -117,6 +117,13 @@ def search_predicate(
     return pred
 
 
+# the columns search_spans returns, and so its valid sort fields
+SEARCH_COLUMNS = (
+    "trace_id", "span_id", "parent_span_id", "name", "scope_name",
+    "start_time_unix_nano", "duration_ms", "has_error",
+)
+
+
 def search_spans(
     df: DataFrame,
     query: str = "",
@@ -132,6 +139,8 @@ def search_spans(
     DSL parse (fallback → broad search), trace/span mode (P10), time
     range (P3), has_error projection, dynamic sort (O3), pagination
     (O4; span_id appended as total-order tiebreaker)."""
+    if sort_field not in SEARCH_COLUMNS:
+        raise ValueError(f"invalid sort field '{sort_field}'")
     pred = search_predicate(query, trace_or_span, start_ns, end_ns)
     sort_col = F.col(sort_field)
     primary = sort_col.desc() if sort_order == "desc" else sort_col.asc()
@@ -150,6 +159,24 @@ def search_spans(
         .orderBy(primary, F.col("span_id").asc())
         .offset((page - 1) * page_size)
         .limit(page_size)
+    )
+
+
+def slowest_traces(df: DataFrame, n: int) -> DataFrame:
+    """P1/P2/O1/O2 (api/service.go:177-185): the ``n`` slowest root
+    spans; start time then trace id break duration ties."""
+    return (
+        df.filter(F.col("parent_span_id") == "")
+        .select(
+            "trace_id", "name", "scope_name", duration_ms_col(),
+            "start_time_unix_nano",
+        )
+        .orderBy(
+            F.col("duration_ms").desc(),
+            F.col("start_time_unix_nano").desc(),
+            F.col("trace_id").asc(),
+        )
+        .limit(n)
     )
 
 

@@ -2425,7 +2425,7 @@ ORDER BY n_occurrences DESC, path ASC
 LIMIT 20
 """
 
-# --- round 4: TPC-H-shaped SQL surface -------------------------------------
+# --- TPC-H-shaped SQL surface ---------------------------------------------
 
 ORACLES["sql_small_qty_revenue"] = """
 SELECT round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
@@ -2495,7 +2495,7 @@ GROUP BY c.c_nationkey
 ORDER BY c.c_nationkey
 """
 
-# --- round 4: entity resolution / coverage / embedding health --------------
+# --- entity resolution / coverage / embedding health ----------------------
 
 _ER_SCORED_SQL = """
   SELECT p.ia AS id_a, p.ib AS id_b,
@@ -4884,7 +4884,7 @@ SELECT day::DATE AS day,
 FROM states GROUP BY 1 ORDER BY 1
 """
 
-# ---- round 6 --------------------------------------------------------------
+# ---- incremental refresh, sketches, samplers, layout audits ---------------
 
 ORACLES["mv_incremental_refresh"] = """
 SELECT date_trunc('month', l_shipdate)::DATE AS ship_month,
@@ -5155,7 +5155,7 @@ SELECT t.true_join_size, est.cms_estimate,
 FROM t, est
 """
 
-# ---- Round-7 oracles ----
+# ---- splits, embedding audits, graph pruning, drift ----
 
 ORACLES["stratified_kfold_assignment"] = """
 WITH f AS (
@@ -5525,7 +5525,7 @@ GROUP BY 1 ORDER BY 1
 
 
 # ---------------------------------------------------------------------------
-# round-8 queries (plans/round8_queries.py)
+# reshaping, set operations, range joins, streaks, packing
 # ---------------------------------------------------------------------------
 
 ORACLES["sales_rollup_cube"] = """
@@ -5724,7 +5724,7 @@ SELECT max(t)::BIGINT AS n_lineitems,
 FROM m
 """
 
-# Round-9: exact-substring dedup (operators/suffixes.py). The oracle
+# Exact-substring dedup (operators/suffixes.py). The oracle
 # groups windows by their 50-char STRING; Spark shuffles the xxhash64
 # of the window — agreement is itself the no-collision check at test
 # scale (same contract as repeated_ngram_docs).
@@ -5933,7 +5933,7 @@ ORDER BY dup_len DESC, train_doc ASC, test_doc ASC, pos_train ASC,
 LIMIT 50
 """
 
-# --- round 10: output-bounded entity resolution ----------------------------
+# --- output-bounded entity resolution --------------------------------------
 
 # The capped candidate chain is the CONTRACT (df-capped token postings
 # per (token, brand) ∪ record×representative pairs, rep_cap = 8 lowest
@@ -6105,7 +6105,7 @@ FROM spliced sp JOIN documents d USING (doc_id)
 ORDER BY sp.doc_id
 """
 
-# --- round 11: output-bounded DOCUMENT entity resolution --------------------
+# --- output-bounded DOCUMENT entity resolution -----------------------------
 
 # Mirrors entity.doc_matched_pairs EXACTLY, including the bounded
 # candidate generation (df-capped 3-gram shingle postings ∪ rep-capped

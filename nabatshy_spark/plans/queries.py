@@ -1,21 +1,27 @@
 """Named query registry — the engine's serving surface.
 
-Each entry re-expresses one reference capability (SURVEY §2 operator IDs
-cited per query) over the driver's testdata star schema, Spark-first:
-declarative DataFrame plans that Catalyst optimizes (pushdown, pruning,
-broadcast). The matching DuckDB oracle SQL lives in
-``nabatshy_spark.plans.oracles`` with identical column aliases.
+``QUERIES`` maps each query name to a ``(spark, sf_dir) -> DataFrame``
+builder; the ``query`` decorator registers one. The queries themselves
+live in one module per domain (spans, relational + SQL API, text and
+dedup, vector and multimodal, graph, streaming); importing
+``nabatshy_spark.plans`` (or any module in it) registers all of them.
+The matching DuckDB oracle SQL lives in ``nabatshy_spark.plans.oracles``
+with identical column aliases.
+
+``headline=True`` marks a query as part of the benchmark sweep
+(``bench.py`` times every headline query). Audit gates that
+deliberately pay an exact quadratic twin's cost stay out of it.
 
 Float policy: double aggregates whose value depends on summation order
 (sum/avg and ratios derived from them) are rounded identically on both
-sides (sums → 2 decimals, avg/ratios → 6) so partition-order low bits
-never flip the comparison hash. Percentiles are NOT rounded: exact
-interpolation over sorted values is bit-identical across engines,
-while rounding them actually *breaks* parity — midpoints of
-k-decimal inputs sit exactly on the k+1-th-digit-5 boundary, where
-Spark (BigDecimal of shortest decimal repr, HALF_UP) and DuckDB
-(binary-value rounding) disagree. Min/max/count are exact and left
-unrounded.
+sides (sums → 2 decimals via ``r2``, avg/ratios → 6 via ``r6``) so
+partition-order low bits never flip the comparison hash. Percentiles
+are NOT rounded: exact interpolation over sorted values is
+bit-identical across engines, while rounding them actually *breaks*
+parity — midpoints of k-decimal inputs sit exactly on the
+k+1-th-digit-5 boundary, where Spark (BigDecimal of shortest decimal
+repr, HALF_UP) and DuckDB (binary-value rounding) disagree.
+Min/max/count are exact and left unrounded.
 """
 
 from __future__ import annotations
@@ -25,16 +31,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nabatshy_spark.catalog import load
-from nabatshy_spark.functions.timeutil import gap_fill
-from nabatshy_spark.operators.search import search_events
-
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+HEADLINE: set[str] = set()
 
 
-def query(name: str):
+def query(name: str, headline: bool = False):
     def deco(fn):
         QUERIES[name] = fn
+        if headline:
+            HEADLINE.add(name)
         return fn
 
     return deco
@@ -46,554 +51,3 @@ def r6(c):
 
 def r2(c):
     return F.round(c, 2)
-
-
-# ---------------------------------------------------------------------------
-# Aggregation layer (SURVEY §2.4)
-# ---------------------------------------------------------------------------
-
-
-@query("pricing_summary")
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/A2/A7/A8 multi-aggregate single pass (api/service.go:1341-1428
-    pattern): classic grouped pricing rollup over lineitem.
-
-    Scale: map-side partial aggregation on (returnflag, linestatus) — 6
-    groups, so the shuffle moves ~6 rows per task regardless of input
-    size. Filter on l_shipdate is pushed to the parquet scan.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            r2(F.sum("l_quantity")).alias("sum_qty"),
-            r2(F.sum("l_extendedprice")).alias("sum_base_price"),
-            r2(F.sum(disc_price)).alias("sum_disc_price"),
-            r2(F.sum(disc_price * (1 + F.col("l_tax")))).alias("sum_charge"),
-            r6(F.avg("l_quantity")).alias("avg_qty"),
-            r6(F.avg("l_extendedprice")).alias("avg_price"),
-            r6(F.avg("l_discount")).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-@query("endpoint_stats")
-def endpoint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: per-endpoint latency stats (api/service.go:315-363 —
-    A1 count, A2 avg/min/max, A3 exact quantiles, A7 multi-key group,
-    O5 sort-by-aggregate), recast on lineitem prices.
-
-    Exact ``percentile`` for oracle parity; at 100 TB swap to
-    ``percentile_approx`` (t-digest) behind the same aliases — one
-    partial-agg pass, no extra shuffle either way.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    p = F.percentile("l_extendedprice", F.lit([0.5, 0.95, 0.99]))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("call_count"),
-            r6(F.avg("l_extendedprice")).alias("avg_price"),
-            F.min("l_extendedprice").alias("min_price"),
-            F.max("l_extendedprice").alias("max_price"),
-            p.alias("__p"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            "call_count",
-            "avg_price",
-            "min_price",
-            "max_price",
-            F.col("__p")[0].alias("p50_price"),
-            F.col("__p")[1].alias("p95_price"),
-            F.col("__p")[2].alias("p99_price"),
-        )
-    )
-
-
-@query("trace_rollup")
-def trace_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10 group-then-max/min + O2 top-N (trace list,
-    api/service.go:598-611): per-order rollup, top 100 by max price.
-
-    ``l_orderkey`` tiebreaker makes the LIMIT deterministic. Spark plans
-    TakeOrderedAndProject — per-partition top-100 then a single-reduce
-    merge, no global sort.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.count("*").alias("span_count"),
-            F.max("l_extendedprice").alias("max_price"),
-            F.min("l_shipdate").alias("first_ship"),
-        )
-        .orderBy(F.col("max_price").desc(), F.col("l_orderkey").asc())
-        .limit(100)
-    )
-
-
-@query("error_rate_by_priority")
-def error_rate_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/A5/A6 — the nested-aggregate pattern
-    ``countIf(x > avg(x)*2)`` in one GROUP BY (api/service.go:983-1006,
-    :606), rewritten two-phase: Window.partitionBy for the group avg,
-    then conditional count. The window shuffle partitions by the same
-    key as the groupBy, so Catalyst plans exactly one exchange.
-    """
-    from pyspark.sql import Window
-
-    orders = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority")
-    flagged = orders.withColumn("__avg", F.avg("o_totalprice").over(w))
-    return (
-        flagged.groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").alias("total_count"),
-            F.sum(
-                F.when(F.col("o_totalprice") > 2 * F.col("__avg"), 1).otherwise(0)
-            ).alias("issue_count"),
-        )
-        .withColumn(
-            "error_rate",
-            r6(F.col("issue_count") / F.col("total_count") * 100.0),
-        )
-    )
-
-
-@query("distinct_segments")
-def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 DISTINCT (api/service.go:1541-1546 — distinct service names)."""
-    return load(spark, sf_dir, "customer").select("c_mktsegment").distinct()
-
-
-@query("top_event_types")
-def top_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 + O5: top endpoints by avg duration, limit 10
-    (api/service.go:315-331)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(r6(F.avg("value")).alias("avg_value"), F.count("*").alias("n"))
-        .orderBy(F.col("avg_value").desc())
-        .limit(10)
-    )
-
-
-@query("pct_vs_baseline")
-def pct_vs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F11 percent-difference vs baseline (api/service.go:560-592): each
-    event type's avg vs the global avg. The single-row global aggregate
-    is broadcast — no shuffle on the join.
-    """
-    ev = load(spark, sf_dir, "events")
-    per_type = ev.groupBy("event_type").agg(F.avg("value").alias("__avg_t"))
-    overall = ev.agg(F.avg("value").alias("__avg_g"))
-    return (
-        per_type.join(F.broadcast(overall))
-        .select(
-            "event_type",
-            r6(F.col("__avg_t")).alias("avg_value"),
-            r6((F.col("__avg_t") - F.col("__avg_g")) / F.col("__avg_g") * 100.0).alias(
-                "pct_diff"
-            ),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sorts / top-k / pagination / point lookups (SURVEY §2.6, §2.2)
-# ---------------------------------------------------------------------------
-
-
-@query("slowest_traces")
-def slowest_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 multi-key sort + O2 top-N (slowest traces,
-    api/service.go:177-185): top 100 orders by price."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-        .orderBy(
-            F.col("o_totalprice").desc(),
-            F.col("o_orderdate").desc(),
-            F.col("o_orderkey").asc(),
-        )
-        .limit(100)
-    )
-
-
-@query("point_lookup")
-def point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P11 point lookup by id (GetSpanDetails, api/service.go:460).
-
-    An equality filter on a scalar column — pushed to the parquet scan
-    (row-group min/max skipping); with id-sorted file layout this reads
-    one row group at 100 TB.
-    """
-    return load(spark, sf_dir, "events").filter(F.col("event_id") == 4242)
-
-
-@query("search_page")
-def search_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§3.2 search lifecycle: typed DSL filter + dynamic sort O3 +
-    pagination O4 (api/service.go:698-846). Page 3 of click events."""
-    ev = load(spark, sf_dir, "events")
-    return search_events(ev, "type=click", page=3, page_size=20, sort_field="ts", sort_order="desc")
-
-
-@query("search_page_keyset")
-def search_page_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O4 keyset twin (operators/search.py:keyset_page): DEEP page —
-    page 100 of click events. The token is the last (ts, event_id) of
-    page 99, exactly what a serving API returns to the client; the
-    measured query is then filter + top-20 (TakeOrderedAndProject), so
-    its cost is independent of page depth — the offset form
-    (search_page) skip-scans the 1,980-row prefix and degrades
-    linearly. Result rows = offset page 100 exactly (total order via
-    the event_id tiebreaker)."""
-    from nabatshy_spark.operators.search import search_events_keyset
-
-    ev = load(spark, sf_dir, "events")
-    prev_page = search_events(
-        ev, "type=click", page=99, page_size=20, sort_field="ts", sort_order="desc"
-    ).collect()
-    if not prev_page:
-        # tiny SFs don't have 99 pages of clicks: clamp to the deepest
-        # non-empty previous page (sf0.01+ never takes this branch, so
-        # the oracle's fixed page-100 semantics are unaffected)
-        from nabatshy_spark.operators.search import events_predicate, parse_attribute_query
-
-        n = ev.filter(
-            events_predicate(parse_attribute_query("type=click"), "type=click")
-        ).count()
-        prev_page = search_events(
-            ev, "type=click", page=min(99, max(1, (n - 1) // 20)),
-            page_size=20, sort_field="ts", sort_order="desc",
-        ).collect()
-    if not prev_page:  # empty table: no pages at all
-        return search_events(
-            ev, "type=click", page=1, page_size=20,
-            sort_field="ts", sort_order="desc",
-        )
-    token = (prev_page[-1].ts, prev_page[-1].event_id)
-    return search_events_keyset(
-        ev, "type=click", after=token, page_size=20, sort_field="ts", sort_order="desc"
-    )
-
-
-@query("search_dsl_typed")
-def search_dsl_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9 mini-DSL, all-pairs-valid path (api/service.go:651-696):
-    ``type=error,k=42`` → AND of typed conditions; ``k`` hits the props
-    JSON document (span-attribute analog)."""
-    ev = load(spark, sf_dir, "events")
-    from nabatshy_spark.operators.search import events_predicate, parse_attribute_query
-
-    q = "type=error,k=42"
-    return ev.filter(events_predicate(parse_attribute_query(q), q)).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-
-
-@query("search_dsl_fallback")
-def search_dsl_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P8/P9 fallback rule (api/service.go:690-695, 778-789): a query
-    with no ``=`` falls back to broad OR search over all match targets."""
-    ev = load(spark, sf_dir, "events")
-    from nabatshy_spark.operators.search import events_predicate, parse_attribute_query
-
-    q = "purchase"
-    return ev.filter(events_predicate(parse_attribute_query(q), q)).select(
-        "event_id", "event_type", "value"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Joins (SURVEY §2.3)
-# ---------------------------------------------------------------------------
-
-
-@query("service_dependency")
-def service_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 self equi-join parent→child with theta filter
-    (api/service.go:365-398): adjacent lineitems of the same order with
-    different suppliers ≙ cross-service parent/child span edges;
-    group-count the (parent, child) pairs.
-
-    Equi-keys (orderkey, linenumber) drive a shuffle join partitioned
-    on orderkey; the ≠ predicate stays a post-join filter exactly like
-    the reference's ``s1.scope_name != s2.scope_name``.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    s1 = li.alias("s1")
-    s2 = li.alias("s2")
-    return (
-        s1.join(
-            s2,
-            (F.col("s1.l_orderkey") == F.col("s2.l_orderkey"))
-            & (F.col("s2.l_linenumber") == F.col("s1.l_linenumber") + 1),
-        )
-        .filter(F.col("s1.l_suppkey") != F.col("s2.l_suppkey"))
-        .groupBy(
-            F.col("s1.l_returnflag").alias("parent_flag"),
-            F.col("s2.l_returnflag").alias("child_flag"),
-        )
-        .agg(F.count("*").alias("call_count"))
-    )
-
-
-@query("region_nation_rollup")
-def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 multiway equi-join over the normalized star
-    (api/service.go:1300-1327): customer ⋈ nation ⋈ region, rolled up.
-
-    nation (25) and region (5) are broadcast — the fact table never
-    shuffles for the join, only for the final small aggregation.
-    """
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count("*").alias("n_customers"),
-            r6(F.avg("c_acctbal")).alias("avg_acctbal"),
-            r2(F.sum("c_acctbal")).alias("total_acctbal"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Time-series / bucketing (SURVEY §2.5)
-# ---------------------------------------------------------------------------
-
-# Fixed epochs for the gap-fill / combined-metrics windows (the events
-# table spans Jan 2024 at every sf; ranges are [start, end) ).
-_GF_START = 1_704_067_200  # 2024-01-01 00:00:00 UTC
-_GF_END = 1_704_240_000  # 2024-01-03 00:00:00 UTC
-_CM_END = 1_705_276_800  # 2024-01-15 00:00:00 UTC
-
-
-def _epoch_s(col):
-    """Timestamp → whole epoch seconds (µs floored), identical to the
-    oracle's ``epoch_us(ts) // 1000000``."""
-    return F.unix_timestamp(col)
-
-
-@query("hourly_heatmap")
-def hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 fixed hourly bucket + A4 conditional count (heatmap,
-    api/service.go:400-433; error countIf :606): first 24 hours."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("bucket"))
-        .agg(
-            F.count("*").alias("n"),
-            r6(F.avg("value")).alias("avg_value"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias(
-                "err_count"
-            ),
-        )
-        .orderBy(F.col("bucket").asc())
-        .limit(24)
-    )
-
-
-@query("dynamic_buckets")
-def dynamic_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2 dynamic interval bucketing (toStartOfInterval with
-    n = range/15, api/service.go:911-922 + utils/utils.go:74-85):
-    interval derived from the data's own min/max so the query is
-    scale-factor-independent. Floor-epoch arithmetic, not F.window,
-    to match ClickHouse bucket alignment exactly.
-
-    The min/max aggregate is one row, broadcast back over the fact
-    table — two scans but zero wide shuffles.
-    """
-    ev = load(spark, sf_dir, "events")
-    stats = ev.agg(
-        F.min(_epoch_s(F.col("ts"))).alias("__lo"),
-        F.max(_epoch_s(F.col("ts"))).alias("__hi"),
-    )
-    iv = F.greatest(F.floor((F.col("__hi") - F.col("__lo")) / 15), F.lit(1)).cast("long")
-    ep = _epoch_s(F.col("ts"))
-    return (
-        ev.join(F.broadcast(stats))
-        .withColumn("__iv", iv)
-        .groupBy((ep - ep % F.col("__iv")).alias("bucket_epoch"))
-        .agg(F.count("*").alias("n"), r6(F.avg("value")).alias("avg_value"))
-        .orderBy("bucket_epoch")
-    )
-
-
-@query("gapfill_series")
-def gapfill_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5 gap-fill / zero-padding (utils/utils.go:14-46): hourly counts
-    of a sparse event slice over [2024-01-01, 2024-01-03), empty hours
-    present with n=0. sequence+explode left join — distributed, and the
-    generated side (48 rows) broadcasts."""
-    ev = load(spark, sf_dir, "events")
-    iv = 3600
-    sliced = ev.filter(
-        (F.col("event_type") == "purchase")
-        & (F.col("value") > 45)
-        & (F.col("ts") >= F.timestamp_seconds(F.lit(_GF_START)))
-        & (F.col("ts") < F.timestamp_seconds(F.lit(_GF_END)))
-    )
-    ep = _epoch_s(F.col("ts"))
-    agg = sliced.groupBy((ep - ep % F.lit(iv)).alias("bucket_epoch")).agg(
-        F.count("*").alias("n")
-    )
-    agg_ts = agg.select(
-        F.timestamp_seconds(F.col("bucket_epoch")).alias("bucket"), "n"
-    )
-    filled = gap_fill(agg_ts, "bucket", {"n": 0}, _GF_START, _GF_END - 1, iv)
-    return filled.select(
-        F.unix_timestamp("bucket").alias("bucket_epoch"),
-        F.col("n").cast("long").alias("n"),
-    )
-
-
-@query("combined_metrics")
-def combined_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/T2/T5 combined metrics — percentile + count + avg in ONE scan
-    per bucket, then gap-filled (api/service.go:1341-1428; the
-    reference hand-optimized three round trips into one query — in
-    Spark it's just one agg call)."""
-    ev = load(spark, sf_dir, "events")
-    iv = (_CM_END - _GF_START) // 15
-    sliced = ev.filter(
-        (F.col("ts") >= F.timestamp_seconds(F.lit(_GF_START)))
-        & (F.col("ts") < F.timestamp_seconds(F.lit(_CM_END)))
-    )
-    ep = _epoch_s(F.col("ts"))
-    agg = sliced.groupBy((ep - ep % F.lit(iv)).alias("bucket_epoch")).agg(
-        F.percentile("value", F.lit(0.95)).alias("p95_value"),
-        F.count("*").alias("n"),
-        r6(F.avg("value")).alias("avg_value"),
-    )
-    agg_ts = agg.select(F.timestamp_seconds("bucket_epoch").alias("bucket"), "p95_value", "n", "avg_value")
-    filled = gap_fill(
-        agg_ts,
-        "bucket",
-        {"p95_value": 0.0, "n": 0, "avg_value": 0.0},
-        _GF_START,
-        _CM_END - 1,
-        iv,
-    )
-    return filled.select(
-        F.unix_timestamp("bucket").alias("bucket_epoch"),
-        "p95_value",
-        F.col("n").cast("long").alias("n"),
-        "avg_value",
-    )
-
-
-@query("relative_window")
-def relative_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4 relative time window (now − 24h, api/service.go:969-981) with
-    the data's max ts standing in for now(): per-type counts over the
-    last day."""
-    ev = load(spark, sf_dir, "events")
-    mx = ev.agg(F.max("ts").alias("__mx"))
-    return (
-        ev.join(F.broadcast(mx))
-        .filter(F.col("ts") >= F.col("__mx") - F.expr("INTERVAL 1 DAY"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"), r6(F.avg("value")).alias("avg_value"))
-    )
-
-
-@query("customers_without_orders")
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join (SURVEY §2.3 'not present' — extension): customers
-    with no order over 400k — NOT EXISTS as left_anti (no row
-    materialization of the non-matching side). The price filter keeps
-    the anti side non-empty at every sf, so the check discriminates."""
-    c = load(spark, sf_dir, "customer")
-    o = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 400_000)
-        .select("o_custkey")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey", "c_name", "c_mktsegment")
-    )
-
-
-@query("segments_with_big_orders")
-def segments_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi join: segments of customers having at least one order over
-    400k — EXISTS as left_semi, then rollup."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400_000).select(
-        "o_custkey"
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
-@query("order_coverage_left_join")
-def order_coverage_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join with null-side aggregation: every customer with
-    their order count (0 when unmatched) — outer joins are absent from
-    the reference (SURVEY §2.3)."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0)).alias(
-                "n_orderless_rows"
-            ),
-        )
-    )
-
-
-@query("running_user_value")
-def running_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame spec (rowsBetween unbounded-preceding → current):
-    running value sum per user over event time — frame-specified
-    windows are beyond the reference's surface (SURVEY §2.8). Limited
-    to one user for compact output."""
-    from pyspark.sql import Window
-
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") == 7)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.round(F.sum("value").over(w), 2).alias("running_value"),
-    )
-
-
-@query("unpivot_status_price")
-def unpivot_status_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot→unpivot roundtrip: the pivoted status columns melted back
-    to (priority, status, total) rows — equals a plain GROUP BY, which
-    is exactly what the oracle states."""
-    wide = QUERIES["pivot_status_price"](spark, sf_dir)
-    return (
-        wide.selectExpr(
-            "o_orderpriority",
-            "stack(3, 'O', O, 'F', F, 'P', P) AS (o_orderstatus, total_price)",
-        )
-        .filter(F.col("total_price").isNotNull())
-    )

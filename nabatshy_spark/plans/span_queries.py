@@ -1,6 +1,7 @@
 """Span-native registry queries — trace semantics the TPC-H-ish tables
 can't express (FIXTURES.md §1): root-span filters, attribute-array
-negation, exception events, the parent→child dependency graph.
+negation, exception events, the parent→child dependency graph, and the
+APM analytics built on them (critical path, SLO burn, exemplars).
 
 These run over the deterministic committed fixture
 ``tests/data/spans.parquet`` (generated by tools/gen_spans_fixture.py,
@@ -12,11 +13,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from nabatshy_spark.operators import spans as S
 from nabatshy_spark.plans.queries import query
+
 
 DEFAULT_SPANS_PATH = "/root/repo/tests/data/spans.parquet"
 
@@ -33,32 +36,16 @@ def load_spans(spark: SparkSession) -> DataFrame:
 @query("spans_slowest_traces")
 def spans_slowest_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/P2/O1/O2 (api/service.go:177-185): slowest root spans."""
-    df = load_spans(spark)
-    return (
-        df.filter(F.col("parent_span_id") == "")
-        .select(
-            "trace_id",
-            "name",
-            "scope_name",
-            S.duration_ms_col(),
-            "start_time_unix_nano",
-        )
-        .orderBy(
-            F.col("duration_ms").desc(),
-            F.col("start_time_unix_nano").desc(),
-            F.col("trace_id").asc(),
-        )
-        .limit(20)
-    )
+    return S.slowest_traces(load_spans(spark), 20)
 
 
-@query("spans_endpoint_latency")
+@query("spans_endpoint_latency", headline=True)
 def spans_endpoint_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1-A3/A7/A8 on real span durations (api/service.go:315-363)."""
     return S.endpoint_latency(load_spans(spark))
 
 
-@query("spans_service_dependency")
+@query("spans_service_dependency", headline=True)
 def spans_service_dependency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 true form (api/service.go:365-398)."""
     return S.service_dependency_graph(load_spans(spark))
@@ -70,7 +57,7 @@ def spans_error_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.error_traces(load_spans(spark))
 
 
-@query("spans_attr_negation")
+@query("spans_attr_negation", headline=True)
 def spans_attr_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 independent-arrays negation (api/service.go:753-771):
     ``db.system != postgres``. The fixture plants spans with
@@ -85,7 +72,7 @@ def spans_attr_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("span_id", "trace_id", "name")
 
 
-@query("spans_attr_pair")
+@query("spans_attr_pair", headline=True)
 def spans_attr_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 independent-arrays equality (api/service.go:744-751):
     ``env=prod`` over resource attributes."""
@@ -188,7 +175,7 @@ def spans_search_timerange(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_search_metrics")
+@query("spans_search_metrics", headline=True)
 def spans_search_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3 GetSearchMetrics composition (api/service.go:1341-1428 +
     :1431-1531): search predicates feed a 15-bucket combined-metrics
@@ -238,7 +225,7 @@ def spans_trace_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_critical_path")
+@query("spans_critical_path", headline=True)
 def spans_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-trace critical path (max root→leaf duration sum): ONE
     shuffle on trace_id + per-trace DP (operators/spans.py:
@@ -277,7 +264,7 @@ def spans_fanout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_concurrency")
+@query("spans_concurrency", headline=True)
 def spans_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max concurrent spans per trace — the interval sweep-line: each
     span emits (+1 at start, −1 at end), one running sum per trace
@@ -309,7 +296,7 @@ def spans_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_self_time")
+@query("spans_self_time", headline=True)
 def spans_self_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-operation SELF time — duration minus the union of child
     span intervals (the flame-graph quantity: where time is actually
@@ -370,7 +357,7 @@ def spans_self_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_error_root_cause")
+@query("spans_error_root_cause", headline=True)
 def spans_error_root_cause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Root-cause attribution: the LEAF-MOST erroring spans — erroring
     spans none of whose children also error (an ancestor that merely
@@ -422,7 +409,7 @@ def spans_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("duration_ns").alias("__max_ns"),
     # per-name rows, consumed by the argmax broadcast AND the final
     # join: checkpointed so the exact-percentile pass over the span
-    # table runs once, not twice (round 12 small-hub-reuse move).
+    # table runs once, not twice.
     ).localCheckpoint(eager=False)
     exemplar = (
         df.join(
@@ -488,7 +475,7 @@ def spans_error_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_apdex")
+@query("spans_apdex", headline=True)
 def spans_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apdex score per endpoint (industry-standard satisfaction index;
     natural extension of the reference's endpoint stats,
@@ -522,7 +509,7 @@ def spans_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_error_budget")
+@query("spans_error_budget", headline=True)
 def spans_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-service SLO error-budget report (ops extension of the
     reference's error-rate surface, api/service.go:808-820): spans are
@@ -559,7 +546,7 @@ def spans_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_top_endpoints_per_service")
+@query("spans_top_endpoints_per_service", headline=True)
 def spans_top_endpoints_per_service(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 slowest endpoints within every service (by avg duration)
     — the drill-down view one level below the reference's global
@@ -587,7 +574,7 @@ def spans_top_endpoints_per_service(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@query("spans_duration_histogram")
+@query("spans_duration_histogram", headline=True)
 def spans_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APM latency histogram: per endpoint, span counts in
     power-of-two millisecond buckets (the log-bucket view behind every
@@ -605,7 +592,7 @@ def spans_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_latency_trend")
+@query("spans_latency_trend", headline=True)
 def spans_latency_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latency drift per endpoint: OLS slope (ms per hour) and R² of
     span duration against time — the "is this endpoint degrading"
@@ -632,7 +619,7 @@ def spans_latency_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_anomalous_traces")
+@query("spans_anomalous_traces", headline=True)
 def spans_anomalous_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traces whose END-TO-END duration exceeds the p99 of all trace
     durations — the percentile-threshold variant of the reference's
@@ -649,8 +636,7 @@ def spans_anomalous_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_spans"),
     # trace-count-bounded and consumed by the p99 aggregate AND the
     # filter: checkpointed so the trace-assembly shuffle runs once
-    # (round 12 small-hub-reuse move — same shape as
-    # spans_tail_sampling).
+    # (same shape as spans_tail_sampling).
     ).localCheckpoint(eager=False)
     thr = traces.agg(
         F.percentile("trace_ms", F.lit(0.99)).alias("__p99")
@@ -667,7 +653,7 @@ def spans_anomalous_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_burn_rate_alerts")
+@query("spans_burn_rate_alerts", headline=True)
 def spans_burn_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-window SLO burn-rate alert (the Google SRE workbook
     recipe) over the span surface — ops extension of the reference's
@@ -729,7 +715,7 @@ def spans_burn_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("service")
 
 
-@query("spans_retry_storms")
+@query("spans_retry_storms", headline=True)
 def spans_retry_storms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retry-storm detection: operations repeated under the SAME
     parent span in the same trace (client retry loops / fan-out bugs
@@ -766,7 +752,7 @@ def spans_retry_storms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_clock_skew_audit")
+@query("spans_clock_skew_audit", headline=True)
 def spans_clock_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Instrumentation sanity audit: child spans that START before
     their parent or END after it — impossible under one clock, so each
@@ -815,7 +801,7 @@ def spans_clock_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_mad_outliers")
+@query("spans_mad_outliers", headline=True)
 def spans_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust latency outliers per service: median / MAD (median
     absolute deviation) instead of mean / stddev, so one straggler
@@ -844,7 +830,7 @@ def spans_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materializing 5 rows is free; the big dev relation itself is NOT
     # checkpointed — that variant was measured 13% SLOWER (2.03 →
     # 2.29 s solo): 660k rows through the block store cost more than
-    # the cached-parquet re-scan they save (round 12).
+    # the cached-parquet re-scan they save.
     med = (
         base.groupBy("service")
         .agg(F.percentile("__d", F.lit(0.5)).alias("__med"))
@@ -875,7 +861,7 @@ def spans_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_tail_sampling")
+@query("spans_tail_sampling", headline=True)
 def spans_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail-based sampling policy (what an OTel collector's tail
     sampler decides after seeing the whole trace): keep every trace
@@ -908,7 +894,7 @@ def spans_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trace-count-bounded and consumed by the p99 aggregate AND the
     # decision layer (whose two consumers fan the duplication further):
     # checkpointed so the span scan + trace-assembly shuffle run once,
-    # not 3-4× (round 12 small-hub-reuse move).
+    # not 3-4×.
     traces = traces.localCheckpoint(eager=False)
     p99 = traces.agg(F.percentile("__dur", F.lit(0.99)).alias("__p99"))
     decided = traces.join(F.broadcast(p99)).withColumn(
@@ -941,7 +927,7 @@ def spans_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_attr_facets")
+@query("spans_attr_facets", headline=True)
 def spans_attr_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribute facet counts — the filter sidebar every trace UI
     backs the reference's attribute mini-DSL with (P9,
@@ -975,7 +961,7 @@ def spans_attr_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_error_pareto")
+@query("spans_error_pareto", headline=True)
 def spans_error_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error Pareto: endpoints ranked by exception count with the
     cumulative share — the 80/20 view that tells an on-call which few
@@ -1031,7 +1017,7 @@ def spans_error_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_trace_shapes")
+@query("spans_trace_shapes", headline=True)
 def spans_trace_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trace-pattern mining: traces grouped by structural signature —
     the sorted multiset of (service, operation) calls — with count,
@@ -1072,7 +1058,7 @@ def spans_trace_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("spans_dependency_drift")
+@query("spans_dependency_drift", headline=True)
 def spans_dependency_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Service-dependency drift (operators/spans.dependency_drift):
     the J1 call-graph edges (api/service.go:365-398) split into first
@@ -1081,10 +1067,101 @@ def spans_dependency_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.dependency_drift(load_spans(spark))
 
 
-@query("spans_overlap_pairs")
+@query("spans_overlap_pairs", headline=True)
 def spans_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap self-join (operators/spans.overlap_pairs): per
     trace, how many span pairs actually overlapped in time and the
     longest pairwise overlap — the range-join shape bounded by the
     trace equi-key. Top 50 traces by pair count."""
     return S.overlap_pairs(load_spans(spark))
+
+
+@query("spans_service_busy_time", headline=True)
+def spans_service_busy_time(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-service BUSY time: the union of each service's span
+    intervals (gaps-and-islands merge), so concurrent spans count
+    wall-clock once — the utilization number raw duration sums
+    overstate by the concurrency factor. Complements spans_concurrency
+    (peak parallelism) with total occupied time.
+
+    Scale: one shuffle on service, one running-max window per
+    partition (sorted within service, never globally); island
+    arithmetic is exact int64 ns."""
+    sp = load_spans(spark).select(
+        F.element_at(F.col("resource_attributes"), F.lit("service.name")).alias(
+            "service_name"
+        ),
+        F.col("span_id"),
+        F.col("start_time_unix_nano").alias("__s"),
+        F.col("end_time_unix_nano").alias("__e"),
+    ).filter(F.col("service_name").isNotNull())
+    w = Window.partitionBy("service_name").orderBy("__s", "__e", "span_id")
+    prev_max = F.max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    flagged = sp.withColumn(
+        "__new_island",
+        F.when(prev_max.isNull() | (F.col("__s") > prev_max), 1).otherwise(0),
+    ).withColumn(
+        "__island",
+        F.sum("__new_island").over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+    islands = flagged.groupBy("service_name", "__island").agg(
+        (F.max("__e") - F.min("__s")).alias("__busy"),
+        F.count("*").alias("__n"),
+    )
+    return (
+        islands.groupBy("service_name")
+        .agg(
+            F.sum("__n").alias("n_spans"),
+            F.count("*").alias("n_islands"),
+            F.sum("__busy").alias("busy_ns"),
+        )
+        .orderBy("service_name")
+    )
+
+
+@query("spans_latency_exemplars", headline=True)
+def spans_latency_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Latency EXEMPLARS (the Grafana/OpenMetrics pattern: each
+    histogram bucket carries one representative trace to click into):
+    per (endpoint, power-of-two ms bucket), the span count plus the
+    slowest span's ids — deterministic under duration ties via the
+    unique span_id tiebreak (max duration, then min span_id), never
+    max_by's undefined-on-ties pick.
+
+    Scale: one scan → (endpoint, bucket) aggregate for counts+max, a
+    self-join back on the max to pick the exemplar row — the argmax
+    join touches only bucket-max spans. Complements
+    spans_duration_histogram (counts only) with the drill-in handle."""
+    df = load_spans(spark)
+    ms = (F.col("duration_ns") / F.lit(1_000_000)).cast("long")
+    b = df.select(
+        F.col("name").alias("endpoint"),
+        (F.length(F.bin(ms + 1)) - 1).alias("log2_ms_bucket"),
+        "duration_ns",
+        "span_id",
+        "trace_id",
+    )
+    m = b.groupBy("endpoint", "log2_ms_bucket").agg(
+        F.count("*").alias("n_spans"),
+        F.max("duration_ns").alias("__maxd"),
+    )
+    return (
+        b.join(m, ["endpoint", "log2_ms_bucket"])
+        .filter(F.col("duration_ns") == F.col("__maxd"))
+        .groupBy("endpoint", "log2_ms_bucket", "n_spans", "__maxd")
+        .agg(
+            F.min("span_id").alias("exemplar_span"),
+            F.min_by("trace_id", "span_id").alias("exemplar_trace"),
+        )
+        .select(
+            "endpoint",
+            "log2_ms_bucket",
+            "n_spans",
+            (F.col("__maxd") / F.lit(1_000_000)).cast("long").alias("max_ms"),
+            "exemplar_span",
+            "exemplar_trace",
+        )
+        .orderBy("endpoint", "log2_ms_bucket")
+    )

@@ -237,7 +237,7 @@ def sql_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_order_priority_check")
+@query("sql_order_priority_check", headline=True)
 def sql_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS-driven priority audit (the TPC-H Q4 shape, adapted to
     this star's l_shipdate): orders placed in one quarter with at
@@ -261,7 +261,7 @@ def sql_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_nation_trade_volume")
+@query("sql_nation_trade_volume", headline=True)
 def sql_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bilateral trade volume (the TPC-H Q7 shape): revenue shipped
     between two nations in either direction, by year. Five-way join
@@ -291,7 +291,7 @@ def sql_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_market_share")
+@query("sql_market_share", headline=True)
 def sql_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """National market share (the TPC-H Q8 shape): one supplier
     nation's share of revenue sold into a region's market, by order
@@ -356,7 +356,7 @@ def sql_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_customer_distribution")
+@query("sql_customer_distribution", headline=True)
 def sql_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer order-count distribution (the TPC-H Q13 shape):
     LEFT JOIN with a join-side predicate (non-urgent orders only) so
@@ -377,7 +377,7 @@ def sql_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_discounted_revenue")
+@query("sql_discounted_revenue", headline=True)
 def sql_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disjunctive-predicate revenue (the TPC-H Q19 shape): three OR
     branches over (brand, size range, quantity range). Catalyst
@@ -429,7 +429,7 @@ def sql_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_returned_item_report")
+@query("sql_returned_item_report", headline=True)
 def sql_returned_item_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item reporting (the TPC-H Q10 shape): top 20 customers
     by revenue lost to returns in one quarter. The quarter predicate
@@ -481,7 +481,7 @@ def sql_order_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_order_backlog")
+@query("sql_order_backlog", headline=True)
 def sql_order_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-order backlog over time: how many orders were placed but
     not yet first-shipped at each week boundary — the interval-overlap
@@ -516,7 +516,7 @@ def sql_order_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_top_customers_per_nation")
+@query("sql_top_customers_per_nation", headline=True)
 def sql_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window functions through the SQL API: top-2 customers per
     nation by order revenue, RANK() over the AGGREGATED per-customer
@@ -545,7 +545,7 @@ def sql_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_important_parts")
+@query("sql_important_parts", headline=True)
 def sql_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disproportionate-value parts (the TPC-H Q11 shape, adapted:
     the schema has no partsupp, so "stock value" is the shipped
@@ -575,7 +575,7 @@ def sql_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_supplier_part_variety")
+@query("sql_supplier_part_variety", headline=True)
 def sql_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier variety per part profile (the TPC-H Q16 shape, linked
     through lineitem since there is no partsupp): distinct shipping
@@ -596,7 +596,7 @@ def sql_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_promo_part_suppliers")
+@query("sql_promo_part_suppliers", headline=True)
 def sql_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers with significant shipments of promo parts (the TPC-H
     Q20 semi-join shape, adapted to shipped quantities): the IN
@@ -627,7 +627,7 @@ def sql_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sql_brand_qty_revenue")
+@query("sql_brand_qty_revenue", headline=True)
 def sql_brand_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 analogue (discounted revenue, disjunctive predicate
     blocks): three OR'd (brand, size-range, quantity-range) conjuncts.

@@ -20,6 +20,8 @@ exactly this module.
 
 from __future__ import annotations
 
+import json
+import logging
 import threading
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -32,6 +34,17 @@ from nabatshy_spark.functions.timeutil import parse_time_range
 from nabatshy_spark.operators import spans as S
 
 MAX_ROWS = 10_000  # serving cap: an API response is not a bulk export
+log = logging.getLogger(__name__)
+
+
+def _positive_int(q: dict[str, str], key: str, default: int) -> int:
+    try:
+        v = int(q.get(key, default))
+    except ValueError:
+        raise ValueError(f"invalid parameter '{key}'") from None
+    if v < 1:
+        raise ValueError(f"parameter '{key}' must be at least 1")
+    return v
 
 
 def _rfc3339(s: str) -> datetime:
@@ -67,20 +80,27 @@ class TelemetryAPI:
                 q = {k: v[0] for k, v in parse_qs(url.query).items()}
                 try:
                     df = api._route(url.path, q)
+                    body = "[" + ",".join(df.limit(MAX_ROWS).toJSON().collect()) + "]"
+                    status = 200
                 except KeyError:
                     self.send_error(404)
                     return
                 except ValueError as e:
                     self.send_error(400, str(e))
                     return
-                body = (
-                    "[" + ",".join(df.limit(MAX_ROWS).toJSON().collect()) + "]"
-                ).encode()
-                self.send_response(200)
+                except Exception as e:
+                    # a failed plan or job answers 500 instead of
+                    # dropping the connection
+                    log.exception("GET %s failed", self.path)
+                    msg = (str(e).strip().splitlines() or [""])[0]
+                    body = json.dumps({"error": f"{type(e).__name__}: {msg}"})
+                    status = 500
+                data = body.encode()
+                self.send_response(status)
                 self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
+                self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
-                self.wfile.write(body)
+                self.wfile.write(data)
 
         self._server = ThreadingHTTPServer((host, port), Handler)
         self.port = self._server.server_address[1]
@@ -106,23 +126,7 @@ class TelemetryAPI:
         parts = [p for p in path.split("/") if p]
         # --- /v1/traces/* (api/controller.go:381-386) ---
         if path == "/v1/traces/slowest":
-            try:
-                n = int(q.get("n", "10"))
-            except ValueError:
-                raise ValueError("invalid parameter 'n'") from None
-            return (
-                df.filter(F.col("parent_span_id") == "")
-                .select(
-                    "trace_id", "name", "scope_name",
-                    S.duration_ms_col(), "start_time_unix_nano",
-                )
-                .orderBy(
-                    F.col("duration_ms").desc(),
-                    F.col("start_time_unix_nano").desc(),
-                    F.col("trace_id").asc(),
-                )
-                .limit(n)
-            )
+            return S.slowest_traces(df, _positive_int(q, "n", 10))
         if path == "/v1/traces/endpoints":
             return S.endpoint_latency(df)
         if path == "/v1/traces/dependencies":
@@ -153,8 +157,8 @@ class TelemetryAPI:
                 end_ns=hi * 1_000_000_000,
                 sort_field=q.get("sortField", "start_time_unix_nano"),
                 sort_order=q.get("sortOrder", "desc"),
-                page=int(q.get("page", "1")),
-                page_size=int(q.get("pageSize", "20")),
+                page=_positive_int(q, "page", 1),
+                page_size=_positive_int(q, "pageSize", 20),
             )
         # --- /api/metrics/* (api/controller.go:390-397) ---
         if path in ("/api/metrics/traces", "/api/metrics/avg"):

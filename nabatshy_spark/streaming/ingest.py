@@ -24,8 +24,25 @@ from pyspark.sql.streaming import StreamingQuery
 
 from nabatshy_spark.sources.otlp import parse_otlp_json
 from nabatshy_spark.sources.sink import append_spans
+from nabatshy_spark.streaming.dedup import dedup_span_stream
 
 RAW_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
+
+
+def _start_batches(
+    stream: DataFrame, sink, checkpoint_dir: str, trigger_interval: str | None
+) -> StreamingQuery:
+    """Run ``sink(batch, epoch_id)`` on every micro-batch of ``stream``.
+    availableNow = drain-and-stop (tests, bulk import); a processing-
+    time trigger makes it the reference's continuous collector."""
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_interval is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
 
 
 def start_file_ingest(
@@ -90,31 +107,12 @@ def start_file_ingest(
 
         stream = raw
     else:
-        from pyspark.sql import functions as F
-
-        stream = (
-            parse_otlp_json(raw, "value")
-            .withColumn(
-                "__et", F.timestamp_micros(F.expr("start_time_unix_nano div 1000"))
-            )
-            .withWatermark("__et", dedupe_watermark)
-            .dropDuplicatesWithinWatermark(["trace_id", "span_id"])
-            .drop("__et")
-        )
+        stream = dedup_span_stream(parse_otlp_json(raw, "value"), dedupe_watermark)
 
         def sink(batch: DataFrame, epoch_id: int) -> None:
             write(batch, epoch_id) if wants_epoch else write(batch)
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    # availableNow = drain-and-stop (tests, bulk import); a processing-
-    # time trigger makes it the reference's continuous collector
-    if trigger_interval is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
+    return _start_batches(stream, sink, checkpoint_dir, trigger_interval)
 
 
 def ingest_batch(spark: SparkSession, json_docs: list[str]) -> DataFrame:
@@ -160,11 +158,4 @@ def start_protobuf_file_ingest(
     def sink(batch: DataFrame, epoch_id: int) -> None:
         append_spans(parse_otlp_protobuf(batch, "content"), output_path)
 
-    writer = raw.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_interval is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
+    return _start_batches(raw, sink, checkpoint_dir, trigger_interval)

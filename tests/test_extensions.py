@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import pytest
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
 from nabatshy_spark.catalog import load
 from nabatshy_spark.operators import multimodal, similarity
 

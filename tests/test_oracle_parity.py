@@ -5,9 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401  (registers extension queries)
-import nabatshy_spark.plans.span_queries  # noqa: F401  (registers span-native queries)
-import nabatshy_spark.plans.sql_queries  # noqa: F401
 from nabatshy_spark.plans.oracles import ORACLES
 from nabatshy_spark.plans.queries import QUERIES
 

@@ -9,9 +9,6 @@ import re
 
 import pytest
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
 from nabatshy_spark.plans.queries import QUERIES
 
 

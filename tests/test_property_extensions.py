@@ -451,7 +451,6 @@ def test_pow2_ceiling_matches_python(spark, ns):
 def test_epoch_shuffle_deterministic_across_runs(spark, sf_dir):
     """Two independent evaluations produce byte-identical permutations
     (no RNG state anywhere in the plan)."""
-    import nabatshy_spark.plans.pipeline_queries  # noqa: F401
     from nabatshy_spark.plans.queries import QUERIES
 
     a = QUERIES["epoch_shuffle_order"](spark, sf_dir).collect()

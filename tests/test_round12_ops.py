@@ -439,7 +439,7 @@ def test_column_stats_profile_empty_table(spark, sf_dir, tmp_path):
     profiled column with ndv = 0 and NULL n_nulls/min/max."""
     from nabatshy_spark.catalog import load
     from nabatshy_spark.plans.queries import QUERIES
-    from nabatshy_spark.plans.round6_queries import _STATS_COLS
+    from nabatshy_spark.plans.relational_queries import _STATS_COLS
 
     load(spark, sf_dir, "lineitem").limit(0).write.mode(
         "overwrite"

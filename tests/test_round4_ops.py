@@ -86,7 +86,6 @@ def test_zipf_slope_negative_on_skewed_counts(spark):
 
 def test_image_dup_groups_match_analytic(spark, sf_dir):
     from nabatshy_spark.plans.queries import QUERIES
-    import nabatshy_spark.plans.ext_queries  # noqa: F401
 
     rows = QUERIES["image_dup_groups"](spark, sf_dir).collect()
     # 500 docs at sf0.01: ids x and x+256 share gray -> 244 groups of 2
@@ -203,7 +202,6 @@ def test_top_endpoints_per_service_ranking(spark):
     import os
 
     os.environ.pop("NABATSHY_SPANS_PATH", None)
-    import nabatshy_spark.plans.span_queries  # noqa: F401  (registers)
     from nabatshy_spark.plans.queries import QUERIES
 
     rows = QUERIES["spans_top_endpoints_per_service"](
@@ -251,7 +249,6 @@ def test_scd2_versions_collapse_runs_and_cover_timeline(spark):
 def test_audience_overlap_bitmask_matches_sets(spark):
     import datetime as dt
 
-    import nabatshy_spark.plans.ext_queries  # noqa: F401
     from nabatshy_spark.plans.queries import QUERIES
 
     # known memberships: view={1,2,3}, click={2,3}, purchase={3}
@@ -285,7 +282,6 @@ def test_first_touch_attribution_prefers_earliest_in_window(spark):
     import datetime as dt
     import os, tempfile
 
-    import nabatshy_spark.plans.ext_queries  # noqa: F401
     from nabatshy_spark.plans.queries import QUERIES
 
     t0 = dt.datetime(2024, 1, 2, 12, 0, 0)
@@ -316,7 +312,6 @@ def test_first_touch_attribution_prefers_earliest_in_window(spark):
 def test_gini_extremes(spark):
     import os, tempfile
 
-    import nabatshy_spark.plans.ext_queries  # noqa: F401
     from nabatshy_spark.plans.queries import QUERIES
 
     d = os.path.join(tempfile.gettempdir(), "nabatshy_gini_fixture")

@@ -5,10 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.pipeline_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
 from nabatshy_spark.catalog import load
 from nabatshy_spark.plans.queries import QUERIES
 

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
 from nabatshy_spark.catalog import load
 from nabatshy_spark.operators import spans as S
 from nabatshy_spark.operators.similarity import cosine_range_search, cosine_topk
@@ -189,7 +187,7 @@ def test_table_checksum_detects_tampering(spark, sf_dir):
     """The checksum must move when any row's content changes, and must
     NOT move under row reordering — the properties a replication
     audit needs."""
-    from nabatshy_spark.plans.round6_queries import _CHECKSUM_TABLES
+    from nabatshy_spark.plans.relational_queries import _CHECKSUM_TABLES
 
     base = {
         r.table_name: (r.n_rows, r.checksum)

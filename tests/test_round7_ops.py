@@ -14,8 +14,6 @@ from nabatshy_spark.catalog import load
 from nabatshy_spark.operators.joins import _parse_byte_size, semi_join_ids
 from nabatshy_spark.plans.queries import QUERIES
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.round6_queries  # noqa: F401
 
 
 def test_parse_byte_size_units():

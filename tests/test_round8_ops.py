@@ -11,8 +11,6 @@ from nabatshy_spark.catalog import load
 from nabatshy_spark.operators.stats import cumulative_sum_ordered
 from nabatshy_spark.plans.queries import QUERIES
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.round7_queries  # noqa: F401
 
 
 def _cum_rows(df):

@@ -93,7 +93,15 @@ def test_services_and_errors(api):
 
 
 def test_error_codes(api):
-    for path, code in [("/nope", 404), ("/v1/traces/slowest?n=x", 400)]:
+    for path, code in [
+        ("/nope", 404),
+        ("/v1/traces/slowest?n=x", 400),
+        ("/v1/traces/slowest?n=-3", 400),
+        ("/v1/search?timeRange=24h&sortField=bogus", 400),
+        ("/v1/search?timeRange=24h&pageSize=-1", 400),
+        ("/v1/search?timeRange=24h&page=0", 400),
+        ("/api/metrics/pseries?timeRange=24h&percentile=250", 500),
+    ]:
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(api, path)
         assert e.value.code == code

@@ -19,9 +19,6 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
 from nabatshy_spark.plans.queries import QUERIES
 from nabatshy_spark.session import get_spark
 

@@ -1,9 +1,9 @@
 """Measure wall-clock vs scale factor for selected operators and
 append a markdown table to stdout (paste into SCALE.md). Each query
-runs warm (one unmeasured run) then min-of-2, at every sf dir that
-exists — the growth RATIO between scale factors is the evidence that
-an operator's plan is (sub)linear, which single-sf bench numbers
-cannot show.
+runs warm (one unmeasured run) then min-of-2 (tools/measure.py), at
+every sf dir that exists — the growth RATIO between scale factors is
+the evidence that an operator's plan is (sub)linear, which single-sf
+bench numbers cannot show.
 
     python tools/gen_scale_curve.py [query ...]
 """
@@ -12,15 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
 from nabatshy_spark.plans.queries import QUERIES
 from nabatshy_spark.session import get_spark
+from tools.measure import measure
 
 DEFAULT = [
     "repeated_ngram_docs",
@@ -47,25 +44,10 @@ def main() -> None:
     dirs = [d for d in SF_DIRS if os.path.isdir(d)]
     print("| query | " + " | ".join(os.path.basename(d) for d in dirs) + " |")
     print("|---" * (len(dirs) + 1) + "|")
-    import gc
-
     for name in names:
         cells = []
         for d in dirs:
-            QUERIES[name](spark, d).collect()  # warm
-            best = float("inf")
-            for _ in range(2):
-                # Clear BETWEEN runs, not just per sf dir: operators
-                # that persist() internally (shingle/window relations)
-                # would otherwise serve the measured laps from the warm
-                # lap's cache via Spark's cache-manager plan matching —
-                # the round-10 decontaminate adjudication, now applied
-                # to the curve protocol too (round 11).
-                spark.catalog.clearCache()
-                gc.collect()
-                t0 = time.perf_counter()
-                QUERIES[name](spark, d).collect()
-                best = min(best, time.perf_counter() - t0)
+            best = measure(spark, lambda: QUERIES[name](spark, d), runs=2, warm=True)
             spark.catalog.clearCache()
             cells.append(f"{best:.2f} s")
         print(f"| `{name}` | " + " | ".join(cells) + " |")

@@ -1,36 +1,35 @@
-"""Solo per-query measurement + plan capture (round-11 optimization).
+"""Solo per-query measurement + plan capture.
 
 Usage:
     python tools/solo_measure.py [--sf-dir DIR] [--out JSON] [--plans DIR]
         [--runs N] [--noop] query [query ...]
 
-Fresh session (same settings as bench.py), footers warmed, then per
-query: one unmeasured warm run (compile/codegen/artifact build), then
-min-of-N timed runs with clearCache+gc before each (the bench solo
-adjudication protocol). With --noop each timed run drives the noop sink
-instead of .collect() — guide §1.4: computation cost without driver row
-materialization — and BOTH numbers are reported so collect-transfer
-overhead is visible. With --plans, .explain("formatted") is written to
-<plans>/<query>.txt.
+Fresh session (same settings as bench.py), footers warmed, bench.py's
+scaled span table, then per query the bench solo protocol
+(tools/measure.py): one unmeasured warm run (compile/codegen/artifact
+build), then min-of-N timed runs with clearCache+gc before each. With
+--noop each timed run also drives the noop sink instead of .collect() —
+computation cost without driver row materialization — and BOTH numbers
+are reported so collect-transfer overhead is visible. With --plans,
+.explain("formatted") is written to <plans>/<query>.txt.
 """
 
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import nabatshy_spark.plans.ext_queries  # noqa: F401
-import nabatshy_spark.plans.span_queries  # noqa: F401
-import nabatshy_spark.plans.sql_queries  # noqa: F401
-from nabatshy_spark.catalog import TABLES, load
 from nabatshy_spark.plans.queries import QUERIES
-from nabatshy_spark.session import get_spark
+from tools.measure import measure, sf_number, use_scaled_spans, warm_session
+
+
+def noop_write(df) -> None:
+    """Run the plan to completion without moving rows to the driver."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -44,21 +43,8 @@ def main() -> None:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    # Match bench.py's scaled span fixture so spans_* queries measure
-    # the same table the bench times.
-    import tempfile
-
-    from tools.gen_spans_fixture import write_scaled
-
-    sf = os.path.basename(args.sf_dir.rstrip("/")).replace("sf", "")
-    sf_num = float(sf) if sf.replace(".", "").isdigit() else 0.1
-    n_traces = max(250, int(1_500_000 * sf_num))
-    spath = os.path.join(tempfile.gettempdir(), f"nabatshy_spans_{n_traces}tr")
-    os.environ["NABATSHY_SPANS_PATH"] = write_scaled(spath, n_traces)
-
-    spark = get_spark("nabatshy_solo_measure")
-    for t in TABLES:
-        load(spark, args.sf_dir, t).count()
+    use_scaled_spans(sf_number(args.sf_dir))
+    spark = warm_session("nabatshy_solo_measure", args.sf_dir)
 
     results: dict[str, dict] = {}
     for name in args.queries:
@@ -66,36 +52,18 @@ def main() -> None:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
         spark.sparkContext.setJobDescription(f"solo:{name}")
-        df = QUERIES[name](spark, args.sf_dir)
-        df.collect()  # warm: compile/codegen/artifact build
-        rec: dict = {}
-        best = float("inf")
-        for _ in range(args.runs):
-            spark.catalog.clearCache()
-            gc.collect()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, args.sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
-        rec["collect_s"] = round(best, 4)
+
+        def build():
+            return QUERIES[name](spark, args.sf_dir)
+
+        rec = {"collect_s": round(measure(spark, build, args.runs, warm=True), 4)}
         if args.noop:
-            best = float("inf")
-            for _ in range(args.runs):
-                spark.catalog.clearCache()
-                gc.collect()
-                t0 = time.perf_counter()
-                (
-                    QUERIES[name](spark, args.sf_dir)
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save()
-                )
-                best = min(best, time.perf_counter() - t0)
-            rec["noop_s"] = round(best, 4)
+            rec["noop_s"] = round(measure(spark, build, args.runs, action=noop_write), 4)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             # The same JVM call DataFrame.explain() prints through.
             plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-                QUERIES[name](spark, args.sf_dir)._jdf.queryExecution(), "formatted"
+                build()._jdf.queryExecution(), "formatted"
             )
             with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
