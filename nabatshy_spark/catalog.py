@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +37,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 _PYFILES_SHIPPED: set[int] = set()
+# ingest streams call this from their own threads; the zip's staging
+# path is per process
+_PYFILES_LOCK = threading.Lock()
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -46,20 +50,21 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     distributes the zip to every executor; in local mode it lands on
     the worker ``sys.path`` via SparkFiles. Idempotent per context."""
     sc = spark.sparkContext
-    if id(sc) in _PYFILES_SHIPPED:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "nabatshy_spark_pyfiles.zip")
-    staging = f"{zpath}.{os.getpid()}.tmp"
-    with zipfile.ZipFile(staging, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
-    os.replace(staging, zpath)  # atomic: no partially-written zip is ever added
-    sc.addPyFile(zpath)
-    _PYFILES_SHIPPED.add(id(sc))
+    with _PYFILES_LOCK:
+        if id(sc) in _PYFILES_SHIPPED:
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        zpath = os.path.join(tempfile.gettempdir(), "nabatshy_spark_pyfiles.zip")
+        staging = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(staging, "w") as z:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in sorted(files):
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        os.replace(staging, zpath)  # atomic: no partially-written zip is ever added
+        sc.addPyFile(zpath)
+        _PYFILES_SHIPPED.add(id(sc))
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

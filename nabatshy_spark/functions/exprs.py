@@ -90,55 +90,6 @@ def pct_diff(value: Column, baseline: Column) -> Column:
     return (value - baseline) / baseline * F.lit(100.0)
 
 
-def go_float_string(d: Column) -> Column:
-    """Format a double like Go's ``strconv.FormatFloat(v, 'f', -1, 64)``
-    (collector/service.go:195, 250): shortest round-trip decimal, never
-    scientific notation, integral doubles without a trailing ``.0``
-    (1.0 → "1", 1e10 → "10000000000", 1e-7 → "0.0000001").
-
-    Implemented by expanding the JVM's ``Double.toString`` output in
-    string space — pure column expressions, stays in codegen. Caveat:
-    Java 17 predates the Ryu shortest-repr algorithm (JDK 19+), so for
-    rare values (e.g. subnormals: Java "4.9E-324" vs Go "5e-324") the
-    chosen digits differ while still round-tripping; practical attribute
-    values (ints-as-doubles, short decimals) match exactly.
-    """
-    s = d.cast("string")
-    neg = s.startswith("-")
-    u = F.when(neg, F.substring(s, 2, 2_000_000_000)).otherwise(s)
-    # plain form: only the mandatory ".0" of integral values is excess
-    plain = F.regexp_replace(u, r"\.0$", "")
-    # scientific form "d.dddEe": shift the point by the exponent
-    mant = F.split_part(u, F.lit("E"), F.lit(1))
-    exp = F.split_part(u, F.lit("E"), F.lit(2)).cast("int")
-    ip = F.split_part(mant, F.lit("."), F.lit(1))  # exactly one digit
-    fp = F.regexp_replace(F.split_part(mant, F.lit("."), F.lit(2)), r"0+$", "")
-    digits = F.concat(ip, fp)
-    flen = F.length(fp)
-    expanded = (
-        F.when(exp >= flen, F.concat(digits, F.repeat(F.lit("0"), exp - flen)))
-        .when(
-            exp >= 0,
-            F.concat(
-                F.substring(digits, F.lit(1), exp + 1),
-                F.lit("."),
-                F.substring(digits, exp + 2, F.lit(2_000_000_000)),
-            ),
-        )
-        .otherwise(
-            F.concat(F.lit("0."), F.repeat(F.lit("0"), -exp - 1), digits)
-        )
-    )
-    body = F.when(u.contains("E"), expanded).otherwise(plain)
-    return (
-        F.when(F.isnan(d), F.lit("NaN"))
-        .when(d == F.lit(float("inf")), F.lit("+Inf"))
-        .when(d == F.lit(float("-inf")), F.lit("-Inf"))
-        .when(neg, F.concat(F.lit("-"), body))
-        .otherwise(body)
-    )
-
-
 def zip_attrs(keys: Column, values: Column) -> Column:
     """F4: parallel key/value arrays → map (api/service.go:289-308).
 

@@ -49,107 +49,3 @@ SPAN_SCHEMA = T.StructType(
         T.StructField("events", T.ArrayType(EVENT_STRUCT)),
     ]
 )
-
-
-def otlp_anyvalue_schema(depth: int = 2) -> T.StructType:
-    """OTLP AnyValue (one/two nesting levels — practical payloads are
-    shallow; the reference recurses, collector/service.go:184-237)."""
-    fields = [
-        T.StructField("stringValue", T.StringType()),
-        T.StructField("intValue", T.StringType()),      # JSON int64 is a string in OTLP JSON
-        T.StructField("doubleValue", T.DoubleType()),
-        T.StructField("boolValue", T.BooleanType()),
-        T.StructField("bytesValue", T.StringType()),    # base64
-    ]
-    if depth > 0:
-        inner = otlp_anyvalue_schema(depth - 1)
-        fields.append(
-            T.StructField(
-                "arrayValue",
-                T.StructType([T.StructField("values", T.ArrayType(inner))]),
-            )
-        )
-        fields.append(
-            T.StructField(
-                "kvlistValue",
-                T.StructType(
-                    [
-                        T.StructField(
-                            "values",
-                            T.ArrayType(
-                                T.StructType(
-                                    [
-                                        T.StructField("key", T.StringType()),
-                                        T.StructField("value", inner),
-                                    ]
-                                )
-                            ),
-                        )
-                    ]
-                ),
-            )
-        )
-    return T.StructType(fields)
-
-
-def otlp_request_schema() -> T.StructType:
-    """ExportTraceServiceRequest JSON schema (current *and* legacy
-    ``instrumentationLibrarySpans`` shape, collector/controller.go:97-223)."""
-    attr = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("value", otlp_anyvalue_schema()),
-        ]
-    )
-    event = T.StructType(
-        [
-            T.StructField("timeUnixNano", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("attributes", T.ArrayType(attr)),
-        ]
-    )
-    span = T.StructType(
-        [
-            T.StructField("traceId", T.StringType()),
-            T.StructField("spanId", T.StringType()),
-            T.StructField("parentSpanId", T.StringType()),
-            T.StructField("flags", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("startTimeUnixNano", T.StringType()),
-            T.StructField("endTimeUnixNano", T.StringType()),
-            T.StructField("attributes", T.ArrayType(attr)),
-            T.StructField("events", T.ArrayType(event)),
-        ]
-    )
-    scope = T.StructType(
-        [
-            T.StructField("name", T.StringType()),
-            T.StructField("version", T.StringType()),
-        ]
-    )
-    scope_spans = T.StructType(
-        [
-            T.StructField("scope", scope),
-            T.StructField("spans", T.ArrayType(span)),
-        ]
-    )
-    legacy_scope_spans = T.StructType(
-        [
-            T.StructField("instrumentationLibrary", scope),
-            T.StructField("spans", T.ArrayType(span)),
-        ]
-    )
-    resource = T.StructType([T.StructField("attributes", T.ArrayType(attr))])
-    resource_spans = T.StructType(
-        [
-            T.StructField("resource", resource),
-            T.StructField("schemaUrl", T.StringType()),
-            T.StructField("scopeSpans", T.ArrayType(scope_spans)),
-            T.StructField(
-                "instrumentationLibrarySpans", T.ArrayType(legacy_scope_spans)
-            ),
-        ]
-    )
-    return T.StructType(
-        [T.StructField("resourceSpans", T.ArrayType(resource_spans))]
-    )

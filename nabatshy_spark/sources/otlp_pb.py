@@ -6,13 +6,13 @@ protobuf runtime nor the spark-protobuf connector jar is available in
 this environment, so this module decodes the public protobuf wire format
 directly (varint / fixed64 / length-delimited / fixed32 — the encoding
 documented at protobuf.dev/programming-guides/encoding) against the
-public opentelemetry-proto trace message layout, vectorized over Arrow
-batches with ``mapInPandas``.
+public opentelemetry-proto trace message layout.
 
-Each decoded request is re-emitted as an OTLP-JSON document and fed to
-the existing ``parse_otlp_json`` explode chain, so AnyValue
-normalization (S5) and denormalization (S6) have exactly ONE
-implementation — the protobuf path cannot drift from the JSON path.
+Each request decodes straight to the dict that ``json.loads`` gives
+for the same request in OTLP-JSON, and ``sources/otlp.py``'s decoder
+takes it from there in the same Arrow-batched pass: legacy rewrite,
+AnyValue normalization (S5) and denormalization (S6) have one
+implementation, so the protobuf path cannot drift from the JSON path.
 Trace/span/parent ids are base64-encoded exactly like the reference's
 ``encodeBytes`` (collector/service.go:160-162, 273-275).
 
@@ -29,10 +29,9 @@ import struct
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from nabatshy_spark.sources.otlp import parse_otlp_json
+from nabatshy_spark.sources.otlp import PARSED_COLUMNS, decode_requests
 
 # --- wire-format primitives -------------------------------------------
 
@@ -100,7 +99,7 @@ def _repeated(buf: bytes, fno: int) -> list[bytes]:
     return [v for f, _, v in _fields(buf) if f == fno]
 
 
-# --- opentelemetry-proto message decoders → OTLP-JSON shapes ----------
+# --- opentelemetry-proto message decoders → OTLP-JSON dicts ----------
 
 
 def _anyvalue(buf: bytes) -> dict[str, Any]:
@@ -220,11 +219,15 @@ def _resource_spans(buf: bytes) -> dict[str, Any]:
     return out
 
 
-def request_to_json(payload: bytes) -> str:
-    """ExportTraceServiceRequest wire bytes → OTLP-JSON document
+def request_to_dict(payload: bytes) -> dict[str, Any]:
+    """ExportTraceServiceRequest wire bytes → the OTLP-JSON request dict
     (collector.trace.v1: repeated ResourceSpans resource_spans = 1)."""
-    rs = [_resource_spans(v) for v in _repeated(bytes(payload), 1)]
-    return json.dumps({"resourceSpans": rs})
+    return {"resourceSpans": [_resource_spans(v) for v in _repeated(bytes(payload), 1)]}
+
+
+def request_to_json(payload: bytes) -> str:
+    """ExportTraceServiceRequest wire bytes → OTLP-JSON document."""
+    return json.dumps(request_to_dict(payload))
 
 
 # --- Spark surface ----------------------------------------------------
@@ -233,16 +236,15 @@ def request_to_json(payload: bytes) -> str:
 def parse_otlp_protobuf(df: DataFrame, bin_col: str = "value") -> DataFrame:
     """Binary protobuf request payloads → denormalized wide span rows.
 
-    Decode runs as an Arrow-batched ``mapInPandas`` (one Python call per
-    batch of payloads, not per span) emitting OTLP-JSON, then the
-    existing JSON explode chain takes over JVM-side. Malformed payloads
-    are dropped here; use :func:`parse_otlp_protobuf_with_dead_letter`
-    to capture them. The reference 400s the whole request instead
+    Decode runs in the Arrow-batched decoder of ``sources/otlp.py``
+    (one Python call per batch of payloads, not per span). Malformed
+    payloads are dropped here; use
+    :func:`parse_otlp_protobuf_with_dead_letter` to capture them. The
+    reference 400s the whole request instead
     (collector/controller.go:48-52) — at 100 TB a poison payload must
     not kill the job, so the dead-letter split is the scale-safe shape.
     """
-    good, _ = parse_otlp_protobuf_with_dead_letter(df, bin_col)
-    return good
+    return decode_requests(df, bin_col, request_to_dict)
 
 
 def parse_otlp_protobuf_with_dead_letter(
@@ -250,26 +252,9 @@ def parse_otlp_protobuf_with_dead_letter(
 ) -> tuple[DataFrame, DataFrame]:
     """Like :func:`parse_otlp_protobuf` but also returns the undecodable
     payloads as ``(raw_payload binary, error string)`` for replay."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            docs, errs = [], []
-            for raw in pdf[bin_col]:
-                try:
-                    docs.append(request_to_json(raw))
-                    errs.append(None)
-                except Exception as ex:  # malformed wire data
-                    docs.append(None)
-                    errs.append(f"{type(ex).__name__}: {ex}")
-            yield pd.DataFrame(
-                {"value": docs, "__error": errs, "__raw": pdf[bin_col]}
-            )
-
-    decoded = df.mapInPandas(
-        decode, "value string, __error string, __raw binary"
-    )
-    bad = decoded.filter("__error IS NOT NULL").selectExpr(
+    rows = decode_requests(df, bin_col, request_to_dict, dead_letter=True)
+    good = rows.filter("__error IS NULL").select(*PARSED_COLUMNS)
+    bad = rows.filter("__error IS NOT NULL").selectExpr(
         "__raw AS raw_payload", "__error AS error"
     )
-    good = decoded.filter("__error IS NULL").select("value")
-    return parse_otlp_json(good, "value"), bad
+    return good, bad

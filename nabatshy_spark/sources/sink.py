@@ -18,10 +18,26 @@ GB per file.
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PARTITION_COL = "ingest_hour"
+
+# one lock per resolved table path: Spark's file commit protocol stages
+# every append job under <path>/_temporary/0, so two concurrent appends
+# to one path (e.g. the JSON and protobuf ingest streams) can commit or
+# delete each other's task output
+_APPEND_LOCKS: dict[str, threading.Lock] = {}
+_APPEND_LOCKS_GUARD = threading.Lock()
+
+
+def _append_lock(path: str) -> threading.Lock:
+    key = path if "://" in path else os.path.realpath(path.removeprefix("file:"))
+    with _APPEND_LOCKS_GUARD:
+        return _APPEND_LOCKS.setdefault(key, threading.Lock())
 
 
 def with_partition_col(df: DataFrame) -> DataFrame:
@@ -42,15 +58,19 @@ def append_spans(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     ``fmt`` selects the columnar file format: ``parquet`` (default) or
     ``orc`` — both stripe/row-group indexed, so the sort-within-
     partition min/max pruning works identically; ORC is the drop-in
-    for Hive-ecosystem consumers."""
-    (
+    for Hive-ecosystem consumers.
+
+    Appends to the same path from threads of this process run one at a
+    time (writers in other processes: ``idempotent_append``)."""
+    writer = (
         with_partition_col(df)
         .sortWithinPartitions("start_time_unix_nano", "trace_id")
         .write.mode("append")
         .partitionBy(PARTITION_COL)
         .format(fmt)
-        .save(path)
     )
+    with _append_lock(path):
+        writer.save(path)
 
 
 def read_spans(spark, path: str, fmt: str = "parquet") -> DataFrame:
@@ -76,8 +96,14 @@ def idempotent_append(df: DataFrame, path: str, batch_id: int) -> bool:
     lambda b, i: idempotent_append(b, path, i))``. Readers
     ``spark.read.parquet(path + "/batch=*")`` or just ``path`` —
     the batch key is a plain partition column.
+
+    It is also the sink for writers in different processes that share
+    one table path: each batch writes its own staging directory, so no
+    two jobs share ``_temporary``, whereas ``append_spans`` only
+    serializes appends within one process. The writers' batch ids must
+    then not collide: another writer's batch 0 would be taken for a
+    replay of the first one's.
     """
-    import os
     import shutil
 
     final = os.path.join(path, f"batch={batch_id}")

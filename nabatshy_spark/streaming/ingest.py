@@ -2,18 +2,28 @@
 
 The reference's collector is a continuous push pipeline: each POST to
 :4318 becomes one batch insert (collector/service.go:176, main.go:29).
-The faithful Spark mapping is a micro-batch stream:
+The Spark mapping is a micro-batch stream:
 
-    readStream (files of OTLP JSON documents; Kafka in production)
-      → parse_otlp_json (same transform as batch — one code path)
+    readStream (files of OTLP JSON documents or protobuf requests;
+                Kafka in production)
+      → parse_otlp_json / parse_otlp_protobuf (the batch decoder —
+        one code path, sources/otlp.py)
       → foreachBatch append to the partitioned span table
+
+The sink plans the parse again for every micro-batch, so planning is
+a fixed cost per trigger. The decoder's plan is one ``mapInArrow`` over
+the raw column, planned in milliseconds, so a batch costs what its
+rows cost. The decoder is Python running on the executors; the parse
+functions ship this package to them, so ingest does not depend on the
+driver's working directory.
 
 Semantics matched to the reference: at-least-once, no dedup (replayed
 payloads duplicate rows in ClickHouse too), no watermarks — all
 windowing stays query-time (T1–T5). ``foreachBatch`` keeps the sink
 pluggable: the same function body can `.write.format("jdbc")` into
 ClickHouse per BASELINE's spark_approach, with parquet as the test
-sink.
+sink. Both file streams may append to one table path:
+``append_spans`` serializes appends to a path within the process.
 """
 
 from __future__ import annotations

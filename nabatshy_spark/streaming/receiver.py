@@ -22,7 +22,7 @@ the receiver and every downstream transform are unchanged.
 Content negotiation matches collector/controller.go:43-78 exactly:
 ``application/x-protobuf`` (S2 wire decode), ``application/json``
 (including the legacy ``instrumentationLibrarySpans`` rewrite, which
-parse_otlp_json handles in-plan), 405 for non-POST, 415 for other
+parse_otlp_json handles in its decoder), 405 for non-POST, 415 for other
 content types, 400 for undecodable JSON. Success returns 200 with an
 empty ``ExportTraceServiceResponse`` (zero bytes on the wire, as
 proto.Marshal of the empty message produces).

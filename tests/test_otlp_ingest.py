@@ -266,3 +266,43 @@ def test_anyvalue_reference_semantics(spark):
     assert json.loads(sa["kv"]) == {"a": "0.5", "z": "9"}
     assert list(json.loads(sa["kv"])) == ["a", "z"]   # sorted key order
     assert sa["empty_str"] == ""
+
+
+def test_duplicate_attribute_key_last_wins(spark):
+    """A repeated attribute key is assigned twice into the reference's
+    Go map, so the later value wins; it must not fail the batch."""
+    doc = json.loads(_payload())
+    spans = doc["resourceSpans"][0]["scopeSpans"][0]["spans"]
+    spans[0]["attributes"] += [
+        {"key": "str_attr", "value": {"stringValue": "again"}},
+        {"key": "kv_attr", "value": {"kvlistValue": {"values": [
+            {"key": "k", "value": {"stringValue": "1"}},
+            {"key": "k", "value": {"stringValue": "2"}}]}}},
+    ]
+    doc["resourceSpans"][0]["resource"]["attributes"].append(
+        {"key": "env", "value": {"stringValue": "staging"}}
+    )
+    rows = {r.span_id: r for r in ingest_batch(spark, [json.dumps(doc)]).collect()}
+    assert set(rows) == {"s0", "s1", "s2", "s3"}
+    r = rows["s0"]
+    assert r.span_attributes["str_attr"] == "again"
+    assert r.span_attributes["kv_attr"] == '{"k":"2"}'
+    assert r.resource_attributes["env"] == "staging"
+    assert r.sa_keys == sorted(set(r.sa_keys))
+    assert dict(zip(r.sa_keys, r.sa_values)) == dict(r.span_attributes)
+
+
+def test_legacy_span_attribute_overrides_resource_key(spark):
+    """Legacy rewrite (collector/controller.go:150-180): span attributes
+    are merged after resource attributes, so a shared key takes the
+    span's value."""
+    doc = json.loads(_legacy_payload())
+    doc["resourceSpans"][0]["resource"]["attributes"] = [
+        {"key": "str_attr", "value": {"stringValue": "from-resource"}},
+        {"key": "env", "value": {"stringValue": "prod"}},
+    ]
+    [r] = ingest_batch(spark, [json.dumps(doc)]).collect()
+    assert r.resource_attributes["str_attr"] == "hello"
+    assert r.resource_attributes["env"] == "prod"
+    assert r.ra_keys == sorted(r.resource_attributes)
+    assert dict(zip(r.ra_keys, r.ra_values)) == dict(r.resource_attributes)

@@ -392,3 +392,42 @@ def test_kafka_spool_stream_raises_without_package(spark):
         kafka_spool_stream(spark, "localhost:1").writeStream  # force analysis
     msg = str(ei.value)
     assert "kafka" in msg.lower()
+
+
+def test_concurrent_appends_to_one_path_all_land(spark, tmp_path):
+    """Threads (as the JSON and protobuf ingest streams do) append to
+    one table path; Spark stages every append under the same
+    <path>/_temporary/0, so appends must not interleave."""
+    import json
+    import threading
+
+    from tests.test_otlp_ingest import _span
+
+    out = str(tmp_path / "spans")
+
+    def doc(trace: str) -> str:
+        spans = [_span(0, trace=trace), _span(1, parent="s0", trace=trace)]
+        return json.dumps({"resourceSpans": [{
+            "resource": {"attributes": []},
+            "scopeSpans": [{"scope": {"name": "svc"}, "spans": spans}],
+        }]})
+
+    writers, rounds, errors = (os.cpu_count() or 4) + 1, 3, []
+
+    def writer(w: int) -> None:
+        try:
+            for r in range(rounds):
+                append_spans(ingest_batch(spark, [doc(f"w{w}-r{r}")]), out)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(writers)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert not errors
+    got = sorted(tuple(r) for r in read_spans(spark, out).select("trace_id", "span_id").collect())
+    want = sorted((f"w{w}-r{r}", s) for w in range(writers) for r in range(rounds) for s in ("s0", "s1"))
+    assert got == want
