@@ -47,8 +47,7 @@ from nabatshy_spark.schema import SPAN_SCHEMA
 # values, and one more level inside a kvlist; deeper nesting yields no
 # value (the reference recurses without bound, service.go:184-237)
 _ANYVALUE_DEPTH = 2
-# spans per output Arrow batch, so one huge request cannot build an
-# unbounded batch
+# spans per output Arrow batch: a request may carry any number of spans
 _BATCH_ROWS = 4096
 
 PARSED_COLUMNS = (
@@ -344,9 +343,9 @@ def _decode_batches(
                     rows.append(bad + (raw, f"{type(ex).__name__}: {ex}"))
                 continue
             rows.extend(r + ok for r in spans)
-            if len(rows) >= _BATCH_ROWS:
-                yield _record_batch(rows, schema)
-                rows = []
+            while len(rows) >= _BATCH_ROWS:
+                yield _record_batch(rows[:_BATCH_ROWS], schema)
+                del rows[:_BATCH_ROWS]
     if rows:
         yield _record_batch(rows, schema)
 

@@ -10,10 +10,13 @@ import os
 import subprocess
 import sys
 
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from nabatshy_spark.sources import otlp
 from nabatshy_spark.sources.otlp import (
     format_go_float,
     json_request,
@@ -23,7 +26,7 @@ from nabatshy_spark.sources.otlp import (
 from nabatshy_spark.sources.otlp_pb import parse_otlp_protobuf, request_to_dict
 from nabatshy_spark.streaming.ingest import RAW_SCHEMA, ingest_batch
 from tests import pb_wire
-from tests.test_otlp_ingest import _payload
+from tests.test_otlp_ingest import _legacy_payload, _payload
 from tests.test_otlp_protobuf import _request_dict
 
 BIN_SCHEMA = T.StructType([T.StructField("value", T.BinaryType())])
@@ -146,6 +149,19 @@ def test_spark_rows_match_across_content_types(spark, reqs):
     js_rows = sorted(parse_otlp_json(js).collect(), key=repr)
     assert js_rows == sorted(parse_otlp_protobuf(pb).collect(), key=repr)
     assert len(js_rows) == sum(len(span_rows(_as_json(r))) for r in reqs)
+
+
+def test_output_batches_are_bounded(monkeypatch):
+    """A request with more spans than a batch holds is split across
+    batches of at most ``_BATCH_ROWS`` rows, in order."""
+    monkeypatch.setattr(otlp, "_BATCH_ROWS", 3)
+    raw = pa.array([_payload().encode(), _legacy_payload().encode()], pa.binary())
+    batches = list(otlp._decode_batches(
+        iter([pa.record_batch([raw], names=["value"])]),
+        json_request, to_arrow_schema(otlp._PARSED), dead_letter=False,
+    ))
+    assert [b.num_rows for b in batches] == [3, 2]
+    assert [s for b in batches for s in b.column("span_id").to_pylist()] == ["s0", "s1", "s2", "s3", "s9"]
 
 
 # --- Go 'f' formatting of doubles ------------------------------------------
