@@ -1,6 +1,7 @@
 """The OTLP request decoder (sources/otlp.py): JSON and protobuf give
-the same rows for any request, Go-exact double formatting, a plan that
-stays small, and ingest that runs from any working directory."""
+the same rows for any request, bounded output batches, Go-exact double
+formatting, a plan that stays small, and ingest that runs from any
+working directory."""
 
 from __future__ import annotations
 
