@@ -1,26 +1,32 @@
-"""One artifact lifecycle for every fingerprint-keyed materialization.
+"""One artifact contract for every fingerprint-keyed materialization.
 
-Six operators materialize a derived relation/layout once per corpus
-version and serve every consumer from it (the 100 TB shape: the build
-is a scheduled job, consumers read its output): dedup's shared n-gram
-pair relation, the exact-substring run relation, the IVF / IVF+PQ
-vector indexes, the continuous-aggregate rollup, and the z-order /
-bucketed table layouts. Until round 9 each carried a private copy of
-the same staging+rename+`_SUCCESS` logic (VERDICT r9 task #2); this
-module is the single owner of that lifecycle:
+A derived relation or table layout that is a deterministic function of
+on-disk sources is built once per source version and every consumer
+reads it (at scale the build is a scheduled job and consumers read its
+output). The artifacts today: dedup's n-gram pair, curation flag,
+curated pair, MinHash signature, incremental corpus index and
+duplicated char-window relations; the hot-chunk set; the exact-substring
+window and run relations; the entity-resolution match relations; the
+trade-graph edges; the inverted-index postings; the basket supports; the
+IVF / IVF+PQ vector indexes; the continuous-aggregate rollup; and the
+z-order / bucketed table layouts. Callers say WHAT an artifact is; this
+module decides where it lives and owns its lifecycle:
 
-- **Key** = caller-supplied ``<source fingerprint>_<op version>_<params>``
-  string. :func:`source_fingerprint` hashes every data file's
-  (relative path, size, mtime_ns), so any rewrite of the source
-  invalidates the key; the operator-version token must be bumped on
-  any OUTPUT-semantics change, or a warm cache silently serves
-  pre-change results to every consumer.
-- **Root** = per-user, created ``0700``, ownership-verified before any
-  read or write (a world-writable shared tempdir with predictable keys
-  would let another local user pre-plant a poisoned parquet +
-  ``_SUCCESS`` that every consumer silently trusts). Resolution order:
-  explicit ``base`` arg → per-family env var → ``$SPARK_GRAFT_ARTIFACT_DIR``
-  → ``<tmp>/nabatshy_artifacts_<uid>/<family>``.
+- **Key** = :func:`ensure` derives it from the source paths, the
+  producer's output version and its parameters: a short sha256 over
+  each source's :func:`source_fingerprint` (every data file's relative
+  path, size and mtime_ns, so any rewrite of a source changes it), the
+  version, and the ``repr`` of the sorted parameter items (floats keep
+  every digit, so two thresholds that differ anywhere get two keys).
+  The version must be bumped on any change to the producer's OUTPUT,
+  or a warm root silently serves pre-change rows to every consumer.
+- **Root** = ``$SPARK_GRAFT_ARTIFACT_DIR``, else
+  ``<tmp>/nabatshy_artifacts_<uid>``; an artifact is always published at
+  ``<root>/<family>/<key>``, so two families never share a path. Root
+  and family dirs are created ``0700`` and ownership-verified before
+  any read or write (a world-writable shared tempdir with predictable
+  keys would let another local user pre-plant a poisoned parquet +
+  ``_SUCCESS`` that every consumer silently trusts).
 - **Publish** = build into a pid+nonce staging dir, verify the build
   left a ``_SUCCESS`` marker, then one atomic ``os.rename``. A reader
   can never observe a partial artifact; a lost publish race discards
@@ -31,8 +37,10 @@ module is the single owner of that lifecycle:
   between the check and the eviction.
 - **GC** (bounds tempdir growth): on every build, sibling staging /
   quarantine dirs older than an hour and published artifacts untouched
-  for ``ttl`` seconds are swept; completed artifacts are ``utime``-
-  touched on every cache hit, so TTL is time-since-last-read.
+  for :data:`DEFAULT_TTL` seconds are swept; completed artifacts are
+  ``utime``-touched on every cache hit, so the TTL is time since the
+  last read. Artifacts under keys no producer derives any more simply
+  age out.
 - **Observability**: each build this process actually published is
   recorded in :data:`BUILD_TIMES` (``"family/key" -> seconds``), which
   bench.py empties into per-artifact BUILD lines in BENCH_DETAIL.json —
@@ -49,16 +57,16 @@ import shutil
 import tempfile
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 # "family/key" -> build wall seconds, for builds THIS process published.
 BUILD_TIMES: dict[str, float] = {}
 
 # Stack of child-build wall seconds for the builds currently running in
-# this process: a build that calls ensure() for ANOTHER family (round
-# 12: substr/decon builds derive from the level-1 dup-window artifact,
-# the curated-pairs build reads the curation flags) would otherwise
-# have the child's seconds recorded twice — once under the child's own
+# this process: a build that calls ensure() for ANOTHER family (the
+# substr/decon builds read the dup-window artifact, the curated-pairs
+# build reads the curation flags) would otherwise have the child's
+# seconds recorded twice — once under the child's own
 # BUILD_TIMES line and once inside the parent's wall. Each frame
 # accumulates the wall time of nested ensure() build paths; the parent
 # records its wall MINUS that, so artifact_build_sec stays a true sum.
@@ -87,10 +95,10 @@ def source_fingerprint(source_path: str) -> str:
 
 
 def artifact_root() -> str:
-    """The shared default root: env-overridable (bench points it at a
-    per-run dir so builds are measured, not inherited), else a per-user
-    tempdir — the uid suffix plus the 0700 mode closes the
-    pre-planted-cache hole on multi-user hosts."""
+    """``$SPARK_GRAFT_ARTIFACT_DIR`` (bench points it at a per-run dir
+    so builds are measured, not inherited), else a per-user tempdir —
+    the uid suffix plus the 0700 mode closes the pre-planted-cache hole
+    on multi-user hosts. The one artifact-location setting."""
     return os.environ.get("SPARK_GRAFT_ARTIFACT_DIR") or os.path.join(
         tempfile.gettempdir(), f"nabatshy_artifacts_{os.getuid()}"
     )
@@ -98,11 +106,11 @@ def artifact_root() -> str:
 
 def _secure_dir(path: str) -> str:
     # makedirs applies `mode` only to the LEAF dir; intermediates get
-    # umask-default bits, so callers creating <root>/<family> in one
-    # call could leave a group/world-writable root under a permissive
-    # umask — another user could then rename family dirs aside (TOCTOU)
-    # even though per-dir ownership checks block pre-planted contents
-    # (ADVICE r10). _resolve therefore secures root and family each.
+    # umask-default bits, so creating <root>/<family> in one call could
+    # leave a group/world-writable root under a permissive umask —
+    # another user could then rename family dirs aside (TOCTOU) even
+    # though per-dir ownership checks block pre-planted contents.
+    # ensure() therefore secures root and family each.
     os.makedirs(path, mode=0o700, exist_ok=True)
     st = os.stat(path)
     if st.st_uid != os.getuid():
@@ -168,11 +176,11 @@ def _sweep(base: str, ttl: float) -> None:
             ):
                 shutil.rmtree(p, ignore_errors=True)
         elif age > ttl:
-            # Same never-delete-in-place rule as _publish (ADVICE r10):
-            # a crashed partial build sitting at a key path could be
-            # replaced by a racer's valid quarantine-restore publish
-            # during a long rmtree — rename the expired entry aside
-            # atomically first, then delete the quarantined copy. The
+            # Same never-delete-in-place rule as _publish: a crashed
+            # partial build sitting at a key path could be replaced by
+            # a racer's valid quarantine-restore publish during a long
+            # rmtree — rename the expired entry aside atomically
+            # first, then delete the quarantined copy. The
             # ".quarantine-" name keeps a concurrent sweep's handling
             # of a leftover (if we die mid-rmtree) on the age-gated
             # staging branch above.
@@ -234,46 +242,42 @@ def _publish(staging: str, path: str) -> bool:
         return False
 
 
-def _resolve(
-    family: str, key: str, env_var: str | None, base: str | None
-) -> tuple[str, str]:
-    """(root, path) for an artifact, securing every dir this module
-    creates: ``base`` (explicit override, e.g. a test tmpdir) wins over
-    the per-family ``env_var``, which wins over the shared root — and
-    when the shared root is used, it is secured BEFORE the family
-    subdir so no intermediate is left with umask-default permissions
-    (ADVICE r10)."""
-    root = base or (os.environ.get(env_var) if env_var else None)
-    if root is None:
-        root = os.path.join(_secure_dir(artifact_root()), family)
-    return _secure_dir(root), os.path.join(root, key)
+def _key(sources: str | Sequence[str], version: int, params: dict) -> str:
+    h = hashlib.sha256()
+    for src in [sources] if isinstance(sources, str) else sources:
+        h.update(source_fingerprint(src).encode() + b"\0")
+    h.update(f"v{version}\0{sorted(params.items())!r}".encode())
+    return h.hexdigest()[:16]
 
 
 def ensure(
     family: str,
-    key: str,
+    sources: str | Sequence[str],
+    version: int,
+    params: dict,
     build: Callable[[str], None],
-    *,
-    env_var: str | None = None,
-    base: str | None = None,
-    ttl: float = DEFAULT_TTL,
 ) -> str:
-    """Idempotently materialize artifact ``family``/``key`` and return
-    its published path. ``build(staging_path)`` must write the complete
-    artifact (including a ``_SUCCESS`` marker — Spark's parquet writer
-    emits one) into ``staging_path``; it runs only on a cache miss.
+    """Idempotently materialize the ``family`` artifact derived from
+    ``sources`` by producer output ``version`` with ``params``, and
+    return its published path ``<root>/<family>/<key>``.
 
-    ``base`` (explicit override, e.g. a test tmpdir) wins over the
-    per-family ``env_var``, which wins over the shared root.
+    ``params`` must hold every producer argument that can change the
+    output (values with a deterministic ``repr``: numbers, strings,
+    None, lists/tuples of those). ``build(staging_path)`` must write the
+    complete artifact (including a ``_SUCCESS`` marker — Spark's
+    parquet writer emits one) into ``staging_path``; it runs only on a
+    cache miss.
     """
-    root, path = _resolve(family, key, env_var, base)
+    key = _key(sources, version, params)
+    root = _secure_dir(os.path.join(_secure_dir(artifact_root()), family))
+    path = os.path.join(root, key)
     if _complete(path):
         try:
             os.utime(path)  # LRU marker: TTL is time-since-last-read
         except OSError:
             pass
         return path
-    _sweep(root, ttl)
+    _sweep(root, DEFAULT_TTL)
     staging = f"{path}.staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     t0 = time.perf_counter()
     _ACTIVE_BUILDS.append(0.0)
@@ -285,8 +289,7 @@ def ensure(
             # it is only swept after the 1 h staging TTL and only on a
             # later cache miss in the same family root, so repeated
             # failing builds of large artifacts (layout families are
-            # full table copies) would otherwise accumulate (ADVICE
-            # r10).
+            # full table copies) would otherwise accumulate.
             shutil.rmtree(staging, ignore_errors=True)
             raise
     finally:

@@ -67,6 +67,12 @@ def ensure_worker_imports(spark: SparkSession) -> None:
         _PYFILES_SHIPPED.add(id(sc))
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The parquet source of table ``name`` under ``sf_dir`` — what
+    :func:`load` reads and what artifacts fingerprint."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_worker_imports(spark)
     if name not in TABLES:
@@ -78,11 +84,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # double round-trip would corrupt low microseconds). This
         # matches DuckDB's ns→µs truncation on the same file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = spark.read.parquet(table_path(sf_dir, "events"))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(table_path(sf_dir, name))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

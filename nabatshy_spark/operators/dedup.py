@@ -27,10 +27,14 @@ index before the self-join.
 from __future__ import annotations
 
 import math
+import os
 import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
 
 # ---------------------------------------------------------------------------
 # building blocks
@@ -281,9 +285,16 @@ def ngram_jaccard_pairs(
     return exact_now.unionByName(verified)
 
 
-# Bump when ngram_jaccard_pairs' OUTPUT semantics change (see key note
-# in shared_ngram_pairs).
-_PAIRS_VERSION = 1
+# Output versions of this module's artifacts (see artifacts.ensure):
+# bump one whenever its producer's output semantics change, or a warm
+# artifact root silently serves pre-change rows to every consumer.
+_PAIRS_VERSION = 1  # ngram_jaccard_pairs
+# the keep predicate (textanalysis.quality_score_expr ≥ 0.6 ∧
+# pred_lang_expr = 'en') and the flag schema
+_CURATION_FLAGS_VERSION = 1
+# the keep predicate, the exact-dedup-first composition and
+# ngram_jaccard_pairs
+_CURATED_PAIRS_VERSION = 1
 
 
 def shared_ngram_pairs(
@@ -294,53 +305,22 @@ def shared_ngram_pairs(
     max_df: int | None = 200,
 ) -> DataFrame:
     """Fingerprint-keyed materialization of
-    ``ngram_jaccard_pairs(documents, "doc_id", "text", n, threshold,
-    max_df)`` — the pair relation EIGHT registry queries consume with
-    identical parameters (dedup_ngram_jaccard, dedup_components,
-    dedup_cluster_stats, dedup_keep_best, source_overlap_matrix,
-    dup_threshold_curve, split-leakage, minhash_dedup_eval).
+    ``ngram_jaccard_pairs(documents, n, threshold, max_df)`` — the one
+    pair relation the dedup-derived queries read (dedup_ngram_jaccard,
+    dedup_components, dedup_cluster_stats, dedup_keep_best,
+    source_overlap_matrix, dup_threshold_curve, split_leakage_audit,
+    minhash_dedup_eval).
 
-    Same lifecycle as the IVF index / continuous-aggregate rollup
-    (sources/contagg.py): keyed by a content fingerprint of the source
-    parquet plus the operator parameters, built once, staged to a temp
-    dir and atomically renamed so a failed or concurrent build can
-    never be read as complete. Any rewrite of the documents table
-    invalidates the key.
-
-    Why (VERDICT r8 #1): the capped posting join costs ~2.1 s at sf0.1
-    — the measured floor for EVERY query that recomputes it — while the
-    pair relation itself is a few hundred rows. A curation run asks all
-    of these questions of the SAME pair set; recomputing the join per
-    question is the single biggest redundant cost in the bench. The
-    materialized relation is byte-identical to the direct operator
-    output (deterministic operator, exact doubles through parquet), so
-    oracle differentials are unaffected.
-
-    At 100 TB this is not an optimization but the only sane shape: the
-    pair-finding pass is a multi-hour job whose output (dup pairs) is
-    many orders of magnitude smaller than its input; every downstream
-    consumer reads the artifact.
-
-    Lifecycle (key/staging/publish/GC) is owned by
-    nabatshy_spark.artifacts.ensure — shared with the substring-run
-    artifact, the IVF indexes, the continuous-aggregate rollup, and
-    the layout tables.
+    Why: the capped posting join costs ~2.1 s at sf0.1 — the floor
+    for every query that recomputes it — while the pair relation
+    itself is a few hundred rows, and a curation run asks all of these
+    questions of the SAME pair set. The materialized relation is
+    byte-identical to the direct operator output (deterministic
+    operator, exact doubles through parquet), so oracle differentials
+    are unaffected. At 100 TB the pair-finding pass is a multi-hour
+    job whose output is many orders of magnitude smaller than its
+    input; every downstream consumer reads the artifact.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    thr = f"{threshold:g}".replace(".", "p")
-    # _PAIRS_VERSION is part of the key: the fingerprint tracks the
-    # DATA, not the operator — bump it whenever ngram_jaccard_pairs'
-    # semantics change, or a machine with a warm cache silently serves
-    # pre-change pairs to all eight consumers.
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_PAIRS_VERSION}"
-        f"_n{n}_t{thr}_df{max_df}"
-    )
 
     def _build(staging: str) -> None:
         pairs = ngram_jaccard_pairs(
@@ -359,17 +339,13 @@ def shared_ngram_pairs(
         pairs.coalesce(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "ngram_pairs", key, _build, env_var="SPARK_GRAFT_PAIRS_DIR"
+        "ngram_pairs",
+        table_path(sf_dir, "documents"),
+        _PAIRS_VERSION,
+        {"n": n, "threshold": threshold, "max_df": max_df},
+        _build,
     )
     return spark.read.parquet(path)
-
-
-# Versions the curation FLAG artifact: the documents fingerprint tracks
-# the data; this tracks the keep predicate (quality ≥ 0.6 ∧ lang = 'en'
-# — textanalysis.quality_score_expr / pred_lang_expr) and the flag
-# schema. Bump on any change to those, or a warm artifact root serves
-# pre-change flags to every curation consumer.
-_CURATION_FLAGS_VERSION = 1
 
 
 def shared_curation_flags(spark, sf_dir: str) -> DataFrame:
@@ -378,30 +354,16 @@ def shared_curation_flags(spark, sf_dir: str) -> DataFrame:
     __fp sha256-of-text when kept else NULL) — one narrow row per
     document, never text.
 
-    Why (VERDICT r11 task #4): the quality/langid regex expressions are
-    the most expensive scan predicates in the tree, and before round 12
-    they were evaluated independently by curation_funnel (per run, into
-    a session-local checkpoint), by curate_corpus (per run) and by the
-    shared_curated_pairs BUILD — three evaluations of one deterministic
-    per-corpus relation. This artifact is the single evaluation; the
-    funnel's stage counts, both queries' kept sets and the pair build's
-    survivor base are all projections of it. Deterministic booleans +
-    sha256 hex → parquet round-trip exact, consumers byte-identical.
-    Explicit read schema: an empty corpus writes no part files."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
+    Why: the quality/langid regex expressions are the most expensive
+    scan predicates in the tree, and curation_funnel, curate_corpus
+    and the :func:`shared_curated_pairs` build all need them. This
+    artifact is the single evaluation; the funnel's stage counts, both
+    queries' kept sets and the pair build's survivor base
+    (:func:`curation_survivor_ids`) are all projections of it.
+    Deterministic booleans + sha256 hex → parquet round-trip exact,
+    consumers byte-identical. Explicit read schema: an empty corpus
+    writes no part files."""
     from nabatshy_spark.operators import textanalysis
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    # "flags_" prefix: this family shares SPARK_GRAFT_PAIRS_DIR with
-    # the pair artifacts, and env-var roots drop the family segment —
-    # the same collision class ADVICE r11 flagged on curated_pairs.
-    key = (
-        f"flags_{artifacts.source_fingerprint(src)}"
-        f"_v{_CURATION_FLAGS_VERSION}"
-    )
 
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
@@ -422,20 +384,25 @@ def shared_curation_flags(spark, sf_dir: str) -> DataFrame:
         )
 
     path = artifacts.ensure(
-        "curation_flags", key, _build, env_var="SPARK_GRAFT_PAIRS_DIR"
+        "curation_flags", table_path(sf_dir, "documents"), _CURATION_FLAGS_VERSION, {}, _build
     )
     return spark.read.schema(
         "doc_id bigint, __q boolean, __k boolean, __fp string"
     ).parquet(path)
 
 
-# Versions the CURATED pair artifact: the documents fingerprint tracks
-# the data; this tracks (a) the keep predicate (quality ≥ 0.6 ∧
-# lang = 'en' — textanalysis.quality_score_expr / pred_lang_expr), (b)
-# the exact-dedup-first composition, and (c) ngram_jaccard_pairs
-# semantics. Bump on any change to those, or a warm artifact root
-# serves pre-change pairs to both curation queries.
-_CURATED_PAIRS_VERSION = 1
+def curation_survivor_ids(flags: DataFrame) -> DataFrame:
+    """(doc_id) of the exact-dedup survivors among the kept documents of
+    a :func:`shared_curation_flags` relation: ``__fp`` is sha256(text)
+    of each kept doc, so min(doc_id) per ``__fp`` IS
+    ``exact_dedup(kept).select("doc_id")`` — without re-reading or
+    re-hashing the text."""
+    return (
+        flags.filter("__k")
+        .groupBy("__fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
 
 
 def shared_curated_pairs(
@@ -447,55 +414,29 @@ def shared_curated_pairs(
 ) -> DataFrame:
     """Fingerprint-keyed materialization of the CURATION pair relation:
     ``ngram_jaccard_pairs`` over the exact-dedup survivors of the
-    quality/lang-kept documents — the subtree `curate_corpus` and
-    `curation_funnel` both recomputed per run (round-11 measurement:
-    the posting join over the kept corpus is ~3 s of each query's
-    5-6 s at sf0.1, paid twice per sweep for one deterministic
-    relation).
+    quality/lang-kept documents — the near-dup stage of both
+    `curate_corpus` and `curation_funnel` (the posting join over the
+    kept corpus measured ~3 s of each query's 5-6 s at sf0.1, for one
+    deterministic relation).
 
-    Same lifecycle and identity argument as :func:`shared_ngram_pairs`
-    (deterministic operator, exact doubles through parquet ⇒
-    byte-identical to the inline subtree; oracle differentials
-    unaffected). At 100 TB the near-dup pass over the curated subset is
-    the scheduled once-per-corpus job; the curated-corpus materializer
-    and its funnel audit are two consumers of its output.
+    Same identity argument as :func:`shared_ngram_pairs` (deterministic
+    operator, exact doubles through parquet ⇒ byte-identical to the
+    inline subtree; oracle differentials unaffected). At 100 TB the
+    near-dup pass over the curated subset is the scheduled
+    once-per-corpus job; the curated-corpus materializer and its funnel
+    audit are two consumers of its output.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    thr = f"{threshold:g}".replace(".", "p")
-    # "curated_" prefix disambiguates this key from shared_ngram_pairs'
-    # (ADVICE r11, high): both families share SPARK_GRAFT_PAIRS_DIR, and
-    # _resolve drops the family path segment under an env-var root — an
-    # un-prefixed key would collide with the corpus-wide pair relation
-    # at identical parameters and silently serve whichever built first.
-    key = (
-        f"curated_{artifacts.source_fingerprint(src)}"
-        f"_v{_CURATED_PAIRS_VERSION}_n{n}_t{thr}_df{max_df}"
-    )
 
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        # Keep predicate + exact-dedup survivors from the shared flag
-        # artifact (round 12, VERDICT r11 task #4) instead of
-        # re-running the quality/langid regexes and re-hashing the
-        # corpus inside this build: flags.__fp is sha256(text) of each
-        # kept doc, so min(doc_id) per __fp IS exact_dedup(kept) — the
-        # same identity curation_funnel's exact_sur_override uses. The
-        # survivor semi-join runs against docs directly (survivor ids
-        # are a subset of kept ids, so the composed filter is
-        # equivalent to kept ∩ survivors).
-        flags = shared_curation_flags(spark, sf_dir)
-        exact_sur = (
-            flags.filter("__k")
-            .groupBy("__fp")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
+        # The survivor semi-join runs against docs directly: survivor
+        # ids are a subset of kept ids, so the composed filter is
+        # kept ∩ survivors.
+        sur_docs = docs.join(
+            curation_survivor_ids(shared_curation_flags(spark, sf_dir)),
+            "doc_id",
+            "left_semi",
         )
-        sur_docs = docs.join(exact_sur, "doc_id", "left_semi")
         pairs = ngram_jaccard_pairs(
             sur_docs, "doc_id", "text", n=n, threshold=threshold, max_df=max_df
         )
@@ -504,7 +445,11 @@ def shared_curated_pairs(
         pairs.coalesce(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "curated_pairs", key, _build, env_var="SPARK_GRAFT_PAIRS_DIR"
+        "curated_pairs",
+        table_path(sf_dir, "documents"),
+        _CURATED_PAIRS_VERSION,
+        {"n": n, "threshold": threshold, "max_df": max_df},
+        _build,
     )
     return spark.read.parquet(path)
 
@@ -601,19 +546,56 @@ def _shingle_sig_udf(n: int, fam: list[tuple[int, int]]):
     return F.pandas_udf("struct<hs: array<bigint>, sig: array<bigint>>")(f)
 
 
-def minhash_lsh_pairs(
+def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
+    num_hashes: int = 128,
+) -> DataFrame:
+    """(id, __hs, __sig) per document with a non-empty shingle set:
+    the distinct 63-bit shingle hashes and the ``num_hashes``-entry
+    MinHash signature of the seeded family — the input of
+    :func:`minhash_lsh_pairs`, and the producer of
+    :func:`shared_minhash_signatures`.
+
+    Repartitioned before the CPU-bound shingle/signature stage — a
+    single-file table would otherwise pin the whole pipeline to one
+    task. The Python-stage fan-out is capped below core count: each
+    task costs a worker spawn + Arrow channel, and the vectorized batch
+    work is cheap, so fewer, larger batches win until data volume
+    actually needs the width.
+    """
+    parallelism = max(8, df.sparkSession.sparkContext.defaultParallelism // 2)
+    return (
+        df.repartition(parallelism, id_col)
+        .select(
+            F.col(id_col),
+            _shingle_sig_udf(n, _hash_family(num_hashes))(F.col(text_col)).alias(
+                "__hsig"
+            ),
+        )
+        .select(
+            F.col(id_col),
+            F.col("__hsig.hs").alias("__hs"),
+            F.col("__hsig.sig").alias("__sig"),
+        )
+        .filter(F.size("__hs") > 0)
+    )
+
+
+def minhash_lsh_pairs(
+    sigs: DataFrame,
+    id_col: str,
     threshold: float = 0.5,
     num_hashes: int = 128,
     rows_per_band: int = 2,
     max_bucket: int | None = None,
-    sig_override: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash signatures + banded LSH, with exact
-    Jaccard verification of the candidates.
+    Jaccard verification of the candidates, over a
+    :func:`minhash_signatures` relation ``sigs`` (computed in-plan or
+    read from :func:`shared_minhash_signatures`).
 
     128 minhashes in 64 bands of 2: P[miss | J=t] = (1-t²)^64 ≈ 1e-8
     at t=0.5, so the result set matches the exact operator while the
@@ -628,58 +610,25 @@ def minhash_lsh_pairs(
     in a cooler band (miss only if every shared band is hot). Keeps the
     pair-expansion cost bounded per bucket regardless of corpus skew.
 
-    ``sig_override`` substitutes a precomputed (id, __hs, __sig)
-    signature relation (already filtered to non-empty shingle sets) for
-    the shingle/signature stage — for callers serving the deterministic
-    per-corpus signatures from a fingerprint-keyed artifact
-    (:func:`shared_minhash_signatures`). ``__sig`` may carry MORE than
-    ``num_hashes`` entries: the seeded hash family is prefix-stable
-    (``_hash_family(k) == _hash_family(K)[:k]`` for k ≤ K, same rng
-    stream) and banding only references indices below ``num_hashes``,
-    so one full-budget signature serves every smaller budget unchanged.
+    ``__sig`` may carry MORE than ``num_hashes`` entries: the seeded
+    hash family is prefix-stable (``_hash_family(k) ==
+    _hash_family(K)[:k]`` for k ≤ K, same rng stream) and banding only
+    references indices below ``num_hashes``, so one full-budget
+    signature serves every smaller budget unchanged.
     """
     bands = num_hashes // rows_per_band
-
-    if sig_override is not None:
-        # persisted for the same four-reference reason as the inline
-        # stage (banding + both verify sides)
-        hs = sig_override.select(F.col(id_col), "__hs", "__sig").persist()
-    else:
-        fam = _hash_family(num_hashes)
-        # Repartition before the CPU-bound shingle/signature stage — a
-        # single-file table would otherwise pin the whole pipeline to
-        # one task — and persist: the frame is referenced four times in
-        # the DAG (banding + both join sides of candidate verification)
-        # and must not be recomputed per reference. The Python-stage
-        # fan-out is capped below core count: each task costs a worker
-        # spawn + Arrow channel, and the vectorized batch work is
-        # cheap, so fewer, larger batches win until data volume
-        # actually needs the width.
-        parallelism = max(
-            8, df.sparkSession.sparkContext.defaultParallelism // 2
-        )
-        hs = (
-            df.repartition(parallelism, id_col)
-            .select(
-                F.col(id_col),
-                _shingle_sig_udf(n, fam)(F.col(text_col)).alias("__hsig"),
-            )
-            .select(
-                F.col(id_col),
-                F.col("__hsig.hs").alias("__hs"),
-                F.col("__hsig.sig").alias("__sig"),
-            )
-            .filter(F.size("__hs") > 0)
-            .persist()
-        )
+    # persisted: the frame is referenced four times in the DAG (banding
+    # + both join sides of candidate verification) and must not be
+    # recomputed per reference
+    hs = sigs.select(F.col(id_col), "__hs", "__sig").persist()
     # Band key = xxhash64(band_index, the band's signature rows), built
     # by ONE transform(sequence(...)) expression rather than `bands`
-    # separate column trees. Two reasons, both measured (round 10):
+    # separate column trees. Two reasons, both measured:
     # (a) driver-side Catalyst ANALYSIS of 64 concat_ws trees cost
-    #     1.2–5 s PER CALL depending on JVM JIT warmth — the whole
-    #     source of dedup_minhash_lsh's 1.68→2.8 s session-to-session
-    #     bench band (VERDICT r9 "what's wrong" #2); the single small
-    #     tree analyzes in ~0.3 s regardless of warmth;
+    #     1.2–5 s PER CALL depending on JVM JIT warmth (a
+    #     session-to-session swing of 1.7–2.8 s on dedup_minhash_lsh);
+    #     the single small tree analyzes in ~0.3 s regardless of
+    #     warmth;
     # (b) an 8-byte long shuffle key beats a ~20-char string key.
     # Folding the band index INTO the hash keys the groupBy on one
     # column; a cross-band xxhash64 collision (~2⁻⁶⁴) could only merge
@@ -752,7 +701,7 @@ def minhash_lsh_pairs(
 
 
 # Bump when the shingle-hash/signature construction changes (token
-# hash, combine, hash family seed) — see key note on shared_ngram_pairs.
+# hash, combine, hash family seed).
 _MINHASH_SIG_VERSION = 1
 
 
@@ -762,60 +711,34 @@ def shared_minhash_signatures(
     n: int = 3,
     num_hashes: int = 128,
 ) -> DataFrame:
-    """Fingerprint-keyed materialization of the MinHash signature
-    relation over ``documents``: (doc_id, __hs, __sig) — the output of
-    the shingle/signature pandas-UDF stage of :func:`minhash_lsh_pairs`
-    filtered to non-empty shingle sets.
+    """Fingerprint-keyed materialization of
+    ``minhash_signatures(documents, "doc_id", "text", n, num_hashes)``.
 
-    Why (VERDICT r11 task #5): under the honest cold-cache protocol the
-    signature UDF + its Arrow boundary are ~60% of dedup_minhash_lsh's
-    2.5 s/run at sf0.1, re-done per run for a deterministic per-corpus
-    relation (seeded hash family). At 100 TB signature computation over
-    the corpus is THE scheduled job of a MinHash dedup deployment;
-    banding, candidate expansion and verification stay per-run (they
-    depend on the band geometry under evaluation). One full-budget
-    signature serves every smaller ``num_hashes`` budget because the
-    seeded family is prefix-stable (see :func:`minhash_lsh_pairs`).
+    Why: the signature UDF + its Arrow boundary are ~60% of
+    dedup_minhash_lsh's 2.5 s/run at sf0.1 (cold cache), for a
+    deterministic per-corpus relation (seeded hash family). At 100 TB
+    signature computation over the corpus is THE scheduled job of a
+    MinHash dedup deployment; banding, candidate expansion and
+    verification stay per-run (they depend on the band geometry under
+    evaluation). One full-budget signature serves every smaller
+    ``num_hashes`` budget (see :func:`minhash_lsh_pairs`).
 
     Integer-valued arrays (int64 hashes / minima) → parquet round-trip
-    exact; consumers are byte-identical to the inline stage. Explicit
+    exact; consumers are byte-identical to the in-plan stage. Explicit
     read schema: an empty corpus writes no part files.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_MINHASH_SIG_VERSION}"
-        f"_n{n}_h{num_hashes}"
-    )
 
     def _build(staging: str) -> None:
-        docs = load(spark, sf_dir, "documents")
-        fam = _hash_family(num_hashes)
-        parallelism = max(
-            8, spark.sparkContext.defaultParallelism // 2
-        )
-        (
-            docs.repartition(parallelism, "doc_id")
-            .select(
-                F.col("doc_id"),
-                _shingle_sig_udf(n, fam)(F.col("text")).alias("__hsig"),
-            )
-            .select(
-                F.col("doc_id"),
-                F.col("__hsig.hs").alias("__hs"),
-                F.col("__hsig.sig").alias("__sig"),
-            )
-            .filter(F.size("__hs") > 0)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
+        minhash_signatures(
+            load(spark, sf_dir, "documents"), "doc_id", "text", n, num_hashes
+        ).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "minhash_sigs", key, _build, env_var="SPARK_GRAFT_MINHASH_DIR"
+        "minhash_sigs",
+        table_path(sf_dir, "documents"),
+        _MINHASH_SIG_VERSION,
+        {"n": n, "num_hashes": num_hashes},
+        _build,
     )
     return spark.read.schema(
         "doc_id bigint, __hs array<bigint>, __sig array<bigint>"
@@ -1237,9 +1160,7 @@ def connected_components(
 
     state = _state(edges)
     if local_threshold is None:
-        import os as _os
-
-        # Driver-memory note (ADVICE r5): the local path holds a
+        # Driver-memory note: the local path holds a
         # union-find dict of up to 2x this many entries on the driver
         # (~60-100 MB per million edges in CPython). Edges land as ONE
         # Arrow table (16 MB per million int64 pairs — columnar, not a
@@ -1250,7 +1171,7 @@ def connected_components(
         # one job and one transfer. Raise NABATSHY_LOCAL_CC_EDGES only
         # with a matching spark.driver.memory bump.
         local_threshold = int(
-            _os.environ.get("NABATSHY_LOCAL_CC_EDGES", "1000000")
+            os.environ.get("NABATSHY_LOCAL_CC_EDGES", "1000000")
         )
     if rounds_out is None and state[0] <= local_threshold:
         utype = edges.schema["u"].dataType
@@ -1307,66 +1228,33 @@ def connected_components(
     return leaves.union(centers)
 
 
-def dedup_pipeline(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-    pairs_override: DataFrame | None = None,
-    exact_sur_override: DataFrame | None = None,
-) -> DataFrame:
+def dedup_pipeline(survivors: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """End-to-end corpus dedup — the composition a training-data
     pipeline actually runs: (1) exact dedup by content hash, (2) exact
     n-gram Jaccard near-dup pairs over the exact survivors, (3) pairs
     clustered into components, (4) keep the min-id doc per cluster.
-    Returns the surviving rows of ``df`` (all original columns).
+
+    The caller supplies stages (1) and (2): ``survivors`` are the rows
+    of the exact survivors (``df`` semi-joined with
+    ``exact_dedup(df, ...).select(id_col)``, or with an equal id
+    relation derived from precomputed fingerprints such as
+    :func:`curation_survivor_ids`) and ``pairs`` is
+    ``ngram_jaccard_pairs(survivors, ...)``, computed in-plan or read
+    from a pair artifact (:func:`shared_curated_pairs`). Returns the
+    surviving rows of ``survivors`` (all its columns).
 
     Stage shapes at scale: (1) shuffles 32-byte digests, (2) shuffles
     (shingle-hash, id) postings, (3) iterates over the tiny pair
     relation, (4) is a shuffle-on-id anti join. Nothing ever shuffles
     document bodies except the final survivor join, which moves only
     the surviving rows.
-
-    ``pairs_override`` substitutes a pre-materialized pair relation
-    for stage (2) — for callers that serve the (deterministic,
-    byte-identical) near-dup pairs from a fingerprint-keyed artifact
-    (``shared_curated_pairs``) instead of re-running the posting join
-    per invocation. It must be exactly
-    ``ngram_jaccard_pairs(sur_docs, id_col, text_col, n, threshold,
-    max_df)`` for the same input; the artifact key encodes that.
-
-    ``exact_sur_override`` substitutes the stage-(1) exact-survivor id
-    relation — for callers that already fingerprinted the corpus in an
-    earlier pass (curation_funnel's flag relation carries the same
-    sha256 per kept doc). Must equal
-    ``exact_dedup(df, id_col, text_col).select(id_col)`` — i.e. the
-    min id per content fingerprint — or stage (2)'s survivor base
-    diverges from the pair relation's.
     """
-    exact_sur = (
-        exact_sur_override
-        if exact_sur_override is not None
-        else exact_dedup(df, id_col, text_col).select(id_col)
-    )
-    # NOT checkpointed deliberately: the three consumers each take a
-    # different narrow projection of the survivors, and recomputing the
-    # (cheap, codegen'd) filter per consumer beats materializing full
-    # text bodies — measured 2.0 s vs 4.6 s at sf0.1 for the pipeline
-    # (localCheckpoint here blocks column pruning through the join).
-    sur_docs = df.join(exact_sur, id_col, "left_semi")
-    pairs = (
-        pairs_override
-        if pairs_override is not None
-        else ngram_jaccard_pairs(sur_docs, id_col, text_col, n, threshold, max_df)
-    )
     removed = (
         connected_components(pairs)
         .filter(F.col("component") < F.col("doc_id"))
         .select(F.col("doc_id").alias(id_col))
     )
-    return sur_docs.join(removed, id_col, "left_anti")
+    return survivors.join(removed, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -1413,22 +1301,25 @@ def decontaminate(
     )
 
 
-def _incremental_corpus_relations(
+def incremental_corpus_index(
     corpus: DataFrame,
     id_col: str,
     text_col: str,
-    n: int,
-    max_df: int | None,
+    n: int = 3,
+    max_df: int | None = None,
 ) -> dict[str, DataFrame]:
-    """The CORPUS-side relations of :func:`incremental_dedup`, derived
-    in-plan: content digests, shingle arrays, rare postings (df ≤ cap),
-    the hot-shingle set (df > cap) and per-doc hot counts. Factored out
-    (round 12) so :func:`shared_incremental_corpus_index` can
-    materialize exactly these relations fingerprint-keyed — they are a
-    deterministic function of the corpus relation, which in the
-    steady-state contract is a deterministic split of static parquet.
-    ``csh`` is persisted (feeds the explode plus the verify join);
-    release is the caller's concern (bench clearCache / unpersist)."""
+    """The CORPUS-side relations :func:`incremental_dedup` checks a
+    batch against: ``hashes`` (__cid, __h content digest), ``shingles``
+    (__cid, __csz shingle count, __sh shingle array), ``rare`` postings
+    (__cid, __s with df ≤ ``max_df``), and with a cap the ``hot``
+    shingle set (__s with df > cap) and per-doc ``hot_counts``
+    (__cid, __hc); both are None when ``max_df`` is None.
+
+    A deterministic function of the corpus relation, so
+    :func:`shared_incremental_corpus_index` can materialize exactly
+    these relations fingerprint-keyed. The shingle relation is
+    persisted (it feeds the explode plus the verify join); release is
+    the caller's concern (bench clearCache / unpersist)."""
     parallelism = corpus.sparkSession.sparkContext.defaultParallelism
     ch = corpus.select(
         F.col(id_col).alias("__cid"), F.sha2(F.col(text_col), 256).alias("__h")
@@ -1439,6 +1330,7 @@ def _incremental_corpus_relations(
             F.col(id_col).alias("__cid"),
             shingles(F.col(text_col), n).alias("__sh"),
         )
+        .select("__cid", F.size("__sh").alias("__csz"), "__sh")
         .persist()
     )
     cex = csh.select("__cid", F.explode("__sh").alias("__s"))
@@ -1471,8 +1363,8 @@ def _incremental_corpus_relations(
     return out
 
 
-# Bump when incremental_dedup's corpus-side relations change shape or
-# semantics (see key note on shared_ngram_pairs).
+# Bump when incremental_corpus_index's relations change shape or
+# semantics.
 _INCR_INDEX_VERSION = 1
 
 
@@ -1484,63 +1376,49 @@ def shared_incremental_corpus_index(
     mod: int = 10,
     batch_lt: int = 2,
 ) -> dict[str, DataFrame]:
-    """Fingerprint-keyed materialization of the CORPUS-side relations
-    of the incremental-dedup contract (``documents`` rows with
-    ``doc_id % mod >= batch_lt`` as the standing corpus): digests,
-    shingle arrays (+ sizes), rare postings, hot-shingle set, per-doc
-    hot counts — everything :func:`incremental_dedup` derives from the
-    corpus per run.
+    """Fingerprint-keyed materialization of
+    ``incremental_corpus_index`` over the standing corpus of the
+    incremental-dedup contract (``documents`` rows with
+    ``doc_id % mod >= batch_lt``).
 
-    Why (VERDICT r11 task #1): the steady-state production mode is "the
-    corpus was indexed long ago; each batch checks against it", but the
-    query re-shingled and re-aggregated the corpus side (80% of the
-    table) on every run — 3.9 s driver, the slowest headline row. The
-    split is a deterministic function of static parquet, so these
-    relations are exactly as fingerprint-stable as every other artifact
-    in the tree. At 100 TB the corpus postings list IS a materialized
-    layout (write once per corpus version, reuse per batch); the batch
-    side stays inline by design (it changes per run).
+    Why: the steady-state production mode is "the corpus was indexed
+    long ago; each batch checks against it", but deriving the index
+    in-plan re-shingles and re-aggregates the corpus side (80% of the
+    table) on every run — 3.9 s at sf0.1, the slowest headline row.
+    The split is a deterministic function of static parquet, so these
+    relations are exactly as fingerprint-stable as every other
+    artifact in the tree. At 100 TB the corpus postings list IS a
+    materialized layout (write once per corpus version, reuse per
+    batch); the batch side stays in-plan by design (it changes per
+    run).
 
     All relations are deterministic (sha256 / string shingles / integer
     counts) so the parquet round-trip is exact and the composed result
-    is byte-identical to the inline derivation. Reads carry explicit
+    is byte-identical to the in-plan derivation. Reads carry explicit
     schemas: an empty corpus writes no part files (Spark skips empty
-    partitions), and schema inference on an empty dir would throw —
-    the invindex empty-layout lesson (round 11).
+    partitions), and schema inference on an empty dir would throw.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_INCR_INDEX_VERSION}"
-        f"_n{n}_df{max_df}_m{mod}b{batch_lt}"
-    )
 
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % mod >= batch_lt)
-        rel = _incremental_corpus_relations(corpus, "doc_id", "text", n, max_df)
+        rel = incremental_corpus_index(corpus, "doc_id", "text", n, max_df)
         try:
             # digests / hot set / hot counts are vocabulary- or
             # doc-bounded → single file; shingle arrays and rare
             # postings are corpus-proportional → parallel-readable but
-            # FILE-BOUNDED (the build's raw partitioning wrote 32
-            # ~55 KB files per relation at sf0.1 — per-file open
-            # overhead on every consumer read for no parallelism
-            # gain). Scale-adaptive count, keyed so the downstream
-            # joins read hash-clustered files.
+            # FILE-BOUNDED (the raw partitioning wrote 32 ~55 KB files
+            # per relation at sf0.1 — per-file open overhead on every
+            # consumer read for no parallelism gain). Scale-adaptive
+            # count, keyed so the downstream joins read hash-clustered
+            # files.
             nf = max(8, spark.sparkContext.defaultParallelism // 4)
             rel["hashes"].repartition(1).write.mode("overwrite").parquet(
                 os.path.join(staging, "hashes")
             )
-            rel["shingles"].select(
-                "__cid", F.size("__sh").alias("__csz"), "__sh"
-            ).repartition(nf, "__cid").write.mode("overwrite").parquet(
-                os.path.join(staging, "shingles")
-            )
+            rel["shingles"].repartition(nf, "__cid").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(staging, "shingles"))
             rel["rare"].repartition(nf, "__s").write.mode(
                 "overwrite"
             ).parquet(os.path.join(staging, "rare"))
@@ -1559,16 +1437,19 @@ def shared_incremental_corpus_index(
             rel["shingles"].unpersist()
 
     path = artifacts.ensure(
-        "incr_corpus", key, _build, env_var="SPARK_GRAFT_INCR_DIR"
+        "incr_corpus",
+        table_path(sf_dir, "documents"),
+        _INCR_INDEX_VERSION,
+        {"n": n, "max_df": max_df, "mod": mod, "batch_lt": batch_lt},
+        _build,
     )
-    sh = spark.read.schema(
-        "__cid bigint, __csz int, __sh array<string>"
-    ).parquet(os.path.join(path, "shingles"))
     out: dict[str, DataFrame] = {
         "hashes": spark.read.schema("__cid bigint, __h string").parquet(
             os.path.join(path, "hashes")
         ),
-        "shingles": sh,
+        "shingles": spark.read.schema(
+            "__cid bigint, __csz int, __sh array<string>"
+        ).parquet(os.path.join(path, "shingles")),
         "rare": spark.read.schema("__cid bigint, __s string").parquet(
             os.path.join(path, "rare")
         ),
@@ -1586,19 +1467,24 @@ def shared_incremental_corpus_index(
 
 
 def incremental_dedup(
-    corpus: DataFrame,
+    corpus_index: dict[str, DataFrame],
     batch: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = None,
-    corpus_index: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the steady-state
     production mode of a crawl pipeline: the corpus was deduped long
     ago; each incoming batch only needs checking against it (and the
     batch against itself is a separate, far smaller problem).
+
+    ``corpus_index`` is the corpus side, :func:`incremental_corpus_index`
+    computed in-plan or read from its fingerprint-keyed artifact
+    (:func:`shared_incremental_corpus_index` — byte-identical:
+    deterministic digests / shingles / counts through parquet). It must
+    have been built with the same ``n``; its ``max_df`` cap (None: no
+    ``hot`` relation) is the cap this check applies.
 
     Returns one row per batch document: (id, status, match_id) with
     status 'dup_exact' (byte-identical to a corpus doc), 'dup_near'
@@ -1609,45 +1495,24 @@ def incremental_dedup(
     twice: the exact check joins 32-byte digests only; the near check
     is an inverted-index join of BATCH postings against CORPUS postings
     (cost Σ_s df_batch(s)·df_corpus(s), never corpus×corpus), with the
-    same ``max_df`` document-frequency cap as ngram_jaccard_pairs
-    applied to the corpus side to bound boilerplate shingles. The cap
-    affects CANDIDATE GENERATION only: candidates are scored with the
-    same count-based verification as ngram_jaccard_pairs (rare-posting
-    intersection counts + per-doc hot-shingle slack bounds; full
-    shingle arrays move only for the threshold-straddling pairs), so
+    same document-frequency cap as ngram_jaccard_pairs applied to the
+    corpus side to bound boilerplate shingles. The cap affects
+    CANDIDATE GENERATION only: candidates are scored with the same
+    count-based verification as ngram_jaccard_pairs (rare-posting
+    intersection counts + per-doc hot-shingle slack bounds: the hot
+    contribution per pair is at most min(batch-doc hot count,
+    corpus-doc hot count), so only pairs whose Jaccard could cross the
+    threshold inside that slack ever ship their shingle arrays), so
     reported matches are exact unless a pair's every shared shingle is
     boilerplate (df > cap) — the same documented blind spot as
-    ngram_jaccard_pairs. At 100 TB the corpus
-    postings list is a materialized layout (write once, reuse per
-    batch). ``corpus_index`` supplies exactly that: the relations of
-    :func:`_incremental_corpus_relations` served from a
-    fingerprint-keyed artifact (:func:`shared_incremental_corpus_index`)
-    — byte-identical to the in-plan derivation (deterministic digests /
-    shingles / counts through parquet); when ``None`` they are derived
-    inline from ``corpus``. The index must have been built with the
-    same ``n``/``max_df`` (the artifact key encodes them).
+    ngram_jaccard_pairs.
     """
-    if corpus_index is not None:
-        ch = corpus_index["hashes"]
-        csh = corpus_index["shingles"].select("__cid", "__sh")
-        csz = corpus_index["shingles"].select("__cid", "__csz")
-        cex_rare = corpus_index["rare"]
-        hot = corpus_index["hot"]
-        chot = corpus_index["hot_counts"]
-    else:
-        # Same count-based verification as ngram_jaccard_pairs: the
-        # rare-posting join gives the exact intersection over non-hot
-        # shingles; the hot contribution per pair is bounded by
-        # min(batch-doc hot count, corpus-doc hot count), so only
-        # pairs whose Jaccard could cross the threshold inside that
-        # slack ever ship their shingle arrays.
-        rel = _incremental_corpus_relations(corpus, id_col, text_col, n, max_df)
-        ch = rel["hashes"]
-        csh = rel["shingles"]
-        csz = csh.select("__cid", F.size("__sh").alias("__csz"))
-        cex_rare = rel["rare"]
-        hot = rel["hot"]
-        chot = rel["hot_counts"]
+    ch = corpus_index["hashes"]
+    csh = corpus_index["shingles"].select("__cid", "__sh")
+    csz = corpus_index["shingles"].select("__cid", "__csz")
+    cex_rare = corpus_index["rare"]
+    hot = corpus_index["hot"]
+    chot = corpus_index["hot_counts"]
     bh = batch.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("__h"))
     exact = bh.join(ch, "__h").groupBy(id_col).agg(
         F.min("__cid").alias("__exact_id")
@@ -1661,26 +1526,23 @@ def incremental_dedup(
     )
     bex = bsh.select(F.col(id_col), F.explode("__sh").alias("__s"))
     bsz = bsh.select(F.col(id_col), F.size("__sh").alias("__bsz"))
-    if max_df is not None:
-        bhot = (
-            bex.join(F.broadcast(hot), "__s")
-            .groupBy(id_col)
-            .agg(F.count("*").alias("__hb"))
-        )
-    else:
-        bhot = None
     inter = (
         bex.join(cex_rare, "__s")
         .groupBy(id_col, "__cid")
         .agg(F.count("*").alias("__i"))
     )
     scored = inter.join(bsz, id_col).join(csz, "__cid")
-    if max_df is None:
+    if hot is None:
         near_pairs = scored.withColumn(
             "jaccard",
             F.col("__i") / (F.col("__bsz") + F.col("__csz") - F.col("__i")),
         ).filter(F.round("jaccard", 6) >= threshold)
     else:
+        bhot = (
+            bex.join(F.broadcast(hot), "__s")
+            .groupBy(id_col)
+            .agg(F.count("*").alias("__hb"))
+        )
         scored = (
             scored.join(bhot, id_col, "left")
             .join(chot, "__cid", "left")
@@ -1775,8 +1637,8 @@ def ngram_containment_pairs(
         .join(sizes.select(F.col(id_col).alias("__idb"), F.col("__sz").alias("__sb")), "__idb")
         # colliding-pair-bounded and consumed by BOTH direction
         # projections: checkpointed so the Σ df² intersection join runs
-        # once, not once per direction (round 12 small-hub-reuse move;
-        # the before-plan ran the whole self-join chain twice).
+        # once, not once per direction (without it the plan runs the
+        # whole self-join chain twice).
         .localCheckpoint(eager=False)
     )
     ab = inter.select(
@@ -1797,28 +1659,15 @@ def ngram_containment_pairs(
 # ---------------------------------------------------------------------------
 
 
-def duplicate_ngram_coverage(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 20,
-    dup_vocab_override: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document fraction of character ``k``-gram windows that also
-    occur in at least one OTHER document — the per-doc "how much of me
-    is boilerplate/copied" signal used to decide span-level scrubbing
-    vs whole-doc dropping in training-data curation (the document-level
-    view of what substring-dedup papers remove span-wise).
-
-    Plan: explode each doc into its window positions (narrow, no
-    shuffle), shuffle once on the shingle to get cross-doc document
-    frequency, then one shuffle back on the doc id.  At 100 TB the
-    shingle shuffle key should be ``xxhash64(shingle)`` (8 bytes
-    instead of k chars — collisions only overcount duplication by
-    ~1e-9); the string key is kept here so the DuckDB oracle is exact.
-    Docs shorter than ``k`` have no windows and are excluded, matching
-    the oracle.
-    """
+def _char_windows(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """(docs, windows) for the char-window operators: ``docs`` = (id,
+    __t text, __len chars) of the documents with at least ``k``
+    characters (shorter docs have no windows and are excluded, matching
+    the oracles), ``windows`` = (id, __pos, __sh) with one row per
+    ``k``-char window position. Repartitioned by id, so per-doc
+    aggregates over the windows need no further exchange."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     docs = (
         df.repartition(parallelism, id_col)
@@ -1828,51 +1677,63 @@ def duplicate_ngram_coverage(
         )
         .filter(F.col("__len") >= k)
     )
-    sh = docs.select(
+    windows = docs.select(
         id_col,
         F.explode(F.sequence(F.lit(1), F.col("__len") - (k - 1))).alias("__pos"),
         "__t",
-    ).select(id_col, F.expr(f"substring(__t, __pos, {k})").alias("__sh"))
-    # Compact to (doc, shingle, occurrence-count) in ONE shuffle. Both
-    # downstream consumers re-derive this subtree (2 scans / 2 explodes
-    # in the plan) — deliberately: materializing it with a
-    # localCheckpoint was measured 1.5-1.7× SLOWER at sf0.1 (min-of-4
-    # noop 3.0-3.3 s vs 1.9-2.0 s) because the compacted doc×shingle
-    # relation is large and the two regenerating branches run
-    # concurrently, while the checkpoint serializes a full
-    # materialization before either consumer starts — same outcome as
-    # the reverted one-scan ExactSubstr window relation (SCALE.md).
-    # The repartition by id makes the (id, sh) aggregation
-    # exchange-free, so each pass is explode + local hash agg.
-    if dup_vocab_override is not None:
-        # The dup vocabulary comes precomputed (shared_dup_char_vocab,
-        # round 12): ONE explode pass — windows probe the (broadcast-
-        # sized) vocabulary and count per doc; dup_windows = number of
-        # window positions whose shingle is duplicated, identical to
-        # Σ __c over dup shingles of the compacted relation.
-        dupw = (
-            sh.join(dup_vocab_override, "__sh")
-            .groupBy(id_col)
-            .agg(F.count("*").alias("dup_windows"))
-        )
-    else:
-        g = sh.groupBy(id_col, "__sh").agg(F.count("*").alias("__c"))
-        # Only duplicated shingles (df ≥ 2) matter downstream: the join
-        # ships the dup vocabulary, not every shingle's df, and
-        # n_windows needs no join at all — Σ occurrence counts per doc
-        # is exactly the window count ``len − k + 1``, already on the
-        # docs relation.
-        dup_sh = (
-            g.groupBy("__sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") >= 2)
-            .select("__sh")
-        )
-        dupw = (
-            g.join(dup_sh, "__sh")
-            .groupBy(id_col)
-            .agg(F.sum("__c").alias("dup_windows"))
-        )
+    ).select(id_col, "__pos", F.expr(f"substring(__t, __pos, {k})").alias("__sh"))
+    return docs, windows
+
+
+def dup_char_vocab(
+    df: DataFrame, id_col: str, text_col: str, k: int = 20
+) -> DataFrame:
+    """The DUPLICATED char-window vocabulary (__sh): the ``k``-char
+    substrings occurring in ≥ 2 distinct documents — the input of
+    :func:`duplicate_ngram_coverage` and :func:`duplicate_span_stats`,
+    and the producer of :func:`shared_dup_char_vocab`. One full explode
+    + distinct + aggregate pass over the corpus; duplication-bounded
+    output (broadcast-sized on real corpora)."""
+    _, windows = _char_windows(df, id_col, text_col, k)
+    return (
+        windows.select(id_col, "__sh")
+        .distinct()
+        .groupBy("__sh")
+        .agg(F.count("*").alias("__df"))
+        .filter(F.col("__df") >= 2)
+        .select("__sh")
+    )
+
+
+def duplicate_ngram_coverage(
+    df: DataFrame,
+    dup_vocab: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = 20,
+) -> DataFrame:
+    """Per-document fraction of character ``k``-gram windows that also
+    occur in at least one OTHER document — the per-doc "how much of me
+    is boilerplate/copied" signal used to decide span-level scrubbing
+    vs whole-doc dropping in training-data curation (the document-level
+    view of what substring-dedup papers remove span-wise).
+
+    ``dup_vocab`` is :func:`dup_char_vocab` for the same ``k``
+    (in-plan, or read from :func:`shared_dup_char_vocab`). Plan: ONE
+    explode of each doc into its window positions (narrow, no
+    shuffle), a broadcast-sized probe of the vocabulary, one doc-keyed
+    count; ``n_windows`` needs no join — it is ``len − k + 1``, already
+    on the docs relation. At 100 TB the shingle key should be
+    ``xxhash64(shingle)`` (8 bytes instead of k chars — collisions only
+    overcount duplication by ~1e-9); the string key is kept here so the
+    DuckDB oracle is exact.
+    """
+    docs, windows = _char_windows(df, id_col, text_col, k)
+    dupw = (
+        windows.join(dup_vocab, "__sh")
+        .groupBy(id_col)
+        .agg(F.count("*").alias("dup_windows"))
+    )
     return (
         docs.select(id_col, (F.col("__len") - (k - 1)).alias("n_windows"))
         .join(dupw, id_col, "left")
@@ -1890,54 +1751,23 @@ def duplicate_ngram_coverage(
 
 def duplicate_span_stats(
     df: DataFrame,
+    dup_vocab: DataFrame,
     id_col: str,
     text_col: str,
     k: int = 20,
-    dup_vocab_override: DataFrame | None = None,
 ) -> DataFrame:
     """Character-level duplicated-SPAN coverage per document: the union
     of all duplicated ``k``-gram windows (gaps-and-islands over window
     intervals), i.e. exactly how many characters span-level scrubbing
     would remove — the decision input for scrub-vs-drop in curation.
 
-    The island merge is two window functions over (doc, pos) — runs
-    inside the per-doc partition after the same two shuffles as
-    ``duplicate_ngram_coverage`` (shingle df, then doc rollup); pure
-    integer arithmetic end to end, so the DuckDB oracle is exact.
+    ``dup_vocab`` is :func:`dup_char_vocab` for the same ``k``. The
+    island merge is two window functions over (doc, pos) — runs inside
+    the per-doc partition after the vocabulary probe; pure integer
+    arithmetic end to end, so the DuckDB oracle is exact.
     """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    docs = (
-        df.repartition(parallelism, id_col)
-        .select(
-            F.col(id_col), F.col(text_col).alias("__t"),
-            F.length(text_col).alias("n_chars"),
-        )
-        .filter(F.col("n_chars") >= k)
-    )
-    sh = docs.select(
-        id_col,
-        F.explode(F.sequence(F.lit(1), F.col("n_chars") - (k - 1))).alias("__pos"),
-        "__t",
-    ).select(id_col, "__pos", F.expr(f"substring(__t, __pos, {k})").alias("__sh"))
-    # Duplicated vocabulary ONLY (df ≥ 2) before the join — the same
-    # §2.3 move duplicate_ngram_coverage got in round 11: the join's
-    # build side shrinks from every shingle's df to the dup vocabulary
-    # (broadcastable), instead of shipping a df for every window just
-    # to filter on it afterwards. Row set identical: a window survives
-    # iff its shingle's df ≥ 2 either way. With ``dup_vocab_override``
-    # (shared_dup_char_vocab, round 12) the df derivation — a second
-    # full explode pass — disappears from the per-run plan entirely.
-    dup_sh = (
-        dup_vocab_override
-        if dup_vocab_override is not None
-        else sh.select(id_col, "__sh")
-        .distinct()
-        .groupBy("__sh")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") >= 2)
-        .select("__sh")
-    )
-    dupw = sh.join(dup_sh, "__sh").select(
+    docs, windows = _char_windows(df, id_col, text_col, k)
+    dupw = windows.join(dup_vocab, "__sh").select(
         id_col, "__pos", (F.col("__pos") + (k - 1)).alias("__end")
     )
     w = Window.partitionBy(id_col).orderBy("__pos")
@@ -1956,7 +1786,7 @@ def duplicate_span_stats(
     )
     per_doc = islands.groupBy(id_col).agg(F.sum("__covered").alias("dup_chars"))
     return (
-        docs.select(id_col, "n_chars")
+        docs.select(id_col, F.col("__len").alias("n_chars"))
         .join(per_doc, id_col, "left")
         .select(
             id_col,
@@ -1971,63 +1801,24 @@ def duplicate_span_stats(
 
 
 # Bump when the char-window definition (substring windows, df ≥ 2 over
-# distinct docs) changes — see key note on shared_ngram_pairs.
+# distinct docs) changes.
 _DUP_VOCAB_VERSION = 1
 
 
 def shared_dup_char_vocab(spark, sf_dir: str, k: int = 20) -> DataFrame:
-    """Fingerprint-keyed materialization of the DUPLICATED char-window
-    vocabulary over ``documents``: the ``k``-char substrings occurring
-    in ≥ 2 distinct documents — the df ≥ 2 set BOTH
-    :func:`duplicate_ngram_coverage` and :func:`duplicate_span_stats`
-    derive per run with a full explode + aggregate pass (the same
-    doc-frequency definition in both: rows of the per-(doc, shingle)
-    compaction / distinct per shingle).
+    """Fingerprint-keyed materialization of
+    ``dup_char_vocab(documents, "doc_id", "text", k)``.
 
-    Why (round 12, guide §2.3/§2.4): the two queries each exploded the
-    corpus twice per run — once to compute this vocabulary, once to
-    probe it. With the artifact each query is ONE explode pass + a
-    broadcast probe; the vocabulary build is the once-per-corpus job.
-    Duplication-bounded (distinct duplicated k-grams), string-exact
-    through parquet. Explicit read schema: an empty corpus writes no
-    part files."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"dupvocab_{artifacts.source_fingerprint(src)}"
-        f"_v{_DUP_VOCAB_VERSION}_k{k}"
-    )
+    Why: without it each of dup_ngram_coverage and dup_span_chars
+    explodes the corpus twice per run — once to compute this
+    vocabulary, once to probe it. With the artifact each query is ONE
+    explode pass + a broadcast probe; the vocabulary build is the
+    once-per-corpus job. String-exact through parquet. Explicit read
+    schema: an empty corpus writes no part files."""
 
     def _build(staging: str) -> None:
-        docs = load(spark, sf_dir, "documents")
-        par = spark.sparkContext.defaultParallelism
-        d = (
-            docs.repartition(par, "doc_id")
-            .select(
-                F.col("doc_id"),
-                F.col("text").alias("__t"),
-                F.length("text").alias("__len"),
-            )
-            .filter(F.col("__len") >= k)
-        )
-        sh = d.select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.col("__len") - (k - 1))
-            ).alias("__pos"),
-            "__t",
-        ).select("doc_id", F.expr(f"substring(__t, __pos, {k})").alias("__sh"))
         (
-            sh.select("doc_id", "__sh")
-            .distinct()
-            .groupBy("__sh")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") >= 2)
-            .select("__sh")
+            dup_char_vocab(load(spark, sf_dir, "documents"), "doc_id", "text", k)
             # bounded file count, parallel reduce (the repartition(1)
             # vs coalesce(1) lesson — the distinct keeps its width)
             .repartition(8)
@@ -2036,7 +1827,7 @@ def shared_dup_char_vocab(spark, sf_dir: str, k: int = 20) -> DataFrame:
         )
 
     path = artifacts.ensure(
-        "dup_vocab", key, _build, env_var="SPARK_GRAFT_PAIRS_DIR"
+        "dup_vocab", table_path(sf_dir, "documents"), _DUP_VOCAB_VERSION, {"k": k}, _build
     )
     return spark.read.schema("__sh string").parquet(path)
 

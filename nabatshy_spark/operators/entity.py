@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
 from nabatshy_spark.operators.dedup import connected_components
 
 
@@ -38,9 +40,8 @@ def candidate_pairs_from_sets(
     rep_flag_cap: int | None = None,
 ) -> DataFrame:
     """The blocking/candidate core shared by every set-similarity ER
-    surface (round 11: factored out of :func:`blocked_candidate_pairs`
-    so the document contract reuses the SAME bounded semantics instead
-    of re-implementing them — VERDICT r10 task #4).
+    surface: :func:`blocked_candidate_pairs` and the document contract
+    both call it, so they share the SAME bounded semantics.
 
     ``sets`` must carry ``id``, ``ts`` (the token/shingle array),
     ``__bk0..__bk{n_block-1}`` equality-blocking keys, and any
@@ -55,8 +56,7 @@ def candidate_pairs_from_sets(
     instead of their full shingle arrays. The part path keeps the raw
     array key (its 2-token names are smaller than the digest).
 
-    ``rep_flag_cap`` (round 11, only with ``rep_cap=None`` and a df
-    cap): run the EXACT uncapped candidate pass but additionally emit
+    ``rep_flag_cap`` (only with ``rep_cap=None`` and a df cap): run the EXACT uncapped candidate pass but additionally emit
     ``in_rep_cap`` — whether the pair would also have been generated
     by the rep-capped pass with that cap (true for every token-pass
     pair; for canonical pairs, true iff either endpoint ranks ≤ cap in
@@ -264,7 +264,7 @@ def blocked_candidate_pairs(
     """Candidate pairs sharing ≥1 name token, with the token-Jaccard
     ingredients (``inter``, ``n_a``, ``n_b``).
 
-    ``rep_cap`` bounds the canonical-name pass (round 10): instead of
+    ``rep_cap`` bounds the canonical-name pass: instead of
     all pairs within an identical-token-set group (Σ g², the quadratic
     term on dup-heavy catalogs), each record pairs only with the
     ``rep_cap`` LOWEST-ID representatives of its group — Σ g·rep_cap,
@@ -377,9 +377,9 @@ def part_matched_pairs(
     rep_flag_cap: int | None = None,
 ) -> DataFrame:
     """RAW scored matched pairs over ``part`` — the relation both ER
-    contracts and the eval gate derive from (round 11: factored out so
-    :func:`shared_part_matches` can materialize it ONCE instead of
-    every consumer re-expanding the candidate DAG — VERDICT r10 #1).
+    contracts and the eval gate derive from; :func:`shared_part_matches`
+    materializes it ONCE instead of every consumer re-expanding the
+    candidate DAG.
 
     Columns (id_a, id_b, name_jaccard, brand_eq, size_sim, score) with
     score ≥ threshold; floats UNROUNDED so downstream top-k ranks by
@@ -454,7 +454,7 @@ def part_topk_matches(
     rep_cap: int = 8,
 ) -> DataFrame:
     """Per-record top-``k`` scored matches — the OUTPUT-BOUNDED ER
-    surface (VERDICT r9 task #4).
+    surface.
 
     The all-pairs contract (:func:`score_part_pairs`) is inherently
     output-quadratic on dup-heavy catalogs: a (name, brand) group of g
@@ -511,7 +511,7 @@ def directed_topk(
     """Per-record top-``k`` from an undirected matched-pair relation
     (id_a, id_b, score): each pair becomes two directed edges via ONE
     ``explode`` over the row (a two-branch union would scan the (often
-    artifact-backed) source twice — round-11 plan diet), then
+    artifact-backed) source twice), then
     row_number ≤ k by (score DESC, partner ASC). Ranks by the RAW
     score and rounds only for output, so near-ties order exactly as
     the oracle's exact-score rank."""
@@ -551,7 +551,7 @@ def directed_topk(
 
 
 _MATCHES_VERSION = 1
-# The unified part_matches artifact (round 11): one exact t0.8 build
+# The unified part_matches artifact: one exact t0.8 build
 # with an in_rep_cap flag serves every (threshold ≥ 0.8) ×
 # (rep_cap ∈ {None, 8}) consumer as a filter — see shared_part_matches.
 _UNIFIED_THRESHOLD = 0.8
@@ -568,24 +568,21 @@ def shared_part_matches(
     """Fingerprint-keyed materialization of
     :func:`part_matched_pairs` — the scored-candidate relation
     er_part_pairs, er_part_topk AND the er_topk_eval gate all consume
-    (VERDICT r10 task #1: before this, er_part_topk re-scanned ``part``
-    16× and the eval gate re-expanded the whole candidate DAG on both
-    sides — ex49/scan44, the worst plans in the audit). Same lifecycle
-    as dedup.shared_ngram_pairs: content fingerprint + operator version
-    + parameters key, staging+rename publish owned by
-    nabatshy_spark.artifacts.ensure; the matched relation is
-    output-bounded (threshold-crossing pairs only), so consumers read
-    hundreds of rows where they used to replay the blocking joins.
+    (computed in-plan, er_part_topk re-scans ``part`` 16× and the eval
+    gate re-expands the whole candidate DAG on both sides). The
+    matched relation is output-bounded (threshold-crossing pairs
+    only), so consumers read hundreds of rows instead of replaying the
+    blocking joins.
 
     At 100 TB this is the only sane shape: candidate generation +
     scoring is the scheduled once-per-catalog-version job; the top-k
     projection, the pair report, and the recall gate are all cheap
     reads of its output.
 
-    Round 11 (second pass): the family's three configurations
-    (t0.8/rcNone, t0.8/rc8, t0.9/rcNone) were three separate builds —
-    three expansions of the same blocking DAG, 15.9 s of the sf0.1
-    artifact line. They are all filters of ONE relation: the unified
+    The family's three configurations (t0.8/rcNone, t0.8/rc8,
+    t0.9/rcNone) built separately are three expansions of the same
+    blocking DAG (15.9 s of builds at sf0.1). They are all filters of
+    ONE relation: the unified
     t0.8 build runs the exact uncapped pass once with an ``in_rep_cap``
     flag (see :func:`candidate_pairs_from_sets`), and
 
@@ -599,29 +596,22 @@ def shared_part_matches(
 
     Any other configuration still gets its own per-config build.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "part.parquet")
     # max_df is not None: rep_flag_cap requires a df cap (the flag's
     # canonical-pass rank only bounds candidate cost alongside one), so
-    # df-uncapped configs keep their own per-config build (ADVICE r11).
+    # df-uncapped configs keep their own per-config build.
     unified = (
         threshold >= _UNIFIED_THRESHOLD
         and rep_cap in (None, _UNIFIED_REP_CAP)
         and max_df is not None
     )
-    thr = f"{threshold:g}".replace(".", "p")
-    ut = f"{_UNIFIED_THRESHOLD:g}".replace(".", "p")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_MATCHES_VERSION}"
-        + (
-            f"_t{ut}_df{max_df}_u{_UNIFIED_REP_CAP}"
-            if unified
-            else f"_t{thr}_df{max_df}_rc{rep_cap}"
-        )
+    params = (
+        {
+            "threshold": _UNIFIED_THRESHOLD,
+            "max_df": max_df,
+            "rep_flag_cap": _UNIFIED_REP_CAP,
+        }
+        if unified
+        else {"threshold": threshold, "max_df": max_df, "rep_cap": rep_cap}
     )
 
     def _build(staging: str) -> None:
@@ -640,7 +630,11 @@ def shared_part_matches(
         ).repartition(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "part_matches", key, _build, env_var="SPARK_GRAFT_ER_DIR"
+        "part_matches",
+        table_path(sf_dir, "part"),
+        _MATCHES_VERSION,
+        params,
+        _build,
     )
     m = spark.read.parquet(path)
     if unified:
@@ -739,17 +733,6 @@ def shared_doc_matches(
     pass), its output is dup-bounded, and every consumer (top-k view,
     cluster rollups, keep-best policies) reads the artifact instead of
     re-running the blocking joins."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    thr = f"{threshold:g}".replace(".", "p")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_DOC_MATCHES_VERSION}"
-        f"_n{n}_t{thr}_df{max_df}_rc{rep_cap}"
-    )
 
     def _build(staging: str) -> None:
         # repartition(1), not coalesce(1) — see shared_part_matches.
@@ -764,7 +747,11 @@ def shared_doc_matches(
         ).repartition(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "doc_matches", key, _build, env_var="SPARK_GRAFT_ER_DIR"
+        "doc_matches",
+        table_path(sf_dir, "documents"),
+        _DOC_MATCHES_VERSION,
+        {"n": n, "threshold": threshold, "max_df": max_df, "rep_cap": rep_cap},
+        _build,
     )
     return spark.read.parquet(path)
 
@@ -781,9 +768,9 @@ def doc_topk_matches(
 ) -> DataFrame:
     """Per-document top-``k`` near-duplicate matches by exact word
     n-gram Jaccard — the output-bounded ER contract generalized from
-    ``part`` to the LLM-pipeline consumer, DOCUMENT entity resolution
-    (VERDICT r10 task #4): ≤ k rows per document; bounded candidate
-    generation documented on :func:`doc_matched_pairs`.
+    ``part`` to the LLM-pipeline consumer, DOCUMENT entity resolution:
+    ≤ k rows per document; bounded candidate generation documented on
+    :func:`doc_matched_pairs`.
 
     Deterministic miss condition (encoded identically in the DuckDB
     oracle): a true top match reachable only through over-cap shingles

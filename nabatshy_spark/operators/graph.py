@@ -33,6 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
+
 
 def pagerank(
     edges: DataFrame,
@@ -311,8 +314,8 @@ def bipartite_core_prune(
     ``edges_distinct=True`` asserts the caller's relation is already
     one row per edge (the shared edge artifacts are distinct by build),
     skipping the dedup exchange — a full shuffle of the edge relation
-    that re-proved a property the build already established (round 12,
-    guide §2.4 "a distinct on data that is already unique").
+    that re-proves a property the build already established (a
+    distinct on data that is already unique).
     """
     rows = []
     cur = edges.select(left, right)
@@ -366,7 +369,7 @@ def shared_trade_edges(spark, sf_dir: str) -> DataFrame:
     and ``rev`` = summed extended revenue — the four ingredients every
     nation-graph query re-derived from a fact-sized join chain
     (lineitem ⋈ orders ⋈ broadcast customer ⋈ broadcast supplier →
-    groupBy) per run. Round-11 measurement: that chain is ~1-1.5 s of
+    groupBy) per run. Measured: that chain is ~1-1.5 s of
     each of pagerank_trade / trade_triangles / lpa_trade_communities /
     trade_reach_hops at sf0.1, four times per sweep, for one
     deterministic ≤|nations|² relation.
@@ -379,20 +382,6 @@ def shared_trade_edges(spark, sf_dir: str) -> DataFrame:
     the scheduled once-per-corpus job (guide §8: decide on small rows —
     the graph analytics never need the fact rows, only this relation).
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    key = (
-        "_".join(
-            artifacts.source_fingerprint(
-                os.path.join(sf_dir, f"{t}.parquet")
-            )[:8]
-            for t in ("lineitem", "orders", "customer", "supplier")
-        )
-        + f"_v{_TRADE_EDGES_VERSION}"
-    )
 
     def _build(staging: str) -> None:
         cust = F.broadcast(
@@ -421,7 +410,14 @@ def shared_trade_edges(spark, sf_dir: str) -> DataFrame:
         )
 
     path = artifacts.ensure(
-        "trade_edges", key, _build, env_var="SPARK_GRAFT_GRAPH_DIR"
+        "trade_edges",
+        [
+            table_path(sf_dir, t)
+            for t in ("lineitem", "orders", "customer", "supplier")
+        ],
+        _TRADE_EDGES_VERSION,
+        {},
+        _build,
     )
     return spark.read.parquet(path)
 
@@ -437,20 +433,6 @@ def shared_part_cust_edges(spark, sf_dir: str) -> DataFrame:
     relation is identity. Bounded by |parts|·|customers| but in
     practice ≈ the fact row count's co-purchase support — far smaller
     than re-deriving it twice per sweep."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    key = (
-        "_".join(
-            artifacts.source_fingerprint(
-                os.path.join(sf_dir, f"{t}.parquet")
-            )[:8]
-            for t in ("lineitem", "orders")
-        )
-        + f"_v{_TRADE_EDGES_VERSION}"
-    )
 
     def _build(staging: str) -> None:
         li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -464,7 +446,7 @@ def shared_part_cust_edges(spark, sf_dir: str) -> DataFrame:
             .distinct()
             # repartition(1), not coalesce(1): coalesce would collapse
             # the distinct's reduce side to one task, serializing the
-            # build's heaviest stage (ADVICE r11 — the same pitfall
+            # build's heaviest stage (the same pitfall
             # shared_part_matches documents); repartition keeps the
             # distinct parallel and only the write is single-task.
             .repartition(1)
@@ -473,7 +455,10 @@ def shared_part_cust_edges(spark, sf_dir: str) -> DataFrame:
         )
 
     path = artifacts.ensure(
-        "trade_edges", "partcust_" + key, _build,
-        env_var="SPARK_GRAFT_GRAPH_DIR",
+        "part_cust_edges",
+        [table_path(sf_dir, t) for t in ("lineitem", "orders")],
+        _TRADE_EDGES_VERSION,
+        {},
+        _build,
     )
     return spark.read.parquet(path)

@@ -27,8 +27,13 @@ Scale shape:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
 
 
 def build_postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -58,7 +63,7 @@ def search_and(
     """
     # Dedup: a repeated query term would make the distinct-count ==
     # len(terms) conjunction unsatisfiable (same family as the
-    # hard_negatives leak, ADVICE r5).
+    # hard_negatives leak).
     terms = sorted(set(terms))
     if not terms:
         raise ValueError("need at least one query term")
@@ -152,7 +157,7 @@ def hard_negatives(
 
     # Dedup up front: duplicate query terms would inflate len(terms)
     # so true full matches (the positives) leak past the < len(terms)
-    # filter into the negatives set (ADVICE r5).
+    # filter into the negatives set.
     terms = sorted(set(terms))
     if len(terms) < 2:
         raise ValueError("hard negatives need >= 2 distinct query terms")
@@ -319,7 +324,7 @@ def shared_postings(
     queries (text_search_and / text_search_bm25 / hybrid_search_rrf /
     search_eval_ndcg / search_hard_negatives) each re-ran the
     explode + groupBy postings build over the corpus per invocation —
-    round-11 measurement: the build is the dominant cost of each
+    measured: the build is the dominant cost of each
     (family solo total 7.3 s at sf0.1) for one deterministic relation.
 
     ``terms``: when given, the postings read is partition-pruned to
@@ -341,17 +346,6 @@ def shared_postings(
 
     Returns (postings, doc_lens).
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}"
-        f"_v{_POSTINGS_VERSION}_b{_N_TERM_BUCKETS}"
-    )
-
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
         (
@@ -378,7 +372,11 @@ def shared_postings(
             pass
 
     path = artifacts.ensure(
-        "postings", key, _build, env_var="SPARK_GRAFT_POSTINGS_DIR"
+        "postings",
+        table_path(sf_dir, "documents"),
+        _POSTINGS_VERSION,
+        {"term_buckets": _N_TERM_BUCKETS},
+        _build,
     )
     # Explicit schemas (driver-side analysis of the same expressions the
     # build writes — no job): a 0-row corpus writes NO partition dirs

@@ -24,8 +24,13 @@ Scale shape, in order of importance at 100 TB:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
 
 
 def _pair_support_relations(
@@ -218,7 +223,7 @@ def shared_part_basket_stats(
     capped-basket grand total — the three outputs of
     :func:`_pair_support_relations` that frequent_part_pairs and
     association_rules_parts each re-mined from the fact table per run
-    (round-11 measurement: the basket regroup + pair expansion is
+    (measured: the basket regroup + pair expansion is
     ~1.5 s of each query at sf0.1, twice per sweep, for one
     deterministic relation). All three are integer-valued (the total
     is a count cast to double — exact), so the parquet round-trip is
@@ -228,17 +233,6 @@ def shared_part_basket_stats(
 
     Returns (pair_sup, item_sup, n_baskets) DataFrames.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_BASKET_STATS_VERSION}"
-        f"_s{min_support}_b{max_basket}"
-    )
-
     def _build(staging: str) -> None:
         pair_sup, item_sup, n_baskets = _pair_support_relations(
             load(spark, sf_dir, "lineitem"),
@@ -262,7 +256,11 @@ def shared_part_basket_stats(
             pass
 
     path = artifacts.ensure(
-        "basket_stats", key, _build, env_var="SPARK_GRAFT_BASKET_DIR"
+        "basket_stats",
+        table_path(sf_dir, "lineitem"),
+        _BASKET_STATS_VERSION,
+        {"min_support": min_support, "max_basket": max_basket},
+        _build,
     )
     return (
         spark.read.parquet(os.path.join(path, "pairs")),

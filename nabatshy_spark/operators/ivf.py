@@ -33,10 +33,6 @@ from nabatshy_spark import artifacts
 from nabatshy_spark.operators.dedup import cosine
 from nabatshy_spark.operators.similarity import lsh_signature
 
-# Canonical implementation moved to nabatshy_spark.artifacts (round 10
-# lifecycle unification); several modules import it from here.
-_source_fingerprint = artifacts.source_fingerprint
-
 CELL_COL = "cell"
 
 
@@ -58,10 +54,15 @@ def build_ivf(
     )
 
 
+# Output versions of the index artifacts (see artifacts.ensure): bump
+# one whenever its build's layout or contents change.
+_IVF_VERSION = 1
+_IVFPQ_VERSION = 1
+
+
 def ensure_ivf(
     spark: SparkSession,
     source_path: str,
-    base_dir: str | None = None,
     vec_col: str = "embedding",
     cell_bits: int = 4,
     dim: int = 64,
@@ -79,14 +80,14 @@ def ensure_ivf(
     publish is the same pattern (rename is atomic per filesystem /
     object-store commit). Lifecycle owned by artifacts.ensure.
     """
-    key = f"{artifacts.source_fingerprint(source_path)}_b{cell_bits}_d{dim}"
     return artifacts.ensure(
         "ivf",
-        key,
+        source_path,
+        _IVF_VERSION,
+        {"vec_col": vec_col, "cell_bits": cell_bits, "dim": dim},
         lambda staging: build_ivf(
             spark.read.parquet(source_path), staging, vec_col, cell_bits, dim
         ),
-        base=base_dir,
     )
 
 
@@ -239,7 +240,6 @@ def ivfpq_topk(
 def ensure_ivfpq(
     spark: SparkSession,
     source_path: str,
-    base_dir: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_bits: int = 4,
@@ -251,16 +251,20 @@ def ensure_ivfpq(
     staging-then-rename lifecycle as :func:`ensure_ivf` (codebooks are
     deterministic, so two concurrent builds produce identical indexes
     and the rename race is benign). Lifecycle owned by artifacts.ensure."""
-    key = (
-        f"{artifacts.source_fingerprint(source_path)}"
-        f"_b{cell_bits}_d{dim}_m{m}_k{ks}"
-    )
     return artifacts.ensure(
         "ivfpq",
-        key,
+        source_path,
+        _IVFPQ_VERSION,
+        {
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "cell_bits": cell_bits,
+            "dim": dim,
+            "m": m,
+            "ks": ks,
+        },
         lambda staging: build_ivfpq(
             spark.read.parquet(source_path), staging, id_col, vec_col,
             cell_bits, dim, m, ks,
         ),
-        base=base_dir,
     )

@@ -47,6 +47,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
+
 
 def window_hash_postings(
     df: DataFrame,
@@ -65,7 +68,7 @@ def window_hash_postings(
     materializes the whole per-document hash array (one long per
     character, plus transient min_len-char substrings) inside one row
     before the explode — a tens-of-MB document would concentrate its
-    entire window relation in a single task's row buffer (ADVICE r9).
+    entire window relation in a single task's row buffer.
     Instead the document first explodes into fixed-size position
     ranges; each chunk row slices ``chunk + min_len − 1`` characters
     (the min_len−1 overlap makes boundary-straddling windows exact) and
@@ -133,7 +136,7 @@ def duplicated_substring_runs(
     ``_handles`` to collect the persisted frames and unpersist them
     once the result is materialized (shared_substring_runs does), or
     rely on an outer clearCache. Without either, repeated invocations
-    accumulate cached blocks (ADVICE r9)."""
+    accumulate cached blocks."""
     # The window relation feeds BOTH the frequency pass and the posting
     # join; without pinning it is generated twice (measured 1.9 s per
     # generation at sf0.1 — the single biggest stage). Same rationale
@@ -155,13 +158,12 @@ def _dup_runs_from_postings(
     """Diagonal-run assembly from a precomputed (id, pos, __h) window
     relation — the post-scan half of :func:`duplicated_substring_runs`.
     ``wins`` should be persisted: it feeds the frequency pass and the
-    posting join. (Round 11 note: a combined builder deriving all
-    three runs families from ONE materialized dual-length window
-    relation was implemented, measured 1.7× SLOWER than the standalone
-    builds — the window relation is ~20× its source text, so caching
-    it costs more than regenerating it, and the decontamination family
-    loses its probe-inside-scan prune — and reverted; evidence in
-    SCALE.md round-11.)"""
+    posting join. (Deriving all three runs families from ONE
+    materialized dual-length window relation measured 1.7× SLOWER
+    than the standalone builds — the window relation is ~20× its
+    source text, so caching it costs more than regenerating it, and
+    the decontamination family loses its probe-inside-scan prune;
+    evidence in SCALE.md.)"""
     freq = wins.groupBy("__h").agg(
         F.count("*").alias("__c"),
         # min != max <=> >=2 distinct docs, without a countDistinct
@@ -183,9 +185,9 @@ def _runs_from_dup_posts(
     min_len: int,
 ) -> DataFrame:
     """Diagonal-run assembly from an ALREADY dup-filtered (id, pos,
-    __h) posting relation — the tail of :func:`_dup_runs_from_postings`
-    (round 12: factored out so the level-1 dup-window artifact can feed
-    it directly — see :func:`shared_dup_window_postings`)."""
+    __h) posting relation — the tail of :func:`_dup_runs_from_postings`,
+    which the level-1 dup-window artifact also feeds directly (see
+    :func:`shared_dup_window_postings`)."""
     a = posts.select(
         "__h", F.col(id_col).alias("doc_a"), F.col("pos").alias("pa")
     )
@@ -253,23 +255,23 @@ def cross_corpus_substring_runs(
     capping it would hide exactly the leaks being hunted). Emits
     (corpus_id, bench_id, pos_c, pos_b, dup_len), equality-verified.
 
-    Scale (round 10, VERDICT task #5): when the benchmark window-hash
+    Scale: when the benchmark window-hash
     SET is broadcast-sized (an eval benchmark always is), it is pushed
     onto the corpus-side window generation as a BROADCAST SEMI-JOIN —
     the probe rides in the same codegen stage as the window scan, so a
     non-matching train window is dropped where it is generated and
     NEVER shuffles. Exact (a set probe has no false positives or
     negatives — strictly better than a lossy bloom bitmap where the
-    set fits a broadcast). Round 11 (ADVICE r10): the broadcast is
-    size-GATED — above ``_BENCH_BROADCAST_MAX_HASHES`` distinct hashes
-    the same slot downgrades to a plain shuffled semi-join instead of
+    set fits a broadcast). The broadcast is size-GATED — above
+    ``_BENCH_BROADCAST_MAX_HASHES`` distinct hashes the same slot
+    downgrades to a plain shuffled semi-join instead of
     collecting an arbitrarily large set to the driver (the function is
     a generic two-corpus operator, not bench-only). The df cap
     is counted AFTER the prune — provably the same cap decisions, since
     pruning keeps every corpus occurrence of a shared hash, and only
-    shared hashes can produce output. Before this restructure the cap's
-    groupBy shuffled the ENTIRE corpus window relation (≈ total_chars
-    rows) to count frequencies of hashes that mostly match nothing; now
+    shared hashes can produce output. Counting before the prune would
+    shuffle the ENTIRE corpus window relation (≈ total_chars rows) to
+    count frequencies of hashes that mostly match nothing; this way
     every post-scan stage operates on the shared-hash subset only. At
     100 TB this is the shape actually run before every training export.
     """
@@ -277,7 +279,7 @@ def cross_corpus_substring_runs(
     if _handles is not None:
         _handles.append(bw)
     bench_hashes = bw.select("__h").distinct()
-    # Bench-side size gate (ADVICE r10): forcing the broadcast
+    # Bench-side size gate: forcing the broadcast
     # unconditionally would collect the whole bench hash set to the
     # driver even when the "bench" relation is a second full corpus
     # (the function is a generic cross-corpus operator, not bench-only),
@@ -527,6 +529,8 @@ def exactsubstr_cut_stats(
     )
 
 
+# Output versions of this module's artifacts (see artifacts.ensure):
+# bump one whenever its producer's output semantics change.
 _RUNS_VERSION = 1
 _XCORPUS_VERSION = 1
 _IREPEAT_VERSION = 1
@@ -536,16 +540,16 @@ _DUP_WINDOWS_VERSION = 1
 def shared_dup_window_postings(
     spark, sf_dir: str, min_len: int = 50
 ) -> DataFrame:
-    """LEVEL-1 of the two-level ExactSubstr scheme (VERDICT r11 task
-    #7): the (doc_id, pos, __h, __c) posting relation restricted to
+    """LEVEL-1 of the two-level ExactSubstr scheme: the
+    (doc_id, pos, __h, __c) posting relation restricted to
     window hashes seen in ≥2 DISTINCT documents — UNCAPPED (no df cap;
     ``__c`` is the global occurrence count, so every df cap is a
     consumer-side filter), fingerprint-keyed.
 
-    Why: the substr-runs and decontamination-runs builds each
-    regenerated the FULL corpus window relation and re-aggregated its
-    frequencies per build, while round 11 measured (and rejected)
-    materializing that full relation — it is ~20× its source text.
+    Why: without it the substr-runs and decontamination-runs builds
+    each regenerate the FULL corpus window relation and re-aggregate
+    its frequencies, and materializing that full relation was measured
+    (and rejected) — it is ~20× its source text.
     The dup-restricted subset measured **9.2% of the window relation**
     at sf0.1, and both l=50 families derive from it exactly:
 
@@ -566,17 +570,6 @@ def shared_dup_window_postings(
     corpora grow it); the builds that consume it still apply their df
     caps, only this build pays the uncapped join — the standard
     inverted-index trade, documented rather than hidden."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_DUP_WINDOWS_VERSION}"
-        f"_l{min_len}"
-    )
-
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
         wins = window_hash_postings(docs, "doc_id", "text", min_len).persist()
@@ -607,7 +600,11 @@ def shared_dup_window_postings(
             wins.unpersist()
 
     path = artifacts.ensure(
-        "dup_windows", key, _build, env_var="SPARK_GRAFT_SUBSTR_DIR"
+        "dup_windows",
+        table_path(sf_dir, "documents"),
+        _DUP_WINDOWS_VERSION,
+        {"min_len": min_len},
+        _build,
     )
     return spark.read.schema(
         "__h bigint, doc_id bigint, pos int, __c bigint"
@@ -633,29 +630,14 @@ def shared_substring_runs(
     the artifact is written (the build is the one materialization this
     cache exists for), so repeated invocations leak no storage blocks.
     """
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    # _RUNS_VERSION tracks the operator, the fingerprint tracks the
-    # data — bump on any semantic change to duplicated_substring_runs.
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_RUNS_VERSION}"
-        f"_l{min_len}_df{max_df}"
-    )
-
     def _build(staging: str) -> None:
-        # Round 12 (VERDICT r11 task #7): derive from the level-1
-        # dup-window artifact instead of regenerating + re-aggregating
-        # the full window relation — posts = level-1 filtered to the
-        # df cap is exactly wins ⋈ {h: ≥2 docs ∧ c ≤ cap}, so the runs
-        # relation is identical (exact-equality pinned in
-        # tests/test_round12_ops.py and measured in
-        # OPTIMIZATION_r12.md: builds 4.2+3.0 s → 3.6 shared + 0.7 +
-        # 1.4 s at sf0.1, and ONE corpus window scan per corpus
-        # version instead of two).
+        # Derived from the level-1 dup-window artifact instead of
+        # regenerating + re-aggregating the full window relation —
+        # posts = level-1 filtered to the df cap is exactly
+        # wins ⋈ {h: ≥2 docs ∧ c ≤ cap}, so the runs relation is
+        # identical (exact equality pinned by a test), and the corpus
+        # window scan runs once per corpus version instead of once per
+        # build (builds 4.2+3.0 s → 3.6 shared + 0.7 + 1.4 s at sf0.1).
         posts = shared_dup_window_postings(spark, sf_dir, min_len)
         if max_df is not None:
             posts = posts.filter(F.col("__c") <= max_df)
@@ -669,7 +651,11 @@ def shared_substring_runs(
         runs.coalesce(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "substr_runs", key, _build, env_var="SPARK_GRAFT_SUBSTR_DIR"
+        "substr_runs",
+        table_path(sf_dir, "documents"),
+        _RUNS_VERSION,
+        {"min_len": min_len, "max_df": max_df},
+        _build,
     )
     return spark.read.parquet(path)
 
@@ -686,29 +672,17 @@ def shared_decontamination_runs(
     cross-corpus runs over the deterministic hash split of
     ``documents`` — decontamination is a once-per-corpus-version job
     whose (leak-bounded) output every consumer reads, exactly like
-    :func:`shared_substring_runs`. Round 10: the per-invocation form
-    looked cheap in bench only because Spark's cache manager was
-    silently re-serving the previous lap's persisted window relations;
-    releasing those persists exposed the honest ~2.8 s-per-invocation
-    cost, and the artifact is the correct fix — the build is paid once
-    (recorded as a BUILD line), consumers read tens of rows."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
+    :func:`shared_substring_runs`. Computed per invocation it costs
+    ~2.8 s (a bench lap can hide that only while Spark's cache manager
+    re-serves the previous lap's persisted window relations); as an
+    artifact the build is paid once (recorded as a BUILD line) and
+    consumers read tens of rows."""
     from nabatshy_spark.operators import sampling
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_XCORPUS_VERSION}"
-        f"_l{min_len}_df{max_df}_tb{train_bps}_vb{val_bps}"
-    )
-
     def _build(staging: str) -> None:
-        # Round 12 (VERDICT r11 task #7): both sides of the cross-split
-        # posting join come from the level-1 dup-window artifact.
-        # Equivalence (measured exact at sf0.1, pinned in
-        # tests/test_round12_ops.py): a train window that shares a hash
+        # Both sides of the cross-split posting join come from the
+        # level-1 dup-window artifact. Equivalence (measured exact at
+        # sf0.1, pinned by a test): a train window that shares a hash
         # with a test window has a ≥2-distinct-doc hash, so the dup
         # restriction drops nothing the semi-join keeps; all train
         # occurrences of a dup hash are present, so the post-prune df
@@ -747,7 +721,16 @@ def shared_decontamination_runs(
         runs.coalesce(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "decon_runs", key, _build, env_var="SPARK_GRAFT_SUBSTR_DIR"
+        "decon_runs",
+        table_path(sf_dir, "documents"),
+        _XCORPUS_VERSION,
+        {
+            "min_len": min_len,
+            "max_df": max_df,
+            "train_bps": train_bps,
+            "val_bps": val_bps,
+        },
+        _build,
     )
     return spark.read.parquet(path)
 
@@ -761,17 +744,6 @@ def shared_intra_repeat_runs(
     """Fingerprint-keyed materialization of
     ``intra_doc_repeat_runs(documents, ...)`` — same lifecycle and
     rationale as :func:`shared_decontamination_runs`."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_IREPEAT_VERSION}"
-        f"_l{min_len}_occ{max_occ}"
-    )
-
     def _build(staging: str) -> None:
         handles: list[DataFrame] = []
         runs = intra_doc_repeat_runs(
@@ -789,7 +761,11 @@ def shared_intra_repeat_runs(
                 h.unpersist()
 
     path = artifacts.ensure(
-        "intra_runs", key, _build, env_var="SPARK_GRAFT_SUBSTR_DIR"
+        "intra_runs",
+        table_path(sf_dir, "documents"),
+        _IREPEAT_VERSION,
+        {"min_len": min_len, "max_occ": max_occ},
+        _build,
     )
     return spark.read.parquet(path)
 
@@ -801,8 +777,7 @@ def exactsubstr_rewrite(
     the keep-first cut intervals out of each affected document and
     return the rewritten corpus — same schema as ``df``, unaffected
     rows passed through byte-identical. This is the step
-    :func:`exactsubstr_cut_stats` audits; until round 10 it existed
-    only as the unit test's reference splice.
+    :func:`exactsubstr_cut_stats` audits.
 
     Mechanics: cut intervals (doc_b side of every verified run) merge
     per document via :func:`merge_intervals` — the ONE interval-merge

@@ -9,6 +9,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import load, table_path
+
 # stopword markers per language for the n-gram/stopword language-ID
 # heuristic; deterministic tie order en > de > es > fr.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -353,8 +356,8 @@ def unigram_logprob_scores(df: DataFrame, id_col: str, text_col: str) -> DataFra
         F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("__t")
     )
     doc_tok = toks.groupBy(id_col, "__t").agg(F.count("*").alias("__c"))
-    # Round 12 measured (and rejected) a localCheckpoint on vocab to
-    # cut the third explode: solo 0.60 → 0.86 s. All three explode
+    # No localCheckpoint on vocab to cut the third explode: measured
+    # solo 0.60 → 0.86 s with it. All three explode
     # branches run concurrently on idle cores at this size, so the
     # checkpoint's materialize-then-compute barrier only adds wall —
     # the psi_order_value_drift / dup_ngram_coverage mechanism.
@@ -371,41 +374,9 @@ def unigram_logprob_scores(df: DataFrame, id_col: str, text_col: str) -> DataFra
     )
 
 
-def boilerplate_scrub(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_words: int = 5,
-    max_docs: int = 2,
-    hot_override: DataFrame | None = None,
-) -> DataFrame:
-    """Paragraph/chunk-level exact dedup (the RefinedWeb / C4 move):
-    split every document into non-overlapping ``chunk_words``-word
-    chunks, find chunks that appear in more than ``max_docs`` distinct
-    documents (boilerplate: headers, footers, license blurbs), and
-    rebuild each document with those chunks removed.
-
-    Returns per-document scrub accounting — ``n_chunks``, ``n_kept``,
-    ``n_removed``, ``clean_md5`` (md5 of the reassembled text, '' when
-    everything was boilerplate) and ``n_chars_clean`` — rather than the
-    full cleaned body, so the result is compact and hash-comparable.
-
-    Scale shape: the corpus explodes once into (doc, pos, chunk-hash);
-    the hot-chunk set is a HAVING-filtered aggregate over the 16-byte
-    chunk hash (partial agg combines map-side) and is tiny by
-    construction — boilerplate is frequent, so there are few distinct
-    hot hashes — which makes the removal a **broadcast join**, not a
-    second corpus-sized shuffle. Reassembly groups by doc id: one
-    row-proportional shuffle total. Never shuffles document bodies
-    keyed by content.
-
-    ``hot_override`` substitutes a precomputed hot-chunk hash set
-    (single ``h`` column) — for callers serving the deterministic
-    per-corpus boilerplate vocabulary from a fingerprint-keyed artifact
-    (:func:`shared_hot_chunks`). With it the corpus is chunk-exploded
-    ONCE per run (flag + reassemble in one group-by) instead of twice
-    (frequency pass + removal pass) — round 12, guide §2.3/§2.4.
-    """
+def _chunks(text_col: str, chunk_words: int) -> tuple[Column, Column]:
+    """(n_chunks, chunks) expressions for the boilerplate operators: the
+    text split into non-overlapping ``chunk_words``-word chunks."""
     W = chunk_words
     toks = _tokens(F.col(text_col))
     n_chunks = F.ceil(F.size(toks) / F.lit(W)).cast("int")
@@ -413,30 +384,71 @@ def boilerplate_scrub(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.array_join(F.slice(toks, i * W + 1, W), " "),
     )
+    return n_chunks, chunk_arr
+
+
+def hot_chunks(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    chunk_words: int = 5,
+    max_docs: int = 2,
+) -> DataFrame:
+    """The boilerplate vocabulary (h): md5 hashes of the
+    ``chunk_words``-word chunks appearing in more than ``max_docs``
+    distinct documents — headers, footers, license blurbs. The input of
+    :func:`boilerplate_scrub` and the producer of
+    :func:`shared_hot_chunks`. A HAVING-filtered aggregate over the
+    16-byte chunk hash (partial agg combines map-side), tiny by
+    construction: boilerplate is frequent, so there are few distinct
+    hot hashes."""
+    _, chunk_arr = _chunks(text_col, chunk_words)
+    return (
+        df.select(F.col(id_col), F.explode(chunk_arr).alias("chunk"))
+        .select(id_col, F.md5("chunk").alias("h"))
+        .groupBy("h")
+        .agg(F.countDistinct(id_col).alias("__df"))
+        .filter(F.col("__df") > max_docs)
+        .select("h")
+    )
+
+
+def boilerplate_scrub(
+    df: DataFrame,
+    hot: DataFrame,
+    id_col: str,
+    text_col: str,
+    chunk_words: int = 5,
+) -> DataFrame:
+    """Paragraph/chunk-level exact dedup (the RefinedWeb / C4 move):
+    split every document into non-overlapping ``chunk_words``-word
+    chunks, drop the chunks whose hash is in ``hot`` (:func:`hot_chunks`
+    for the same ``chunk_words``, in-plan or read from
+    :func:`shared_hot_chunks`), and rebuild each document from the rest.
+
+    Returns per-document scrub accounting — ``n_chunks``, ``n_kept``,
+    ``n_removed``, ``clean_md5`` (md5 of the reassembled text, '' when
+    everything was boilerplate) and ``n_chars_clean`` — rather than the
+    full cleaned body, so the result is compact and hash-comparable.
+
+    Scale shape: the corpus chunk-explodes once into (doc, pos,
+    chunk-hash); the hot set is tiny, which makes the removal a
+    **broadcast join**, not a corpus-sized shuffle. Reassembly groups
+    by doc id: one row-proportional shuffle total. Never shuffles
+    document bodies keyed by content.
+    """
+    n_chunks, chunk_arr = _chunks(text_col, chunk_words)
     base = df.select(
         F.col(id_col), n_chunks.cast("long").alias("n_chunks"), chunk_arr.alias("__chunks")
     )
     exploded = base.select(
         id_col, F.posexplode("__chunks").alias("pos", "chunk")
     ).withColumn("h", F.md5(F.col("chunk")))
-
-    hot = (
-        hot_override
-        if hot_override is not None
-        else exploded.groupBy("h")
-        .agg(F.countDistinct(id_col).alias("__df"))
-        .filter(F.col("__df") > max_docs)
-        .select("h")
-    )
-    # Flag-and-aggregate in ONE pass over the exploded relation: the
-    # former broadcast anti-join + group-by consumed `exploded` in two
-    # branches (frequency pass + removal pass), each re-running the
-    # chunk explode. Flagging via a broadcast left join and filtering
-    # inside the aggregate emits identical (n_kept, __clean):
-    # collect_list drops the NULLs hot rows become, array_sort orders
-    # by pos first, and a doc whose every chunk is hot now yields
-    # (n_kept=0, __clean='') directly — exactly what the left-join/
-    # coalesce tail produced for it.
+    # Flag-and-aggregate in ONE pass over the exploded relation:
+    # flagging via a broadcast left join and filtering inside the
+    # aggregate emits (n_kept, __clean) directly: collect_list drops the
+    # NULLs hot rows become, array_sort orders by pos first, and a doc
+    # whose every chunk is hot yields (n_kept=0, __clean='').
     flagged = exploded.join(
         F.broadcast(hot.select("h", F.lit(True).alias("__hot"))), "h", "left"
     )
@@ -473,8 +485,7 @@ def boilerplate_scrub(
     )
 
 
-# Bump when boilerplate_scrub's chunking/hashing changes — see the key
-# note on dedup.shared_ngram_pairs.
+# Bump when hot_chunks' chunking/hashing changes (see artifacts.ensure).
 _HOT_CHUNKS_VERSION = 1
 
 
@@ -484,56 +495,31 @@ def shared_hot_chunks(
     chunk_words: int = 5,
     max_docs: int = 2,
 ) -> DataFrame:
-    """Fingerprint-keyed materialization of the HOT-CHUNK hash set of
-    :func:`boilerplate_scrub` over ``documents``: md5 hashes of the
-    ``chunk_words``-word chunks appearing in more than ``max_docs``
-    distinct documents — the boilerplate vocabulary.
+    """Fingerprint-keyed materialization of
+    ``hot_chunks(documents, "doc_id", "text", chunk_words, max_docs)``.
 
-    Why (VERDICT r11 task #9 / guide §2.3): the scrub consumed its
+    Why: deriving the hot set in-plan makes the scrub consume its
     chunk-exploded relation twice per run — once to aggregate chunk
     document-frequencies (only to derive this tiny set) and once to
-    remove flagged chunks — so the corpus paid the tokenize+chunk
+    remove flagged chunks — so the corpus pays the tokenize+chunk
     explode twice for a relation that is deterministic per corpus. The
-    hot set is vocabulary-bounded (few distinct boilerplate chunks by
-    construction) and md5 strings round-trip parquet exactly, so the
-    scrub's output is byte-identical. At 100 TB the boilerplate
-    vocabulary is the scheduled once-per-corpus job; every scrub run is
-    one exploded pass + a broadcast probe. Explicit read schema: an
-    empty corpus writes no part files."""
-    import os
-
-    from nabatshy_spark import artifacts
-    from nabatshy_spark.catalog import load
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}_v{_HOT_CHUNKS_VERSION}"
-        f"_w{chunk_words}_d{max_docs}"
-    )
+    hot set is vocabulary-bounded and md5 strings round-trip parquet
+    exactly, so the scrub's output is byte-identical. At 100 TB the
+    boilerplate vocabulary is the scheduled once-per-corpus job; every
+    scrub run is one exploded pass + a broadcast probe. Explicit read
+    schema: an empty corpus writes no part files."""
 
     def _build(staging: str) -> None:
-        docs = load(spark, sf_dir, "documents")
-        W = chunk_words
-        toks = _tokens(F.col("text"))
-        n_chunks = F.ceil(F.size(toks) / F.lit(W)).cast("int")
-        chunk_arr = F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.array_join(F.slice(toks, i * W + 1, W), " "),
-        )
-        (
-            docs.select(F.col("doc_id"), F.explode(chunk_arr).alias("chunk"))
-            .select("doc_id", F.md5("chunk").alias("h"))
-            .groupBy("h")
-            .agg(F.countDistinct("doc_id").alias("__df"))
-            .filter(F.col("__df") > max_docs)
-            .select("h")
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
+        hot_chunks(
+            load(spark, sf_dir, "documents"), "doc_id", "text", chunk_words, max_docs
+        ).repartition(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
-        "hot_chunks", key, _build, env_var="SPARK_GRAFT_CHUNKS_DIR"
+        "hot_chunks",
+        table_path(sf_dir, "documents"),
+        _HOT_CHUNKS_VERSION,
+        {"chunk_words": chunk_words, "max_docs": max_docs},
+        _build,
     )
     return spark.read.schema("h string").parquet(path)
 
@@ -721,8 +707,8 @@ def bigram_logprob_scores(
     ).select(id_col, F.col("p.x").alias("x"), F.col("p.y").alias("y"))
     # Both LM tables hang off doc_xy, and doc_xy feeds the scoring
     # join too: without the checkpoints the tokenize + transition
-    # explode + compaction ran FIVE times per invocation (before-plan:
-    # 10 scans of the corpus; round 12 small-hub-reuse move). doc_xy
+    # explode + compaction run FIVE times per invocation (10 scans of
+    # the corpus). doc_xy
     # is transition-compacted (≪ raw transitions) and xy is
     # bigram-vocabulary-sized — both bounded, both reused.
     doc_xy = (
@@ -800,8 +786,7 @@ def cross_doc_ngram_dup(
     )
     # dg feeds both the doc-frequency aggregate and the scoring join:
     # checkpointed so the gram explode + compaction run once, not
-    # twice (round 12 small-hub-reuse move — dg is occurrence-
-    # compacted, ≪ raw gram rows).
+    # twice (dg is occurrence-compacted, ≪ raw gram rows).
     dg = (
         grams.groupBy(id_col, "__g")
         .agg(F.count("*").alias("__c"))

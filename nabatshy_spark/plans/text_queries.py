@@ -69,9 +69,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, so the pandas-UDF stage is the once-per-corpus build;
     banding + candidate expansion + exact verification stay per-run."""
     return dedup.minhash_lsh_pairs(
-        load(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.5,
-        max_bucket=200,
-        sig_override=dedup.shared_minhash_signatures(spark, sf_dir, n=3),
+        dedup.shared_minhash_signatures(spark, sf_dir, n=3), "doc_id",
+        threshold=0.5, max_bucket=200,
     )
 
 
@@ -230,10 +229,23 @@ def dedup_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end dedup composition: exact content-hash dedup, then
     3-gram Jaccard (≥0.5) components over survivors, keep min-id per
     cluster; returns the surviving corpus rows."""
-    return dedup.dedup_pipeline(
-        load(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.5,
-        max_df=200,
-    ).select("doc_id", "lang", "source")
+    docs = load(spark, sf_dir, "documents")
+    # The exact survivors are NOT checkpointed: the pipeline's consumers
+    # each take a different narrow projection of them, and recomputing
+    # the (cheap, codegen'd) filter per consumer beats materializing
+    # full text bodies — measured 2.0 s vs 4.6 s at sf0.1
+    # (localCheckpoint blocks column pruning through the join).
+    survivors = docs.join(
+        dedup.exact_dedup(docs, "doc_id", "text").select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    pairs = dedup.ngram_jaccard_pairs(
+        survivors, "doc_id", "text", n=3, threshold=0.5, max_df=200
+    )
+    return dedup.dedup_pipeline(survivors, pairs, "doc_id").select(
+        "doc_id", "lang", "source"
+    )
 
 
 @query("corpus_length_stats")
@@ -306,14 +318,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings / hot set are the once-per-corpus-version build, and each
     run pays only the batch side — the steady-state production shape
     the operator docstring always promised."""
-    docs = load(spark, sf_dir, "documents")
-    batch = docs.filter(F.col("doc_id") % 10 < 2)
-    corpus = docs.filter(F.col("doc_id") % 10 >= 2)
+    batch = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 < 2)
     return dedup.incremental_dedup(
-        corpus, batch, "doc_id", "text", n=3, threshold=0.5, max_df=200,
-        corpus_index=dedup.shared_incremental_corpus_index(
+        dedup.shared_incremental_corpus_index(
             spark, sf_dir, n=3, max_df=200, mod=10, batch_lt=2
         ),
+        batch, "doc_id", "text", n=3, threshold=0.5,
     )
 
 
@@ -346,29 +356,21 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the curated_pairs build (dedup.shared_curation_flags) — the
     # regexes run once per corpus version, this query reads booleans.
     # flags.__fp (sha256 per kept doc) also supplies the exact-dedup
-    # survivors, so the pipeline's stage (1) re-hash pass is gone too.
+    # survivors, so the pipeline's stage (1) needs no re-hash pass.
     flags = dedup.shared_curation_flags(spark, sf_dir)
     kept_ids = flags.filter("__k").select("doc_id")
     kept = joins.semi_join_ids(
         docs, kept_ids, "doc_id", n_ids_estimate=_parquet_rows(sf_dir, "documents")
     )
-    exact_sur = (
-        flags.filter("__k")
-        .groupBy("__fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
     # The near-dup pair relation over the kept corpus is served from
     # the fingerprint-keyed artifact (dedup.shared_curated_pairs) it
-    # shares with curation_funnel — byte-identical to the inline
+    # shares with curation_funnel — byte-identical to the in-plan
     # posting join, which was ~3 s of this query's 5 s recomputed per
     # run (the build is itemized once per corpus in the bench).
     survivors = dedup.dedup_pipeline(
-        kept, "doc_id", "text", n=3, threshold=0.5, max_df=200,
-        pairs_override=dedup.shared_curated_pairs(
-            spark, sf_dir, n=3, threshold=0.5, max_df=200
-        ),
-        exact_sur_override=exact_sur,
+        kept.join(dedup.curation_survivor_ids(flags), "doc_id", "left_semi"),
+        dedup.shared_curated_pairs(spark, sf_dir, n=3, threshold=0.5, max_df=200),
+        "doc_id",
     )
     return sampling.hash_sample(survivors, "doc_id", bps=6554).select(
         "doc_id", "lang", "source"
@@ -516,11 +518,9 @@ def boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-aggregating chunk frequencies per invocation, and
     the probe stays a broadcast."""
     return textanalysis.boilerplate_scrub(
-        load(spark, sf_dir, "documents"), "doc_id", "text",
-        chunk_words=5, max_docs=2,
-        hot_override=textanalysis.shared_hot_chunks(
-            spark, sf_dir, chunk_words=5, max_docs=2
-        ),
+        load(spark, sf_dir, "documents"),
+        textanalysis.shared_hot_chunks(spark, sf_dir, chunk_words=5, max_docs=2),
+        "doc_id", "text", chunk_words=5,
     )
 
 
@@ -775,8 +775,9 @@ def dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one doc-keyed aggregate; the 100 TB switch is hashing the
     shingle to int64."""
     return dedup.duplicate_ngram_coverage(
-        load(spark, sf_dir, "documents"), "doc_id", "text", k=20,
-        dup_vocab_override=dedup.shared_dup_char_vocab(spark, sf_dir, k=20),
+        load(spark, sf_dir, "documents"),
+        dedup.shared_dup_char_vocab(spark, sf_dir, k=20),
+        "doc_id", "text", k=20,
     )
 
 
@@ -789,8 +790,9 @@ def dup_span_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_ngram_coverage (dedup.shared_dup_char_vocab): one
     corpus explode per run instead of two."""
     return dedup.duplicate_span_stats(
-        load(spark, sf_dir, "documents"), "doc_id", "text", k=20,
-        dup_vocab_override=dedup.shared_dup_char_vocab(spark, sf_dir, k=20),
+        load(spark, sf_dir, "documents"),
+        dedup.shared_dup_char_vocab(spark, sf_dir, k=20),
+        "doc_id", "text", k=20,
     )
 
 
@@ -845,23 +847,13 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # near-dup pairs from the shared curated-pair artifact (same
     # relation curate_corpus consumes — see dedup.shared_curated_pairs),
-    # and exact survivors derived from the checkpointed flag relation —
-    # flags already carries each kept doc's sha256 (__fp), so min-id-
-    # per-fingerprint here IS exact_dedup(kept) without re-reading and
-    # re-hashing the text (one fewer corpus scan; `kept` is consumed
-    # once, so it needs no cache).
-    exact_sur = (
-        flags.filter("__k")
-        .groupBy("__fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+    # and exact survivors derived from the flag relation
+    # (dedup.curation_survivor_ids: no re-reading and re-hashing of the
+    # text; `kept` is consumed once, so it needs no cache).
     near = dedup.dedup_pipeline(
-        kept, "doc_id", "text", n=3, threshold=0.5, max_df=200,
-        pairs_override=dedup.shared_curated_pairs(
-            spark, sf_dir, n=3, threshold=0.5, max_df=200
-        ),
-        exact_sur_override=exact_sur,
+        kept.join(dedup.curation_survivor_ids(flags), "doc_id", "left_semi"),
+        dedup.shared_curated_pairs(spark, sf_dir, n=3, threshold=0.5, max_df=200),
+        "doc_id",
     )
     tail = near.agg(
         F.count("*").alias("s4"),
@@ -2111,7 +2103,6 @@ def minhash_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins ride the two pair relations (tiny next to the corpus)."""
     from nabatshy_spark.operators import dedup
 
-    docs = load(spark, sf_dir, "documents")
     exact = (
         dedup.shared_ngram_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
@@ -2121,15 +2112,14 @@ def minhash_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE full-budget signature artifact serves all three configs: the
     # seeded hash family is prefix-stable, so sig[:32]/sig[:64] ARE the
     # 32-/64-hash signatures and banding only reads indices below each
-    # budget (see minhash_lsh_pairs' sig_override note).
+    # budget (see minhash_lsh_pairs).
     sigs = dedup.shared_minhash_signatures(spark, sf_dir, n=3, num_hashes=128)
     reports = []
     for n_hashes in [32, 64, 128]:
         got = (
             dedup.minhash_lsh_pairs(
-                docs, "doc_id", "text", n=3, threshold=0.5,
+                sigs, "doc_id", threshold=0.5,
                 num_hashes=n_hashes, rows_per_band=2,
-                sig_override=sigs,
             )
             .select("doc_a", "doc_b")
             .localCheckpoint()

@@ -27,15 +27,15 @@ Scale notes:
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import table_path
 
-# Explicit override hook (tests monkeypatch this); None → the shared
-# artifacts root ($SPARK_GRAFT_BUCKET_DIR / $SPARK_GRAFT_ARTIFACT_DIR /
-# per-user tempdir), resolved at call time by artifacts.ensure.
-BUCKET_ROOT: str | None = None
+# Bump when write_bucketed's layout changes (see artifacts.ensure).
+_BUCKETED_VERSION = 1
 
 
 def write_bucketed(
@@ -101,19 +101,17 @@ def ensure_bucketed(
     """Idempotently materialize the bucketed layout of ``sf_dir/source``
     and return its catalog table name.
 
-    The name embeds a content fingerprint of the source file, so a
-    changed source yields a new layout rather than a stale read. The
-    on-disk lifecycle — pid-unique staging, atomic rename publish,
-    quarantine of crashed partial layouts, _SUCCESS gate — is owned by
-    artifacts.ensure (it was first written here; round 10 hoisted it).
+    The name embeds the artifact key (source fingerprint + layout
+    parameters), so a changed source yields a new layout rather than a
+    stale read. The on-disk lifecycle — pid-unique staging, atomic
+    rename publish, quarantine of crashed partial layouts, _SUCCESS
+    gate — is owned by artifacts.ensure.
     """
-    src = os.path.join(sf_dir, f"{source}.parquet")
-    fp = artifacts.source_fingerprint(src)
-    table = f"nab_{source}_bkt{num_buckets}_{fp[:12]}"
+    src = table_path(sf_dir, source)
     df = spark.read.parquet(src)
 
     def _build(staging_path: str) -> None:
-        staging_table = f"{table}__stg{os.getpid()}"
+        staging_table = f"nab_{source}_bkt_stg_{uuid.uuid4().hex}"
         write_bucketed(df, staging_table, staging_path, keys, num_buckets)
         # External table: dropping it leaves the staged files in place.
         spark.sql(f"DROP TABLE IF EXISTS `{staging_table}`")
@@ -124,11 +122,12 @@ def ensure_bucketed(
     # actively served by a registered table.
     path = artifacts.ensure(
         "bucketed",
-        table,
+        src,
+        _BUCKETED_VERSION,
+        {"keys": keys, "num_buckets": num_buckets},
         _build,
-        env_var="SPARK_GRAFT_BUCKET_DIR",
-        base=BUCKET_ROOT,
     )
+    table = f"nab_{source}_bkt{num_buckets}_{os.path.basename(path)}"
     if not spark.catalog.tableExists(table):
         _register_external_bucketed(
             spark, table, path, df.schema, keys, num_buckets

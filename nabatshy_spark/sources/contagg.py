@@ -32,12 +32,11 @@ failed build can never be read as a complete rollup.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nabatshy_spark import artifacts
+from nabatshy_spark.catalog import table_path
 
 # Mergeable partial aggregates — everything derivable (avg) is computed
 # at read time from these. The sum is DECIMAL(28,6), not double: double
@@ -51,6 +50,11 @@ _ROLLUP_AGGS = [
     F.min("value").alias("min_value"),
     F.max("value").alias("max_value"),
 ]
+
+
+# Bump when the rollup's aggregates or bucketing change (see
+# artifacts.ensure).
+_ROLLUP_VERSION = 1
 
 
 def _bucketed(df: DataFrame, bucket: str) -> DataFrame:
@@ -70,11 +74,7 @@ def ensure_rollup(
     when the source changes. Lifecycle (staging-then-rename, _SUCCESS
     gate, per-user root, GC) owned by artifacts.ensure.
     """
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (
-        f"{artifacts.source_fingerprint(src)}"
-        f"-{cutoff.replace(' ', 'T').replace(':', '')}-{bucket}"
-    )
+    src = table_path(sf_dir, "events")
 
     def _build(staging: str) -> None:
         (
@@ -87,7 +87,7 @@ def ensure_rollup(
         )
 
     return artifacts.ensure(
-        "contagg", key, _build, env_var="SPARK_GRAFT_CONTAGG_DIR"
+        "contagg", src, _ROLLUP_VERSION, {"cutoff": cutoff, "bucket": bucket}, _build
     )
 
 
@@ -106,7 +106,7 @@ def serve_series(
     settled = spark.read.parquet(path)
     tail = (
         _bucketed(
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet")), bucket
+            spark.read.parquet(table_path(sf_dir, "events")), bucket
         )
         .filter(F.col("ts") >= F.lit(cutoff).cast("timestamp"))
         .groupBy("bucket", "event_type")

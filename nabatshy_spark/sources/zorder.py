@@ -27,8 +27,6 @@ bucketed-join layout in sources/bucketed.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -97,6 +95,10 @@ def zorder_write(
     )
 
 
+# Bump when zorder_write's layout changes (see artifacts.ensure).
+_ZORDER_VERSION = 1
+
+
 def ensure_zordered(
     spark: SparkSession,
     sf_dir: str,
@@ -109,16 +111,14 @@ def ensure_zordered(
     ``sf_dir/source`` and return its path — content-fingerprint-keyed;
     lifecycle (staging-then-rename, _SUCCESS gate, per-user root, GC)
     owned by artifacts.ensure."""
-    from nabatshy_spark.catalog import load
+    from nabatshy_spark.catalog import load, table_path
 
-    src = os.path.join(sf_dir, f"{source}.parquet")
-    fp = artifacts.source_fingerprint(src)
-    key = f"{source}_z{'_'.join(cols)}_b{bits}_{fp[:12]}"
     return artifacts.ensure(
         "zorder",
-        key,
+        table_path(sf_dir, source),
+        _ZORDER_VERSION,
+        {"cols": cols, "bits": bits, "num_files": num_files},
         lambda staging: zorder_write(
             load(spark, sf_dir, source), staging, cols, bits, num_files
         ),
-        env_var="SPARK_GRAFT_ZORDER_DIR",
     )

@@ -97,11 +97,13 @@ class OTLPReceiver:
         )
 
     def _spool(self, d: str, ext: str, payload: bytes) -> None:
-        """Ack only after the payload is durably in the watched dir;
-        write-then-rename so the file source never reads a partial
-        file."""
+        """Ack only after the payload is durably in the watched dir.
+        The payload is written under a leading-dot name, which Spark's
+        file source skips as hidden, then renamed to its final name, so
+        a listing between write and rename sees neither a partial file
+        nor a second copy of the request."""
         name = f"req-{os.getpid()}-{threading.get_ident()}-{next(self._seq)}"
-        tmp = os.path.join(d, name + ".tmp")
+        tmp = os.path.join(d, f".{name}.tmp")
         with open(tmp, "wb") as fh:
             fh.write(payload)
             fh.flush()

@@ -91,7 +91,9 @@ def test_duplicate_ngram_coverage_semantics(spark):
     )
     out = {
         r.doc_id: r
-        for r in dedup.duplicate_ngram_coverage(docs, "doc_id", "text").collect()
+        for r in dedup.duplicate_ngram_coverage(
+            docs, dedup.dup_char_vocab(docs, "doc_id", "text"), "doc_id", "text"
+        ).collect()
     }
     assert set(out) == {1, 2, 3}
     assert out[1].n_windows == 1 and out[1].dup_windows == 1
@@ -111,7 +113,9 @@ def test_within_doc_repeat_is_not_cross_doc_duplication(spark):
     )
     out = {
         r.doc_id: r
-        for r in dedup.duplicate_ngram_coverage(docs, "doc_id", "text").collect()
+        for r in dedup.duplicate_ngram_coverage(
+            docs, dedup.dup_char_vocab(docs, "doc_id", "text"), "doc_id", "text"
+        ).collect()
     }
     assert out[1].dup_windows == 0
 

@@ -96,3 +96,57 @@ def test_no_registration_side_effect_imports():
             if a.name.startswith("nabatshy_spark.plans") and not a.asname
         ]
     assert not offenders
+
+
+# Artifact contract: nabatshy_spark.artifacts derives every key and root.
+PACKAGE = os.path.join(REPO, "nabatshy_spark")
+
+
+def _package_trees():
+    for path in glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            yield os.path.relpath(path, REPO), ast.parse(fh.read())
+
+
+def test_operators_take_relations_not_override_kwargs():
+    """A derived relation is a required input, never an optional
+    ``*_override`` (or ``corpus_index=None``) beside an in-plan fork."""
+    offenders = []
+    for rel, tree in _package_trees():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            args = fn.args
+            pos = args.posonlyargs + args.args
+            defaults = [None] * (len(pos) - len(args.defaults)) + [
+                *args.defaults, *args.kw_defaults
+            ]
+            for a, d in zip(pos + args.kwonlyargs, defaults):
+                none_default = isinstance(d, ast.Constant) and d.value is None
+                if a.arg.endswith("_override") or (
+                    a.arg == "corpus_index" and none_default
+                ):
+                    offenders.append(f"{rel}:{fn.lineno} {fn.name}({a.arg})")
+    assert not offenders
+
+
+def test_source_fingerprint_is_called_only_by_artifacts():
+    offenders = [
+        f"{rel}:{n.lineno}"
+        for rel, tree in _package_trees()
+        if rel != os.path.join("nabatshy_spark", "artifacts.py")
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Name, ast.Attribute))
+        and (n.id if isinstance(n, ast.Name) else n.attr) == "source_fingerprint"
+    ]
+    assert not offenders
+
+
+def test_one_artifact_location_setting():
+    """$SPARK_GRAFT_ARTIFACT_DIR is the only artifact-location env var
+    ($SPARK_GRAFT_SF_DIR locates the input tables, not artifacts)."""
+    found = set()
+    for path in glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            found |= set(re.findall(r"SPARK_GRAFT_\w*_DIR", fh.read()))
+    assert found <= {"SPARK_GRAFT_ARTIFACT_DIR", "SPARK_GRAFT_SF_DIR"}

@@ -174,7 +174,11 @@ def test_ngram_jaccard_df_cap_boilerplate(spark):
 
 
 def test_minhash_bucket_cap_boilerplate(spark):
-    from nabatshy_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+    from nabatshy_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+        ngram_jaccard_pairs,
+    )
 
     # 60 identical boilerplate docs → one giant LSH bucket in every
     # band; two near-dup docs with distinct content must still pair up
@@ -186,7 +190,9 @@ def test_minhash_bucket_cap_boilerplate(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
     capped = {(r.doc_a, r.doc_b)
-              for r in minhash_lsh_pairs(df, "doc_id", "text", max_bucket=30).collect()}
+              for r in minhash_lsh_pairs(
+                  minhash_signatures(df, "doc_id", "text"), "doc_id", max_bucket=30
+              ).collect()}
     exact = {(r.doc_a, r.doc_b)
              for r in ngram_jaccard_pairs(df, "doc_id", "text").collect()}
     # the boilerplate clique (all jaccard 1.0 pairs among ids >= 2) is
@@ -325,7 +331,10 @@ def test_repetition_stats_unit(spark):
 
 
 def test_incremental_dedup_semantics(spark):
-    from nabatshy_spark.operators.dedup import incremental_dedup
+    from nabatshy_spark.operators.dedup import (
+        incremental_corpus_index,
+        incremental_dedup,
+    )
 
     corpus = spark.createDataFrame(
         [
@@ -348,7 +357,10 @@ def test_incremental_dedup_semantics(spark):
     )
     rows = {
         r["doc_id"]: (r["status"], r["match_id"])
-        for r in incremental_dedup(corpus, batch, "doc_id", "text").collect()
+        for r in incremental_dedup(
+            incremental_corpus_index(corpus, "doc_id", "text"),
+            batch, "doc_id", "text",
+        ).collect()
     }
     assert rows[1] == ("dup_exact", 100)
     assert rows[2][0] == "dup_near" and rows[2][1] == 100
@@ -359,7 +371,10 @@ def test_incremental_dedup_df_cap_blind_spot_only(spark):
     """With max_df=1 every corpus shingle of the duplicated pair is hot,
     so the near-dup is the documented blind spot — but the exact path
     still catches byte-identical content regardless of caps."""
-    from nabatshy_spark.operators.dedup import incremental_dedup
+    from nabatshy_spark.operators.dedup import (
+        incremental_corpus_index,
+        incremental_dedup,
+    )
 
     corpus = spark.createDataFrame(
         [(10, "alpha beta gamma delta epsilon zeta"),
@@ -374,7 +389,8 @@ def test_incremental_dedup_df_cap_blind_spot_only(spark):
     rows = {
         r["doc_id"]: r["status"]
         for r in incremental_dedup(
-            corpus, batch, "doc_id", "text", max_df=1
+            incremental_corpus_index(corpus, "doc_id", "text", max_df=1),
+            batch, "doc_id", "text",
         ).collect()
     }
     assert rows[1] == "dup_exact"
@@ -640,7 +656,7 @@ def test_boilerplate_scrub_removes_hot_chunks(spark):
     (md5('') fingerprint, 0 chars); unique text is untouched."""
     import hashlib
 
-    from nabatshy_spark.operators.textanalysis import boilerplate_scrub
+    from nabatshy_spark.operators.textanalysis import boilerplate_scrub, hot_chunks
 
     # chunking is stride-aligned, so the shared chunk sits at a 5-word
     # boundary in every document that contains it
@@ -652,11 +668,12 @@ def test_boilerplate_scrub_removes_hot_chunks(spark):
         (4, boiler),                        # pure boilerplate
         (5, "totally unique document five here"),
     ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: r
         for r in boilerplate_scrub(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            "doc_id", "text", chunk_words=5, max_docs=2,
+            df, hot_chunks(df, "doc_id", "text", chunk_words=5, max_docs=2),
+            "doc_id", "text", chunk_words=5,
         ).collect()
     }
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
@@ -1111,7 +1128,9 @@ def test_text_operators_survive_null_text(spark):
         [(1, "a b c d e"), (2, None), (3, "a b c d e")],
         "doc_id long, text string",
     )
-    pairs = dedup.minhash_lsh_pairs(df, "doc_id", "text", n=3, threshold=0.5)
+    pairs = dedup.minhash_lsh_pairs(
+        dedup.minhash_signatures(df, "doc_id", "text", n=3), "doc_id", threshold=0.5
+    )
     assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 3)}
     exact = dedup.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.5)
     assert {(r.doc_a, r.doc_b) for r in exact.collect()} == {(1, 3)}

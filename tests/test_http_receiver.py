@@ -66,6 +66,40 @@ def test_receiver_end_to_end(spark, tmp_path):
     assert got == want and len(got) >= 5
 
 
+def test_spool_staging_file_is_never_ingested(spark, tmp_path, monkeypatch):
+    """A request stopped between write and rename leaves only its
+    staging file in the watched dir; the JSON ingest stream must not
+    read it (it would ingest the request twice once the rename lands,
+    or a partial body if the write were still running)."""
+    import json
+    import os
+
+    import pytest
+
+    from nabatshy_spark.streaming import receiver as receiver_mod
+
+    rcv = OTLPReceiver(str(tmp_path / "spool"), host="127.0.0.1", port=0).start()
+    try:
+        line = json.dumps(json.loads(_payload()), separators=(",", ":")) + "\n"
+
+        def stopped(src, dst):
+            raise OSError("stopped between write and rename")
+
+        monkeypatch.setattr(receiver_mod.os, "rename", stopped)
+        with pytest.raises(OSError, match="stopped"):
+            rcv._spool(rcv.spool_json, ".jsonl", line.encode())
+        monkeypatch.undo()
+    finally:
+        rcv.stop()
+    assert len(os.listdir(rcv.spool_json)) == 1  # the staging file
+
+    out = tmp_path / "out"
+    start_file_ingest(
+        spark, rcv.spool_json, str(out), str(tmp_path / "ck")
+    ).awaitTermination()
+    assert not out.exists() or read_spans(spark, str(out)).count() == 0
+
+
 def test_receiver_rejects_bad_requests(tmp_path):
     import pytest
 

@@ -53,7 +53,7 @@ def test_ivf_full_probe_equals_bruteforce(spark, sf_dir, tmp_path):
     assert got == exact
 
 
-def test_ensure_ivf_lifecycle(spark, sf_dir, tmp_path):
+def test_ensure_ivf_lifecycle(spark, sf_dir, tmp_path, monkeypatch):
     """ensure_ivf is idempotent, rebuilds when the source changes, and
     never serves a partially-built directory."""
     import os
@@ -63,11 +63,11 @@ def test_ensure_ivf_lifecycle(spark, sf_dir, tmp_path):
 
     src = str(tmp_path / "emb_src.parquet")
     shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), src)
-    base = str(tmp_path / "idx")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "idx"))
 
-    p1 = ensure_ivf(spark, src, base_dir=base)
+    p1 = ensure_ivf(spark, src)
     assert os.path.isdir(p1)
-    assert ensure_ivf(spark, src, base_dir=base) == p1  # cache hit, no rebuild
+    assert ensure_ivf(spark, src) == p1  # cache hit, no rebuild
 
     # mutate the source (touch mtime + change bytes) → a NEW index path;
     # the stale one is never reused for the new content
@@ -75,7 +75,7 @@ def test_ensure_ivf_lifecycle(spark, sf_dir, tmp_path):
     emb.write.mode("overwrite").parquet(src + ".tmp")
     os.remove(src)
     os.rename(src + ".tmp", src)
-    p2 = ensure_ivf(spark, src, base_dir=base)
+    p2 = ensure_ivf(spark, src)
     assert p2 != p1
     n = spark.read.parquet(p2).count()
     assert n == 50

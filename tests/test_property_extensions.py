@@ -399,7 +399,7 @@ def test_duplicate_span_stats_matches_bruteforce(spark, texts):
     # islands, overlaps, and multi-island gaps included.
     from pyspark.sql import Row
 
-    from nabatshy_spark.operators.dedup import duplicate_span_stats
+    from nabatshy_spark.operators.dedup import dup_char_vocab, duplicate_span_stats
 
     k = 3
     windows = {}
@@ -420,7 +420,9 @@ def test_duplicate_span_stats_matches_bruteforce(spark, texts):
     )
     got = {
         r.doc_id: r.dup_chars
-        for r in duplicate_span_stats(df, "doc_id", "text", k=k).collect()
+        for r in duplicate_span_stats(
+            df, dup_char_vocab(df, "doc_id", "text", k=k), "doc_id", "text", k=k
+        ).collect()
     }
     assert got == expected
 

@@ -135,7 +135,7 @@ def test_part_topk_artifact_serves_identical_results(spark, sf_dir, monkeypatch,
     on the exact double)."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_ER_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     part = load(spark, sf_dir, "part")
     direct = entity.part_topk_matches(
         part, threshold=0.8, k=3, max_df=200, rep_cap=8
@@ -162,7 +162,7 @@ def test_unified_matches_filters_equal_direct_builds(
     t0.8/rcNone is the unified relation minus the flag column."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_ER_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     part = load(spark, sf_dir, "part")
     for thr, rc in [(0.9, None), (0.8, None)]:
         direct = entity.part_matched_pairs(
@@ -185,7 +185,7 @@ def test_doc_matches_artifact_serves_identical_results(
     parquet; ranking happens on the exact double)."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_ER_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     direct = entity.doc_topk_matches(
         load(spark, sf_dir, "documents"), threshold=0.5, k=3
     ).collect()
@@ -207,9 +207,10 @@ def test_doc_matches_artifact_serves_identical_results(
 
 
 
-def test_failed_build_cleans_staging(tmp_path):
-    """A raising builder leaves no staging tree behind (previously it
-    lingered until the 1 h staging TTL and a later same-family miss)."""
+def test_failed_build_cleans_staging(tmp_path, monkeypatch):
+    """A raising builder leaves no staging tree behind (otherwise it
+    lingers until the 1 h staging TTL and a later same-family miss)."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
 
     def boom(staging):
         os.makedirs(staging)
@@ -218,8 +219,8 @@ def test_failed_build_cleans_staging(tmp_path):
         raise RuntimeError("builder crashed")
 
     with pytest.raises(RuntimeError, match="builder crashed"):
-        artifacts.ensure("fam", "k", boom, base=str(tmp_path))
-    assert list(tmp_path.iterdir()) == []
+        artifacts.ensure("fam", [], 1, {}, boom)
+    assert list((tmp_path / "fam").iterdir()) == []
 
 
 def test_sweep_quarantines_expired_entries(tmp_path):
@@ -249,7 +250,7 @@ def test_shared_root_intermediate_is_0700(monkeypatch, tmp_path):
             os.makedirs(staging)
             open(os.path.join(staging, "_SUCCESS"), "w").close()
 
-        artifacts.ensure("famx", "k", build)
+        artifacts.ensure("famx", [], 1, {}, build)
     finally:
         os.umask(prev_umask)
     root = os.path.join(str(tmp_path), f"nabatshy_artifacts_{os.getuid()}")
@@ -267,7 +268,7 @@ def test_shared_postings_pruned_reads_equal_direct_build(
     from nabatshy_spark.catalog import load
     from nabatshy_spark.operators import invindex
 
-    monkeypatch.setenv("SPARK_GRAFT_POSTINGS_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     direct_p = invindex.build_postings(docs, "doc_id", "text")
     direct_dl = docs.selectExpr(

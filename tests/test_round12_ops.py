@@ -1,9 +1,11 @@
-"""Round-12 units: the artifact-served corpus index for incremental
+"""Artifact units: the artifact-served corpus index for incremental
 dedup, the shared MinHash signature relation (incl. the prefix-stable
 hash-family property every multi-budget consumer relies on), the
 curation flag artifact, the hot-chunk artifact + one-pass scrub, the
 uncapped pair artifact for the doc-ER eval gate, and the
-curated-vs-corpus pair-key disambiguation (ADVICE r11 high)."""
+curated-vs-corpus pair artifacts living at distinct paths. Each
+artifact must equal its producer's in-process output, and each
+operator must give the same rows fed either."""
 
 from __future__ import annotations
 
@@ -18,23 +20,30 @@ def test_incremental_corpus_index_serves_identical_results(
     spark, sf_dir, monkeypatch, tmp_path
 ):
     """incremental_dedup with the fingerprint-keyed corpus index must
-    equal the inline derivation exactly — every index relation is a
+    equal the in-plan index exactly — every index relation is a
     deterministic function of the corpus (digests / shingles / counts),
     parquet-exact."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_INCR_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 < 2)
     corpus = docs.filter(F.col("doc_id") % 10 >= 2)
+    in_plan = dedup.incremental_corpus_index(
+        corpus, "doc_id", "text", n=3, max_df=200
+    )
+    shared = dedup.shared_incremental_corpus_index(
+        spark, sf_dir, n=3, max_df=200, mod=10, batch_lt=2
+    )
+    for name, rel in in_plan.items():
+        assert sorted(map(tuple, rel.collect())) == sorted(
+            map(tuple, shared[name].collect())
+        ), name
     inline = dedup.incremental_dedup(
-        corpus, batch, "doc_id", "text", n=3, threshold=0.5, max_df=200
+        in_plan, batch, "doc_id", "text", n=3, threshold=0.5
     ).collect()
     via = dedup.incremental_dedup(
-        corpus, batch, "doc_id", "text", n=3, threshold=0.5, max_df=200,
-        corpus_index=dedup.shared_incremental_corpus_index(
-            spark, sf_dir, n=3, max_df=200, mod=10, batch_lt=2
-        ),
+        shared, batch, "doc_id", "text", n=3, threshold=0.5
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
@@ -55,22 +64,23 @@ def test_minhash_sig_artifact_serves_identical_pairs(
     spark, sf_dir, monkeypatch, tmp_path, num_hashes
 ):
     """minhash_lsh_pairs fed the 128-hash signature artifact must equal
-    the inline UDF stage at every budget ≤ 128 (prefix-stable family;
+    the in-plan UDF stage at every budget ≤ 128 (prefix-stable family;
     banding reads only indices below the budget)."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
+    shared = dedup.shared_minhash_signatures(spark, sf_dir, n=3, num_hashes=128)
+    if num_hashes == 128:
+        assert sorted(
+            map(tuple, dedup.minhash_signatures(docs, "doc_id", "text").collect())
+        ) == sorted(map(tuple, shared.collect()))
     inline = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5,
-        num_hashes=num_hashes, rows_per_band=2,
+        dedup.minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=num_hashes),
+        "doc_id", threshold=0.5, num_hashes=num_hashes, rows_per_band=2,
     ).collect()
     via = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5,
-        num_hashes=num_hashes, rows_per_band=2,
-        sig_override=dedup.shared_minhash_signatures(
-            spark, sf_dir, n=3, num_hashes=128
-        ),
+        shared, "doc_id", threshold=0.5, num_hashes=num_hashes, rows_per_band=2,
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
@@ -84,7 +94,7 @@ def test_curation_flags_artifact_matches_inline(
     booleans + sha256 of kept docs, parquet-exact."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_PAIRS_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     qpred = textanalysis.quality_score_expr(F.col("text")) >= 0.6
     lpred = textanalysis.pred_lang_expr(F.col("text")) == "en"
@@ -102,11 +112,11 @@ def test_curated_pairs_build_from_flags_identical(
     spark, sf_dir, monkeypatch, tmp_path
 ):
     """The curated-pair build that derives its survivor base from the
-    flag artifact equals the pre-round-12 inline derivation (filter →
+    flag artifact equals the derivation from the documents (filter →
     exact_dedup → semi-join → posting join) exactly."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_PAIRS_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     kept = docs.filter(
         (textanalysis.quality_score_expr(F.col("text")) >= 0.6)
@@ -127,26 +137,26 @@ def test_curated_pairs_build_from_flags_identical(
 def test_curated_and_corpus_pair_keys_disambiguated(
     spark, sf_dir, monkeypatch, tmp_path
 ):
-    """ADVICE r11 (high): under a shared SPARK_GRAFT_PAIRS_DIR the
-    curated and corpus-wide pair artifacts at identical parameters must
-    occupy DIFFERENT paths — before the key prefix they collided and
-    whichever built first was silently served to the other's
-    consumers."""
-    monkeypatch.setenv("SPARK_GRAFT_PAIRS_DIR", str(tmp_path))
+    """Under one artifact root the curated and corpus-wide pair
+    artifacts at identical parameters must occupy DIFFERENT paths — at
+    a shared path whichever built first would be silently served to
+    the other's consumers."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     corpus_pairs = dedup.shared_ngram_pairs(
         spark, sf_dir, n=3, threshold=0.5, max_df=200
     ).collect()
     curated_pairs = dedup.shared_curated_pairs(
         spark, sf_dir, n=3, threshold=0.5, max_df=200
     ).collect()
-    # distinct artifact dirs were published for the two relations
+    # one artifact dir was published per family, each under its family
     published = {
-        p.name
+        p.name: [a.name for a in p.iterdir()]
         for p in tmp_path.iterdir()
-        if p.is_dir() and not p.name.startswith("nabatshy")
+        if p.is_dir()
     }
-    assert any(k.startswith("curated_") for k in published)
-    assert len(published) >= 3  # corpus pairs + curated pairs + flags
+    assert {"ngram_pairs", "curated_pairs", "curation_flags"} <= set(published)
+    for fam in ("ngram_pairs", "curated_pairs", "curation_flags"):
+        assert len(published[fam]) == 1, published
     # and the curated relation is the curated SUBSET's pairs, not the
     # corpus-wide relation (strict subset on this corpus)
     assert sorted(map(tuple, curated_pairs)) != sorted(
@@ -159,10 +169,10 @@ def test_uncapped_pair_artifact_matches_inline(
     spark, sf_dir, monkeypatch, tmp_path
 ):
     """shared_ngram_pairs(max_df=None) — the doc-ER eval gate's truth
-    side (round 12) — equals the inline uncapped operator exactly."""
+    side — equals the in-plan uncapped operator exactly."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_PAIRS_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     inline = dedup.ngram_jaccard_pairs(
         load(spark, sf_dir, "documents"), "doc_id", "text",
         n=3, threshold=0.5, max_df=None,
@@ -178,22 +188,27 @@ def test_uncapped_pair_artifact_matches_inline(
 def test_hot_chunk_artifact_and_one_pass_scrub_identical(
     spark, sf_dir, monkeypatch, tmp_path
 ):
-    """boilerplate_scrub with the hot-chunk artifact (one exploded pass,
-    flag-and-aggregate) equals the self-derived two-pass form row for
-    row — including docs whose every chunk is hot and docs with no
-    chunks."""
+    """The hot-chunk artifact equals the in-plan hot set, and
+    boilerplate_scrub fed either gives the same rows — including docs
+    whose every chunk is hot and docs with no chunks."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_CHUNKS_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
-    inline = textanalysis.boilerplate_scrub(
+    in_plan = textanalysis.hot_chunks(
         docs, "doc_id", "text", chunk_words=5, max_docs=2
+    )
+    shared = textanalysis.shared_hot_chunks(
+        spark, sf_dir, chunk_words=5, max_docs=2
+    )
+    assert sorted(map(tuple, in_plan.collect())) == sorted(
+        map(tuple, shared.collect())
+    )
+    inline = textanalysis.boilerplate_scrub(
+        docs, in_plan, "doc_id", "text", chunk_words=5
     ).collect()
     via = textanalysis.boilerplate_scrub(
-        docs, "doc_id", "text", chunk_words=5, max_docs=2,
-        hot_override=textanalysis.shared_hot_chunks(
-            spark, sf_dir, chunk_words=5, max_docs=2
-        ),
+        docs, shared, "doc_id", "text", chunk_words=5
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
@@ -203,13 +218,12 @@ def test_substr_runs_artifact_two_level_identical(
     spark, sf_dir, monkeypatch, tmp_path
 ):
     """The substr-runs artifact derived from the level-1 dup-window
-    posting relation equals the direct operator exactly (round 12,
-    VERDICT r11 task #7: posts = level-1 filtered to the df cap IS
-    wins ⋈ {h: ≥2 docs ∧ c ≤ cap})."""
+    posting relation equals the direct operator exactly (posts =
+    level-1 filtered to the df cap IS wins ⋈ {h: ≥2 docs ∧ c ≤ cap})."""
     from nabatshy_spark.catalog import load
     from nabatshy_spark.operators import suffixes
 
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     handles = []
     direct = suffixes.duplicated_substring_runs(
@@ -232,7 +246,7 @@ def test_decon_runs_artifact_two_level_identical(
     from nabatshy_spark.catalog import load
     from nabatshy_spark.operators import sampling, suffixes
 
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     splits = sampling.split_corpus(
         docs, "doc_id", train_bps=62259, val_bps=1638
@@ -257,34 +271,38 @@ def test_decon_runs_artifact_two_level_identical(
 def test_dup_char_vocab_serves_both_window_queries_identically(
     spark, sf_dir, monkeypatch, tmp_path
 ):
-    """duplicate_ngram_coverage and duplicate_span_stats fed the shared
-    duplicated-vocabulary artifact equal their self-derived forms row
-    for row (same df ≥ 2 definition in both; dup_windows = count of
-    window positions probing the vocabulary = Σ occurrence counts)."""
+    """The duplicated-vocabulary artifact equals the in-plan vocabulary,
+    and duplicate_ngram_coverage and duplicate_span_stats fed either
+    give the same rows."""
     from nabatshy_spark.catalog import load
 
-    monkeypatch.setenv("SPARK_GRAFT_PAIRS_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
     vocab = dedup.shared_dup_char_vocab(spark, sf_dir, k=20)
+    in_plan = dedup.dup_char_vocab(docs, "doc_id", "text", k=20)
+    assert sorted(map(tuple, in_plan.collect())) == sorted(
+        map(tuple, vocab.collect())
+    )
     for fn in (dedup.duplicate_ngram_coverage, dedup.duplicate_span_stats):
-        inline = fn(docs, "doc_id", "text", k=20).collect()
-        via = fn(
-            docs, "doc_id", "text", k=20, dup_vocab_override=vocab
-        ).collect()
+        inline = fn(docs, in_plan, "doc_id", "text", k=20).collect()
+        via = fn(docs, vocab, "doc_id", "text", k=20).collect()
         assert sorted(map(tuple, inline)) == sorted(map(tuple, via)), fn
         assert len(inline) > 0
 
 
-def test_nested_build_times_are_exclusive(tmp_path):
+def test_nested_build_times_are_exclusive(tmp_path, monkeypatch):
     """A build that ensure()s another artifact records its OWN seconds
     only — the child's wall is charged to the child's line, so
-    BENCH_DETAIL's artifact_build_sec sums to true wall (round 12:
-    substr/decon derive from the level-1 dup-window artifact,
-    curated_pairs reads the curation flags)."""
+    BENCH_DETAIL's artifact_build_sec sums to true wall (substr/decon
+    builds read the level-1 dup-window artifact, curated_pairs reads
+    the curation flags)."""
     import os
     import time
 
     from nabatshy_spark import artifacts
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
+    child = []
 
     def child_build(st):
         os.makedirs(st)
@@ -292,15 +310,15 @@ def test_nested_build_times_are_exclusive(tmp_path):
         open(os.path.join(st, "_SUCCESS"), "w").close()
 
     def parent_build(st):
-        artifacts.ensure(
-            "r12childfam", "k", child_build, base=str(tmp_path / "c")
-        )
+        child.append(artifacts.ensure("r12childfam", [], 1, {}, child_build))
         os.makedirs(st)
         open(os.path.join(st, "_SUCCESS"), "w").close()
 
-    artifacts.ensure("r12parentfam", "k", parent_build, base=str(tmp_path / "p"))
-    assert artifacts.BUILD_TIMES["r12childfam/k"] >= 0.3
-    assert artifacts.BUILD_TIMES["r12parentfam/k"] < 0.3
+    parent = artifacts.ensure("r12parentfam", [], 1, {}, parent_build)
+    child_key = os.path.basename(child[0])
+    parent_key = os.path.basename(parent)
+    assert artifacts.BUILD_TIMES[f"r12childfam/{child_key}"] >= 0.3
+    assert artifacts.BUILD_TIMES[f"r12parentfam/{parent_key}"] < 0.3
 
 
 def test_one_pass_scrub_all_hot_and_empty_docs(spark):
@@ -319,10 +337,11 @@ def test_one_pass_scrub_all_hot_and_empty_docs(spark):
         Row(doc_id=5, text=""),  # no chunks at all
         Row(doc_id=6, text=boiler + " unique tail words here"),
     ]
+    df = spark.createDataFrame(rows)
     out = {
         r.doc_id: r
         for r in textanalysis.boilerplate_scrub(
-            spark.createDataFrame(rows), "doc_id", "text"
+            df, textanalysis.hot_chunks(df, "doc_id", "text"), "doc_id", "text"
         ).collect()
     }
     empty_md5 = hashlib.md5(b"").hexdigest()

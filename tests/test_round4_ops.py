@@ -20,7 +20,10 @@ def test_span_stats_merges_overlapping_windows(spark):
     )
     out = {
         r.doc_id: r
-        for r in dedup.duplicate_span_stats(docs, "doc_id", "text", k=20).collect()
+        for r in dedup.duplicate_span_stats(
+            docs, dedup.dup_char_vocab(docs, "doc_id", "text", k=20),
+            "doc_id", "text", k=20,
+        ).collect()
     }
     assert out[1].dup_chars == 25
     assert out[2].dup_chars == 25
@@ -35,7 +38,10 @@ def test_span_stats_disjoint_islands_sum(spark):
     )
     out = {
         r.doc_id: r
-        for r in dedup.duplicate_span_stats(docs, "doc_id", "text", k=20).collect()
+        for r in dedup.duplicate_span_stats(
+            docs, dedup.dup_char_vocab(docs, "doc_id", "text", k=20),
+            "doc_id", "text", k=20,
+        ).collect()
     }
     # doc 2 has two disjoint 20-char duplicated islands
     assert out[2].dup_chars == 40

@@ -143,16 +143,19 @@ def test_fuzzy_block_key_matches_duckdb_split_part(spark):
 def test_ensure_bucketed_evicts_stale_partial_layout(spark, sf_dir, tmp_path, monkeypatch):
     """A pre-existing layout directory WITHOUT _SUCCESS (crashed run)
     must be evicted and rebuilt, not registered over."""
+    import shutil
+
     from nabatshy_spark.sources import bucketed
 
-    monkeypatch.setattr(bucketed, "BUCKET_ROOT", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     src = os.path.join(sf_dir, "nation.parquet")
-    from nabatshy_spark.operators.ivf import _source_fingerprint
-
-    fp = _source_fingerprint(src)
-    table = f"nab_nation_bkt4_{fp[:12]}"
+    # Publish once to learn the layout's path (the table name ends with
+    # its artifact key), then leave a crashed partial layout there.
+    table = bucketed.ensure_bucketed(spark, sf_dir, "nation", ["n_nationkey"], 4)
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    stale = tmp_path / table
+    fam = tmp_path / "bucketed"
+    stale = fam / table.rsplit("_", 1)[1]
+    shutil.rmtree(stale)
     stale.mkdir()
     (stale / "part-corrupt.parquet").write_bytes(b"not parquet")
 
@@ -161,7 +164,7 @@ def test_ensure_bucketed_evicts_stale_partial_layout(spark, sf_dir, tmp_path, mo
     assert (stale / "_SUCCESS").exists()
     assert not (stale / "part-corrupt.parquet").exists()
     # The quarantine-rename eviction must clean up after itself.
-    leftovers = [p.name for p in tmp_path.iterdir() if ".quarantine-" in p.name or ".staging-" in p.name]
+    leftovers = [p.name for p in fam.iterdir() if ".quarantine-" in p.name or ".staging-" in p.name]
     assert leftovers == []
     n = spark.table(table).count()
     assert n == spark.read.parquet(src).count()
@@ -178,14 +181,16 @@ def test_ensure_bucketed_quarantine_restores_racer_publish(spark, sf_dir, tmp_pa
 
     from nabatshy_spark.sources import bucketed
 
-    monkeypatch.setattr(bucketed, "BUCKET_ROOT", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     src = os.path.join(sf_dir, "nation.parquet")
-    from nabatshy_spark.operators.ivf import _source_fingerprint
-
-    fp = _source_fingerprint(src)
-    table = f"nab_nation_bkt4_{fp[:12]}"
+    # Publish once to learn the layout's path (the table name ends with
+    # its artifact key), then leave a crashed partial layout there.
+    table = bucketed.ensure_bucketed(spark, sf_dir, "nation", ["n_nationkey"], 4)
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    path = tmp_path / table
+    fam = tmp_path / "bucketed"
+    key = table.rsplit("_", 1)[1]
+    path = fam / key
+    shutil.rmtree(path)
     path.mkdir()
     (path / "part-corrupt.parquet").write_bytes(b"not parquet")
 
@@ -200,7 +205,7 @@ def test_ensure_bucketed_quarantine_restores_racer_publish(spark, sf_dir, tmp_pa
             # The staging dir name carries a pid+nonce suffix — find it.
             state["injected"] = True
             staging_path = str(
-                next(tmp_path.glob(f"{table}.staging-*"))
+                next(fam.glob(f"{key}.staging-*"))
             )
             racer = f"{path}.racer"
             shutil.copytree(staging_path, racer)
@@ -217,7 +222,7 @@ def test_ensure_bucketed_quarantine_restores_racer_publish(spark, sf_dir, tmp_pa
     assert (path / "_racer_marker").exists()
     assert (path / "_SUCCESS").exists()
     # ... our staging copy was discarded, nothing leaked ...
-    leftovers = [p.name for p in tmp_path.iterdir() if p.name != table]
+    leftovers = [p.name for p in fam.iterdir() if p.name != key]
     assert leftovers == []
     # ... and the registered table reads the restored layout.
     assert spark.table(table).count() == spark.read.parquet(src).count()

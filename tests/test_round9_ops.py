@@ -17,7 +17,7 @@ def _rows(df):
 def test_shared_ngram_pairs_identical_to_direct(spark, sf_dir, tmp_path):
     """The materialized relation must be byte-identical to the direct
     operator output — same pairs, same exact jaccard doubles."""
-    os.environ["SPARK_GRAFT_PAIRS_DIR"] = str(tmp_path / "pairs")
+    os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = str(tmp_path / "pairs")
     try:
         direct = dedup.ngram_jaccard_pairs(
             load(spark, sf_dir, "documents"),
@@ -32,29 +32,30 @@ def test_shared_ngram_pairs_identical_to_direct(spark, sf_dir, tmp_path):
         assert _rows(shared) == _rows(direct)
         # second call is a pure read (no rebuild): the artifact dir is
         # unchanged and still carries its _SUCCESS marker
-        key_dirs = os.listdir(str(tmp_path / "pairs"))
+        fam_dir = str(tmp_path / "pairs" / "ngram_pairs")
+        key_dirs = os.listdir(fam_dir)
         assert len(key_dirs) == 1
         before = os.stat(
-            os.path.join(str(tmp_path / "pairs"), key_dirs[0], "_SUCCESS")
+            os.path.join(fam_dir, key_dirs[0], "_SUCCESS")
         ).st_mtime_ns
         again = dedup.shared_ngram_pairs(spark, sf_dir)
         assert _rows(again) == _rows(direct)
         after = os.stat(
-            os.path.join(str(tmp_path / "pairs"), key_dirs[0], "_SUCCESS")
+            os.path.join(fam_dir, key_dirs[0], "_SUCCESS")
         ).st_mtime_ns
         assert before == after
     finally:
-        del os.environ["SPARK_GRAFT_PAIRS_DIR"]
+        del os.environ["SPARK_GRAFT_ARTIFACT_DIR"]
 
 
 def test_shared_ngram_pairs_key_varies_with_params(spark, sf_dir, tmp_path):
     """Different operator parameters must map to different artifacts —
     a threshold change may NOT serve stale pairs."""
-    os.environ["SPARK_GRAFT_PAIRS_DIR"] = str(tmp_path / "pairs")
+    os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = str(tmp_path / "pairs")
     try:
         p05 = dedup.shared_ngram_pairs(spark, sf_dir, threshold=0.5)
         p09 = dedup.shared_ngram_pairs(spark, sf_dir, threshold=0.9)
-        assert len(os.listdir(str(tmp_path / "pairs"))) == 2
+        assert len(os.listdir(str(tmp_path / "pairs" / "ngram_pairs"))) == 2
         n05 = p05.count()
         n09 = p09.count()
         assert n09 <= n05
@@ -62,7 +63,7 @@ def test_shared_ngram_pairs_key_varies_with_params(spark, sf_dir, tmp_path):
             p09.filter(F.col("jaccard") < 0.9).count() == 0
         )
     finally:
-        del os.environ["SPARK_GRAFT_PAIRS_DIR"]
+        del os.environ["SPARK_GRAFT_ARTIFACT_DIR"]
 
 
 # ---------------------------------------------------------------------------
