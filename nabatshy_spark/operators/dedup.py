@@ -160,7 +160,7 @@ def ngram_jaccard_pairs(
     sh = (
         df.repartition(parallelism, id_col)
         .select(F.col(id_col), shingles(F.col(text_col), n).alias("__sh"))
-        .persist()  # referenced by sizes + both explode sides
+        .localCheckpoint(eager=False)  # read by sizes + both explode sides
     )
     if max_df is None:
         return _jaccard_from_shingled(sh, id_col, threshold)
@@ -235,10 +235,10 @@ def ngram_jaccard_pairs(
             F.round(F.col("__ub") / (F.col("__sa") + F.col("__sb") - F.col("__ub")), 6)
             >= threshold
         )
-        # tiny (only threshold-crossing pairs) but referenced by four
+        # tiny (only threshold-crossing pairs) but read by four
         # downstream branches — without this the posting self-join
         # re-executes per branch (measured 8× the query)
-        .persist()
+        .localCheckpoint(eager=False)
     )
     exact_now = (
         scored.filter(F.col("__slack") == 0)
@@ -617,10 +617,9 @@ def minhash_lsh_pairs(
     signature serves every smaller budget unchanged.
     """
     bands = num_hashes // rows_per_band
-    # persisted: the frame is referenced four times in the DAG (banding
-    # + both join sides of candidate verification) and must not be
-    # recomputed per reference
-    hs = sigs.select(F.col(id_col), "__hs", "__sig").persist()
+    # read four times in the DAG (banding + both join sides of
+    # candidate verification): materialized once, not per reference
+    hs = sigs.select(F.col(id_col), "__hs", "__sig").localCheckpoint(eager=False)
     # Band key = xxhash64(band_index, the band's signature rows), built
     # by ONE transform(sequence(...)) expression rather than `bands`
     # separate column trees. Two reasons, both measured:
@@ -1102,12 +1101,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return leaves.union(centers).distinct()
 
 
+# Largest canonical edge set connected_components labels on the driver.
+# The local path holds a union-find dict of up to 2x this many entries
+# (~60-100 MB per million edges in CPython). Edges land as ONE Arrow
+# table (16 MB per million int64 pairs — columnar, not a Row list), so
+# the dict is the only heavyweight driver state. toArrow beats
+# toLocalIterator here: the iterator runs one job per partition (~32
+# sequential mini-jobs for a small edge set — measured ~+1 s on every
+# CC-dependent query), Arrow is one job and one transfer. Raise it only
+# with a matching spark.driver.memory bump.
+_LOCAL_CC_EDGES = 1_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     rounds_out: list[int] | None = None,
-    local_threshold: int | None = None,
+    local_threshold: int = _LOCAL_CC_EDGES,
 ) -> DataFrame:
     """Group near-dup *pairs* into duplicate clusters: every node gets
     ``component`` = the minimum doc id reachable from it. This is the
@@ -1126,9 +1137,9 @@ def connected_components(
 
     Adaptive small-graph path: the first convergence probe already
     counts the canonical edge set; when it is at or below
-    ``local_threshold`` edges (default 1M, env
-    ``NABATSHY_LOCAL_CC_EDGES``), the edges collect to the driver and
-    a path-compressed min-root union-find labels them — identical
+    ``local_threshold`` edges (default ``_LOCAL_CC_EDGES``, 1M), the
+    edges collect to the driver and a path-compressed min-root
+    union-find labels them — identical
     output, none of the per-round job overhead that dominates small
     graphs. Pair-finder edge sets are SMALL relative to their corpora
     (they are the near-dup survivors), so this path serves most real
@@ -1159,20 +1170,6 @@ def connected_components(
         return row["n"], row["h"]
 
     state = _state(edges)
-    if local_threshold is None:
-        # Driver-memory note: the local path holds a
-        # union-find dict of up to 2x this many entries on the driver
-        # (~60-100 MB per million edges in CPython). Edges land as ONE
-        # Arrow table (16 MB per million int64 pairs — columnar, not a
-        # Row list), so the dict is the only heavyweight driver state.
-        # toArrow beats toLocalIterator here: the iterator runs one
-        # job per partition (~32 sequential mini-jobs for a small edge
-        # set — measured ~+1 s on every CC-dependent query), Arrow is
-        # one job and one transfer. Raise NABATSHY_LOCAL_CC_EDGES only
-        # with a matching spark.driver.memory bump.
-        local_threshold = int(
-            os.environ.get("NABATSHY_LOCAL_CC_EDGES", "1000000")
-        )
     if rounds_out is None and state[0] <= local_threshold:
         utype = edges.schema["u"].dataType
         parent: dict = {}
@@ -1318,8 +1315,7 @@ def incremental_corpus_index(
     A deterministic function of the corpus relation, so
     :func:`shared_incremental_corpus_index` can materialize exactly
     these relations fingerprint-keyed. The shingle relation is
-    persisted (it feeds the explode plus the verify join); release is
-    the caller's concern (bench clearCache / unpersist)."""
+    checkpointed: it feeds the explode plus the verify join."""
     parallelism = corpus.sparkSession.sparkContext.defaultParallelism
     ch = corpus.select(
         F.col(id_col).alias("__cid"), F.sha2(F.col(text_col), 256).alias("__h")
@@ -1331,7 +1327,7 @@ def incremental_corpus_index(
             shingles(F.col(text_col), n).alias("__sh"),
         )
         .select("__cid", F.size("__sh").alias("__csz"), "__sh")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     cex = csh.select("__cid", F.explode("__sh").alias("__s"))
     out: dict[str, DataFrame] = {"hashes": ch, "shingles": csh}
@@ -1403,38 +1399,35 @@ def shared_incremental_corpus_index(
         docs = load(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % mod >= batch_lt)
         rel = incremental_corpus_index(corpus, "doc_id", "text", n, max_df)
-        try:
-            # digests / hot set / hot counts are vocabulary- or
-            # doc-bounded → single file; shingle arrays and rare
-            # postings are corpus-proportional → parallel-readable but
-            # FILE-BOUNDED (the raw partitioning wrote 32 ~55 KB files
-            # per relation at sf0.1 — per-file open overhead on every
-            # consumer read for no parallelism gain). Scale-adaptive
-            # count, keyed so the downstream joins read hash-clustered
-            # files.
-            nf = max(8, spark.sparkContext.defaultParallelism // 4)
-            rel["hashes"].repartition(1).write.mode("overwrite").parquet(
-                os.path.join(staging, "hashes")
+        # digests / hot set / hot counts are vocabulary- or
+        # doc-bounded → single file; shingle arrays and rare
+        # postings are corpus-proportional → parallel-readable but
+        # FILE-BOUNDED (the raw partitioning wrote 32 ~55 KB files
+        # per relation at sf0.1 — per-file open overhead on every
+        # consumer read for no parallelism gain). Scale-adaptive
+        # count, keyed so the downstream joins read hash-clustered
+        # files.
+        nf = max(8, spark.sparkContext.defaultParallelism // 4)
+        rel["hashes"].repartition(1).write.mode("overwrite").parquet(
+            os.path.join(staging, "hashes")
+        )
+        rel["shingles"].repartition(nf, "__cid").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(staging, "shingles"))
+        rel["rare"].repartition(nf, "__s").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(staging, "rare"))
+        if rel["hot"] is not None:
+            rel["hot"].repartition(1).write.mode("overwrite").parquet(
+                os.path.join(staging, "hot")
             )
-            rel["shingles"].repartition(nf, "__cid").write.mode(
+            rel["hot_counts"].repartition(1).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(staging, "shingles"))
-            rel["rare"].repartition(nf, "__s").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(staging, "rare"))
-            if rel["hot"] is not None:
-                rel["hot"].repartition(1).write.mode("overwrite").parquet(
-                    os.path.join(staging, "hot")
-                )
-                rel["hot_counts"].repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(staging, "hot_counts"))
-            # Multi-relation artifact: each parquet dir has its own
-            # _SUCCESS; the lifecycle gate checks the top level.
-            with open(os.path.join(staging, "_SUCCESS"), "w"):
-                pass
-        finally:
-            rel["shingles"].unpersist()
+            ).parquet(os.path.join(staging, "hot_counts"))
+        # Multi-relation artifact: each parquet dir has its own
+        # _SUCCESS; the lifecycle gate checks the top level.
+        with open(os.path.join(staging, "_SUCCESS"), "w"):
+            pass
 
     path = artifacts.ensure(
         "incr_corpus",
@@ -1522,7 +1515,7 @@ def incremental_dedup(
     bsh = (
         batch.repartition(parallelism, id_col)
         .select(F.col(id_col), shingles(F.col(text_col), n).alias("__sh"))
-        .persist()
+        .localCheckpoint(eager=False)  # read by explode, sizes and verify
     )
     bex = bsh.select(F.col(id_col), F.explode("__sh").alias("__s"))
     bsz = bsh.select(F.col(id_col), F.size("__sh").alias("__bsz"))
@@ -1564,7 +1557,8 @@ def incremental_dedup(
                 )
                 >= threshold
             )
-            .persist()
+            # read by both the exact and the slack branch
+            .localCheckpoint(eager=False)
         )
         exact_now = scored.filter(F.col("__slack") == 0).select(id_col, "__cid")
         maybe = scored.filter(F.col("__slack") > 0).select(id_col, "__cid")
@@ -1880,7 +1874,7 @@ def ngram_jaccard_pairs_prefix(
     sh = (
         df.repartition(parallelism, id_col)
         .select(F.col(id_col), shingles(F.col(text_col), n).alias("__sh"))
-        .persist()
+        .localCheckpoint(eager=False)  # read by sizes, postings and verify
     )
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("__sz"))
     ex = sh.select(F.col(id_col), F.explode("__sh").alias("__s"))

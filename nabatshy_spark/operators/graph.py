@@ -222,10 +222,10 @@ def bfs_hops(
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(i))
         )
-        nxt = nxt.localCheckpoint()
+        nxt = nxt.localCheckpoint(eager=False)  # the count materializes it
         if nxt.count() == 0:
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
+        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
         frontier = nxt.select("node")
     return visited
 

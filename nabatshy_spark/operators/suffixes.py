@@ -119,7 +119,6 @@ def duplicated_substring_runs(
     text_col: str,
     min_len: int = 50,
     max_df: int | None = 200,
-    _handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """All maximal cross-document duplicated substrings of length ≥
     ``min_len``: one row per (doc_a < doc_b, diagonal, run) with the
@@ -129,21 +128,13 @@ def duplicated_substring_runs(
 
     See the module docstring for the construction and the df-cap miss
     condition. ``max_df=None`` disables the cap (exact but unbounded
-    Σ df² on boilerplate-heavy corpora).
-
-    The window relation is persist()ed internally (it feeds two
-    branches of the DAG). RELEASE IS THE CALLER'S RESPONSIBILITY: pass
-    ``_handles`` to collect the persisted frames and unpersist them
-    once the result is materialized (shared_substring_runs does), or
-    rely on an outer clearCache. Without either, repeated invocations
-    accumulate cached blocks."""
+    Σ df² on boilerplate-heavy corpora)."""
     # The window relation feeds BOTH the frequency pass and the posting
-    # join; without pinning it is generated twice (measured 1.9 s per
-    # generation at sf0.1 — the single biggest stage). Same rationale
-    # as ngram_jaccard_pairs' shingle persist.
-    wins = window_hash_postings(df, id_col, text_col, min_len).persist()
-    if _handles is not None:
-        _handles.append(wins)
+    # join; without materializing it is generated twice (measured 1.9 s
+    # per generation at sf0.1 — the single biggest stage).
+    wins = window_hash_postings(df, id_col, text_col, min_len).localCheckpoint(
+        eager=False
+    )
     return _dup_runs_from_postings(wins, df, id_col, text_col, min_len, max_df)
 
 
@@ -157,8 +148,8 @@ def _dup_runs_from_postings(
 ) -> DataFrame:
     """Diagonal-run assembly from a precomputed (id, pos, __h) window
     relation — the post-scan half of :func:`duplicated_substring_runs`.
-    ``wins`` should be persisted: it feeds the frequency pass and the
-    posting join. (Deriving all three runs families from ONE
+    ``wins`` should be materialized: it feeds the frequency pass and
+    the posting join. (Deriving all three runs families from ONE
     materialized dual-length window relation measured 1.7× SLOWER
     than the standalone builds — the window relation is ~20× its
     source text, so caching it costs more than regenerating it, and
@@ -240,7 +231,6 @@ def cross_corpus_substring_runs(
     text_col: str,
     min_len: int = 50,
     max_df: int | None = 200,
-    _handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Verbatim ≥``min_len``-char overlaps BETWEEN two relations — the
     char-level decontamination check (did benchmark text leak into the
@@ -275,16 +265,16 @@ def cross_corpus_substring_runs(
     every post-scan stage operates on the shared-hash subset only. At
     100 TB this is the shape actually run before every training export.
     """
-    bw = window_hash_postings(bench, id_col, text_col, min_len).persist()
-    if _handles is not None:
-        _handles.append(bw)
+    bw = window_hash_postings(bench, id_col, text_col, min_len).localCheckpoint(
+        eager=False
+    )
     bench_hashes = bw.select("__h").distinct()
     # Bench-side size gate: forcing the broadcast
     # unconditionally would collect the whole bench hash set to the
     # driver even when the "bench" relation is a second full corpus
     # (the function is a generic cross-corpus operator, not bench-only),
     # bypassing autoBroadcastJoinThreshold. Counting the distinct set is
-    # one cheap job over the already-persisted bw; under the bound the
+    # one cheap job that also materializes bw; under the bound the
     # probe rides in the corpus window-generation codegen stage, above
     # it the same slot downgrades to a plain shuffled semi-join (exact
     # either way — a bloom_pred would trade false positives for memory
@@ -295,13 +285,13 @@ def cross_corpus_substring_runs(
         if n_bench <= _BENCH_BROADCAST_MAX_HASHES
         else bench_hashes
     )
-    cw = (
-        window_hash_postings(corpus, id_col, text_col, min_len)
-        .join(probe, "__h", "left_semi")
-        .persist()
+    # Not materialized, as in the decontamination-runs build: the df cap
+    # and the pair join each re-run the corpus window scan with the
+    # probe fused into it, so the broadcast semi-join stays in the plan
+    # and a non-shared window is dropped where it is generated.
+    cw = window_hash_postings(corpus, id_col, text_col, min_len).join(
+        probe, "__h", "left_semi"
     )
-    if _handles is not None:
-        _handles.append(cw)
     return _cross_runs_from_postings(
         cw, bw, corpus, bench, id_col, text_col, min_len, max_df
     )
@@ -377,7 +367,6 @@ def intra_doc_repeat_runs(
     text_col: str,
     min_len: int = 20,
     max_occ: int | None = 50,
-    _handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Maximal WITHIN-document repeated substrings of length ≥
     ``min_len`` — the self-repeat half of ExactSubstr (Lee et al. also
@@ -398,9 +387,9 @@ def intra_doc_repeat_runs(
 
     Columns: id, pos_a, pos_b, period, rep_len — equality-verified.
     """
-    wins = window_hash_postings(df, id_col, text_col, min_len).persist()
-    if _handles is not None:
-        _handles.append(wins)
+    wins = window_hash_postings(df, id_col, text_col, min_len).localCheckpoint(
+        eager=False
+    )
     return _intra_runs_from_postings(
         wins, df, id_col, text_col, min_len, max_occ
     )
@@ -572,32 +561,29 @@ def shared_dup_window_postings(
     inverted-index trade, documented rather than hidden."""
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        wins = window_hash_postings(docs, "doc_id", "text", min_len).persist()
-        try:
-            freq = wins.groupBy("__h").agg(
-                F.count("*").alias("__c"),
-                F.min("doc_id").alias("__mn"),
-                F.max("doc_id").alias("__mx"),
-            )
-            dup = freq.filter(F.col("__mn") != F.col("__mx")).select(
-                "__h", "__c"
-            )
-            # Explicit hash partitioning before the write: without it
-            # AQE coalesced the posting join's reduce side to ONE task
-            # on the cold run (measured 9.1 vs 4.3 s — the output is
-            # small in bytes but the join is not small in compute),
-            # and the written layout would be a single file that pins
-            # the consumers' self-join to one scan task. Core-count
-            # files, hash-clustered by __h for the downstream joins.
-            par = spark.sparkContext.defaultParallelism
-            (
-                wins.join(dup, "__h")
-                .repartition(par, "__h")
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-        finally:
-            wins.unpersist()
+        wins = window_hash_postings(docs, "doc_id", "text", min_len).localCheckpoint(
+            eager=False
+        )
+        freq = wins.groupBy("__h").agg(
+            F.count("*").alias("__c"),
+            F.min("doc_id").alias("__mn"),
+            F.max("doc_id").alias("__mx"),
+        )
+        dup = freq.filter(F.col("__mn") != F.col("__mx")).select("__h", "__c")
+        # Explicit hash partitioning before the write: without it
+        # AQE coalesced the posting join's reduce side to ONE task
+        # on the cold run (measured 9.1 vs 4.3 s — the output is
+        # small in bytes but the join is not small in compute),
+        # and the written layout would be a single file that pins
+        # the consumers' self-join to one scan task. Core-count
+        # files, hash-clustered by __h for the downstream joins.
+        par = spark.sparkContext.defaultParallelism
+        (
+            wins.join(dup, "__h")
+            .repartition(par, "__h")
+            .write.mode("overwrite")
+            .parquet(staging)
+        )
 
     path = artifacts.ensure(
         "dup_windows",
@@ -625,10 +611,6 @@ def shared_substring_runs(
     relation is dup-bounded (tens of rows here, always orders of
     magnitude below the corpus); at 100 TB the window pass is a
     multi-hour job whose artifact every consumer reads.
-
-    The internal window-relation persist is released here as soon as
-    the artifact is written (the build is the one materialization this
-    cache exists for), so repeated invocations leak no storage blocks.
     """
     def _build(staging: str) -> None:
         # Derived from the level-1 dup-window artifact instead of
@@ -673,10 +655,8 @@ def shared_decontamination_runs(
     ``documents`` — decontamination is a once-per-corpus-version job
     whose (leak-bounded) output every consumer reads, exactly like
     :func:`shared_substring_runs`. Computed per invocation it costs
-    ~2.8 s (a bench lap can hide that only while Spark's cache manager
-    re-serves the previous lap's persisted window relations); as an
-    artifact the build is paid once (recorded as a BUILD line) and
-    consumers read tens of rows."""
+    ~2.8 s; as an artifact the build is paid once (recorded as a BUILD
+    line) and consumers read tens of rows."""
     from nabatshy_spark.operators import sampling
 
     def _build(staging: str) -> None:
@@ -745,20 +725,14 @@ def shared_intra_repeat_runs(
     ``intra_doc_repeat_runs(documents, ...)`` — same lifecycle and
     rationale as :func:`shared_decontamination_runs`."""
     def _build(staging: str) -> None:
-        handles: list[DataFrame] = []
         runs = intra_doc_repeat_runs(
             load(spark, sf_dir, "documents"),
             "doc_id",
             "text",
             min_len=min_len,
             max_occ=max_occ,
-            _handles=handles,
         )
-        try:
-            runs.coalesce(1).write.mode("overwrite").parquet(staging)
-        finally:
-            for h in handles:
-                h.unpersist()
+        runs.coalesce(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
         "intra_runs",

@@ -1319,7 +1319,6 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
         # |nations| rows, consumed twice (grand total, then the share
         # projection): checkpointed so the orders join chain runs once
-        #.
         .localCheckpoint(eager=False)
     )
     total = per_nation.agg(F.sum("revenue").alias("__total"))
@@ -1828,10 +1827,9 @@ def brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.sort_array(F.collect_set("p_brand")).alias("bs"))
-        # materialized ONCE (pagerank precedent): three consumers below
-        # would otherwise each recompute the join+basket shuffle; the
-        # ContextCleaner frees the blocks when the ref drops
-        .localCheckpoint(eager=True)
+        # three consumers below would otherwise each recompute the
+        # join+basket shuffle
+        .localCheckpoint(eager=False)
     )
     # grand total stays in-plan as a 1-row broadcast (bnlj-1row
     # pattern) — no driver count() round-trip
@@ -1933,8 +1931,7 @@ def supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("r").alias("sr"))
         # |nations|×|suppliers|-bounded and consumed twice (totals,
         # then the share join): checkpointed so the fact join runs
-        # once, not per consumer (the spans_mad_outliers / chi2
-        # small-relation-reuse move).
+        # once, not per consumer.
         .localCheckpoint(eager=False)
     )
     tot = rev.groupBy("nation").agg(
@@ -3914,8 +3911,8 @@ def customer_yearly_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     # Each yearly cohort is dimension-sized and consumed three ways
     # (direct count, intersect, subtract): checkpointed so the orders
-    # scan + distinct run once per year, not once per set op — the
-    # before-plan scanned orders 8×.
+    # scan + distinct run once per year, not once per set op (8 orders
+    # scans otherwise).
     a95 = (
         o.filter(F.year("o_orderdate") == 1995)
         .select("o_custkey")
@@ -3997,9 +3994,8 @@ def chi2_priority_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The ≤15-row contingency relation is checkpointed: four consumers
     # (cells, both margins, the grand total) would otherwise each
-    # re-run the fact join + aggregate — the before-plan scanned
-    # lineitem and orders 4× each for a relation of 15 rows (same
-    # move as spans_mad_outliers' median relation).
+    # re-run the fact join + aggregate, scanning lineitem and orders
+    # 4× each for a relation of 15 rows.
     obs = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(

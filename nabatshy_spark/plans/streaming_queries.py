@@ -168,6 +168,17 @@ def user_type_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "version")
 
 
+# State-store sizing for stream_batch_parity_rollup: the streaming
+# aggregation's state partition count is frozen from
+# spark.sql.shuffle.partitions at checkpoint creation, and EVERY
+# micro-batch in complete mode rewrites every state partition's
+# delta+snapshot files. The state is hour×event_type — dimension-bounded
+# (hundreds of rows), so one state partition per core pays 32 stores'
+# file churn for kilobytes of state. Sized by state volume, not core
+# count; production sizing note in OPTIMIZATION_r12.md.
+_STREAM_STATE_PARTITIONS = 8
+
+
 @query("stream_batch_parity_rollup", headline=True)
 def stream_batch_parity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event-type rollup executed through an ACTUAL Structured
@@ -192,20 +203,11 @@ def stream_batch_parity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="sbp_ckpt_")
     srcdir = tempfile.mkdtemp(prefix="sbp_src_")
     _os.symlink(src, _os.path.join(srcdir, "events.parquet"))
-    # State-store sizing: the streaming aggregation's state
-    # partition count is frozen from spark.sql.shuffle.partitions at
-    # checkpoint creation, and EVERY micro-batch in complete mode
-    # rewrites every state partition's delta+snapshot files. The state
-    # here is hour×event_type — dimension-bounded (hundreds of rows),
-    # so one state partition per core pays 32 stores' file churn for
-    # kilobytes of state. Size it by state volume, not core count,
-    # parameterized like the session's other scale knobs; production
-    # sizing note in OPTIMIZATION_r12.md. Restored in finally — the
-    # conf is session-global and the batch queries must keep theirs.
-    state_parts = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    # Restored in finally — the conf is session-global and the batch
+    # queries must keep theirs.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", state_parts)
+        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTITIONS)
         stream = spark.readStream.schema(raw_schema).parquet(srcdir)
         ts_type = dict(stream.dtypes).get("ts")
         if ts_type == "bigint":

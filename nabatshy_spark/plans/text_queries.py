@@ -823,8 +823,8 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     `hash_sample_pred`, the same predicate `hash_sample` filters by).
     Every predicate/fingerprint is the pipeline operators' own
     expression, so the funnel remains the pipeline's accounting, not a
-    reimplementation. Only `kept` is cached (dedup_pipeline consumes
-    it three times); the two 1-row results are bounded driver
+    reimplementation. Nothing is materialized in-plan (`kept` is
+    consumed once); the two 1-row results are bounded driver
     transfers."""
     from nabatshy_spark.operators import sampling
 
@@ -2106,7 +2106,7 @@ def minhash_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         dedup.shared_ngram_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)  # counted, then joined per budget
     )
     n_true = exact.count()
     # ONE full-budget signature artifact serves all three configs: the
@@ -2122,7 +2122,7 @@ def minhash_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 num_hashes=n_hashes, rows_per_band=2,
             )
             .select("doc_a", "doc_b")
-            .localCheckpoint()
+            .localCheckpoint(eager=False)  # counted, then joined
         )
         n_got = got.count()
         n_hit = got.join(exact, ["doc_a", "doc_b"], "inner").count()
@@ -2304,9 +2304,7 @@ def intra_doc_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import suffixes
 
     # Served from the fingerprint-keyed artifact: the window pass is a
-    # once-per-corpus-version job; the per-invocation form only looked
-    # cheap under bench because the cache manager re-served the prior
-    # lap's persisted window relation.
+    # once-per-corpus-version job.
     runs = suffixes.shared_intra_repeat_runs(
         spark, sf_dir, min_len=20, max_occ=50
     )

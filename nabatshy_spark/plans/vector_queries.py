@@ -254,16 +254,20 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     → rows-only check (no SQL oracle); the unioned per-query plans
     stay fully distributed (no collect of candidate sets).
     """
-    emb = load(spark, sf_dir, "embeddings").cache()
+    emb = load(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
     probes = [0, 1, 2, 3]
-    signed = similarity.lsh_signature(emb, "embedding", 64).cache()
+    signed = similarity.lsh_signature(emb, "embedding", 64).localCheckpoint(
+        eager=False
+    )
     books = similarity.pq_codebooks(emb, "vec_id", "embedding", dim=64)
     # An empty corpus trains no centroids — report the LSH path only
     # (every per-probe frame is empty anyway) instead of encoding
     # against zero codebooks.
     have_pq = bool(books and books[0])
     encoded = (
-        similarity.pq_encode(emb, "vec_id", "embedding", books).cache()
+        similarity.pq_encode(emb, "vec_id", "embedding", books).localCheckpoint(
+            eager=False
+        )
         if have_pq
         else None
     )
@@ -298,17 +302,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = reports[0]
     for r in reports[1:]:
         out = out.unionByName(r)
-    out = out.orderBy("query_id", "method")
-    # The report is O(probes × methods) rows — materialize it, then
-    # release the cached corpus/index so a long-lived session running
-    # many queries doesn't leak executor storage memory.
-    rows = out.collect()
-    schema = out.schema
-    emb.unpersist()
-    signed.unpersist()
-    if encoded is not None:
-        encoded.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return out.orderBy("query_id", "method")
 
 
 @query("image_dup_groups", headline=True)

@@ -44,12 +44,15 @@ from nabatshy_spark.catalog import table_path
 # rounding boundary cross-engine (hit twice live; same fix as
 # user_features). Decimal addition is exact and order-independent, so
 # rollup+tail merge and the oracle agree bit-for-bit.
-_ROLLUP_AGGS = [
-    F.count("*").alias("n"),
-    F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_value"),
-    F.min("value").alias("min_value"),
-    F.max("value").alias("max_value"),
-]
+def _rollup_aggs() -> list:
+    # Built per call: a Column needs an active session, and the module
+    # must import without one.
+    return [
+        F.count("*").alias("n"),
+        F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+    ]
 
 
 # Bump when the rollup's aggregates or bucketing change (see
@@ -81,7 +84,7 @@ def ensure_rollup(
             _bucketed(spark.read.parquet(src), bucket)
             .filter(F.col("ts") < F.lit(cutoff).cast("timestamp"))
             .groupBy("bucket", "event_type")
-            .agg(*_ROLLUP_AGGS)
+            .agg(*_rollup_aggs())
             .write.mode("overwrite")
             .parquet(staging)
         )
@@ -110,7 +113,7 @@ def serve_series(
         )
         .filter(F.col("ts") >= F.lit(cutoff).cast("timestamp"))
         .groupBy("bucket", "event_type")
-        .agg(*_ROLLUP_AGGS)
+        .agg(*_rollup_aggs())
     )
     merged = settled.unionByName(tail)
     return merged.select(

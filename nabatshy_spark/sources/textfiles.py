@@ -12,9 +12,9 @@ Scale rules encoded here:
   relation and the quarantine relation — no second "find the bad
   lines" scan, no dropped-on-the-floor records (FAILFAST aborts a
   multi-hour job on one bad line; DROPMALFORMED silently loses data).
-- The split is two filters over ONE cached read: Spark's JSON reader
-  refuses a query that projects only the corrupt column, and without
-  the cache the two branches would re-parse the input.
+- The split is two filters over ONE checkpointed read: Spark's JSON
+  reader refuses a query that projects only the corrupt column, and
+  without the checkpoint the two branches would re-parse the input.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ CORRUPT_COL = "_corrupt_record"
 
 
 def _split(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    raw = raw.cache()
+    raw = raw.localCheckpoint(eager=False)
     good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_line")

@@ -23,7 +23,8 @@ Content negotiation matches collector/controller.go:43-78 exactly:
 ``application/x-protobuf`` (S2 wire decode), ``application/json``
 (including the legacy ``instrumentationLibrarySpans`` rewrite, which
 parse_otlp_json handles in its decoder), 405 for non-POST, 415 for other
-content types, 400 for undecodable JSON. Success returns 200 with an
+content types, 400 for undecodable JSON or a malformed
+``Content-Length``. Success returns 200 with an
 empty ``ExportTraceServiceResponse`` (zero bytes on the wire, as
 proto.Marshal of the empty message produces).
 """
@@ -63,8 +64,14 @@ class OTLPReceiver:
                 if self.path != "/v1/traces":
                     self.send_error(404)
                     return
-                length = int(self.headers.get("Content-Length") or 0)
-                body = self.rfile.read(length)
+                # Digits only, as Go's net/http requires: int() would
+                # raise on "abc" (dropped connection, no reply) and
+                # read(-1) would block until the client hangs up.
+                length = self.headers.get("Content-Length") or "0"
+                if not (length.isascii() and length.isdigit()):
+                    self.send_error(400, "bad Content-Length")
+                    return
+                body = self.rfile.read(int(length))
                 ctype = self.headers.get("Content-Type", "")
                 if ctype == "application/x-protobuf":
                     receiver._spool(receiver.spool_pb, ".pb", body)

@@ -150,3 +150,112 @@ def test_one_artifact_location_setting():
         with open(path) as fh:
             found |= set(re.findall(r"SPARK_GRAFT_\w*_DIR", fh.read()))
     assert found <= {"SPARK_GRAFT_ARTIFACT_DIR", "SPARK_GRAFT_SF_DIR"}
+
+
+# The deployment settings: where the input tables, the artifacts and the
+# span table live, and how large the session is. Tuning constants are
+# module constants, not env vars.
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_ARTIFACT_DIR",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "NABATSHY_SPANS_PATH",
+}
+
+
+def _is_environ(n: ast.AST) -> bool:
+    return isinstance(n, ast.Attribute) and n.attr == "environ"
+
+
+def test_env_vars_read_are_the_deployment_set():
+    found = set()
+    for rel, tree in _package_trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Subscript) and _is_environ(n.value):
+                key = n.slice
+            elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+                n.func.attr == "getenv"
+                or (n.func.attr == "get" and _is_environ(n.func.value))
+            ):
+                key = n.args[0] if n.args else None
+            else:
+                continue
+            if isinstance(key, ast.Constant) and isinstance(key.value, str):
+                found.add(key.value)
+            else:  # a computed name would hide a setting from this check
+                found.add(f"<computed at {rel}:{n.lineno}>")
+    assert found == DEPLOYMENT_ENV
+
+
+# The two owned caches, each released by its owner: the API's serving
+# span table (TelemetryAPI.stop) and the quality gate's per-batch
+# persist (released in the same finally).
+CACHE_OWNERS = {
+    os.path.join("nabatshy_spark", "serving", "api.py"),
+    os.path.join("nabatshy_spark", "streaming", "quality.py"),
+}
+
+
+def test_intermediates_reused_only_through_lazy_local_checkpoint():
+    """A query, operator or artifact build reuses an intermediate only
+    through ``localCheckpoint(eager=False)``. Its blocks are freed by the
+    ContextCleaner once the last reference drops, so nothing needs a
+    release: no persist/cache/unpersist outside the owned caches and no
+    ``_handles`` out-parameter."""
+    offenders = []
+    for rel, tree in _package_trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.arg) and n.arg == "_handles":
+                offenders.append(f"{rel}:{n.lineno} _handles")
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                continue
+            name = n.func.attr
+            if name in {"persist", "cache", "unpersist"} and rel not in CACHE_OWNERS:
+                offenders.append(f"{rel}:{n.lineno} {name}")
+            lazy = any(
+                k.arg == "eager"
+                and isinstance(k.value, ast.Constant)
+                and k.value.value is False
+                for k in n.keywords
+            )
+            if name == "localCheckpoint" and not lazy:
+                offenders.append(f"{rel}:{n.lineno} localCheckpoint not eager=False")
+    assert not offenders
+
+
+def test_every_module_imports_without_a_session():
+    """Importing a module must not need a SparkSession: a fresh
+    interpreter, which has none, imports every module of the package."""
+    import json
+    import subprocess
+    import sys
+
+    names = sorted(
+        os.path.relpath(p, REPO)[: -len(".py")]
+        .replace(os.sep, ".")
+        .removesuffix(".__init__")
+        for p in glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
+    )
+    script = (
+        "import importlib, json, sys\n"
+        "failed = {}\n"
+        "for name in sys.argv[1:]:\n"
+        "    try:\n"
+        "        importlib.import_module(name)\n"
+        "    except Exception as e:\n"
+        "        failed[name] = repr(e)[:200]\n"
+        "from pyspark.sql import SparkSession\n"
+        "assert SparkSession.getActiveSession() is None\n"
+        "print(json.dumps(failed))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script, *names],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == {}
+    assert len(names) > 60

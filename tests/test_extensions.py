@@ -367,6 +367,39 @@ def test_incremental_dedup_semantics(spark):
     assert rows[3] == ("kept", None)
 
 
+def test_dedup_queries_leave_no_storage_blocks(spark, sf_dir, monkeypatch, tmp_path):
+    """Operators reuse intermediates only through lazy localCheckpoint,
+    whose blocks the ContextCleaner frees once the last reference
+    drops: after the dedup queries run twice and their results are
+    dropped, the cache manager is empty and no RDD cached during the
+    runs still holds storage."""
+    import gc
+    import time
+
+    from nabatshy_spark.plans.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
+    sc = spark.sparkContext
+
+    def cached_rdds() -> set[int]:
+        gc.collect()
+        sc._jvm.System.gc()
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    for _ in range(2):
+        for name in ("dedup_minhash_lsh", "dedup_incremental", "dedup_pipeline"):
+            assert QUERIES[name](spark, sf_dir).count() > 0, name
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    deadline = time.monotonic() + 20
+    while not (cache_manager.isEmpty() and cached_rdds() <= before):
+        if time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert cache_manager.isEmpty()
+    assert cached_rdds() <= before
+
+
 def test_incremental_dedup_df_cap_blind_spot_only(spark):
     """With max_df=1 every corpus shingle of the duplicated pair is hot,
     so the near-dup is the documented blind spot — but the exact path

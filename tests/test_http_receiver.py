@@ -124,6 +124,20 @@ def test_receiver_rejects_bad_requests(tmp_path):
             )
             urllib.request.urlopen(req)
         assert e.value.code == 404
+        # A malformed Content-Length gets a 400, not a dropped
+        # connection ("abc") or a handler blocked reading to EOF ("-1").
+        # Raw sockets: urllib always sends a well-formed length.
+        import socket
+
+        for length in (b"abc", b"-1"):
+            with socket.create_connection(("127.0.0.1", rcv.port), timeout=5) as s:
+                s.sendall(
+                    b"POST /v1/traces HTTP/1.1\r\nHost: 127.0.0.1\r\n"
+                    b"Content-Type: application/json\r\n"
+                    b"Content-Length: " + length + b"\r\n\r\n{}"
+                )
+                status_line = s.makefile("rb").readline()
+            assert status_line.split()[1:2] == [b"400"], (length, status_line)
         # nothing reached the spool from any rejected request
         import os
 

@@ -34,7 +34,6 @@ def test_cross_corpus_shuffle_fallback_same_result(spark, monkeypatch):
     ).collect()
     assert sorted(map(tuple, base)) == sorted(map(tuple, fallback))
     assert len(base) >= 1
-    spark.catalog.clearCache()
 
 
 # ---------------------------------------------------------------------------
@@ -198,7 +197,6 @@ def test_doc_matches_artifact_serves_identical_results(
         score_out="jaccard",
     ).collect()
     assert sorted(map(tuple, direct)) == sorted(map(tuple, via_artifact))
-    spark.catalog.clearCache()
 
 
 # ---------------------------------------------------------------------------

@@ -47,7 +47,6 @@ def test_incremental_corpus_index_serves_identical_results(
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
-    spark.catalog.clearCache()
 
 
 def test_hash_family_is_prefix_stable():
@@ -84,7 +83,6 @@ def test_minhash_sig_artifact_serves_identical_pairs(
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
-    spark.catalog.clearCache()
 
 
 def test_curation_flags_artifact_matches_inline(
@@ -131,7 +129,6 @@ def test_curated_pairs_build_from_flags_identical(
         spark, sf_dir, n=3, threshold=0.5, max_df=200
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
-    spark.catalog.clearCache()
 
 
 def test_curated_and_corpus_pair_keys_disambiguated(
@@ -162,7 +159,6 @@ def test_curated_and_corpus_pair_keys_disambiguated(
     assert sorted(map(tuple, curated_pairs)) != sorted(
         map(tuple, corpus_pairs)
     )
-    spark.catalog.clearCache()
 
 
 def test_uncapped_pair_artifact_matches_inline(
@@ -182,7 +178,6 @@ def test_uncapped_pair_artifact_matches_inline(
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
-    spark.catalog.clearCache()
 
 
 def test_hot_chunk_artifact_and_one_pass_scrub_identical(
@@ -225,15 +220,11 @@ def test_substr_runs_artifact_two_level_identical(
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
-    handles = []
     direct = suffixes.duplicated_substring_runs(
-        docs, "doc_id", "text", min_len=50, max_df=200, _handles=handles
+        docs, "doc_id", "text", min_len=50, max_df=200
     ).collect()
     via = suffixes.shared_substring_runs(spark, sf_dir, 50, 200).collect()
-    for h in handles:
-        h.unpersist()
     assert sorted(map(tuple, direct)) == sorted(map(tuple, via))
-    spark.catalog.clearCache()
 
 
 def test_decon_runs_artifact_two_level_identical(
@@ -253,19 +244,14 @@ def test_decon_runs_artifact_two_level_identical(
     )
     train = splits.filter(F.col("split") == "train")
     test = splits.filter(F.col("split") == "test")
-    handles = []
     direct = suffixes.cross_corpus_substring_runs(
-        train, test, "doc_id", "text", min_len=50, max_df=200,
-        _handles=handles,
+        train, test, "doc_id", "text", min_len=50, max_df=200
     ).collect()
     via = suffixes.shared_decontamination_runs(
         spark, sf_dir, min_len=50, max_df=200,
         train_bps=62259, val_bps=1638,
     ).collect()
-    for h in handles:
-        h.unpersist()
     assert sorted(map(tuple, direct)) == sorted(map(tuple, via))
-    spark.catalog.clearCache()
 
 
 def test_dup_char_vocab_serves_both_window_queries_identically(

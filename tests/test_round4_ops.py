@@ -134,9 +134,11 @@ def test_pq_shared_index_matches_per_probe_training(spark, sf_dir):
     from nabatshy_spark.catalog import load
     from nabatshy_spark.operators import similarity
 
-    emb = load(spark, sf_dir, "embeddings").cache()
+    emb = load(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
     books = similarity.pq_codebooks(emb, "vec_id", "embedding", dim=64)
-    encoded = similarity.pq_encode(emb, "vec_id", "embedding", books).cache()
+    encoded = similarity.pq_encode(emb, "vec_id", "embedding", books).localCheckpoint(
+        eager=False
+    )
     for qid in (0, 3):
         solo = [
             r.vec_id

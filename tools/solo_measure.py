@@ -7,7 +7,7 @@ Usage:
 Fresh session (same settings as bench.py), footers warmed, bench.py's
 scaled span table, then per query the bench solo protocol
 (tools/measure.py): one unmeasured warm run (compile/codegen/artifact
-build), then min-of-N timed runs with clearCache+gc before each. With
+build), then min-of-N timed runs with a GC before each. With
 --noop each timed run also drives the noop sink instead of .collect() —
 computation cost without driver row materialization — and BOTH numbers
 are reported so collect-transfer overhead is visible. With --plans,
