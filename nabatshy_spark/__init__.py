@@ -8,7 +8,7 @@ Catalyst-optimized), plus large-scale training-data pipeline operators
 Layout:
     session     — SparkSession factory tuned for local[N] and cluster scale
     catalog     — loaders for the testdata star schema
-    functions/  — scalar/time expression helpers (SURVEY §2.5, §2.7)
+    functions/  — time-series helpers (SURVEY §2.5)
     operators/  — query operators: search, aggregates, timeseries, joins,
                   dedup, similarity, textanalysis, multimodal
     sources/    — OTLP decode + wide-row denormalization + sinks

@@ -1,1 +1,1 @@
-from nabatshy_spark.functions import exprs, timeutil  # noqa: F401
+from nabatshy_spark.functions import timeutil  # noqa: F401

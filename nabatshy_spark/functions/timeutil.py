@@ -18,7 +18,7 @@ from __future__ import annotations
 import math
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 NUM_BUCKETS = 15  # reference: utils/utils.go:82
@@ -35,33 +35,6 @@ def interval_seconds(range_seconds: float) -> int:
 def align_epoch(epoch_seconds: int, interval_secs: int) -> int:
     """Floor an epoch to its bucket start (utils/utils.go:74-79)."""
     return epoch_seconds - (epoch_seconds % interval_secs)
-
-
-def bucket_ts(ts: Column, interval_secs: int) -> Column:
-    """Floor a timestamp Column to its interval bucket → timestamp.
-
-    Equivalent of ClickHouse ``toStartOfInterval(ts, INTERVAL n SECOND)``
-    (api/service.go:914): floor-epoch arithmetic, origin at unix epoch.
-    Uses integer seconds, so sub-second parts are truncated — matching
-    the reference, which buckets at second granularity.
-    """
-    epoch = F.unix_timestamp(ts)
-    return F.timestamp_seconds(epoch - (epoch % F.lit(interval_secs)))
-
-
-def bucket_hour(ts: Column) -> Column:
-    """T1 fixed hourly bucket — ClickHouse ``toStartOfHour``
-    (api/service.go:409)."""
-    return F.date_trunc("hour", ts)
-
-
-def ns_to_timestamp(ns: Column) -> Column:
-    """T3: Int64 nanoseconds → timestamp, keeping microsecond precision.
-
-    ClickHouse ``fromUnixTimestamp64Nano`` (api/service.go:914). Spark
-    timestamps are µs precision, so ns are floored to µs.
-    """
-    return F.timestamp_micros((ns / F.lit(1000)).cast("long"))
 
 
 def gap_fill(
@@ -83,6 +56,9 @@ def gap_fill(
     spark = agg.sparkSession
     aligned_start = align_epoch(start_epoch, interval_secs)
     aligned_end = align_epoch(end_epoch, interval_secs)
+    if aligned_end < aligned_start:
+        # a zero-length range has no buckets (sequence() rejects it)
+        return agg.select(bucket_col, *value_cols).limit(0)
     buckets = spark.range(1).select(
         F.explode(
             F.sequence(

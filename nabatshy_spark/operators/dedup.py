@@ -464,8 +464,8 @@ def shared_curated_pairs(
 _MERSENNE31 = (1 << 31) - 1
 
 
-def _hash_family(num: int, seed: int = 42) -> list[tuple[int, int]]:
-    rng = random.Random(seed)
+def _hash_family(num: int) -> list[tuple[int, int]]:
+    rng = random.Random(42)
     return [
         (rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31))
         for _ in range(num)
@@ -796,9 +796,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Near-dup pairs with simhash hamming distance ≤ max_hamming,
+    """Near-dup pairs with simhash hamming distance ≤ 3,
     found via the band-pigeonhole trick: split 60 bits into 4 bands of
     15; distance ≤ 3 ⇒ some band is byte-identical, so an equi-join on
     (band_idx, band_value) finds every qualifying pair — exact, no
@@ -830,7 +830,7 @@ def simhash_pairs(
             ).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 
@@ -867,7 +867,6 @@ def embedding_dup_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.45,
-    num_blocks: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: EXACT cosine ≥ threshold over all
     pairs, computed as a blocked matrix product.
@@ -898,11 +897,9 @@ def embedding_dup_pairs(
     import pandas as pd
 
     spark = df.sparkSession
-    if num_blocks is None:
-        # K²/2 tasks ≈ 2× parallelism keeps every core busy without
-        # inflating the N·K replication factor
-        num_blocks = max(2, int((4 * spark.sparkContext.defaultParallelism) ** 0.5))
-    k = num_blocks
+    # K²/2 tasks ≈ 2× parallelism keeps every core busy without
+    # inflating the N·K replication factor
+    k = max(2, int((4 * spark.sparkContext.defaultParallelism) ** 0.5))
     block = F.pmod(F.xxhash64(F.col(id_col)), F.lit(k))
     task_keys = F.array(
         *[
@@ -965,7 +962,6 @@ def embedding_dup_pairs_clustered(
     vec_col: str,
     threshold: float = 0.45,
     k: int = 8,
-    iters: int = 2,
 ) -> DataFrame:
     """Cluster-pruned EXACT embedding near-dup pairs — the sub-quadratic
     scale path for ``embedding_dup_pairs`` (whose blocked all-pairs is
@@ -1028,7 +1024,7 @@ def embedding_dup_pairs_clustered(
     )
     unit = unit.localCheckpoint(eager=False)  # reused by kmeans rounds + radii
 
-    cents = clustering.kmeans_centroids(unit, "__id", "__u", k=k, iters=iters)
+    cents = clustering.kmeans_centroids(unit, "__id", "__u", k=k, iters=2)
     if not cents:
         return spark.createDataFrame([], "doc_a long, doc_b long, cos double")
 

@@ -756,12 +756,8 @@ def shared_doc_matches(
 
 def doc_topk_matches(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.5,
     k: int = 3,
-    max_df: int | None = 200,
     rep_cap: int = 8,
 ) -> DataFrame:
     """Per-document top-``k`` near-duplicate matches by exact word
@@ -779,11 +775,11 @@ def doc_topk_matches(
     (jaccard DESC, match_id ASC).
     """
     matched = doc_matched_pairs(
-        docs, id_col, text_col,
-        n=n, threshold=threshold, max_df=max_df, rep_cap=rep_cap,
+        docs, "doc_id", "text",
+        n=3, threshold=threshold, max_df=200, rep_cap=rep_cap,
     )
     return directed_topk(
-        matched, "jac", id_col, "match_id", k, score_out="jaccard"
+        matched, "jac", "doc_id", "match_id", k, score_out="jaccard"
     )
 
 
@@ -817,7 +813,6 @@ def cluster_histogram(matched: DataFrame, nodes: DataFrame) -> DataFrame:
 def part_entity_clusters(
     part: DataFrame,
     threshold: float = 0.9,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Cluster-size histogram of matched part entities.
 
@@ -826,6 +821,6 @@ def part_entity_clusters(
     at for an ER run.
     """
     return cluster_histogram(
-        score_part_pairs(part, threshold=threshold, max_df=max_df),
+        score_part_pairs(part, threshold=threshold),
         part.select(F.col("p_partkey").alias("node")),
     )

@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 # verdict: (metric, n_rows) -> boolean Column
 Verdict = Callable[[Column, Column], Column]
 
+# relative standard deviation of unique()'s HLL count
+_UNIQUE_RSD = 0.02
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -46,14 +49,14 @@ def not_null(col: str, max_null_frac: float = 0.0) -> Rule:
     return Rule(name, frac, lambda m, n: m <= max_null_frac)
 
 
-def unique(col: str, exact: bool = False, rsd: float = 0.02) -> Rule:
+def unique(col: str, exact: bool = False) -> Rule:
     cnt = (
         F.count_distinct(F.col(col))
         if exact
-        else F.approx_count_distinct(F.col(col), rsd)
+        else F.approx_count_distinct(F.col(col), _UNIQUE_RSD)
     ).cast("double")
-    # tolerance: an HLL undercount within ~2·rsd still reads as key-like
-    tol = 0.0 if exact else 2 * rsd
+    # tolerance: an HLL undercount within ~2·_UNIQUE_RSD still reads as key-like
+    tol = 0.0 if exact else 2 * _UNIQUE_RSD
     return Rule(f"unique({col})", cnt, lambda m, n: m >= n * (1.0 - tol))
 
 

@@ -36,13 +36,14 @@ from pyspark.sql import functions as F
 from nabatshy_spark import artifacts
 from nabatshy_spark.catalog import load, table_path
 
+_DAMPING = 0.85
+# hop budget of bfs_hops: rounds stop earlier when the frontier empties
+_BFS_MAX_HOPS = 25
+
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
-    damping: float = 0.85,
     mult_col: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank on a directed edge list (parallel
@@ -71,18 +72,18 @@ def pagerank(
     # already sums in its own order).
     if mult_col is not None:
         m_edges = edges.select(
-            F.col(src), F.col(dst), F.col(mult_col).alias("__m")
+            F.col("src"), F.col("dst"), F.col(mult_col).alias("__m")
         ).localCheckpoint(eager=False)
     else:
         m_edges = (
-            edges.select(src, dst)
-            .groupBy(src, dst)
+            edges.select("src", "dst")
+            .groupBy("src", "dst")
             .agg(F.count("*").alias("__m"))
             .localCheckpoint(eager=False)
         )
     nodes = (
-        m_edges.select(F.col(src).alias("node"))
-        .unionByName(m_edges.select(F.col(dst).alias("node")))
+        m_edges.select(F.col("src").alias("node"))
+        .unionByName(m_edges.select(F.col("dst").alias("node")))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -92,17 +93,17 @@ def pagerank(
         return nodes.withColumn("rank", F.lit(0.0))
     # Pre-divide each distinct edge's contribution weight by its
     # source's out-degree (multigraph: m parallel edges carry m/outdeg).
-    outdeg = m_edges.groupBy(F.col(src).alias("node")).agg(
+    outdeg = m_edges.groupBy(F.col("src").alias("node")).agg(
         F.sum("__m").alias("__outdeg")
     )
     w_edges = (
-        m_edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"), "__m")
+        m_edges.select(F.col("src").alias("__src"), F.col("dst").alias("__dst"), "__m")
         .join(outdeg, F.col("__src") == F.col("node"))
         .select("__src", "__dst", (F.col("__m") / F.col("__outdeg")).alias("__w"))
         .localCheckpoint(eager=False)  # read by every iteration
     )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    teleport = (1.0 - damping) / n_nodes
+    teleport = (1.0 - _DAMPING) / n_nodes
     for _ in range(iterations):
         contrib = (
             w_edges.join(ranks, w_edges["__src"] == ranks["node"])
@@ -115,7 +116,7 @@ def pagerank(
                 "node",
                 (
                     F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
+                    + F.lit(_DAMPING) * F.coalesce(F.col("__in"), F.lit(0.0))
                 ).alias("rank"),
             )
             .localCheckpoint(eager=False)
@@ -123,7 +124,7 @@ def pagerank(
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts on the undirected simple graph induced
     by an edge list — the standard cohesion/clustering-coefficient
     statistic over a dependency or trade topology.
@@ -144,8 +145,8 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -197,9 +198,6 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
 def bfs_hops(
     edges: DataFrame,
     source,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 25,
 ) -> DataFrame:
     """Single-source BFS: minimum hop count from ``source`` to every
     reachable node over directed edges — frontier-expansion form
@@ -208,13 +206,13 @@ def bfs_hops(
     set, localCheckpoint to truncate lineage; terminates when the
     frontier empties (one O(1) driver scalar per round, the same
     convergence-check discipline as pagerank/k-means here). Rounds =
-    graph diameter ≤ ``max_iters``; at cluster scale each round is one
+    graph diameter ≤ ``_BFS_MAX_HOPS``; at cluster scale each round is one
     join over the CURRENT frontier, not the whole visited set."""
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct()
+    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d")).distinct()
     visited = spark.createDataFrame([(source, 0)], "node long, hop int")
     frontier = visited.select("node")
-    for i in range(1, max_iters + 1):
+    for i in range(1, _BFS_MAX_HOPS + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["__s"])
             .select(F.col("__d").alias("node"))

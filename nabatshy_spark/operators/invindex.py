@@ -35,6 +35,13 @@ from pyspark.sql import functions as F
 from nabatshy_spark import artifacts
 from nabatshy_spark.catalog import load, table_path
 
+# Okapi BM25 term-frequency saturation and length normalization
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+# reciprocal rank fusion: list depth per branch, and the rank offset
+_RRF_DEPTH = 20
+_RRF_K = 60
+
 
 def build_postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(term, doc, tf) postings from whitespace tokens. At scale this
@@ -86,8 +93,6 @@ def search_bm25(
     doc_lens: DataFrame,
     terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25-ranked disjunctive (OR) search — the standard relevance
     ranking (Robertson/Spärck Jones, public) over the same postings
@@ -120,8 +125,9 @@ def search_bm25(
     idf = F.log(
         1.0 + (F.col("__n") - F.col("__df") + 0.5) / (F.col("__df") + 0.5)
     )
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("__avgdl"))
+    tf_part = (F.col("tf") * (_BM25_K1 + 1)) / (
+        F.col("tf")
+        + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("__avgdl"))
     )
     return (
         matched.select("doc", (idf * tf_part).alias("__s"))
@@ -137,8 +143,6 @@ def hard_negatives(
     doc_lens: DataFrame,
     terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Hard-negative mining for retrieval training data: the top-``k``
     BM25-scored documents that match SOME but not ALL query terms —
@@ -173,8 +177,9 @@ def hard_negatives(
     idf = F.log(
         1.0 + (F.col("__n") - F.col("__df") + 0.5) / (F.col("__df") + 0.5)
     )
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("__avgdl"))
+    tf_part = (F.col("tf") * (_BM25_K1 + 1)) / (
+        F.col("tf")
+        + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("__avgdl"))
     )
     return (
         matched.select("doc", "term", (idf * tf_part).alias("__s"))
@@ -196,16 +201,14 @@ def hybrid_search(
     terms: list[str],
     query_vec_id: int,
     k: int = 10,
-    k_each: int = 20,
-    rrf_k: int = 60,
 ) -> DataFrame:
     """Hybrid lexical+semantic retrieval via reciprocal rank fusion
-    (Cormack/Clarke/Büttcher, public): the BM25 top-``k_each`` and the
-    cosine top-``k_each`` merge on 1/(rrf_k + rank) — the standard
+    (Cormack/Clarke/Büttcher, public): the BM25 top-20 and the cosine top-20
+    merge on 1/(60 + rank) — the standard
     score-scale-free fusion every hybrid search stack runs.
 
     Scale shape: each branch is already sub-linear (pruned posting
-    lists / TakeOrdered vector scan); fusion operates on 2·k_each rows
+    lists / TakeOrdered vector scan); fusion operates on 2·20 rows
     — a full-outer join of two tiny lists, broadcast regardless of
     corpus size.
     """
@@ -213,8 +216,8 @@ def hybrid_search(
 
     from nabatshy_spark.operators.similarity import cosine_topk
 
-    lex = search_bm25(postings, doc_lens, terms, k=k_each)
-    sem = cosine_topk(embeddings, "vec_id", "embedding", query_vec_id, k=k_each)
+    lex = search_bm25(postings, doc_lens, terms, k=_RRF_DEPTH)
+    sem = cosine_topk(embeddings, "vec_id", "embedding", query_vec_id, k=_RRF_DEPTH)
     wl = Window.orderBy(F.col("score").desc(), F.col("doc").asc())
     ws = Window.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     lex_r = lex.select("doc", F.row_number().over(wl).alias("__rl"))
@@ -224,8 +227,8 @@ def hybrid_search(
     fused = lex_r.join(sem_r, "doc", "full_outer").select(
         "doc",
         F.round(
-            F.coalesce(1.0 / (rrf_k + F.col("__rl")), F.lit(0.0))
-            + F.coalesce(1.0 / (rrf_k + F.col("__rs")), F.lit(0.0)),
+            F.coalesce(1.0 / (_RRF_K + F.col("__rl")), F.lit(0.0))
+            + F.coalesce(1.0 / (_RRF_K + F.col("__rs")), F.lit(0.0)),
             6,
         ).alias("rrf_score"),
     )

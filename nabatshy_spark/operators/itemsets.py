@@ -130,44 +130,22 @@ def topk_pairs(pair_sup: DataFrame, k: int) -> DataFrame:
     ).limit(k)
 
 
-def association_rules(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_support: int = 3,
-    max_basket: int = 1000,
-    k: int = 100,
-) -> DataFrame:
-    """A-priori association rules (Agrawal/Srikant, public) over the
-    frequent pairs: per unordered pair, support, directional
-    confidences conf(a→b) = sup(ab)/sup(a) and conf(b→a), and
-    lift = sup(ab)·N / (sup(a)·sup(b)) over the capped-basket
-    universe. Top ``k`` by support with item-id tiebreaks (support is
-    an integer, so the ordering — unlike one on float lift — is
-    engine-exact).
-
-    Scale shape: everything reuses the frequent-pair core (one basket
-    regroup + bounded in-array pair expansion); item supports are a
-    catalog-bounded relation broadcast onto the pair table, and the
-    basket grand total is a 1-row broadcast — nothing new that is
-    fact-proportional.
-    """
-    pair_sup, item_sup, n_baskets = _pair_support_relations(
-        df, basket_col, item_col, min_support, max_basket
-    )
-    return rules_from_supports(pair_sup, item_sup, n_baskets, k)
-
-
 def rules_from_supports(
     pair_sup: DataFrame,
     item_sup: DataFrame,
     n_baskets: DataFrame,
     k: int,
 ) -> DataFrame:
-    """association_rules' scoring/output step over pre-computed
-    support relations — public so callers serving the supports from
-    the shared artifact (:func:`shared_part_basket_stats`) produce the
-    identical result without re-mining."""
+    """A-priori association rules (Agrawal/Srikant, public) over
+    pre-computed support relations: per unordered pair, support,
+    directional confidences conf(a→b) = sup(ab)/sup(a) and conf(b→a),
+    and lift = sup(ab)·N / (sup(a)·sup(b)) over the capped-basket
+    universe. Top ``k`` by support with item-id tiebreaks (support is
+    an integer, so the ordering — unlike one on float lift — is
+    engine-exact). Item supports are a catalog-bounded relation
+    broadcast onto the pair table, and the basket grand total is a
+    1-row broadcast — nothing fact-proportional beyond the supports
+    (:func:`shared_part_basket_stats`)."""
     sa = item_sup.select(
         F.col("item").alias("item_a"), F.col("__sup").alias("__sa")
     )
@@ -209,13 +187,14 @@ def rules_from_supports(
 # dedup-within-basket, in-array pair expansion). Bump on any change
 # there, or a warm artifact root serves pre-change supports.
 _BASKET_STATS_VERSION = 1
+# basket-size cap of the shared supports (see the module docstring)
+_MAX_BASKET = 1000
 
 
 def shared_part_basket_stats(
     spark,
     sf_dir: str,
     min_support: int = 3,
-    max_basket: int = 1000,
 ):
     """Fingerprint-keyed materialization of the A-priori support
     relations over the (order, part) baskets: pair supports (already
@@ -239,7 +218,7 @@ def shared_part_basket_stats(
             "l_orderkey",
             "l_partkey",
             min_support,
-            max_basket,
+            _MAX_BASKET,
         )
         pair_sup.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staging, "pairs")
@@ -259,7 +238,7 @@ def shared_part_basket_stats(
         "basket_stats",
         table_path(sf_dir, "lineitem"),
         _BASKET_STATS_VERSION,
-        {"min_support": min_support, "max_basket": max_basket},
+        {"min_support": min_support, "max_basket": _MAX_BASKET},
         _build,
     )
     return (

@@ -34,6 +34,12 @@ from nabatshy_spark.operators.dedup import cosine
 from nabatshy_spark.operators.similarity import lsh_signature
 
 CELL_COL = "cell"
+# the served index: 2^4 cells over 64-d embeddings; IVF+PQ codes are
+# 8 subspaces of 16 centroids each
+_CELL_BITS = 4
+_DIM = 64
+_PQ_M = 8
+_PQ_KS = 16
 
 
 def build_ivf(
@@ -64,8 +70,6 @@ def ensure_ivf(
     spark: SparkSession,
     source_path: str,
     vec_col: str = "embedding",
-    cell_bits: int = 4,
-    dim: int = 64,
 ) -> str:
     """Explicit, idempotent IVF build step — the index lifecycle owner.
 
@@ -84,9 +88,9 @@ def ensure_ivf(
         "ivf",
         source_path,
         _IVF_VERSION,
-        {"vec_col": vec_col, "cell_bits": cell_bits, "dim": dim},
+        {"vec_col": vec_col, "cell_bits": _CELL_BITS, "dim": _DIM},
         lambda staging: build_ivf(
-            spark.read.parquet(source_path), staging, vec_col, cell_bits, dim
+            spark.read.parquet(source_path), staging, vec_col, _CELL_BITS, _DIM
         ),
     )
 
@@ -103,8 +107,6 @@ def ivf_topk(
     spark: SparkSession,
     path: str,
     query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     cell_bits: int = 4,
     nprobe: int = 3,
@@ -126,10 +128,10 @@ def ivf_topk(
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         df.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), qcol), 6).alias("cos"),
+            F.col("vec_id"),
+            F.round(cosine(F.col("embedding"), qcol), 6).alias("cos"),
         )
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
+        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -178,17 +180,14 @@ def ivfpq_topk(
     spark: SparkSession,
     path: str,
     query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
-    cell_bits: int = 4,
     nprobe: int = 3,
     rerank: int = 8,
 ) -> DataFrame:
     """Top-k over an IVF+PQ index: probe cells (partition pruning) →
     ADC scan over the (id, code) projection (driver-side lookup tables
     inlined as literals) → exact-cosine re-rank of the ``rerank·k``
-    best candidates only. nprobe=2^cell_bits with deep rerank recovers
+    best candidates only. nprobe=2^_CELL_BITS with deep rerank recovers
     the exact answer; the knobs trade IO for recall independently
     (cells scanned × candidates re-ranked)."""
     import json
@@ -204,13 +203,13 @@ def ivfpq_topk(
     sub = len(q) // m
 
     sig = 0
-    for i, plane in enumerate(_planes(len(query_vec), cell_bits)):
+    for i, plane in enumerate(_planes(len(query_vec), _CELL_BITS)):
         if sum(a * b for a, b in zip(query_vec, plane)) > 0:
             sig |= 1 << i
-    cells = _probe_cells(sig, cell_bits, nprobe)
+    cells = _probe_cells(sig, _CELL_BITS, nprobe)
 
     reader = spark.read.parquet(path)
-    codes = reader.filter(F.col(CELL_COL).isin(cells)).select(id_col, "code")
+    codes = reader.filter(F.col(CELL_COL).isin(cells)).select("vec_id", "code")
     adc = None
     for j, book in enumerate(books):
         qj = q[j * sub : (j + 1) * sub]
@@ -220,19 +219,19 @@ def ivfpq_topk(
         )
         adc = term if adc is None else adc + term
     candidates = (
-        codes.select(F.col(id_col), adc.alias("__adc"))
-        .orderBy(F.col("__adc").asc(), F.col(id_col).asc())
+        codes.select(F.col("vec_id"), adc.alias("__adc"))
+        .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())
         .limit(rerank * k)
     )
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         reader.filter(F.col(CELL_COL).isin(cells))
-        .join(F.broadcast(candidates.select(id_col)), id_col, "left_semi")
+        .join(F.broadcast(candidates.select("vec_id")), "vec_id", "left_semi")
         .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), qcol), 6).alias("cos"),
+            F.col("vec_id"),
+            F.round(cosine(F.col("embedding"), qcol), 6).alias("cos"),
         )
-        .orderBy(F.col("cos").desc(), F.col(id_col).asc())
+        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -240,12 +239,7 @@ def ivfpq_topk(
 def ensure_ivfpq(
     spark: SparkSession,
     source_path: str,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_bits: int = 4,
-    dim: int = 64,
-    m: int = 8,
-    ks: int = 16,
 ) -> str:
     """Idempotent IVF+PQ build with the same content-fingerprinted,
     staging-then-rename lifecycle as :func:`ensure_ivf` (codebooks are
@@ -256,15 +250,15 @@ def ensure_ivfpq(
         source_path,
         _IVFPQ_VERSION,
         {
-            "id_col": id_col,
+            "id_col": "vec_id",
             "vec_col": vec_col,
-            "cell_bits": cell_bits,
-            "dim": dim,
-            "m": m,
-            "ks": ks,
+            "cell_bits": _CELL_BITS,
+            "dim": _DIM,
+            "m": _PQ_M,
+            "ks": _PQ_KS,
         },
         lambda staging: build_ivfpq(
-            spark.read.parquet(source_path), staging, id_col, vec_col,
-            cell_bits, dim, m, ks,
+            spark.read.parquet(source_path), staging, "vec_id", vec_col,
+            _CELL_BITS, _DIM, _PQ_M, _PQ_KS,
         ),
     )

@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# bytes per id that semi_join_ids assumes when sizing a broadcast
+_ID_WIDTH_BYTES = 24
+
 
 def asof_join(
     left: DataFrame,
@@ -72,7 +75,6 @@ def range_join_buckets(
     left_ts: Column,
     right_ts: Column,
     max_gap_seconds: int,
-    bucket_seconds: int | None = None,
 ) -> DataFrame:
     """Time-range join: pairs with |left_ts − right_ts| ≤ max_gap —
     the remaining join type absent from both Spark and the reference
@@ -95,13 +97,9 @@ def range_join_buckets(
     Returns left and right columns (right's prefixed ``r_`` on
     collision) for qualifying pairs.
     """
-    width = bucket_seconds if bucket_seconds is not None else max_gap_seconds
+    width = max_gap_seconds
     if width <= 0:
         raise ValueError(f"bucket width must be positive, got {width}")
-    if width < max_gap_seconds:
-        raise ValueError(
-            f"bucket width {width}s cannot cover max gap {max_gap_seconds}s"
-        )
     # Parquet timestamps without a UTC flag load as TIMESTAMP_NTZ, which
     # unix_micros rejects; cast through TIMESTAMP (session-TZ, identical on
     # both sides, so the gap predicate is unaffected).
@@ -144,7 +142,6 @@ def semi_join_ids(
     ids: DataFrame,
     key: str,
     n_ids_estimate: int,
-    id_width_bytes: int = 24,
     force: str | None = None,
 ) -> DataFrame:
     """LEFT SEMI join ``big`` against a (usually small) id relation,
@@ -154,7 +151,7 @@ def semi_join_ids(
     A broadcast semi-join is unbeatable while the id list fits the
     driver/executor broadcast budget, but a curation run at 100 TB can
     keep billions of ids — broadcasting those OOMs the driver. This
-    helper compares ``n_ids_estimate × id_width_bytes`` against
+    helper compares ``n_ids_estimate × _ID_WIDTH_BYTES`` against
     ``spark.sql.autoBroadcastJoinThreshold`` and:
 
     - under the threshold → explicit ``broadcast()`` hint (one scan of
@@ -172,7 +169,7 @@ def semi_join_ids(
     threshold = _parse_byte_size(
         big.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     )
-    est_bytes = int(n_ids_estimate) * int(id_width_bytes)
+    est_bytes = int(n_ids_estimate) * _ID_WIDTH_BYTES
     use_broadcast = threshold >= 0 and est_bytes <= threshold
     if force is not None:
         use_broadcast = force == "broadcast"

@@ -327,8 +327,8 @@ def attach_audio(df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def attach_frames(df: DataFrame, id_col: str, n_frames: int = 4) -> DataFrame:
-    """Stand-in video ingest: ``n_frames`` solid-gray 8×6 PNG keyframes
+def attach_frames(df: DataFrame, id_col: str) -> DataFrame:
+    """Stand-in video ingest: 4 solid-gray 8×6 PNG keyframes
     per row, frame i's gray value = (id·7 + i·13) mod 256 — so the
     sampled frames' mean pixels are analytically known while the PNG
     encode/decode in the pipeline is real."""
@@ -346,7 +346,7 @@ def attach_frames(df: DataFrame, id_col: str, n_frames: int = 4) -> DataFrame:
                         np.full((6, 8), (int(doc_id) * 7 + i * 13) % 256,
                                 dtype=np.uint8)
                     )
-                    for i in range(n_frames)
+                    for i in range(4)
                 ])
             yield pd.DataFrame({"doc_id": ids, "frames": frames})
 
@@ -388,8 +388,8 @@ def attach_images(df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def thumbnail_features(df: DataFrame, out_w: int = 4, out_h: int = 3) -> DataFrame:
-    """Decode → nearest-neighbor resize → stats, per binary image row
+def thumbnail_features(df: DataFrame) -> DataFrame:
+    """Decode → nearest-neighbor resize to 4×3 → stats, per binary image row
     (the standard decode/resize preprocessing stage of an image
     training pipeline). Same narrow mapInPandas shape and poison-row
     policy as image_features; the resize is operators/pngcodec.py
@@ -402,7 +402,7 @@ def thumbnail_features(df: DataFrame, out_w: int = 4, out_h: int = 3) -> DataFra
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     img = decode_image(payload)
-                    th = resize_nearest(img, out_w, out_h)
+                    th = resize_nearest(img, 4, 3)
                     rows.append(
                         (doc_id, img.width, img.height, th.width, th.height,
                          float(th.pixels.mean()), None)
@@ -466,10 +466,10 @@ def attach_patterned_images(df: DataFrame, id_col: str) -> DataFrame:
 DHASH_SCHEMA = "doc_id long, dhash string, decode_error string"
 
 
-def dhash_hex(payload: bytes, hash_w: int = 8, hash_h: int = 8) -> str:
+def dhash_hex(payload: bytes) -> str:
     """THE per-payload dHash definition — decode, grayscale,
-    nearest-resize to (hash_w+1)×hash_h, one bit per horizontal
-    adjacent-pixel comparison, hex-encoded. Both the batch operator
+    nearest-resize to 9×8, one bit per horizontal adjacent-pixel
+    comparison (64 bits), hex-encoded. Both the batch operator
     (:func:`image_dhash`) and the streaming twin
     (streaming/dedup.perceptual_dedup_stream) MUST hash through this
     single function: stream↔batch dedup equivalence rests on bit-exact
@@ -486,24 +486,24 @@ def dhash_hex(payload: bytes, hash_w: int = 8, hash_h: int = 8) -> str:
         width=img.width, height=img.height, channels=1,
         pixels=gray[:, :, None],
     )
-    th = resize_nearest(g, hash_w + 1, hash_h)
+    th = resize_nearest(g, 9, 8)
     px = th.pixels[:, :, 0].astype(np.int16)
     bits = (px[:, 1:] > px[:, :-1]).flatten()
     val = 0
     for b in bits:
         val = (val << 1) | int(b)
-    return f"{val:0{hash_w * hash_h // 4}x}"
+    return f"{val:016x}"
 
 
-def image_dhash(df: DataFrame, hash_w: int = 8, hash_h: int = 8) -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """Perceptual difference hash (dHash) per binary image row: decode,
-    collapse to grayscale, nearest-resize to (hash_w+1)×hash_h, then one
-    bit per adjacent-pixel horizontal comparison — 64 bits at the 8×8
-    default, emitted as a hex string. dHash depends only on local
-    gradient SIGNS, so it is invariant to global brightness/contrast
-    shifts and to re-encoding — the property that catches "same image,
-    different exposure/compression" duplicates that exact pixel or byte
-    hashing (image_dup_groups) cannot.
+    collapse to grayscale, nearest-resize to 9×8, then one bit per
+    adjacent-pixel horizontal comparison — 64 bits, emitted as a hex
+    string. dHash depends only on local gradient SIGNS, so it is
+    invariant to global brightness/contrast shifts and to re-encoding —
+    the property that catches "same image, different
+    exposure/compression" duplicates that exact pixel or byte hashing
+    (image_dup_groups) cannot.
 
     Same narrow Arrow-batched mapInPandas shape and poison-row policy
     as image_features: no shuffle, undecodable payloads become
@@ -517,7 +517,7 @@ def image_dhash(df: DataFrame, hash_w: int = 8, hash_h: int = 8) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
-                    rows.append((doc_id, dhash_hex(payload, hash_w, hash_h), None))
+                    rows.append((doc_id, dhash_hex(payload), None))
                 except Exception as ex:
                     rows.append((doc_id, None, str(ex)))
             yield pd.DataFrame(

@@ -266,13 +266,12 @@ def dsir_importance_weights(
     id_col: str,
     text_col: str,
     target_flag: Column,
-    smoothing: float = 1.0,
 ) -> DataFrame:
     """DSIR-style data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw
     document by the log-likelihood ratio between a TARGET unigram LM
     (built from the rows where ``target_flag`` holds — the in-domain
-    exemplar set) and the RAW-corpus unigram LM, both add-``smoothing``
+    exemplar set) and the RAW-corpus unigram LM, both add-one
     smoothed over the joint vocabulary:
 
         log_weight(d) = Σ_w c_w(d) · [ ln P_tgt(w) − ln P_raw(w) ]
@@ -308,7 +307,7 @@ def dsir_importance_weights(
         F.sum("__tc").cast("double").alias("__tn"),
         F.count("*").cast("double").alias("__v"),
     )
-    s = float(smoothing)
+    s = 1.0  # add-one smoothing
     scored = (
         doc_tok.join(vocab, "__t")
         .join(F.broadcast(totals))

@@ -39,18 +39,16 @@ def sessionize(
 
 def session_stats(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_minutes: int = 30,
 ) -> DataFrame:
     """Per-session rollup: event count, start/end, duration seconds."""
-    s = sessionize(df, user_col, ts_col, gap_minutes)
-    return s.groupBy(F.col(user_col), F.col("session_seq")).agg(
+    s = sessionize(df, "user_id", "ts", gap_minutes)
+    return s.groupBy(F.col("user_id"), F.col("session_seq")).agg(
         F.count("*").alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         (
-            F.unix_timestamp(F.max(ts_col)) - F.unix_timestamp(F.min(ts_col))
+            F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
         ).alias("duration_secs"),
     )
 
@@ -58,13 +56,9 @@ def session_stats(
 def funnel(
     df: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    step_within_hours: int = 24,
 ) -> DataFrame:
     """Ordered-sequence funnel: for each user, the first event of
-    step[i] must occur strictly after — and within ``step_within_hours``
+    step[i] must occur strictly after — and within 24 hours
     of — their first qualifying event of step[i-1]. Returns one row:
     per-step distinct-user counts plus the overall conversion rate
     (last step / first step, rounded).
@@ -80,18 +74,18 @@ def funnel(
     if len(steps) < 2:
         raise ValueError("funnel needs at least 2 steps")
     cur = (
-        df.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t0"))
+        df.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t0"))
     )
     for i, step in enumerate(steps[1:], 1):
-        nxt = df.filter(F.col(type_col) == step).select(
-            F.col(user_col), F.col(ts_col).alias("e_ts")
+        nxt = df.filter(F.col("event_type") == step).select(
+            F.col("user_id"), F.col("ts").alias("e_ts")
         )
         keep = [F.first(f"t{j}").alias(f"t{j}") for j in range(i)]
         cur = (
-            cur.join(nxt, user_col, "left")
-            .groupBy(user_col)
+            cur.join(nxt, "user_id", "left")
+            .groupBy("user_id")
             .agg(
                 *keep,
                 F.min(
@@ -100,7 +94,7 @@ def funnel(
                         & (
                             F.col("e_ts")
                             <= F.col(f"t{i-1}")
-                            + F.expr(f"INTERVAL {step_within_hours} HOURS")
+                            + F.expr("INTERVAL 24 HOURS")
                         ),
                         F.col("e_ts"),
                     )
@@ -140,10 +134,6 @@ def top_session_paths(
     df: DataFrame,
     n: int = 3,
     k: int = 20,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Most common length-``n`` event-type paths WITHIN sessions — the
     sequence-mining rollup behind "what do users do next" analyses.
@@ -157,15 +147,15 @@ def top_session_paths(
     session window (user key) and the path count; leads never cross a
     session boundary because the window partitions on (user, session).
     """
-    s = sessionize(df, user_col, ts_col)
-    w = Window.partitionBy(user_col, "session_seq").orderBy(
-        F.col(ts_col).asc(), F.col(id_col).asc()
+    s = sessionize(df, "user_id", "ts")
+    w = Window.partitionBy("user_id", "session_seq").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    steps = [F.col(type_col)] + [
-        F.lead(type_col, i).over(w) for i in range(1, n)
+    steps = [F.col("event_type")] + [
+        F.lead("event_type", i).over(w) for i in range(1, n)
     ]
     path = F.concat_ws(">", *steps)
-    complete = F.lead(type_col, n - 1).over(w).isNotNull()
+    complete = F.lead("event_type", n - 1).over(w).isNotNull()
     return (
         s.select(path.alias("path"), complete.alias("__ok"))
         .filter(F.col("__ok"))

@@ -22,6 +22,13 @@ from pyspark.sql import functions as F
 
 from nabatshy_spark.operators.dedup import cosine
 
+# LSH banding: lsh_topk's signature width, and the band count both
+# LSH operators split a signature into
+_LSH_TOPK_PLANES = 64
+_LSH_BANDS = 16
+# Lloyd rounds of pq_codebooks
+_PQ_ITERS = 3
+
 
 def cosine_topk(
     df: DataFrame, id_col: str, vec_col: str, query_id: int, k: int = 10
@@ -82,8 +89,8 @@ def cosine_range_search(
 # --- random-hyperplane LSH -------------------------------------------------
 
 
-def _planes(dim: int, num: int, seed: int = 42) -> list[list[float]]:
-    rng = random.Random(seed)
+def _planes(dim: int, num: int) -> list[list[float]]:
+    rng = random.Random(42)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num)]
 
 
@@ -154,8 +161,6 @@ def lsh_topk(
     vec_col: str,
     query_id: int,
     k: int = 10,
-    num_planes: int = 64,
-    bands: int = 16,
     signed: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates share at least one signature band
@@ -164,11 +169,11 @@ def lsh_topk(
     recall is probabilistic (hence no SQL oracle — the driver records
     a rows-only check; tests/test_round8_ops.py gates mean recall@10
     ≥ 0.8 on the fixture). Pass a precomputed ``signed`` relation
-    (``lsh_signature(df, vec_col, num_planes)``, the production index)
+    (``lsh_signature(df, vec_col, 64)``, the production index)
     to probe many queries without re-hashing the corpus per probe —
     the same share-the-index shape as pq_topk's ``encoded``.
 
-    Parameter math (and why the default is 16 bands): per-band
+    Parameter math (and why 16 bands): per-band
     collision probability for a neighbor at angle θ is (1−θ/π)^bits;
     the fixture's exact 10th neighbors sit at cosine ≈ 0.24-0.28
     (p ≈ 0.60), so a 4-bit band collides at p⁴ ≈ 0.13 and recall ≈
@@ -179,12 +184,15 @@ def lsh_topk(
     when neighbors are close (p ≥ 0.75 ⇒ the same 16 bands reach
     recall ≥ 0.99 with far smaller buckets); for weak-similarity
     corpora the IVF path (operators/ivf.py) is the pruning index."""
-    bits = num_planes // bands
+    bits = _LSH_TOPK_PLANES // _LSH_BANDS
     mask = (1 << bits) - 1
     if signed is None:
-        signed = lsh_signature(df, vec_col, num_planes)
+        signed = lsh_signature(df, vec_col, _LSH_TOPK_PLANES)
     band_arr = F.array(
-        *[F.shiftright("__sig", bits * j).bitwiseAND(F.lit(mask)) for j in range(bands)]
+        *[
+            F.shiftright("__sig", bits * j).bitwiseAND(F.lit(mask))
+            for j in range(_LSH_BANDS)
+        ]
     )
     banded = signed.select(
         F.col(id_col), F.col(vec_col), F.posexplode(band_arr).alias("__band", "__key")
@@ -218,8 +226,6 @@ def lsh_dup_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.45,
-    num_planes: int | None = None,
-    bands: int = 16,
 ) -> DataFrame:
     """Embedding near-dup pairs, LSH-bucketed (the scale path for
     ``dedup.embedding_dup_pairs``): candidates share a signature band,
@@ -228,23 +234,23 @@ def lsh_dup_pairs(
 
     Parameter rule (EXECUTED here, not just documented): bits-per-band
     trades recall against candidate volume and must scale with log N.
-    Candidate volume is ~ bands × N² / 2^(bits+1), so with
-    ``num_planes=None`` bits are chosen from a cheap count: 2-bit
-    bands below N=2000 (recall ≈ 1-(1-0.648²)^16 ≈ 0.9998 at cos
-    0.45), 4-bit above (recall ≈ 1-(1-0.648⁴)^16 ≈ 0.955, 4× fewer
-    candidate pairs — measured 12.7s → ~4s at sf0.1). Past ~10⁶ rows
-    raise the plane budget instead (e.g. 8-bit bands × 64 = 512
-    planes) — wider signatures cost one linear scan, candidate
-    expansion costs N². Rows-only check; tests measure overlap vs
-    brute force."""
-    if num_planes is None:
-        bits = 2 if df.count() <= 2000 else 4
-        num_planes = bits * bands
-    bits = num_planes // bands
+    Candidate volume is ~ bands × N² / 2^(bits+1), so bits are chosen
+    from a cheap count: 2-bit bands below N=2000 (recall ≈
+    1-(1-0.648²)^16 ≈ 0.9998 at cos 0.45), 4-bit above (recall ≈
+    1-(1-0.648⁴)^16 ≈ 0.955, 4× fewer candidate pairs — measured 12.7s →
+    ~4s at sf0.1). Past ~10⁶ rows raise the plane budget instead (e.g.
+    8-bit bands × 64 = 512 planes) — wider signatures cost one linear
+    scan, candidate expansion costs N². Rows-only check; tests measure
+    overlap vs brute force."""
+    bits = 2 if df.count() <= 2000 else 4
+    num_planes = bits * _LSH_BANDS
     mask = (1 << bits) - 1
     signed = lsh_signature(df, vec_col, num_planes)
     band_arr = F.array(
-        *[F.shiftright("__sig", bits * j).bitwiseAND(F.lit(mask)) for j in range(bands)]
+        *[
+            F.shiftright("__sig", bits * j).bitwiseAND(F.lit(mask))
+            for j in range(_LSH_BANDS)
+        ]
     )
     banded = signed.select(
         F.col(id_col), F.posexplode(band_arr).alias("__band", "__key")
@@ -452,7 +458,6 @@ def pq_codebooks(
     dim: int,
     m: int = 8,
     ks: int = 16,
-    iters: int = 3,
 ) -> list[list[list[float]]]:
     """Train per-subspace PQ codebooks (Jégou, Douze, Schmid, "Product
     quantization for nearest neighbor search", TPAMI 2011): split the
@@ -500,7 +505,7 @@ def pq_codebooks(
             for j in range(m)
         ]
     )
-    for _ in range(iters - 1):
+    for _ in range(_PQ_ITERS - 1):
         branches = []
         for j in range(m):
             dists = "array(" + ",".join(

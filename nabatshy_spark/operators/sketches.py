@@ -151,7 +151,6 @@ def hll_rollup(
     df: DataFrame,
     ts_col: str,
     key_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Pre-aggregated distinct counting with MERGEABLE HLL sketches
     (Spark's built-in Apache DataSketches HllSketch, Spark 3.5+): one
@@ -168,13 +167,13 @@ def hll_rollup(
     twin (count_distinct) needs a full reshuffle of the fact table per
     window asked.
 
-    Returns (week_start, est_users, n_days) — estimates as long, like
-    approx_count_distinct.
+    Sketches keep 2^12 registers (lg_k = 12). Returns (week_start,
+    est_users, n_days) — estimates as long, like approx_count_distinct.
     """
     daily = (
         df.select(F.to_date(F.col(ts_col)).alias("day"), F.col(key_col))
         .groupBy("day")
-        .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sk"))
+        .agg(F.hll_sketch_agg(key_col, F.lit(12)).alias("sk"))
     )
     return (
         daily.groupBy(

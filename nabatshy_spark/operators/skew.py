@@ -9,7 +9,7 @@ tested against them.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -18,20 +18,15 @@ def salted_count_sum(
     keys: list[str],
     sum_col: str,
     salt_buckets: int = 16,
-    salt_source: str | None = None,
 ) -> DataFrame:
     """Two-phase skew-proof count+sum: groupBy(keys + salt) partial,
     then groupBy(keys) final. A hot key's rows split across
     ``salt_buckets`` reducers in phase one; phase two merges
     ``salt_buckets`` partials per key — O(buckets), trivial.
 
-    ``salt_source``: column whose hash spreads rows (defaults to a
-    uniform random-ish but deterministic spread over all columns).
+    Rows spread by a deterministic hash over all their columns.
     """
-    salt = F.pmod(
-        F.hash(F.col(salt_source) if salt_source else F.concat_ws("\x00", *df.columns)),
-        F.lit(salt_buckets),
-    )
+    salt = F.pmod(F.hash(F.concat_ws("\x00", *df.columns)), F.lit(salt_buckets))
     partial = (
         df.withColumn("__salt", salt)
         .groupBy(*keys, "__salt")
@@ -46,18 +41,17 @@ def salted_broadcastable_join(
     large: DataFrame,
     small: DataFrame,
     key: str,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Skew-proof equi-join: the large side gets a deterministic salt
-    in [0, buckets); the small side is replicated once per salt value
+    in [0, 8); the small side is replicated once per salt value
     (explode of a literal range — fine, it's the small side). The join
     key becomes (key, salt) so a hot key's rows spread across
-    ``salt_buckets`` tasks. Results equal the plain join.
+    8 tasks. Results equal the plain join.
     """
     salted_large = large.withColumn(
-        "__salt", F.pmod(F.hash(F.concat_ws("\x00", *large.columns)), F.lit(salt_buckets))
+        "__salt", F.pmod(F.hash(F.concat_ws("\x00", *large.columns)), F.lit(8))
     )
     salted_small = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
     )
     return salted_large.join(salted_small, [key, "__salt"]).drop("__salt")

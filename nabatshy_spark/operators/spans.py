@@ -22,8 +22,36 @@ from nabatshy_spark.operators.search import AttributeQuery, parse_attribute_quer
 NS_PER_MS = 1_000_000.0
 
 
+# The span-table predicates. Each encodes a decision about the stored
+# format, so each has this one definition; every query and route uses it.
+
+
+def is_root() -> Column:
+    """P2: a root span has an empty parent id (api/service.go:183)."""
+    return F.col("parent_span_id") == ""
+
+
+def is_child() -> Column:
+    """The complement of :func:`is_root`: the span has a parent."""
+    return F.col("parent_span_id") != ""
+
+
+def has_exception() -> Column:
+    """F10: the span carries an event named 'exception'
+    (api/service.go:808-820, 1255). ``events`` is
+    array<struct<time_unix_nano,name,attributes>>."""
+    return F.exists(F.col("events"), lambda e: e["name"] == F.lit("exception"))
+
+
+def duration_ms() -> Column:
+    """P1: ``duration_ns / 1000000`` (api/service.go:181). Float
+    division, as ClickHouse's ``/``: a 1.5 ms span is 1.5, not 1. Each
+    caller rounds as its oracle pins."""
+    return F.col("duration_ns") / F.lit(NS_PER_MS)
+
+
 def duration_ms_col() -> Column:
-    return F.round(F.col("duration_ns") / F.lit(NS_PER_MS), 6).alias("duration_ms")
+    return F.round(duration_ms(), 6).alias("duration_ms")
 
 
 def _has_key(attrs: Column, key: str) -> Column:
@@ -47,11 +75,8 @@ def attr_pair_negated(attrs: Column, key: str, value: str) -> Column:
 
 
 def has_error_col() -> Column:
-    """F10: span carries an event named 'exception'
-    (api/service.go:808-820 projection)."""
-    return F.exists(F.col("events"), lambda e: e["name"] == F.lit("exception")).alias(
-        "has_error"
-    )
+    """The F10 projection (api/service.go:808-820)."""
+    return has_exception().alias("has_error")
 
 
 def _condition(c: AttributeQuery) -> Column:
@@ -107,9 +132,9 @@ def search_predicate(
             for c in conds:
                 pred = pred & _condition(c)
     if trace_or_span == "trace":
-        pred = pred & (F.col("parent_span_id") == "")   # P2
+        pred = pred & is_root()
     elif trace_or_span == "span":
-        pred = pred & (F.col("parent_span_id") != "")
+        pred = pred & is_child()
     if start_ns is not None:
         pred = pred & (F.col("start_time_unix_nano") >= F.lit(start_ns))
     if end_ns is not None:
@@ -166,7 +191,7 @@ def slowest_traces(df: DataFrame, n: int) -> DataFrame:
     """P1/P2/O1/O2 (api/service.go:177-185): the ``n`` slowest root
     spans; start time then trace id break duration ties."""
     return (
-        df.filter(F.col("parent_span_id") == "")
+        df.filter(is_root())
         .select(
             "trace_id", "name", "scope_name", duration_ms_col(),
             "start_time_unix_nano",
@@ -183,7 +208,7 @@ def slowest_traces(df: DataFrame, n: int) -> DataFrame:
 def endpoint_latency(df: DataFrame) -> DataFrame:
     """Per-endpoint stats (api/service.go:315-363): count, avg, min,
     max, p50/p95/p99 over duration_ms, sorted by avg desc."""
-    dur = F.col("duration_ns") / F.lit(NS_PER_MS)
+    dur = duration_ms()
     p = F.percentile(dur, F.lit([0.5, 0.95, 0.99]))
     return (
         df.groupBy("name")
@@ -281,15 +306,12 @@ def error_traces(df: DataFrame) -> DataFrame:
     """A4/F10: per-trace exception rollup — traces with ≥1 span
     carrying an 'exception' event (api/service.go:598-611 trace list +
     :817 has_error)."""
-    has_exc = F.exists("events", lambda e: e["name"] == F.lit("exception"))
     return (
         df.groupBy("trace_id")
         .agg(
             F.count("*").alias("span_count"),
-            F.sum(F.when(has_exc, 1).otherwise(0)).alias("error_spans"),
-            F.round(F.max(F.col("duration_ns") / F.lit(NS_PER_MS)), 6).alias(
-                "max_duration_ms"
-            ),
+            F.sum(F.when(has_exception(), 1).otherwise(0)).alias("error_spans"),
+            F.round(F.max(duration_ms()), 6).alias("max_duration_ms"),
         )
         .filter(F.col("error_spans") > 0)
     )
@@ -337,7 +359,7 @@ def slow_vs_baseline(df: DataFrame, pct: float = 0.95) -> DataFrame:
     endpoint partition — one shuffle, no second scan."""
     from pyspark.sql import Window
 
-    dur = F.col("duration_ns") / F.lit(NS_PER_MS)
+    dur = duration_ms()
     w = Window.partitionBy("name")
     return (
         df.withColumn("p95_ms", F.percentile(dur, F.lit(pct)).over(w))
@@ -381,7 +403,7 @@ def search_metric_series(
         & (F.col("start_time_unix_nano") < F.lit(end_s * 1_000_000_000))
     )
     ep = F.expr("start_time_unix_nano div 1000000000")
-    dur_ms = F.col("duration_ns") / F.lit(NS_PER_MS)
+    dur_ms = duration_ms()
     aggs = [
         F.percentile(dur_ms, F.lit(percentile)).alias(pcol),
         F.count("*").alias("n"),
@@ -410,13 +432,12 @@ def search_metric_series(
 
 
 def service_metrics(
-    df: DataFrame, start_s: int, end_s: int, percentile: float = 0.95
+    df: DataFrame, start_s: int, end_s: int
 ) -> DataFrame:
     """Per-service rollup in a time range (api/service.go
-    GetServiceMetrics, /api/metrics/services): count, avg, pNN, error
+    GetServiceMetrics, /api/metrics/services): count, avg, p95, error
     count — one partial-agg shuffle of |services| groups."""
-    pcol = f"p{int(round(percentile * 100))}_ms"
-    dur_ms = F.col("duration_ns") / F.lit(NS_PER_MS)
+    dur_ms = duration_ms()
     return (
         df.filter(
             (F.col("start_time_unix_nano") >= F.lit(start_s * 1_000_000_000))
@@ -426,7 +447,7 @@ def service_metrics(
         .agg(
             F.count("*").alias("n"),
             F.round(F.avg(dur_ms), 6).alias("avg_ms"),
-            F.round(F.percentile(dur_ms, F.lit(percentile)), 6).alias(pcol),
+            F.round(F.percentile(dur_ms, F.lit(0.95)), 6).alias("p95_ms"),
             F.sum(has_error_col().cast("long")).alias("n_errors"),
         )
         .orderBy("service")
@@ -495,7 +516,7 @@ def critical_path(df: DataFrame) -> DataFrame:
     state = _state(best)
     for _ in range(32):  # bound ≫ any sane trace depth
         child_max = (
-            best.filter(F.col("parent_span_id") != "")
+            best.filter(is_child())
             .groupBy(
                 F.col("trace_id").alias("__t"),
                 F.col("parent_span_id").alias("__p"),
@@ -527,9 +548,9 @@ def critical_path(df: DataFrame) -> DataFrame:
     else:  # pragma: no cover - loop guard
         raise RuntimeError("critical_path failed to converge in 32 rounds")
     return (
-        best.filter(F.col("parent_span_id") == "")
+        best.filter(is_root())
         .groupBy("trace_id")
-        .agg(F.round(F.max("__best") / 1_000_000.0, 6).alias("critical_ms"))
+        .agg(F.round(F.max("__best") / NS_PER_MS, 6).alias("critical_ms"))
     )
 
 
@@ -623,7 +644,7 @@ def critical_path_grouped(df: DataFrame, buckets: int = 256) -> DataFrame:
         return pd.DataFrame(
             {
                 "trace_id": np.asarray(t_uniques, dtype=object),
-                "critical_ms": np.round(out / 1_000_000.0, 6),
+                "critical_ms": np.round(out / NS_PER_MS, 6),
             }
         )
 

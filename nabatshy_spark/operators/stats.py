@@ -13,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# lag terms of ewma_last: weights below 2^-7 are dropped
+_EWMA_DEPTH = 8
+
 
 def rolling_range_agg(
     df: DataFrame,
@@ -42,9 +45,9 @@ def rolling_range_agg(
 
 
 def zscore_outliers(
-    df: DataFrame, group_col: str, value_col: str, threshold: float = 2.5
+    df: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
-    """Rows whose value deviates more than ``threshold`` sample
+    """Rows whose value deviates more than 2.5 sample
     standard deviations from their group mean. Group moments come from
     an aggregate + broadcast-back join (NOT an unbounded window — a
     whole-partition window frame would buffer each group in one task,
@@ -59,7 +62,7 @@ def zscore_outliers(
         df.join(F.broadcast(moments), group_col)
         .filter(F.col("__sd") > 0)
         .withColumn("zscore", F.round(z, 6))
-        .filter(F.abs(F.col("zscore")) > threshold)
+        .filter(F.abs(F.col("zscore")) > 2.5)
         .drop("__mu", "__sd")
     )
 
@@ -113,16 +116,16 @@ def correlations(df: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def winsorize(
-    df: DataFrame, value_col: str, lo_p: float = 0.01, hi_p: float = 0.99
+    df: DataFrame, value_col: str
 ) -> DataFrame:
-    """Winsorization: clip ``value_col`` to its [lo_p, hi_p] exact
+    """Winsorization: clip ``value_col`` to its [1%, 99%] exact
     percentiles — the outlier-taming pre-pass before scaling/training.
     Bounds come from ONE scalar aggregate broadcast back (two numbers;
     never a sort of the data); the clip is codegen'd least/greatest.
     At 100 TB the same-alias switch is approx_percentile bounds."""
     bounds = df.agg(
-        F.expr(f"percentile({value_col}, {lo_p})").alias("__lo"),
-        F.expr(f"percentile({value_col}, {hi_p})").alias("__hi"),
+        F.expr(f"percentile({value_col}, 0.01)").alias("__lo"),
+        F.expr(f"percentile({value_col}, 0.99)").alias("__hi"),
     )
     return (
         df.join(F.broadcast(bounds))
@@ -143,13 +146,12 @@ def ewma_last(
     ts_col: str,
     val_col: str,
     order_col: str,
-    depth: int = 8,
 ) -> DataFrame:
     """Per-key exponentially-weighted moving average (α=1/2) of the
-    last ``depth`` values, reported at each key's latest row — the
+    last 8 values, reported at each key's latest row — the
     classic "current smoothed level" feature for monitoring/features.
 
-    Implemented as ``depth`` explicit ``lag`` terms over one window
+    Implemented as 8 explicit ``lag`` terms over one window
     (no recursion — Spark has no recursive per-row state, and a bounded
     lag pyramid is the scale-safe shape: one partition-local pass).
     Cross-engine determinism by construction: weights are powers of
@@ -161,14 +163,14 @@ def ewma_last(
     out = df.select(
         key_col, ts_col, order_col, F.col(val_col).cast("double").alias("__v0")
     )
-    for j in range(1, depth):
+    for j in range(1, _EWMA_DEPTH):
         out = out.withColumn(f"__v{j}", F.lag("__v0", j).over(w))
     num = " + ".join(
-        f"coalesce(__v{j}, 0.0d) * {0.5 ** j!r}d" for j in range(depth)
+        f"coalesce(__v{j}, 0.0d) * {0.5 ** j!r}d" for j in range(_EWMA_DEPTH)
     )
     den = " + ".join(
         f"(CASE WHEN __v{j} IS NULL THEN 0.0d ELSE {0.5 ** j!r}d END)"
-        for j in range(depth)
+        for j in range(_EWMA_DEPTH)
     )
     rn = F.row_number().over(
         Window.partitionBy(key_col).orderBy(
@@ -370,14 +372,13 @@ def running_min_prev_ordered(
     df: DataFrame,
     order_cols: list,
     value_col: str,
-    n_rows_estimate: int = 0,
-    single_sort_max: int = 1 << 16,
     force: str | None = None,
 ) -> DataFrame:
     """EXCLUSIVE-prefix running minimum over a global total order,
     appended as ``__prevmin`` (NULL for the globally first row) — the
     staircase primitive behind 2-D skylines (pareto_suppliers), in the
-    same two-branch shape as :func:`cumulative_sum_ordered`.
+    same two-branch shape as :func:`cumulative_sum_ordered`: the plain
+    window unless ``force='twophase'`` pins the two-phase form.
 
     Two-phase form: range-partition on the order; within each
     partition take the local exclusive-prefix min; per-partition FULL
@@ -391,10 +392,7 @@ def running_min_prev_ordered(
     """
     if force not in (None, "window", "twophase"):
         raise ValueError(f"force must be window|twophase, got {force!r}")
-    use_window = int(n_rows_estimate) <= int(single_sort_max)
-    if force is not None:
-        use_window = force == "window"
-    if use_window:
+    if force != "twophase":
         w = Window.orderBy(*order_cols)
         return df.withColumn(
             "__prevmin",

@@ -474,7 +474,6 @@ def exactsubstr_cut_stats(
     df: DataFrame,
     id_col: str,
     runs: DataFrame,
-    nchars_col: str = "n_chars",
 ) -> DataFrame:
     """The ACTIONABLE output of ExactSubstr dedup (Lee et al. 2021 §4.2
     "deduplicate by removing the duplicated spans"): per affected
@@ -507,12 +506,12 @@ def exactsubstr_cut_stats(
         F.sum(F.col("__me") - F.col("__ms")).alias("chars_removed"),
     )
     return (
-        per_doc.join(df.select(id_col, nchars_col), id_col)
+        per_doc.join(df.select(id_col, "n_chars"), id_col)
         .select(
             id_col,
             "n_spans_cut",
             "chars_removed",
-            (F.col(nchars_col) - F.col("chars_removed")).alias("new_len"),
+            (F.col("n_chars") - F.col("chars_removed")).alias("new_len"),
         )
         .orderBy(id_col)
     )

@@ -22,6 +22,8 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 STOPWORDS = ["the", "a", "is", "of", "and", "to", "in"]
+# Jelinek-Mercer weight λ of bigram_logprob_scores
+_JM_LAMBDA = 0.8
 
 
 def _tokens(col: Column) -> Column:
@@ -308,21 +310,19 @@ def blocked_edit_distance_pairs(
     id_col: str,
     text_col: str,
     block_col: str,
-    prefix_len: int = 40,
-    max_dist: int = 12,
 ) -> DataFrame:
-    """Fuzzy near-match pairs by Levenshtein distance over a text
-    prefix, quadratic ONLY within a blocking key — the record-linkage
-    shape: the blocking column (here a source/domain; in general a
-    cheap canopy like a fingerprint band) bounds the self-join to
-    Σ|block|² instead of N², exactly the inverted-index argument from
+    """Fuzzy near-match pairs by Levenshtein distance ≤ 12 over the
+    40-character text prefix, quadratic ONLY within a blocking key — the
+    record-linkage shape: the blocking column (here a source/domain; in
+    general a cheap canopy like a fingerprint band) bounds the self-join
+    to Σ|block|² instead of N², exactly the inverted-index argument from
     the dedup stack. The distance itself is Spark's built-in
     ``levenshtein`` — JVM-side, no UDF.
     """
     sides = df.select(
         F.col(id_col),
         F.col(block_col).alias("__blk"),
-        F.substring(F.col(text_col), 1, prefix_len).alias("__pfx"),
+        F.substring(F.col(text_col), 1, 40).alias("__pfx"),
     )
     a, b = sides.alias("a"), sides.alias("b")
     return (
@@ -336,7 +336,7 @@ def blocked_edit_distance_pairs(
             F.col(f"b.{id_col}").alias("doc_b"),
             F.levenshtein(F.col("a.__pfx"), F.col("b.__pfx")).alias("edit_dist"),
         )
-        .filter(F.col("edit_dist") <= max_dist)
+        .filter(F.col("edit_dist") <= 12)
     )
 
 
@@ -676,14 +676,14 @@ def pmi_collocations(
 
 
 def bigram_logprob_scores(
-    df: DataFrame, id_col: str, text_col: str, lam: float = 0.8
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     interpolated bigram LM — the next step up from
     :func:`unigram_logprob_scores` in the CCNet-style fluency-filter
     ladder. Jelinek-Mercer smoothing (public):
 
-        P(y|x) = λ·c(x,y)/c(x·) + (1-λ)·c(y)/N
+        P(y|x) = λ·c(x,y)/c(x·) + (1-λ)·c(y)/N,   λ = 0.8
 
     so unseen transitions back off to the unigram floor instead of -∞.
 
@@ -733,8 +733,8 @@ def bigram_logprob_scores(
             "__lp",
             F.col("c")
             * F.log(
-                F.lit(lam) * F.col("cxy") / F.col("cx")
-                + F.lit(1.0 - lam) * F.col("cy") / F.col("n")
+                F.lit(_JM_LAMBDA) * F.col("cxy") / F.col("cx")
+                + F.lit(1.0 - _JM_LAMBDA) * F.col("cy") / F.col("n")
             ),
         )
     )

@@ -14,6 +14,8 @@ DuckDB specifics handled here:
 
 from __future__ import annotations
 
+from nabatshy_spark.plans.span_queries import DEFAULT_SPANS_PATH
+
 ORACLES: dict[str, str] = {}
 
 ORACLES["pricing_summary"] = """
@@ -491,7 +493,7 @@ FROM documents
 # api/service.go:744-771) are expressed literally.
 # ---------------------------------------------------------------------------
 
-_SPANS = "'/root/repo/tests/data/spans.parquet'"
+_SPANS = f"'{DEFAULT_SPANS_PATH}'"
 
 ORACLES["spans_slowest_traces"] = f"""
 SELECT trace_id, name, scope_name,
@@ -5678,12 +5680,12 @@ SELECT count(*)::BIGINT AS n_sequences,
 FROM seqs
 """
 
-ORACLES["spans_latency_exemplars"] = """
+ORACLES["spans_latency_exemplars"] = f"""
 WITH b AS (
   SELECT name AS endpoint,
          length(bin((duration_ns // 1000000) + 1)) - 1 AS log2_ms_bucket,
          duration_ns, span_id, trace_id
-  FROM '/root/repo/tests/data/spans.parquet'
+  FROM {_SPANS}
 ),
 m AS (
   SELECT endpoint, log2_ms_bucket, count(*)::BIGINT AS n_spans,

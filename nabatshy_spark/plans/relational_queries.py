@@ -1538,7 +1538,7 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("association_rules_parts", headline=True)
 def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules over part co-orders (operators/itemsets.py
-    association_rules): support, directional confidences, and lift per
+    rules_from_supports): support, directional confidences, and lift per
     frequent pair — the actionable layer above frequent_part_pairs.
     Item supports broadcast onto the pair relation; basket total is a
     1-row broadcast."""

@@ -21,7 +21,13 @@ from nabatshy_spark.operators import spans as S
 from nabatshy_spark.plans.queries import query
 
 
-DEFAULT_SPANS_PATH = "/root/repo/tests/data/spans.parquet"
+# The committed span fixture of the checkout this package is imported from.
+DEFAULT_SPANS_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests",
+    "data",
+    "spans.parquet",
+)
 
 
 def load_spans(spark: SparkSession) -> DataFrame:
@@ -122,9 +128,7 @@ def spans_hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.groupBy(hour.alias("bucket"))
         .agg(
             F.count("*").alias("n"),
-            F.round(F.avg(F.col("duration_ns") / F.lit(1_000_000.0)), 6).alias(
-                "avg_duration_ms"
-            ),
+            F.round(F.avg(S.duration_ms()), 6).alias("avg_duration_ms"),
         )
         .orderBy("bucket")
         .limit(24)
@@ -204,9 +208,7 @@ def spans_trace_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.groupBy("trace_id")
         .agg(
             F.count("*").alias("span_count"),
-            F.round(F.sum(F.col("duration_ns") / F.lit(1_000_000.0)), 6).alias(
-                "total_ms"
-            ),
+            F.round(F.sum(S.duration_ms()), 6).alias("total_ms"),
             F.array_join(
                 F.transform(
                     F.array_sort(
@@ -244,7 +246,7 @@ def spans_fanout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     topology-health stat behind 'which service explodes requests'.
     One self-equi-join shuffle on the parent key + two partial aggs."""
     df = load_spans(spark)
-    children = df.filter(F.col("parent_span_id") != "").select(
+    children = df.filter(S.is_child()).select(
         F.col("trace_id").alias("__t"), F.col("parent_span_id").alias("__p")
     )
     parents = df.select("trace_id", "span_id", "scope_name")
@@ -315,7 +317,7 @@ def spans_self_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_time_unix_nano").alias("__ps"),
         F.col("end_time_unix_nano").alias("__pe"),
     )
-    children = df.filter(F.col("parent_span_id") != "").select(
+    children = df.filter(S.is_child()).select(
         F.col("trace_id").alias("__t"),
         F.col("parent_span_id").alias("__p"),
         F.col("start_time_unix_nano").alias("__cs"),
@@ -349,8 +351,8 @@ def spans_self_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_span.groupBy(F.col("__name").alias("name"))
         .agg(
-            F.round(F.sum("__self") / 1e6, 3).alias("total_self_ms"),
-            F.round(F.sum("__dur") / 1e6, 3).alias("total_ms"),
+            F.round(F.sum("__self") / S.NS_PER_MS, 3).alias("total_self_ms"),
+            F.round(F.sum("__dur") / S.NS_PER_MS, 3).alias("total_ms"),
             F.count("*").alias("n_spans"),
         )
         .orderBy(F.col("total_self_ms").desc(), F.col("name").asc())
@@ -367,10 +369,10 @@ def spans_error_root_cause(spark: SparkSession, sf_dir: str) -> DataFrame:
     child), never the full table squared; the error filter prunes
     before the join on both sides."""
     df = load_spans(spark)
-    err = df.filter(
-        F.exists(F.col("events"), lambda e: e["name"] == F.lit("exception"))
-    ).select("trace_id", "span_id", "parent_span_id", "name")
-    err_children = err.filter(F.col("parent_span_id") != "").select(
+    err = df.filter(S.has_exception()).select(
+        "trace_id", "span_id", "parent_span_id", "name"
+    )
+    err_children = err.filter(S.is_child()).select(
         F.col("trace_id").alias("__t"), F.col("parent_span_id").alias("__p")
     )
     culprits = err.join(
@@ -444,9 +446,9 @@ def spans_error_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     events array, codegen'd, evaluated before the join to shrink both
     sides."""
     df = load_spans(spark)
-    err = F.exists("events", lambda e: e["name"] == F.lit("exception"))
+    err = S.has_exception()
     child = (
-        df.filter((F.col("parent_span_id") != "") & err)
+        df.filter(S.is_child() & err)
         .select(
             F.col("scope_name").alias("service"),
             F.col("parent_span_id").alias("__parent_id"),
@@ -520,9 +522,7 @@ def spans_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; the error flag is a codegen'd `exists` over the events
     array — no explode."""
     df = load_spans(spark)
-    err = F.exists("events", lambda e: e["name"] == F.lit("exception")).cast(
-        "int"
-    )
+    err = S.has_exception().cast("int")
     bucket = F.expr(
         "CAST(start_time_unix_nano DIV 1000000000 AS BIGINT) DIV 600"
     ).alias("__bucket")
@@ -561,7 +561,7 @@ def spans_top_endpoints_per_service(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .agg(
             F.count("*").alias("n_spans"),
-            F.round(F.avg(F.col("duration_ns") / 1e6), 6).alias("avg_ms"),
+            F.round(F.avg(S.duration_ms()), 6).alias("avg_ms"),
         )
     )
     w = Window.partitionBy("service").orderBy(
@@ -582,7 +582,7 @@ def spans_duration_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer log2, no float boundary flips; one scan + one
     (endpoint, bucket) agg."""
     df = load_spans(spark)
-    ms = (F.col("duration_ns") / F.lit(1_000_000)).cast("long")
+    ms = S.duration_ms().cast("long")
     bucket = (F.length(F.bin(ms + 1)) - 1).alias("log2_ms_bucket")
     return (
         df.select(F.col("name").alias("endpoint"), bucket)
@@ -604,7 +604,7 @@ def spans_latency_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("start_time_unix_nano") / F.lit(1_000_000_000)
         - F.lit(1_706_745_605)
     ).alias("__x")
-    y = (F.col("duration_ns") / F.lit(1_000_000.0)).alias("__y")
+    y = S.duration_ms().alias("__y")
     return (
         df.select(F.col("name").alias("endpoint"), x, y)
         .groupBy("endpoint")
@@ -631,7 +631,7 @@ def spans_anomalous_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     traces = df.groupBy("trace_id").agg(
         (
             (F.max("end_time_unix_nano") - F.min("start_time_unix_nano"))
-            / 1e6
+            / S.NS_PER_MS
         ).alias("trace_ms"),
         F.count("*").alias("n_spans"),
     # trace-count-bounded and consumed by the p99 aggregate AND the
@@ -671,9 +671,7 @@ def spans_burn_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1000*errs > 144*n, i.e. errs/n > 14.4*0.01) so the flag is exact
     on any engine; the reported rates are display-rounded."""
     df = load_spans(spark)
-    err = F.exists("events", lambda e: e["name"] == F.lit("exception")).cast(
-        "int"
-    )
+    err = S.has_exception().cast("int")
     base = df.select(
         F.col("scope_name").alias("service"),
         F.col("start_time_unix_nano").alias("__ts"),
@@ -727,7 +725,7 @@ def spans_retry_storms(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit is a grouped count, not a graph traversal."""
     df = load_spans(spark)
     sites = (
-        df.filter(F.col("parent_span_id") != "")
+        df.filter(S.is_child())
         .groupBy(
             F.col("trace_id"),
             F.col("parent_span_id"),
@@ -764,7 +762,7 @@ def spans_clock_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trace, span) — at 100 TB the join co-locates under the
     trace-bucketed layout like every other span self-join."""
     df = load_spans(spark)
-    child = df.filter(F.col("parent_span_id") != "").select(
+    child = df.filter(S.is_child()).select(
         F.col("trace_id").alias("c_tid"),
         F.col("parent_span_id").alias("c_pid"),
         F.col("scope_name").alias("service"),
@@ -850,8 +848,8 @@ def spans_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 (F.col("__ad") > 5 * F.col("__mad")).cast("int")
             ).alias("n_outliers"),
-            F.round(F.max("__med") / 1e6, 6).alias("median_ms"),
-            F.round(F.max("__mad") / 1e6, 6).alias("mad_ms"),
+            F.round(F.max("__med") / S.NS_PER_MS, 6).alias("median_ms"),
+            F.round(F.max("__mad") / S.NS_PER_MS, 6).alias("mad_ms"),
         )
         .withColumn(
             "outlier_rate",
@@ -878,9 +876,7 @@ def spans_tail_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace bucketing); the decision layer adds nothing
     fact-proportional."""
     df = load_spans(spark)
-    err = F.exists("events", lambda e: e["name"] == F.lit("exception")).cast(
-        "int"
-    )
+    err = S.has_exception().cast("int")
     traces = df.select(
         "trace_id",
         F.col("start_time_unix_nano").alias("__s"),
@@ -973,7 +969,7 @@ def spans_error_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     df = load_spans(spark)
-    err = F.exists("events", lambda e: e["name"] == F.lit("exception"))
+    err = S.has_exception()
     per = (
         df.filter(err)
         .groupBy(
@@ -1050,7 +1046,7 @@ def spans_trace_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_traces"),
             F.max(F.size("__calls")).alias("n_spans_per_trace"),
-            F.round(F.avg("__dur") / 1e6, 6).alias("avg_trace_ms"),
+            F.round(F.avg("__dur") / S.NS_PER_MS, 6).alias("avg_trace_ms"),
             F.min(F.concat_ws(",", "__calls")).alias("example_calls"),
         )
         .orderBy(F.col("n_traces").desc(), F.col("shape_id").asc())
@@ -1135,7 +1131,7 @@ def spans_latency_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     join touches only bucket-max spans. Complements
     spans_duration_histogram (counts only) with the drill-in handle."""
     df = load_spans(spark)
-    ms = (F.col("duration_ns") / F.lit(1_000_000)).cast("long")
+    ms = S.duration_ms().cast("long")
     b = df.select(
         F.col("name").alias("endpoint"),
         (F.length(F.bin(ms + 1)) - 1).alias("log2_ms_bucket"),
@@ -1159,7 +1155,7 @@ def spans_latency_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "endpoint",
             "log2_ms_bucket",
             "n_spans",
-            (F.col("__maxd") / F.lit(1_000_000)).cast("long").alias("max_ms"),
+            (F.col("__maxd") / S.NS_PER_MS).cast("long").alias("max_ms"),
             "exemplar_span",
             "exemplar_trace",
         )

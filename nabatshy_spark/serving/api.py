@@ -34,6 +34,8 @@ from nabatshy_spark.functions.timeutil import parse_time_range
 from nabatshy_spark.operators import spans as S
 
 MAX_ROWS = 10_000  # serving cap: an API response is not a bulk export
+# Spark's row counts (LIMIT, OFFSET and their sum) are 32-bit ints
+MAX_INT = 2**31 - 1
 log = logging.getLogger(__name__)
 
 
@@ -44,6 +46,8 @@ def _positive_int(q: dict[str, str], key: str, default: int) -> int:
         raise ValueError(f"invalid parameter '{key}'") from None
     if v < 1:
         raise ValueError(f"parameter '{key}' must be at least 1")
+    if v > MAX_INT:
+        raise ValueError(f"parameter '{key}' must be at most {MAX_INT}")
     return v
 
 
@@ -119,6 +123,8 @@ class TelemetryAPI:
         except ValueError as e:
             raise ValueError(f"invalid start/end: {e}") from None
         lo, hi = parse_time_range(q.get("timeRange"), start, end, now=self._now)
+        if lo > hi:
+            raise ValueError("time range starts after it ends")
         return int(lo.timestamp()), int(hi.timestamp())
 
     def _route(self, path: str, q: dict[str, str]) -> DataFrame:
@@ -149,6 +155,10 @@ class TelemetryAPI:
             )
         if path == "/v1/search":
             lo, hi = self._range_s(q)
+            page = _positive_int(q, "page", 1)
+            page_size = _positive_int(q, "pageSize", 20)
+            if page * page_size > MAX_INT:  # offset + limit
+                raise ValueError(f"page * pageSize must be at most {MAX_INT}")
             return S.search_spans(
                 df,
                 query=q.get("query", ""),
@@ -157,8 +167,8 @@ class TelemetryAPI:
                 end_ns=hi * 1_000_000_000,
                 sort_field=q.get("sortField", "start_time_unix_nano"),
                 sort_order=q.get("sortOrder", "desc"),
-                page=_positive_int(q, "page", 1),
-                page_size=_positive_int(q, "pageSize", 20),
+                page=page,
+                page_size=page_size,
             )
         # --- /api/metrics/* (api/controller.go:390-397) ---
         if path in ("/api/metrics/traces", "/api/metrics/avg"):

@@ -44,18 +44,15 @@ def write_bucketed(
     path: str,
     keys: list[str],
     num_buckets: int,
-    sort_keys: list[str] | None = None,
 ) -> None:
     """Write ``df`` as an external parquet table hash-bucketed on
-    ``keys`` (and sorted inside each bucket on ``sort_keys`` or the
-    bucket keys). This is the one-time shuffle that every later join on
-    ``keys`` avoids."""
-    sort = sort_keys or keys
+    ``keys`` and sorted inside each bucket on them. This is the one-time
+    shuffle that every later join on ``keys`` avoids."""
     (
         df.write.format("parquet")
         .mode("overwrite")
         .bucketBy(num_buckets, keys[0], *keys[1:])
-        .sortBy(sort[0], *sort[1:])
+        .sortBy(keys[0], *keys[1:])
         .option("path", path)
         .saveAsTable(table)
     )
@@ -74,19 +71,16 @@ def _register_external_bucketed(
     schema,
     keys: list[str],
     num_buckets: int,
-    sort_keys: list[str] | None = None,
 ) -> None:
     """Register an already-on-disk bucketed layout as a catalog table.
     Bucket ids live in the parquet file names, so a CREATE TABLE with
     the matching CLUSTERED BY spec over the same LOCATION reads them
     exactly as the writing session's saveAsTable table did."""
-    sort = sort_keys or keys
     bucket_cols = ", ".join(f"`{k}`" for k in keys)
-    sort_cols = ", ".join(f"`{k}`" for k in sort)
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS `{table}` ({_schema_ddl(schema)}) "
         f"USING parquet CLUSTERED BY ({bucket_cols}) "
-        f"SORTED BY ({sort_cols}) INTO {num_buckets} BUCKETS "
+        f"SORTED BY ({bucket_cols}) INTO {num_buckets} BUCKETS "
         f"LOCATION '{path}'"
     )
 

@@ -12,7 +12,6 @@ overwrites the live path in place while readers may be scanning it.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import SparkSession

@@ -58,6 +58,8 @@ def _rollup_aggs() -> list:
 # Bump when the rollup's aggregates or bucketing change (see
 # artifacts.ensure).
 _ROLLUP_VERSION = 1
+# rollup granularity (a date_trunc unit)
+_BUCKET = "hour"
 
 
 def _bucketed(df: DataFrame, bucket: str) -> DataFrame:
@@ -68,7 +70,6 @@ def ensure_rollup(
     spark: SparkSession,
     sf_dir: str,
     cutoff: str,
-    bucket: str = "hour",
 ) -> str:
     """Materialize the settled-history rollup for ``events`` older than
     ``cutoff`` (an ISO timestamp literal aligned to the bucket width).
@@ -81,7 +82,7 @@ def ensure_rollup(
 
     def _build(staging: str) -> None:
         (
-            _bucketed(spark.read.parquet(src), bucket)
+            _bucketed(spark.read.parquet(src), _BUCKET)
             .filter(F.col("ts") < F.lit(cutoff).cast("timestamp"))
             .groupBy("bucket", "event_type")
             .agg(*_rollup_aggs())
@@ -90,7 +91,7 @@ def ensure_rollup(
         )
 
     return artifacts.ensure(
-        "contagg", src, _ROLLUP_VERSION, {"cutoff": cutoff, "bucket": bucket}, _build
+        "contagg", src, _ROLLUP_VERSION, {"cutoff": cutoff, "bucket": _BUCKET}, _build
     )
 
 
@@ -98,18 +99,17 @@ def serve_series(
     spark: SparkSession,
     sf_dir: str,
     cutoff: str,
-    bucket: str = "hour",
 ) -> DataFrame:
     """The serving query: rollup ∪ raw-tail aggregation, avg derived
     from the mergeable parts. Exactly equals the direct aggregation
     over the full raw table (the oracle asserts this), while scanning
     only the tail of it.
     """
-    path = ensure_rollup(spark, sf_dir, cutoff, bucket)
+    path = ensure_rollup(spark, sf_dir, cutoff)
     settled = spark.read.parquet(path)
     tail = (
         _bucketed(
-            spark.read.parquet(table_path(sf_dir, "events")), bucket
+            spark.read.parquet(table_path(sf_dir, "events")), _BUCKET
         )
         .filter(F.col("ts") >= F.lit(cutoff).cast("timestamp"))
         .groupBy("bucket", "event_type")

@@ -111,68 +111,15 @@ def column_layout_report(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def table_footer_summary(spark: SparkSession, table_path: str) -> DataFrame:
-    """Distributed footer scan → one row per FILE (row/byte totals) —
-    the input a partition-size advisor aggregates. Same closure-ships-
-    by-value rule as :func:`parquet_footer_stats`."""
-
-    def _file_rows(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import os as _os
-
-        import pandas as _pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for path in pdf["path"]:
-                meta = pq.ParquetFile(path).metadata
-                cb = ub = 0
-                for rg in range(meta.num_row_groups):
-                    g = meta.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        cb += c.total_compressed_size
-                        ub += c.total_uncompressed_size
-                out.append(
-                    (
-                        _os.path.basename(path), meta.num_rows,
-                        meta.num_row_groups, cb, ub,
-                    )
-                )
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "file", "n_rows", "n_row_groups",
-                    "compressed_bytes", "uncompressed_bytes",
-                ],
-            )
-
-    if os.path.isdir(table_path):
-        paths = sorted(glob.glob(os.path.join(table_path, "*.parquet")))
-    else:
-        paths = [table_path]
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
-    files = files.repartition(min(len(paths), 256))
-    return files.mapInPandas(
-        _file_rows,
-        schema=(
-            "file string, n_rows long, n_row_groups long, "
-            "compressed_bytes long, uncompressed_bytes long"
-        ),
-    )
-
-
 def catalog_footer_summary(
     spark: SparkSession, tables: dict[str, str]
 ) -> DataFrame:
     """Footer scan over a whole CATALOG in one job: one row per
-    (table, file).  A union of per-table :func:`table_footer_summary`
-    plans would run one mapInPandas branch + one aggregation exchange
-    per table; tagging each file row with its table name up front keeps
-    the advisor to a single scan and a single ``groupBy(tbl)`` however
-    many tables the catalog holds."""
+    (table, file).  A union of per-table footer-scan plans would run one
+    mapInPandas branch + one aggregation exchange per table; tagging
+    each file row with its table name up front keeps the advisor to a
+    single scan and a single ``groupBy(tbl)`` however many tables the
+    catalog holds."""
 
     def _file_rows(
         batches: Iterator[pd.DataFrame],

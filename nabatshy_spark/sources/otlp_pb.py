@@ -248,11 +248,11 @@ def parse_otlp_protobuf(df: DataFrame, bin_col: str = "value") -> DataFrame:
 
 
 def parse_otlp_protobuf_with_dead_letter(
-    df: DataFrame, bin_col: str = "value"
+    df: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Like :func:`parse_otlp_protobuf` but also returns the undecodable
     payloads as ``(raw_payload binary, error string)`` for replay."""
-    rows = decode_requests(df, bin_col, request_to_dict, dead_letter=True)
+    rows = decode_requests(df, "value", request_to_dict, dead_letter=True)
     good = rows.filter("__error IS NULL").select(*PARSED_COLUMNS)
     bad = rows.filter("__error IS NOT NULL").selectExpr(
         "__raw AS raw_payload", "__error AS error"

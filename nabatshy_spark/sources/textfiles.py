@@ -50,16 +50,16 @@ def read_jsonl(
 
 
 def read_csv(
-    spark: SparkSession, path: str, schema_ddl: str, header: bool = True
+    spark: SparkSession, path: str, schema_ddl: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Read CSV with an explicit schema. Returns (clean rows,
+    """Read CSV with a header line and an explicit schema. Returns (clean rows,
     quarantine rows) from a single parse pass."""
     schema = f"{schema_ddl}, {CORRUPT_COL} STRING"
     raw = (
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .csv(path)
     )
     return _split(raw)

@@ -97,6 +97,8 @@ def zorder_write(
 
 # Bump when zorder_write's layout changes (see artifacts.ensure).
 _ZORDER_VERSION = 1
+# bits per column of the served layout's z-value
+_ZORDER_BITS = 12
 
 
 def ensure_zordered(
@@ -104,7 +106,6 @@ def ensure_zordered(
     sf_dir: str,
     source: str,
     cols: list[str],
-    bits: int = 12,
     num_files: int | None = None,
 ) -> str:
     """Idempotently materialize the z-ordered layout of
@@ -117,8 +118,8 @@ def ensure_zordered(
         "zorder",
         table_path(sf_dir, source),
         _ZORDER_VERSION,
-        {"cols": cols, "bits": bits, "num_files": num_files},
+        {"cols": cols, "bits": _ZORDER_BITS, "num_files": num_files},
         lambda staging: zorder_write(
-            load(spark, sf_dir, source), staging, cols, bits, num_files
+            load(spark, sf_dir, source), staging, cols, _ZORDER_BITS, num_files
         ),
     )

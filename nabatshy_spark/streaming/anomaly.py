@@ -99,7 +99,6 @@ def anomaly_stream(
     events: DataFrame,
     z: float = 3.0,
     min_obs: int = 5,
-    watermark: str = "1 hour",
     idle_ttl_days: int = 30,
 ) -> DataFrame:
     """Streaming z-score anomaly flags per user: rows more than ``z``
@@ -110,7 +109,7 @@ def anomaly_stream(
     ``value`` column."""
     return (
         events.select("user_id", "ts", F.col("value").cast("double"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.col("user_id"))
         .applyInPandasWithState(
             _anomaly_fn(z, min_obs, idle_ttl_days * 86_400_000),

@@ -60,11 +60,11 @@ def start_cms_stream(
     input_dir: str,
     state_path: str,
     checkpoint_dir: str,
-    key_field: str = "user_id",
     depth: int = 4,
     width: int = 64,
 ) -> StreamingQuery:
-    """Stream JSONL events and maintain the running frequency sketch.
+    """Stream JSONL events and maintain the running frequency sketch
+    of their ``user_id`` field.
     One d·w-group aggregate per micro-batch; the merge moves d·w rows
     — constant work per batch regardless of batch size skew."""
     from pyspark.sql import types as T
@@ -73,11 +73,11 @@ def start_cms_stream(
         T.StructType([T.StructField("value", T.StringType())])
     ).text(input_dir)
     keyed = raw.select(
-        F.get_json_object("value", f"$.{key_field}").alias(key_field)
-    ).filter(F.col(key_field).isNotNull())
+        F.get_json_object("value", "$.user_id").alias("user_id")
+    ).filter(F.col("user_id").isNotNull())
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        merge_sketch(spark, batch, key_field, state_path, depth, width)
+        merge_sketch(spark, batch, "user_id", state_path, depth, width)
 
     return (
         keyed.writeStream.foreachBatch(sink)
@@ -87,10 +87,10 @@ def start_cms_stream(
     )
 
 
-def estimate(spark: SparkSession, state_path: str, keys: list[str],
-             depth: int = 4, width: int = 64) -> DataFrame:
+def estimate(spark: SparkSession, state_path: str, keys: list[str]) -> DataFrame:
     """Point-query the sketch state for a key list: min over each
-    key's cells — the O(d·|keys|) dashboard read."""
+    key's cells — the O(d·|keys|) dashboard read. The state is a
+    4 × 64 sketch, :func:`start_cms_stream`'s default."""
     from nabatshy_spark.operators.sketches import _h
 
     sketch = spark.read.schema(STATE_SCHEMA).parquet(state_path)
@@ -99,8 +99,8 @@ def estimate(spark: SparkSession, state_path: str, keys: list[str],
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(d).alias("row"), _h(F.col("key"), d, width).alias("col"))
-                    for d in range(depth)
+                    F.struct(F.lit(d).alias("row"), _h(F.col("key"), d, 64).alias("col"))
+                    for d in range(4)
                 ]
             )
         ).alias("p"),

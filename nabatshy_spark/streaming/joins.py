@@ -28,7 +28,6 @@ def stream_interval_join(
     right_ts: str,
     watermark: str = "10 minutes",
     max_lag: str = "5 minutes",
-    how: str = "inner",
 ) -> DataFrame:
     """Join streaming ``left`` and ``right`` on ``key`` equality where
     ``right_ts`` lands within [left_ts, left_ts + max_lag].
@@ -46,7 +45,7 @@ def stream_interval_join(
         & (F.col(right_ts) >= F.col(left_ts))
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"interval {max_lag}"))
     )
-    return lw.join(rw, cond, how).drop(rw[key])
+    return lw.join(rw, cond, "inner").drop(rw[key])
 
 
 def span_error_enrichment(

@@ -23,7 +23,6 @@ from pyspark.sql.streaming import StreamingQuery
 def bucketed_rollup(
     spans: DataFrame,
     bucket_seconds: int = 60,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Streaming DataFrame of per-(bucket, endpoint) rollups.
 
@@ -34,7 +33,7 @@ def bucketed_rollup(
     """
     with_ts = spans.withColumn(
         "__ts", F.timestamp_micros(F.expr("start_time_unix_nano div 1000"))
-    ).withWatermark("__ts", watermark)
+    ).withWatermark("__ts", "10 minutes")
     return (
         with_ts.groupBy(
             # group by the window struct itself — projecting .start
@@ -78,7 +77,6 @@ def session_window_rollup(
     key_col: str,
     ts_col: str,
     gap: str = "30 minutes",
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Gap-based session aggregation via the BUILT-IN
     ``session_window`` — the declarative twin of the
@@ -92,7 +90,7 @@ def session_window_rollup(
     OPEN sessions only.
     """
     return (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark(ts_col, "10 minutes")
         .groupBy(F.col(key_col), F.session_window(F.col(ts_col), gap).alias("__w"))
         .agg(F.count("*").alias("n_events"))
         .select(

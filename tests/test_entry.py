@@ -259,3 +259,191 @@ def test_every_module_imports_without_a_session():
     )
     assert json.loads(out.stdout.strip().splitlines()[-1]) == {}
     assert len(names) > 60
+
+
+# -- everything defined is called, every option is set ----------------------
+
+def _source_trees():
+    """The package and everything that calls into it."""
+    paths = glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)
+    for d in ("tests", "tools", "perfbench"):
+        paths += glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)
+    paths += [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    for path in paths:
+        with open(path) as fh:
+            yield os.path.relpath(path, REPO), ast.parse(fh.read())
+
+
+def _top_level_defs():
+    for rel, tree in _package_trees():
+        for n in tree.body:
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef)):
+                yield rel, n
+
+
+# Top-level definitions that nothing but tests reaches, and why each
+# stays.
+REFERENCE_ALLOWLIST = {
+    "start_collector": "the one-process collector + API entry (ROADMAP) is its caller",
+    "range_to_interval": "T6+T7 interval width, pinned against the reference's utils",
+    "ngram_jaccard_pairs_prefix": "prefix-filtered twin of the served n-gram pairs",
+    "doc_topk_matches": "document-ER operator; its queries read the doc_matches artifact",
+    "part_entity_clusters": "part-ER cluster histogram behind the ER operator tests",
+    "part_topk_matches": "output-bounded part ER, checked against its exhaustive form",
+    "frequent_pairs": "un-artifacted A-priori pairs, checked against brute force",
+    "resample_audio": "binary-in/binary-out multimodal stage, round-trip tested",
+    "salted_broadcastable_join": "salting twin of AQE skew-join splitting",
+    "critical_path": "iterative reference the grouped critical-path DP is tested against",
+    "cross_corpus_substring_runs": "char-level decontamination between two relations",
+    "duplicated_substring_runs": "ExactSubstr runs without the artifact",
+    "insert_http": "ClickHouse HTTP sink, tested against a local server",
+    "write_spans_jdbc": "ClickHouse JDBC sink; needs a jar the session lacks",
+    "compact": "hour-partition compaction of the span table",
+    "base_span_ds": "J3 three-way normalized join, checked against the wide table",
+    "normalize": "split of the wide span table into the reference's star schema",
+    "parse_otlp_json_with_dead_letter": "dead-letter split of the JSON decoder",
+    "parse_otlp_protobuf_with_dead_letter": "dead-letter split of the protobuf decoder",
+    "backfill_hours": "in-place recompute of chosen hour partitions",
+    "idempotent_append": "exactly-once batch append keyed by batch id",
+    "read_spans": "reader of the partitioned span sink",
+    "quarantine_report": "ingest-gate summary of quarantined lines",
+    "read_csv": "CSV ingest with a quarantine split",
+    "read_jsonl": "JSON-lines ingest with a quarantine split",
+    "anomaly_stream": "beyond-parity streaming z-score flags",
+    "perceptual_dedup_stream": "streaming twin of the batch perceptual dedup",
+    "estimate": "point query of the streaming count-min sketch",
+    "start_cms_stream": "beyond-parity streaming count-min sketch",
+    "ingest_batch": "non-streaming bulk OTLP import",
+    "span_error_enrichment": "beyond-parity stream-stream join",
+    "progress_report": "streaming progress records as a relation",
+    "bucketed_rollup": "beyond-parity streaming per-bucket rollup",
+    "session_window_rollup": "beyond-parity streaming session windows",
+    "start_rollup_to_memory": "memory-sink runner of the streaming rollup",
+    "start_gated_ingest": "streaming data-quality gate",
+    "kafka_spool_stream": "Kafka spool reader; needs a connector the session lacks",
+    "sessionize_stream": "beyond-parity streaming sessionization",
+}
+# Deleted because nothing called them; none may come back as an exception.
+DELETED = {
+    "is_root_span", "in_time_range", "attr_has_key", "attr_equals",
+    "attr_not_equals", "attr_any_match", "has_exception_event", "zip_attrs",
+    "duration_ms", "pct_diff", "bucket_ts", "bucket_hour", "ns_to_timestamp",
+    "load_all", "association_rules", "table_footer_summary",
+}
+
+
+def test_every_top_level_definition_is_referenced():
+    """A top-level function or class under the package is named by the
+    package, tools, perfbench, bench.py or ``__spark_entry__.py``
+    outside its own body (a ``@query`` registration counts), or it is
+    on the allowlist. Allowlisted names must still be defined and still
+    be unreached."""
+    defined = {n.name for _, n in _top_level_defs()}
+    reached = set()
+    for rel, tree in _source_trees():
+        if rel.startswith("tests"):
+            continue
+        for top in tree.body:
+            own = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+            for d in getattr(top, "decorator_list", []):
+                d = d.func if isinstance(d, ast.Call) else d
+                if isinstance(d, ast.Name) and d.id == "query":
+                    reached.add(own)
+            for n in ast.walk(top):
+                name = n.id if isinstance(n, ast.Name) else getattr(n, "attr", None)
+                if isinstance(n, (ast.Name, ast.Attribute)) and name != own:
+                    reached.add(name)
+    unreached = sorted(defined - reached - set(REFERENCE_ALLOWLIST))
+    assert not unreached
+    stale = sorted(set(REFERENCE_ALLOWLIST) - (defined - reached))
+    assert not stale
+    assert not DELETED & set(REFERENCE_ALLOWLIST)
+
+
+# Options a deployment sets: the listening port, the trigger interval,
+# the Kafka topic, the JDBC table and the HTTP timeout.
+DEPLOYMENT_OPTIONS = {
+    ("start_collector", "port"),
+    ("start_collector", "trigger_interval"),
+    ("kafka_spool_stream", "topic"),
+    ("write_spans_jdbc", "table"),
+    ("insert_http", "timeout_s"),
+}
+
+
+def _passes(call: ast.Call, index, name: str) -> bool:
+    if any(k.arg in (name, None) for k in call.keywords):
+        return True
+    return index is not None and (
+        len(call.args) > index
+        or any(isinstance(a, ast.Starred) for a in call.args)
+    )
+
+
+def test_every_keyword_option_is_set_by_a_caller():
+    """A defaulted parameter of a top-level function is passed, by
+    keyword or by position, by some call in the package, tests, tools,
+    perfbench, bench.py or ``__spark_entry__.py``; otherwise it is a
+    constant. Calls resolve by name, so a call counts toward every
+    definition of that name."""
+    calls = {}
+    for _, tree in _source_trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+    never_set = []
+    for rel, fn in _top_level_defs():
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        args = fn.args
+        pos = args.posonlyargs + args.args
+        first = len(pos) - len(args.defaults)
+        options = [(i, a.arg) for i, a in enumerate(pos) if i >= first] + [
+            (None, a.arg)
+            for a, d in zip(args.kwonlyargs, args.kw_defaults)
+            if d is not None
+        ]
+        for index, name in options:
+            if (fn.name, name) in DEPLOYMENT_OPTIONS:
+                continue
+            if not any(_passes(c, index, name) for c in calls.get(fn.name, [])):
+                never_set.append(f"{rel}:{fn.lineno} {fn.name}({name}=)")
+    assert not never_set
+
+
+def test_span_fixture_path_follows_the_importing_checkout(tmp_path):
+    """A second checkout of the package reads its own span fixture: the
+    span queries and their oracles both resolve the path under it."""
+    import json
+    import shutil
+    import subprocess
+    import sys
+
+    shutil.copytree(
+        PACKAGE,
+        tmp_path / "nabatshy_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    script = (
+        "import json\n"
+        "from nabatshy_spark.plans.oracles import ORACLES\n"
+        "from nabatshy_spark.plans.span_queries import DEFAULT_SPANS_PATH as p\n"
+        "print(json.dumps([p, sorted(\n"
+        "    k for k, v in ORACLES.items() if 'spans.parquet' in v and repr(p) not in v\n"
+        ")]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    path, elsewhere = json.loads(out.stdout.strip().splitlines()[-1])
+    assert path == str(tmp_path / "tests" / "data" / "spans.parquet")
+    assert elsewhere == []

@@ -101,7 +101,26 @@ def test_error_codes(api):
         ("/v1/search?timeRange=24h&pageSize=-1", 400),
         ("/v1/search?timeRange=24h&page=0", 400),
         ("/api/metrics/pseries?timeRange=24h&percentile=250", 500),
+        # an inverted time range: relative, absolute, and on search
+        ("/api/metrics/traces?timeRange=-5h", 400),
+        ("/api/metrics/avg?start=2024-02-01T02:00:00Z&end=2024-02-01T01:00:00Z", 400),
+        ("/v1/search?timeRange=-2h", 400),
+        # row counts past Spark's 32-bit LIMIT/OFFSET
+        ("/v1/traces/slowest?n=99999999999", 400),
+        ("/v1/search?timeRange=24h&pageSize=99999999999", 400),
+        ("/v1/search?timeRange=24h&page=107374183&pageSize=20", 400),
     ]:
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(api, path)
         assert e.value.code == code
+
+
+def test_zero_length_range_answers_empty(api):
+    """start == end is a valid range with nothing in it, on the series
+    routes (which gap-fill buckets) as on the others."""
+    at = "start=2024-02-01T01:00:00Z&end=2024-02-01T01:00:00Z"
+    for route in (
+        "/api/metrics/avg", "/v1/traces/heatmap", "/v1/search",
+        "/api/metrics/services",
+    ):
+        assert _get(api, f"{route}?{at}") == [], route
