@@ -11,12 +11,13 @@ to the driver's entry-point shape.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nabatshy_spark.plans.oracles import ORACLES
 from nabatshy_spark.plans.queries import QUERIES

@@ -8,9 +8,10 @@ Catalyst can push the bucket computation into whole-stage codegen:
 - bucket alignment is floor-epoch arithmetic (``unix - unix % secs``),
   byte-compatible with ClickHouse ``toStartOfInterval`` for positive
   epochs — NOT ``F.window`` (whose bucket origin differs);
-- gap-fill is ``sequence() + explode`` left-joined with the aggregate,
-  which distributes (no driver-side loop) and stays tiny: the padded
-  series is ≤ ~16 rows per range regardless of data volume.
+- gap-fill unions one null row per bucket epoch into the aggregation
+  input, so the padded series (one row per bucket, regardless of data
+  volume) comes out of the one aggregation shuffle, with no join and
+  no driver-side loop.
 """
 
 from __future__ import annotations
@@ -18,10 +19,12 @@ from __future__ import annotations
 import math
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 NUM_BUCKETS = 15  # reference: utils/utils.go:82
+# gap_fill's row marker: true on every input row, null on the gap rows
+ROW = "__row"
 
 
 def interval_seconds(range_seconds: float) -> int:
@@ -38,42 +41,48 @@ def align_epoch(epoch_seconds: int, interval_secs: int) -> int:
 
 
 def gap_fill(
-    agg: DataFrame,
-    bucket_col: str,
-    value_cols: dict[str, float],
+    rows: DataFrame,
+    epoch: Column,
+    aggs: dict[str, tuple[Column, object]],
     start_epoch: int,
     end_epoch: int,
     interval_secs: int,
 ) -> DataFrame:
-    """T5 zero-padding: one row per bucket from aligned start to end;
-    missing buckets get the fill value (reference: utils/utils.go:14-46).
+    """T5 zero-padded series (reference: utils/utils.go:14-46): the
+    ``interval_secs`` buckets of ``epoch`` (long seconds, within
+    [start_epoch, end_epoch]), one row per bucket from the aligned
+    start to the aligned end, ordered by ``bucket_epoch``, with one
+    column per ``aggs`` entry (output name → aggregate over ``rows``'
+    columns, fill value for an empty bucket; the reference always
+    fills 0).
 
-    ``value_cols`` maps column name → fill value (the reference always
-    fills 0). Implemented as sequence+explode left join so it runs
-    distributed; the generated side is ≤ range/interval rows (~16), so
-    Catalyst broadcast-joins it for free.
+    One null row per bucket epoch, from a one-partition range, is
+    unioned into ``rows``, so a single aggregation shuffle yields every
+    bucket: an empty bucket aggregates only its null row, and each
+    aggregate's null becomes the fill. Aggregates must therefore ignore
+    nulls, and count input rows as ``F.count(ROW)``, which is null on
+    the gap rows. The result is one row per bucket (a range's worth, a
+    few dozen at most), so it is ordered inside one partition instead
+    of by a global sort.
     """
-    spark = agg.sparkSession
-    aligned_start = align_epoch(start_epoch, interval_secs)
-    aligned_end = align_epoch(end_epoch, interval_secs)
-    if aligned_end < aligned_start:
-        # a zero-length range has no buckets (sequence() rejects it)
-        return agg.select(bucket_col, *value_cols).limit(0)
-    buckets = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(aligned_start).cast("long"),
-                F.lit(aligned_end).cast("long"),
-                F.lit(interval_secs).cast("long"),
-            )
-        ).alias("__epoch")
-    ).select(F.timestamp_seconds(F.col("__epoch")).alias(bucket_col))
-
-    joined = buckets.join(agg, on=bucket_col, how="left")
-    out_cols = [F.col(bucket_col)]
-    for name, fill in value_cols.items():
-        out_cols.append(F.coalesce(F.col(name), F.lit(fill)).alias(name))
-    return joined.select(*out_cols).orderBy(bucket_col)
+    lo = align_epoch(start_epoch, interval_secs)
+    hi = align_epoch(end_epoch, interval_secs)
+    data = rows.select(
+        (epoch - epoch % F.lit(interval_secs)).alias("bucket_epoch"),
+        F.lit(True).alias(ROW),
+        "*",
+    )
+    # an inverted (zero-length) range is an empty range: no gap rows
+    gaps = rows.sparkSession.range(lo, hi + 1, interval_secs, 1)
+    return (
+        data.unionByName(
+            gaps.withColumnRenamed("id", "bucket_epoch"), allowMissingColumns=True
+        )
+        .groupBy("bucket_epoch")
+        .agg(*[F.coalesce(a, F.lit(fill)).alias(c) for c, (a, fill) in aggs.items()])
+        .coalesce(1)
+        .sortWithinPartitions("bucket_epoch")
+    )
 
 
 def parse_time_range(

@@ -392,8 +392,9 @@ def search_metric_series(
     the dynamic range/15 interval (T2), and each bucket aggregates
     percentile + count + avg (+ error count), gap-filled with zeros
     (T5). The reference string-pastes this SQL per endpoint; here every
-    metrics route is the same single-scan DataFrame plan."""
-    from nabatshy_spark.functions.timeutil import gap_fill, interval_seconds
+    metrics route is the same single-scan, single-shuffle DataFrame
+    plan (timeutil.gap_fill)."""
+    from nabatshy_spark.functions.timeutil import ROW, gap_fill, interval_seconds
 
     iv = interval_seconds(end_s - start_s)
     pcol = f"p{int(round(percentile * 100))}_ms"
@@ -404,31 +405,14 @@ def search_metric_series(
     )
     ep = F.expr("start_time_unix_nano div 1000000000")
     dur_ms = duration_ms()
-    aggs = [
-        F.percentile(dur_ms, F.lit(percentile)).alias(pcol),
-        F.count("*").alias("n"),
-        F.round(F.avg(dur_ms), 6).alias("avg_ms"),
-    ]
-    fills: dict = {pcol: 0.0, "n": 0, "avg_ms": 0.0}
+    aggs = {
+        pcol: (F.percentile(dur_ms, F.lit(percentile)), 0.0),
+        "n": (F.count(ROW), 0),
+        "avg_ms": (F.round(F.avg(dur_ms), 6), 0.0),
+    }
     if include_errors:
-        aggs.append(
-            F.sum(has_error_col().cast("long")).alias("n_errors")
-        )
-        fills["n_errors"] = 0
-    agg = sliced.groupBy((ep - ep % F.lit(iv)).alias("bucket_epoch")).agg(*aggs)
-    agg_ts = agg.select(
-        F.timestamp_seconds("bucket_epoch").alias("bucket"), *fills.keys()
-    )
-    filled = gap_fill(agg_ts, "bucket", fills, start_s, end_s - 1, iv)
-    out = [
-        F.unix_timestamp("bucket").alias("bucket_epoch"),
-        pcol,
-        F.col("n").cast("long").alias("n"),
-        "avg_ms",
-    ]
-    if include_errors:
-        out.append(F.col("n_errors").cast("long").alias("n_errors"))
-    return filled.select(*out)
+        aggs["n_errors"] = (F.sum(has_exception().cast("long")), 0)
+    return gap_fill(sliced, ep, aggs, start_s, end_s - 1, iv)
 
 
 def service_metrics(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nabatshy_spark.catalog import load
-from nabatshy_spark.functions.timeutil import gap_fill
+from nabatshy_spark.functions.timeutil import ROW, gap_fill
 from nabatshy_spark.operators import sampling, sessions, sketches, stats
 from nabatshy_spark.operators.search import search_events
 from nabatshy_spark.plans.queries import query, r2, r6
@@ -409,62 +409,40 @@ def dynamic_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gapfill_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 gap-fill / zero-padding (utils/utils.go:14-46): hourly counts
     of a sparse event slice over [2024-01-01, 2024-01-03), empty hours
-    present with n=0. sequence+explode left join — distributed, and the
-    generated side (48 rows) broadcasts."""
+    present with n=0. The 48 bucket epochs are unioned into the
+    aggregation input (timeutil.gap_fill): one shuffle, no join."""
     ev = load(spark, sf_dir, "events")
-    iv = 3600
     sliced = ev.filter(
         (F.col("event_type") == "purchase")
         & (F.col("value") > 45)
         & (F.col("ts") >= F.timestamp_seconds(F.lit(_GF_START)))
         & (F.col("ts") < F.timestamp_seconds(F.lit(_GF_END)))
     )
-    ep = _epoch_s(F.col("ts"))
-    agg = sliced.groupBy((ep - ep % F.lit(iv)).alias("bucket_epoch")).agg(
-        F.count("*").alias("n")
-    )
-    agg_ts = agg.select(
-        F.timestamp_seconds(F.col("bucket_epoch")).alias("bucket"), "n"
-    )
-    filled = gap_fill(agg_ts, "bucket", {"n": 0}, _GF_START, _GF_END - 1, iv)
-    return filled.select(
-        F.unix_timestamp("bucket").alias("bucket_epoch"),
-        F.col("n").cast("long").alias("n"),
+    return gap_fill(
+        sliced, _epoch_s(F.col("ts")), {"n": (F.count(ROW), 0)},
+        _GF_START, _GF_END - 1, 3600,
     )
 
 
 @query("combined_metrics", headline=True)
 def combined_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/T2/T5 combined metrics — percentile + count + avg in ONE scan
-    per bucket, then gap-filled (api/service.go:1341-1428; the
-    reference hand-optimized three round trips into one query — in
-    Spark it's just one agg call)."""
+    per bucket, gap-filled in the same aggregation
+    (api/service.go:1341-1428; the reference hand-optimized three round
+    trips into one query — in Spark it's just one agg call)."""
     ev = load(spark, sf_dir, "events")
-    iv = (_CM_END - _GF_START) // 15
     sliced = ev.filter(
         (F.col("ts") >= F.timestamp_seconds(F.lit(_GF_START)))
         & (F.col("ts") < F.timestamp_seconds(F.lit(_CM_END)))
     )
-    ep = _epoch_s(F.col("ts"))
-    agg = sliced.groupBy((ep - ep % F.lit(iv)).alias("bucket_epoch")).agg(
-        F.percentile("value", F.lit(0.95)).alias("p95_value"),
-        F.count("*").alias("n"),
-        r6(F.avg("value")).alias("avg_value"),
-    )
-    agg_ts = agg.select(F.timestamp_seconds("bucket_epoch").alias("bucket"), "p95_value", "n", "avg_value")
-    filled = gap_fill(
-        agg_ts,
-        "bucket",
-        {"p95_value": 0.0, "n": 0, "avg_value": 0.0},
-        _GF_START,
-        _CM_END - 1,
-        iv,
-    )
-    return filled.select(
-        F.unix_timestamp("bucket").alias("bucket_epoch"),
-        "p95_value",
-        F.col("n").cast("long").alias("n"),
-        "avg_value",
+    aggs = {
+        "p95_value": (F.percentile("value", F.lit(0.95)), 0.0),
+        "n": (F.count(ROW), 0),
+        "avg_value": (r6(F.avg("value")), 0.0),
+    }
+    return gap_fill(
+        sliced, _epoch_s(F.col("ts")), aggs,
+        _GF_START, _CM_END - 1, (_CM_END - _GF_START) // 15,
     )
 
 

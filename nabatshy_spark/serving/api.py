@@ -4,7 +4,9 @@ over the Spark engine, stdlib-only.
 
 Every route maps to the operator that already backs the corresponding
 registry query — this layer only parses URL params, calls the operator,
-and streams the result as a JSON array (S9: stock ``df.toJSON()``).
+and answers the result as a JSON array whose elements the plan itself
+encodes (S9: ``to_json(struct(*))`` under the row cap, so a response
+runs the route's own stages and no more).
 Param semantics mirror api/controller.go: ``n`` (slowest), ``query`` /
 ``page`` / ``pageSize`` / ``sortField`` / ``sortOrder`` /
 ``traceOrSpan`` (search), RFC3339 ``start``/``end`` or relative
@@ -51,6 +53,18 @@ def _positive_int(q: dict[str, str], key: str, default: int) -> int:
     return v
 
 
+def _percentile(q: dict[str, str]) -> float:
+    """``percentile`` (an integer in [0, 100], default 95) as the
+    fraction Spark's ``percentile`` takes."""
+    try:
+        v = int(q.get("percentile", "95"))
+    except ValueError:
+        raise ValueError("invalid parameter 'percentile'") from None
+    if not 0 <= v <= 100:
+        raise ValueError("parameter 'percentile' must be between 0 and 100")
+    return v / 100.0
+
+
 def _rfc3339(s: str) -> datetime:
     return datetime.fromisoformat(s.replace("Z", "+00:00")).astimezone(
         timezone.utc
@@ -84,7 +98,11 @@ class TelemetryAPI:
                 q = {k: v[0] for k, v in parse_qs(url.query).items()}
                 try:
                     df = api._route(url.path, q)
-                    body = "[" + ",".join(df.limit(MAX_ROWS).toJSON().collect()) + "]"
+                    # each row encoded inside the plan, so the row cap
+                    # stays its root: a CollectLimit or
+                    # TakeOrderedAndProject, not an extra exchange
+                    rows = df.select(F.to_json(F.struct("*"))).limit(MAX_ROWS).collect()
+                    body = "[" + ",".join(r[0] for r in rows) + "]"
                     status = 200
                 except KeyError:
                     self.send_error(404)
@@ -179,16 +197,14 @@ class TelemetryAPI:
             return S.search_metric_series(df, lo, hi, include_errors=True)
         if path == "/api/metrics/pseries":
             lo, hi = self._range_s(q)
-            pct = int(q.get("percentile", "95"))
-            return S.search_metric_series(df, lo, hi, percentile=pct / 100.0)
+            return S.search_metric_series(df, lo, hi, percentile=_percentile(q))
         if path == "/api/metrics/search":
             lo, hi = self._range_s(q)
-            pct = int(q.get("percentile", "95"))
             return S.search_metric_series(
                 df, lo, hi,
                 query=q.get("query", ""),
                 trace_or_span=q.get("traceOrSpan", ""),
-                percentile=pct / 100.0,
+                percentile=_percentile(q),
             )
         if path == "/api/metrics/services":
             lo, hi = self._range_s(q)

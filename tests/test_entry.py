@@ -8,9 +8,11 @@ import importlib.util
 import os
 import re
 
+ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+
 
 def _load_entry():
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from nabatshy_spark.catalog import load
 from nabatshy_spark.operators import multimodal, similarity
+
+SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
 
 
 def test_lsh_topk_recall(spark, sf_dir):
@@ -657,7 +661,7 @@ def test_critical_path_grouped_equals_iterative(spark):
     agree on the fixture (same operator contract, two plans)."""
     from nabatshy_spark.operators.spans import critical_path, critical_path_grouped
 
-    df = spark.read.parquet("/root/repo/tests/data/spans.parquet")
+    df = spark.read.parquet(SPANS)
     a = {r.trace_id: r.critical_ms for r in critical_path(df).collect()}
     b = {r.trace_id: r.critical_ms for r in critical_path_grouped(df).collect()}
     assert a == b

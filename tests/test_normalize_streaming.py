@@ -3,13 +3,17 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from nabatshy_spark.sources.normalize import base_span_ds, normalize
 
+SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
+
 
 def _wide(spark):
-    return spark.read.parquet("/root/repo/tests/data/spans.parquet")
+    return spark.read.parquet(SPANS)
 
 
 def test_normalize_star_schema(spark):

@@ -5,15 +5,22 @@ operators they wrap."""
 from __future__ import annotations
 
 import json
+import os
 import urllib.error
+import urllib.parse
 import urllib.request
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from nabatshy_spark.serving.api import TelemetryAPI
+from nabatshy_spark.functions.timeutil import align_epoch, interval_seconds
+from nabatshy_spark.operators.spans import search_metric_series
+from nabatshy_spark.serving.api import MAX_ROWS, TelemetryAPI
+from tools.route_profile import engine_counts, engine_delta
 
-SPANS = "/root/repo/tests/data/spans.parquet"
+SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
 NOW = datetime(2024, 2, 1, 6, 0, 0, tzinfo=timezone.utc)  # fixture day
 
 ROUTES = [
@@ -31,6 +38,22 @@ ROUTES = [
     "/api/metrics/errors?timeRange=24h",
     "/api/metrics/search?query=scope=svc-api&timeRange=24h",
     "/api/services",
+]
+
+# the metric-series routes (search_metric_series) and the routes whose
+# plan is one sort under the row cap
+SERIES_ROUTES = [
+    "/v1/traces/heatmap?timeRange=24h",
+    "/api/metrics/traces?timeRange=24h",
+    "/api/metrics/avg?timeRange=24h",
+    "/api/metrics/errors?timeRange=24h",
+    "/api/metrics/pseries?timeRange=24h&percentile=99",
+    "/api/metrics/search?query=scope=svc-api&timeRange=24h",
+]
+SORT_ROUTES = [
+    "/v1/traces/slowest?n=5",
+    "/v1/traces/service/svc-api",
+    "/v1/search?query=scope=svc-db&timeRange=24h&pageSize=10",
 ]
 
 
@@ -100,7 +123,10 @@ def test_error_codes(api):
         ("/v1/search?timeRange=24h&sortField=bogus", 400),
         ("/v1/search?timeRange=24h&pageSize=-1", 400),
         ("/v1/search?timeRange=24h&page=0", 400),
-        ("/api/metrics/pseries?timeRange=24h&percentile=250", 500),
+        # percentile outside [0, 100]
+        ("/api/metrics/pseries?timeRange=24h&percentile=250", 400),
+        ("/api/metrics/pseries?timeRange=24h&percentile=-1", 400),
+        ("/api/metrics/search?timeRange=24h&percentile=-1", 400),
         # an inverted time range: relative, absolute, and on search
         ("/api/metrics/traces?timeRange=-5h", 400),
         ("/api/metrics/avg?start=2024-02-01T02:00:00Z&end=2024-02-01T01:00:00Z", 400),
@@ -121,6 +147,94 @@ def test_zero_length_range_answers_empty(api):
     at = "start=2024-02-01T01:00:00Z&end=2024-02-01T01:00:00Z"
     for route in (
         "/api/metrics/avg", "/v1/traces/heatmap", "/v1/search",
-        "/api/metrics/services",
+        "/api/metrics/services", "/api/metrics/traces", "/api/metrics/errors",
+        "/api/metrics/pseries", "/api/metrics/search",
     ):
         assert _get(api, f"{route}?{at}") == [], route
+
+
+def _detail_routes(api):
+    hit = _get(api, "/v1/search?timeRange=24h&pageSize=1")[0]
+    return [f"/v1/traces/{hit['trace_id']}", f"/v1/spans/{hit['span_id']}"]
+
+
+def _raw(api, path):
+    with urllib.request.urlopen(f"http://127.0.0.1:{api.port}{path}") as r:
+        return r.read().decode()
+
+
+def test_bodies_equal_the_route_dataframe_as_json(api):
+    """Encoding rows inside the plan changes no byte of any of the 16
+    bodies against the route DataFrame's own ``toJSON()``."""
+    routes = ROUTES + _detail_routes(api)
+    assert len(routes) == 16
+    for route in routes:
+        url = urllib.parse.urlparse(route)
+        q = {k: v[0] for k, v in urllib.parse.parse_qs(url.query).items()}
+        df = api._route(url.path, q)
+        want = "[" + ",".join(df.limit(MAX_ROWS).toJSON().collect()) + "]"
+        assert _raw(api, route) == want, route
+
+
+def test_route_jobs_and_stages(api, spark):
+    """A series route is one aggregation shuffle (2 jobs, at most 3
+    stages, none wider than the cached table's partitions plus the gap
+    rows' one); a sort route is one stage. Counts are read from the
+    status store around one sequential request."""
+    sc = spark.sparkContext
+    parts = api.spans.rdd.getNumPartitions()
+    trace_route = _detail_routes(api)[0]
+
+    def counts(route):
+        _raw(api, route)  # warm: the cache is filled, the plan compiled
+        before = engine_counts(sc)
+        _raw(api, route)
+        return engine_delta(before, engine_counts(sc))
+
+    for route in SERIES_ROUTES:
+        c = counts(route)
+        assert c["jobs"] <= 2 and c["stages"] <= 3, (route, c)
+        assert c["widest"] <= parts + 1, (route, c)
+    for route in SORT_ROUTES + [trace_route]:
+        c = counts(route)
+        assert c["jobs"] == 1 and c["stages"] == 1, (route, c)
+
+
+def test_series_fills_empty_edge_buckets_in_order(api):
+    """A range wider than the data on both sides: every bucket comes
+    back, in order, the empty ones zero; every span is counted in
+    ``n``, and ``n_errors`` counts the spans with an exception event."""
+    lo = int(datetime(2024, 1, 31, 22, tzinfo=timezone.utc).timestamp())
+    hi = int(datetime(2024, 2, 1, 5, tzinfo=timezone.utc).timestamp())
+    iv = interval_seconds(hi - lo)
+    rows = _get(
+        api, "/api/metrics/errors?start=2024-01-31T22:00:00Z&end=2024-02-01T05:00:00Z"
+    )
+    want = list(range(align_epoch(lo, iv), align_epoch(hi - 1, iv) + 1, iv))
+    assert [r["bucket_epoch"] for r in rows] == want
+    for r in (rows[0], rows[-1]):
+        assert r == {"bucket_epoch": r["bucket_epoch"], "p95_ms": 0.0,
+                     "n": 0, "avg_ms": 0.0, "n_errors": 0}
+    table = pq.read_table(SPANS, columns=["events"]).column("events").to_pylist()
+    assert sum(r["n"] for r in rows) == len(table)
+    assert sum(r["n_errors"] for r in rows) == sum(
+        any(e["name"] == "exception" for e in events or []) for events in table
+    )
+
+
+def test_series_counts_spans_without_a_duration(spark):
+    """``n`` counts spans, not durations: nulling the durations of one
+    service changes no bucket's count."""
+    lo = int(NOW.timestamp()) - 86400
+    hi = int(NOW.timestamp())
+    spans = spark.read.parquet(SPANS)
+    nulled = spans.withColumn(
+        "duration_ns",
+        F.when(F.col("scope_name") == "svc-db", F.lit(None)).otherwise(F.col("duration_ns")),
+    )
+    assert nulled.filter(F.col("duration_ns").isNull()).count() > 0
+    want = search_metric_series(spans, lo, hi).select("bucket_epoch", "n").collect()
+    got = search_metric_series(nulled, lo, hi).select("bucket_epoch", "n").collect()
+    assert got == want
+    assert sum(r.n for r in got) == spans.count()
+

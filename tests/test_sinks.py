@@ -9,6 +9,8 @@ from nabatshy_spark.sources.compact import compact
 from nabatshy_spark.sources.sink import append_spans, read_spans
 from nabatshy_spark.streaming.ingest import ingest_batch
 
+SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
+
 
 def test_jdbc_options_mapping():
     opts = jdbc_options("jdbc:clickhouse://ch:8123/otel", "denormalized_span", batchsize="500")
@@ -47,7 +49,7 @@ def test_idempotent_append_replay_is_noop(spark, tmp_path):
     land exactly once; a different batch_id appends."""
     from nabatshy_spark.sources.sink import idempotent_append
 
-    wide = spark.read.parquet("/root/repo/tests/data/spans.parquet").limit(30)
+    wide = spark.read.parquet(SPANS).limit(30)
     path = str(tmp_path / "eo_sink")
     assert idempotent_append(wide, path, 0) is True
     assert idempotent_append(wide, path, 0) is False  # replay -> no-op
@@ -64,7 +66,7 @@ def test_streaming_restart_with_idempotent_sink_exactly_once(spark, tmp_path):
 
     from nabatshy_spark.sources.sink import idempotent_append
 
-    wide = spark.read.parquet("/root/repo/tests/data/spans.parquet").limit(60)
+    wide = spark.read.parquet(SPANS).limit(60)
     # EXCEPT can't compare the map-typed attributes column; split on a
     # hash parity of the span id instead
     first = wide.filter(F.xxhash64("span_id") % 2 == 0)

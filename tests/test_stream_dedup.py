@@ -3,14 +3,18 @@ come out exactly once; state stays bounded by the watermark."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from nabatshy_spark.streaming.dedup import dedup_span_stream
 
+SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
+
 
 def test_stream_dedup_replayed_batch_once(spark, tmp_path):
     wide = (
-        spark.read.parquet("/root/repo/tests/data/spans.parquet")
+        spark.read.parquet(SPANS)
         .filter(F.col("parent_span_id") == "")
         .limit(40)
     )

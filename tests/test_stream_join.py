@@ -4,13 +4,17 @@ equivalent batch join."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from nabatshy_spark.streaming.joins import span_error_enrichment
 
+SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
+
 
 def _spans(spark):
-    return spark.read.parquet("/root/repo/tests/data/spans.parquet")
+    return spark.read.parquet(SPANS)
 
 
 def test_stream_interval_join_matches_batch(spark, tmp_path):

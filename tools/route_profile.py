@@ -1,0 +1,136 @@
+"""Per-route cost of the query API: wall time and the Spark jobs,
+stages and tasks each request runs.
+
+Usage:
+    python tools/route_profile.py SPANS_PATH
+
+Serves ``SPANS_PATH`` (a span table, e.g. ``tests/data/spans.parquet``
+or a ``tools/gen_spans_fixture.write_scaled`` table) through
+``TelemetryAPI`` on a ``get_spark`` session, whose core count is
+``$SPARK_GRAFT_CPUS``, with the routes' clock at NOW. Each of the 16
+routes gets one warm request, then REPS sequential timed requests.
+For the last one the status store is read before and after (it works
+with the UI off), so the counts are exactly that request's engine
+work. Prints one JSON
+object: route → ``{"ms_p50", "jobs", "stages", "tasks", "widest"}``
+(``widest``: the most tasks in one stage), plus the session's
+``cores``. Skipped stages are not counted.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import sys
+import time
+import urllib.request
+from datetime import datetime, timezone
+from urllib.parse import quote
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# the 16 routes (api/controller.go:380-397); {tid}, {sid} and {svc}
+# are bound to ids and a service taken from the table
+ROUTES = {
+    "traces_slowest": "/v1/traces/slowest?n=10",
+    "traces_service": "/v1/traces/service/{svc}",
+    "traces_endpoints": "/v1/traces/endpoints",
+    "traces_dependencies": "/v1/traces/dependencies",
+    "traces_heatmap": "/v1/traces/heatmap?timeRange=24h",
+    "traces_id": "/v1/traces/{tid}",
+    "spans_id": "/v1/spans/{sid}",
+    "search": "/v1/search?query=scope%3Dsvc-db&timeRange=24h&pageSize=20",
+    "metrics_traces": "/api/metrics/traces?timeRange=24h",
+    "metrics_avg": "/api/metrics/avg?timeRange=24h",
+    "metrics_errors": "/api/metrics/errors?timeRange=24h",
+    "metrics_pseries": "/api/metrics/pseries?timeRange=24h&percentile=99",
+    "metrics_search": "/api/metrics/search?query=scope%3Dsvc-api&timeRange=24h",
+    "metrics_services": "/api/metrics/services?timeRange=24h",
+    "metrics_endpoints": "/api/metrics/endpoints?timeRange=24h",
+    "services": "/api/services",
+}
+# tools/gen_spans_fixture.BASE_NS + 6 h: every table it writes starts there
+NOW = datetime(2024, 2, 1, 6, 0, 0, tzinfo=timezone.utc)
+REPS = 9
+
+
+def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str]]]:
+    """Job ids and stage id → (tasks, status) in the status store, once
+    the listener bus has delivered every event posted so far."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    empty = sc._jvm.java.util.ArrayList()
+    jobs = store.jobsList(empty)
+    job_ids = {jobs.apply(i).jobId() for i in range(jobs.size())}
+    quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    it = store.stageList(empty, False, False, quantiles, empty).iterator()
+    stages = {}
+    while it.hasNext():
+        s = it.next()
+        stages[s.stageId()] = (s.numTasks(), s.status().toString())
+    return job_ids, stages
+
+
+def engine_delta(before, after) -> dict[str, int]:
+    """Jobs, stages and tasks that ran between two ``engine_counts``,
+    and the task count of the widest stage."""
+    jobs = after[0] - before[0]
+    ran = [t for sid, (t, status) in after[1].items()
+           if sid not in before[1] and status != "SKIPPED"]
+    return {"jobs": len(jobs), "stages": len(ran), "tasks": sum(ran),
+            "widest": max(ran, default=0)}
+
+
+def route_urls(spans) -> dict[str, str]:
+    """Each route's path, bound to the table's first trace and span
+    (by id) and its first service."""
+    from pyspark.sql import functions as F
+
+    row = spans.select(F.min("trace_id"), F.min("scope_name")).first()
+    sid = spans.filter(F.col("trace_id") == row[0]).select(F.min("span_id")).first()[0]
+    binds = {"tid": quote(row[0], safe="=+"), "sid": quote(sid, safe="=+"), "svc": row[1]}
+    return {r: t.format(**binds) for r, t in ROUTES.items()}
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("spans_path")
+    args = ap.parse_args()
+
+    from nabatshy_spark.serving.api import TelemetryAPI
+    from nabatshy_spark.session import get_spark
+
+    spark = get_spark("route_profile")
+    sc = spark.sparkContext
+    api = TelemetryAPI(spark, args.spans_path, host="127.0.0.1", port=0, now=NOW)
+    api.spans.count()
+    api.start()
+    try:
+        out: dict = {"cores": sc.defaultParallelism, "routes": {}}
+        for route, path in route_urls(api.spans).items():
+            url = f"http://127.0.0.1:{api.port}{path}"
+
+            def get() -> float:
+                t = time.perf_counter()
+                with urllib.request.urlopen(url) as r:
+                    r.read()
+                return (time.perf_counter() - t) * 1e3
+
+            get()
+            times = [get() for _ in range(REPS - 1)]
+            before = engine_counts(sc)
+            times.append(get())
+            out["routes"][route] = {
+                "ms_p50": round(statistics.median(times), 1),
+                **engine_delta(before, engine_counts(sc)),
+            }
+    finally:
+        api.stop()
+    print(json.dumps(out, indent=1))
+
+
+if __name__ == "__main__":
+    main()
