@@ -39,8 +39,9 @@ def is_child() -> Column:
 def has_exception() -> Column:
     """F10: the span carries an event named 'exception'
     (api/service.go:808-820, 1255). ``events`` is
-    array<struct<time_unix_nano,name,attributes>>."""
-    return F.exists(F.col("events"), lambda e: e["name"] == F.lit("exception"))
+    array<struct<time_unix_nano,name,attributes>>. One SQL expression:
+    a Python lambda in ``F.exists`` costs ~25 more py4j round trips per use."""
+    return F.expr("exists(events, e -> e.name = 'exception')")
 
 
 def duration_ms() -> Column:

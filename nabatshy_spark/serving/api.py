@@ -228,6 +228,9 @@ class TelemetryAPI:
         return self
 
     def stop(self) -> None:
-        self._server.shutdown()
+        # shutdown() waits for the serve_forever loop, which only runs
+        # after start()
+        if self._thread.is_alive():
+            self._server.shutdown()
         self._server.server_close()
         self.spans.unpersist()

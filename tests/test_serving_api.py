@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 from nabatshy_spark.functions.timeutil import align_epoch, interval_seconds
 from nabatshy_spark.operators.spans import search_metric_series
 from nabatshy_spark.serving.api import MAX_ROWS, TelemetryAPI
+from nabatshy_spark.session import CODEGEN_CACHE_ENTRIES
 from tools.route_profile import engine_counts, engine_delta
 
 SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
@@ -238,3 +241,41 @@ def test_series_counts_spans_without_a_duration(spark):
     assert got == want
     assert sum(r.n for r in got) == spans.count()
 
+
+def test_session_sizes_the_codegen_cache(spark):
+    """The codegen cache size is a static conf: it is on the session's
+    SparkConf, set by ``get_spark``."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_cycled_routes_stay_compiled(api, spark):
+    """A dashboard cycles the 16 routes: once one cycle has compiled
+    their classes, the next compiles none (with Spark's default
+    100-entry cache each cycle evicts and recompiles ~80)."""
+    sc = spark.sparkContext
+    routes = ROUTES + _detail_routes(api)
+    assert len(routes) == 16
+    for route in routes:
+        _raw(api, route)
+    before = engine_counts(sc)
+    for route in routes:
+        _raw(api, route)
+    assert engine_delta(before, engine_counts(sc))["compiles"] == 0
+
+
+def test_stop_without_start_returns(spark, tmp_path):
+    """``stop()`` on an API that never started closes its socket and
+    releases its cache instead of waiting for a serve loop that never
+    ran. A copy of the fixture keeps its cache apart from the module's
+    API."""
+    path = str(tmp_path / "spans.parquet")
+    shutil.copy(SPANS, path)
+    a = TelemetryAPI(spark, path, host="127.0.0.1", port=0, now=NOW)
+    a.spans.count()
+    t = threading.Thread(target=a.stop, daemon=True)
+    t.start()
+    t.join(timeout=30)
+    assert not t.is_alive(), "stop() blocked"
+    assert a._server.socket.fileno() == -1
+    assert not a.spans.storageLevel.useMemory

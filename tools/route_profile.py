@@ -1,5 +1,5 @@
-"""Per-route cost of the query API: wall time and the Spark jobs,
-stages and tasks each request runs.
+"""Per-route cost of the query API: wall time, the Spark jobs, stages
+and tasks each request runs, and the classes it compiles.
 
 Usage:
     python tools/route_profile.py SPANS_PATH
@@ -7,14 +7,17 @@ Usage:
 Serves ``SPANS_PATH`` (a span table, e.g. ``tests/data/spans.parquet``
 or a ``tools/gen_spans_fixture.write_scaled`` table) through
 ``TelemetryAPI`` on a ``get_spark`` session, whose core count is
-``$SPARK_GRAFT_CPUS``, with the routes' clock at NOW. Each of the 16
-routes gets one warm request, then REPS sequential timed requests.
-For the last one the status store is read before and after (it works
-with the UI off), so the counts are exactly that request's engine
-work. Prints one JSON
-object: route → ``{"ms_p50", "jobs", "stages", "tasks", "widest"}``
-(``widest``: the most tasks in one stage), plus the session's
-``cores``. Skipped stages are not counted.
+``$SPARK_GRAFT_CPUS``, with the routes' clock at NOW. The 16 routes
+are requested round-robin, as a dashboard client sends them: one warm
+cycle, then REPS timed cycles, so a route's classes must survive the
+other 15 routes in Spark's codegen cache. Around each request of the
+last cycle the status store (it works with the UI off) and the codegen
+compile count are read, so the counts are exactly that request's
+engine work. Prints one JSON object: route → ``{"ms_p50", "jobs",
+"stages", "tasks", "widest", "compiles"}`` (``widest``: the most tasks
+in one stage; ``compiles``: classes compiled, 0 when every one came
+from the cache), plus the session's ``cores``. Skipped stages are not
+counted.
 """
 
 from __future__ import annotations
@@ -56,9 +59,10 @@ NOW = datetime(2024, 2, 1, 6, 0, 0, tzinfo=timezone.utc)
 REPS = 9
 
 
-def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str]]]:
+def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str]], int]:
     """Job ids and stage id → (tasks, status) in the status store, once
-    the listener bus has delivered every event posted so far."""
+    the listener bus has delivered every event posted so far, and the
+    number of classes the JVM's code generator has compiled."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -71,17 +75,18 @@ def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str]]]:
     while it.hasNext():
         s = it.next()
         stages[s.stageId()] = (s.numTasks(), s.status().toString())
-    return job_ids, stages
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return job_ids, stages, codegen.METRIC_COMPILATION_TIME().getCount()
 
 
 def engine_delta(before, after) -> dict[str, int]:
     """Jobs, stages and tasks that ran between two ``engine_counts``,
-    and the task count of the widest stage."""
+    the task count of the widest stage, and the classes compiled."""
     jobs = after[0] - before[0]
     ran = [t for sid, (t, status) in after[1].items()
            if sid not in before[1] and status != "SKIPPED"]
     return {"jobs": len(jobs), "stages": len(ran), "tasks": sum(ran),
-            "widest": max(ran, default=0)}
+            "widest": max(ran, default=0), "compiles": after[2] - before[2]}
 
 
 def route_urls(spans) -> dict[str, str]:
@@ -109,22 +114,27 @@ def main() -> None:
     api.spans.count()
     api.start()
     try:
+        urls = {r: f"http://127.0.0.1:{api.port}{p}"
+                for r, p in route_urls(api.spans).items()}
+
+        def get(url) -> float:
+            t = time.perf_counter()
+            with urllib.request.urlopen(url) as r:
+                r.read()
+            return (time.perf_counter() - t) * 1e3
+
+        for url in urls.values():
+            get(url)
+        times: dict[str, list[float]] = {r: [] for r in urls}
+        for _ in range(REPS - 1):
+            for route, url in urls.items():
+                times[route].append(get(url))
         out: dict = {"cores": sc.defaultParallelism, "routes": {}}
-        for route, path in route_urls(api.spans).items():
-            url = f"http://127.0.0.1:{api.port}{path}"
-
-            def get() -> float:
-                t = time.perf_counter()
-                with urllib.request.urlopen(url) as r:
-                    r.read()
-                return (time.perf_counter() - t) * 1e3
-
-            get()
-            times = [get() for _ in range(REPS - 1)]
+        for route, url in urls.items():
             before = engine_counts(sc)
-            times.append(get())
+            times[route].append(get(url))
             out["routes"][route] = {
-                "ms_p50": round(statistics.median(times), 1),
+                "ms_p50": round(statistics.median(times[route]), 1),
                 **engine_delta(before, engine_counts(sc)),
             }
     finally:
