@@ -16,7 +16,6 @@ Catalyst can push the bucket computation into whole-stage codegen:
 
 from __future__ import annotations
 
-import math
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame
@@ -110,8 +109,3 @@ def parse_time_range(
     if delta is None:
         raise ValueError(f"bad time range {time_range!r}")
     return now - delta, now
-
-
-def range_to_interval(start: datetime, end: datetime) -> int:
-    """Combined T6+T7 → interval width used by the metrics endpoints."""
-    return interval_seconds(math.floor((end - start).total_seconds()))

@@ -1820,100 +1820,3 @@ def shared_dup_char_vocab(spark, sf_dir: str, k: int = 20) -> DataFrame:
         "dup_vocab", table_path(sf_dir, "documents"), _DUP_VOCAB_VERSION, {"k": k}, _build
     )
     return spark.read.schema("__sh string").parquet(path)
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram-Jaccard pairs via PREFIX FILTERING (AllPairs,
-    Bayardo et al. WWW'07; PPJoin, Xiao et al. WWW'08) — same output
-    contract as :func:`ngram_jaccard_pairs`, far fewer candidates.
-
-    Order every document's shingles by a global rarity order (df asc,
-    shingle asc); a pair with Jaccard ≥ t MUST share a shingle inside
-    each side's first ``|d| − ⌈t·|d|⌉ + 1`` shingles (if it shared
-    only later ones, the intersection couldn't reach t·|d| on either
-    side). Candidate generation therefore joins only the PREFIX
-    postings — Σ prefix-df² instead of Σ df² — and verification
-    computes exact Jaccard from the full shingle arrays of the
-    surviving candidates only.
-
-    ``max_df`` drops shingles with df > cap from the prefix index.
-    CAUTION — the capped miss condition here is STRICTLY WEAKER in
-    recall than :func:`ngram_jaccard_pairs` with the same cap: this
-    operator misses a pair whenever every shingle it shares INSIDE the
-    required prefixes is hot, while the posting-join operator verifies
-    hot-slack candidates against full shingle arrays and so misses a
-    pair only when EVERY shared shingle (anywhere) is hot. Rarity
-    ordering pushes hot shingles to the back of each document, so
-    prefixes are mostly rare shingles and the gap is small in
-    practice, but it is real: the capped prefix variant can drop pairs
-    the capped posting join keeps. (Dropping hot shingles before vs.
-    after the per-doc rank is equivalent under the df-asc order — hot
-    shingles sort last either way — so the only full fix would be a
-    posting-style hot-slack verify, which would forfeit the prefix
-    filter's candidate bound. Use max_df=None for exact parity.)
-
-    Scale shape: attach df (one shuffle on shingle, linear), per-doc
-    rank window (one shuffle on id, linear), prefix self-join
-    (Σ prefix-df², the whole point), then an array_intersect verify
-    over candidate pairs only. No global rank relation is ever
-    materialized — the total order is the (df, shingle) tuple itself,
-    so nothing sorts on one task.
-    """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        df.repartition(parallelism, id_col)
-        .select(F.col(id_col), shingles(F.col(text_col), n).alias("__sh"))
-        .localCheckpoint(eager=False)  # read by sizes, postings and verify
-    )
-    sizes = sh.select(F.col(id_col), F.size("__sh").alias("__sz"))
-    ex = sh.select(F.col(id_col), F.explode("__sh").alias("__s"))
-    dfreq = ex.groupBy("__s").agg(F.count("*").alias("__df"))
-    if max_df is not None:
-        dfreq = dfreq.filter(F.col("__df") <= max_df)
-    posted = ex.join(dfreq, "__s")  # hot shingles drop out of the index here
-    w_doc = Window.partitionBy(id_col).orderBy("__df", "__s")
-    pref = (
-        posted.withColumn("__rn", F.row_number().over(w_doc))
-        .join(sizes, id_col)
-        .filter(
-            F.col("__rn")
-            <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
-        )
-        .select(F.col(id_col), "__s")
-    )
-    a = pref.select(F.col(id_col).alias("doc_a"), "__s")
-    b = pref.select(F.col(id_col).alias("doc_b"), "__s")
-    cand = (
-        a.join(b, "__s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    withsets = cand.join(
-        sh.select(F.col(id_col).alias("doc_a"), F.col("__sh").alias("__sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col(id_col).alias("doc_b"), F.col("__sh").alias("__sh_b")),
-        "doc_b",
-    )
-    i = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    return (
-        withsets.withColumn("__i", i)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("__i")
-                / (F.size("__sh_a") + F.size("__sh_b") - F.col("__i")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )

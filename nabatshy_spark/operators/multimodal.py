@@ -5,7 +5,7 @@ The Spark-side plumbing — schema, Arrow-batched ``mapInPandas``
 transform, partitioning — is real and tested, and so are the codecs
 this container can support without external libraries: PNG decode/
 encode/resize (pure-stdlib zlib codec, operators/pngcodec.py), WAV
-audio decode + resample (stdlib ``wave``), and keyframe-array video
+audio decode (stdlib ``wave``), and keyframe-array video
 sampling over PNG frames. Formats needing native codecs (JPEG, H.264)
 raise ``NotImplementedError`` into per-row ``decode_error`` slots —
 a production deployment swaps libjpeg/ffmpeg into ``decode_image`` /
@@ -201,40 +201,6 @@ def audio_features(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(batches, schema=AUDIO_SCHEMA)
-
-
-def resample_audio(df: DataFrame, target_rate: int) -> DataFrame:
-    """Binary-in → binary-out resample (nearest-neighbor index map —
-    the stand-in for a windowed-sinc kernel, which swaps in at the same
-    line). Returns (doc_id, payload) with re-encoded WAV at
-    ``target_rate``; the batch shape is the real pipeline's."""
-    import io
-    import wave
-
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, outs = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, nch, s = decode_audio(payload)
-                frames = s.reshape(-1, nch)
-                n_out = max(1, int(round(len(frames) * target_rate / rate)))
-                idx = np.minimum(
-                    (np.arange(n_out) * rate / target_rate).astype("int64"),
-                    len(frames) - 1,
-                )
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(nch)
-                    w.setsampwidth(2)
-                    w.setframerate(target_rate)
-                    w.writeframes(frames[idx].astype("<i2").tobytes())
-                ids.append(doc_id)
-                outs.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": ids, "payload": outs})
-
-    return df.mapInPandas(batches, schema="doc_id long, payload binary")
 
 
 # ---------------------------------------------------------------------------
@@ -467,15 +433,11 @@ DHASH_SCHEMA = "doc_id long, dhash string, decode_error string"
 
 
 def dhash_hex(payload: bytes) -> str:
-    """THE per-payload dHash definition — decode, grayscale,
-    nearest-resize to 9×8, one bit per horizontal adjacent-pixel
-    comparison (64 bits), hex-encoded. Both the batch operator
-    (:func:`image_dhash`) and the streaming twin
-    (streaming/dedup.perceptual_dedup_stream) MUST hash through this
-    single function: stream↔batch dedup equivalence rests on bit-exact
-    hash parity, so any resize/grayscale/width change happens here
-    once, never in a divergent copy. Raises on undecodable payloads —
-    callers own their poison-row policy."""
+    """The per-payload dHash that :func:`image_dhash` maps over its
+    batches: decode, grayscale, nearest-resize to 9×8, one bit per
+    horizontal adjacent-pixel comparison (64 bits), hex-encoded.
+    Raises on undecodable payloads; callers own their poison-row
+    policy."""
     import numpy as np
 
     from nabatshy_spark.operators.pngcodec import Image, resize_nearest

@@ -9,17 +9,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# a session ends after this long without an event from its user
+GAP_MINUTES = 30
+
 
 def sessionize(
     df: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    gap_minutes: int = 30,
 ) -> DataFrame:
     """Assign session ids: a new session starts when the gap since the
-    user's previous event exceeds ``gap_minutes`` (lag + running sum —
-    the classic batch sessionization; the streaming twin is
-    ``F.session_window``).
+    user's previous event exceeds ``GAP_MINUTES`` (lag + running sum —
+    the classic batch sessionization).
 
     One shuffle on user_id; both window functions share the same
     partitioning and ordering, so Catalyst plans a single sort+exchange.
@@ -29,7 +30,7 @@ def sessionize(
         F.lag(ts_col).over(w)
     )
     new_session = F.when(
-        gap.isNull() | (gap > gap_minutes * 60), 1
+        gap.isNull() | (gap > GAP_MINUTES * 60), 1
     ).otherwise(0)
     return df.withColumn(
         "session_seq",
@@ -37,12 +38,9 @@ def sessionize(
     )
 
 
-def session_stats(
-    df: DataFrame,
-    gap_minutes: int = 30,
-) -> DataFrame:
+def session_stats(df: DataFrame) -> DataFrame:
     """Per-session rollup: event count, start/end, duration seconds."""
-    s = sessionize(df, "user_id", "ts", gap_minutes)
+    s = sessionize(df, "user_id", "ts")
     return s.groupBy(F.col("user_id"), F.col("session_seq")).agg(
         F.count("*").alias("n_events"),
         F.min("ts").alias("session_start"),

@@ -66,9 +66,12 @@ def _percentile(q: dict[str, str]) -> float:
 
 
 def _rfc3339(s: str) -> datetime:
-    return datetime.fromisoformat(s.replace("Z", "+00:00")).astimezone(
-        timezone.utc
-    )
+    t = datetime.fromisoformat(s.replace("Z", "+00:00"))
+    # RFC 3339 requires an offset; a naive value would be read in the
+    # server's local time zone
+    if t.tzinfo is None:
+        raise ValueError(f"{s!r} has no UTC offset")
+    return t.astimezone(timezone.utc)
 
 
 class TelemetryAPI:

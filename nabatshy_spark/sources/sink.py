@@ -124,30 +124,3 @@ def idempotent_append(df: DataFrame, path: str, batch_id: int) -> bool:
         shutil.rmtree(staging, ignore_errors=True)  # lost a concurrent race
         return False
     return True
-
-
-def backfill_hours(df: DataFrame, path: str, hours: list[str]) -> None:
-    """Recompute specific hour partitions in place — the operational
-    backfill a 100 TB table needs when late/corrected data arrives for
-    a window (the reference re-inserts and relies on MergeTree
-    collapse; here the partition IS the replacement unit).
-
-    Dynamic partition overwrite (`partitionOverwriteMode=dynamic`)
-    replaces ONLY the hour directories present in ``df`` — every other
-    partition is untouched, so concurrent readers of other hours are
-    unaffected and a re-run of the same backfill is idempotent. The
-    ``hours`` list is asserted against the batch to prevent a mis-built
-    frame from silently clobbering extra partitions.
-    """
-    batch = with_partition_col(df)
-    found = {r[0] for r in batch.select(PARTITION_COL).distinct().collect()}
-    extra = found - set(hours)
-    if extra:
-        raise ValueError(f"backfill batch contains undeclared hours: {sorted(extra)}")
-    (
-        batch.sortWithinPartitions("start_time_unix_nano", "trace_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PARTITION_COL)
-        .parquet(path)
-    )

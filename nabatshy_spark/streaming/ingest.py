@@ -4,8 +4,7 @@ The reference's collector is a continuous push pipeline: each POST to
 :4318 becomes one batch insert (collector/service.go:176, main.go:29).
 The Spark mapping is a micro-batch stream:
 
-    readStream (files of OTLP JSON documents or protobuf requests;
-                Kafka in production)
+    readStream (files of OTLP JSON documents or protobuf requests)
       → parse_otlp_json / parse_otlp_protobuf (the batch decoder —
         one code path, sources/otlp.py)
       → foreachBatch append to the partitioned span table
@@ -18,12 +17,10 @@ functions ship this package to them, so ingest does not depend on the
 driver's working directory.
 
 Semantics matched to the reference: at-least-once, no dedup (replayed
-payloads duplicate rows in ClickHouse too), no watermarks — all
-windowing stays query-time (T1–T5). ``foreachBatch`` keeps the sink
-pluggable: the same function body can `.write.format("jdbc")` into
-ClickHouse per BASELINE's spark_approach, with parquet as the test
-sink. Both file streams may append to one table path:
-``append_spans`` serializes appends to a path within the process.
+payloads duplicate rows in ClickHouse too), no watermarks and no
+streaming state — all windowing stays query-time (T1–T5). Both file
+streams may append to one table path: ``append_spans`` serializes
+appends to a path within the process.
 """
 
 from __future__ import annotations
@@ -34,7 +31,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from nabatshy_spark.sources.otlp import parse_otlp_json
 from nabatshy_spark.sources.sink import append_spans
-from nabatshy_spark.streaming.dedup import dedup_span_stream
 
 RAW_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
 
@@ -60,69 +56,33 @@ def start_file_ingest(
     input_dir: str,
     output_path: str,
     checkpoint_dir: str,
-    dedupe_watermark: str | None = None,
     trigger_interval: str | None = None,
     sink_fn=None,
 ) -> StreamingQuery:
     """Stream OTLP JSON documents (one per line, text files) into the
     partitioned span table.
 
-    Default semantics are the reference's: at-least-once, no dedup
+    The semantics are the reference's: at-least-once, no dedup
     (replayed POSTs duplicate rows in ClickHouse too, SURVEY §2.9).
-    Pass ``dedupe_watermark`` (e.g. ``"10 minutes"``) to upgrade to
-    stateful dedup on (trace_id, span_id) within the event-time
-    watermark — duplicates arriving inside the window are dropped
-    exactly once; state is bounded by the watermark.
 
-    ``sink_fn`` swaps the per-batch writer: the default appends to the
-    hour-partitioned parquet table; pass e.g.
-    ``lambda b: clickhouse.insert_http(b, url)`` for the reference's
-    Structured-Streaming-to-ClickHouse shape (BASELINE spark_approach;
-    exercised end-to-end against a wire mock in tests/test_sinks.py).
-    Retries of a failed batch re-run the whole sink_fn — the same
-    at-least-once contract as the parquet spool. A TWO-argument
-    ``sink_fn(batch, epoch_id)`` also receives the micro-batch id —
-    the hook an exactly-once sink needs (``lambda b, i:
-    idempotent_append(b, out, i)``): Structured Streaming replays an
-    uncommitted batch with the SAME id after a crash, so an
-    id-keyed idempotent write turns at-least-once replay into
-    exactly-once delivery (proven under a real mid-batch SIGKILL in
-    tests/test_stream_crash_recovery.py).
+    ``sink_fn(batch, epoch_id)`` swaps the per-batch writer for the
+    default append to the hour-partitioned parquet table. It receives
+    the parsed batch and the micro-batch id, the hook an exactly-once
+    sink needs (``lambda b, i: idempotent_append(b, out, i)``):
+    Structured Streaming replays an uncommitted batch with the SAME id
+    after a crash, so an id-keyed idempotent write turns at-least-once
+    replay into exactly-once delivery (proven under a real mid-batch
+    SIGKILL in tests/test_stream_crash_recovery.py).
     """
-    import inspect
-
     raw = spark.readStream.schema(RAW_SCHEMA).text(input_dir)
     write = sink_fn if sink_fn is not None else (
-        lambda b: append_spans(b, output_path)
+        lambda b, _: append_spans(b, output_path)
     )
-    # Count only REQUIRED positional parameters: a one-batch sink with
-    # a defaulted config arg (lambda b, path=OUT: ...) must NOT have
-    # the epoch id silently injected into its default slot, and
-    # non-introspectable callables keep the legacy one-arg contract.
-    try:
-        _req = [
-            p
-            for p in inspect.signature(write).parameters.values()
-            if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-            and p.default is p.empty
-        ]
-        wants_epoch = len(_req) >= 2
-    except (TypeError, ValueError):
-        wants_epoch = False
 
-    if dedupe_watermark is None:
-        def sink(batch: DataFrame, epoch_id: int) -> None:
-            parsed = parse_otlp_json(batch, "value")
-            write(parsed, epoch_id) if wants_epoch else write(parsed)
+    def sink(batch: DataFrame, epoch_id: int) -> None:
+        write(parse_otlp_json(batch, "value"), epoch_id)
 
-        stream = raw
-    else:
-        stream = dedup_span_stream(parse_otlp_json(raw, "value"), dedupe_watermark)
-
-        def sink(batch: DataFrame, epoch_id: int) -> None:
-            write(batch, epoch_id) if wants_epoch else write(batch)
-
-    return _start_batches(stream, sink, checkpoint_dir, trigger_interval)
+    return _start_batches(raw, sink, checkpoint_dir, trigger_interval)
 
 
 def ingest_batch(spark: SparkSession, json_docs: list[str]) -> DataFrame:

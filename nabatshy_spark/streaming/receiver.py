@@ -15,9 +15,7 @@ run a socket server inside executors, so the faithful decomposition is
 which preserves the reference's semantics — at-least-once, no dedup,
 one POST body = one ingest unit — while making the receive path durable
 (a POST is ack'd only after its payload is on disk, which is *stronger*
-than the reference's ack-after-insert-started). At production scale the
-spool directory is a Kafka topic and the file source a Kafka source;
-the receiver and every downstream transform are unchanged.
+than the reference's ack-after-insert-started).
 
 Content negotiation matches collector/controller.go:43-78 exactly:
 ``application/x-protobuf`` (S2 wire decode), ``application/json``
@@ -158,68 +156,3 @@ def start_collector(
         ),
     ]
     return rcv, queries
-
-
-# ---------------------------------------------------------------------------
-# Kafka spool slot — the production form of the spool directory.
-#
-# At scale the spool directory above IS a Kafka topic: the receiver
-# produces one record per POST body and the Structured Streaming file
-# source becomes ``readStream.format("kafka")``. No broker ships in
-# this container, so (mirroring the ClickHouse JDBC approach in
-# sources/clickhouse.py) the production path is typed, unit-tested
-# OPTION-MAP code rather than prose; point it at a broker and the
-# downstream parse/denormalize plan is unchanged — parse_otlp_json
-# consumes the record ``value`` exactly as it consumes a spooled line.
-# ---------------------------------------------------------------------------
-
-KAFKA_DEFAULT_OPTIONS = {
-    # at-least-once from the earliest unprocessed offset — the same
-    # contract as the file spool (checkpointed offsets, no dedup;
-    # collector/controller.go ack semantics).
-    "startingOffsets": "earliest",
-    # a poisoned topic-retention gap should FAIL the query loudly, not
-    # silently skip data (the file-spool analogue of a deleted spool
-    # file mid-read).
-    "failOnDataLoss": "true",
-    # one POST body can carry many spans; cap the per-trigger intake so
-    # micro-batches stay memory-bounded however deep the backlog.
-    "maxOffsetsPerTrigger": "100000",
-    "kafka.compression.type": "lz4",  # wire parity with db/clickhouse.go:24-25
-}
-
-
-def kafka_source_options(
-    bootstrap_servers: str, topic: str, **overrides: str
-) -> dict[str, str]:
-    """Build the ``readStream.format('kafka')`` option map for the
-    OTLP spool topic. Overrides win (e.g. startingOffsets='latest'
-    for a tap that only wants new traffic)."""
-    opts = dict(KAFKA_DEFAULT_OPTIONS)
-    opts.update(
-        {
-            "kafka.bootstrap.servers": bootstrap_servers,
-            "subscribe": topic,
-        }
-    )
-    opts.update(overrides)
-    return opts
-
-
-def kafka_spool_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str = "otlp-spans",
-    **overrides: str,
-):
-    """``readStream`` over the OTLP Kafka spool topic, projected to the
-    (value, timestamp) shape streaming/ingest.py's JSON parser expects.
-    Requires the spark-sql-kafka package on the session classpath;
-    raises Spark's data-source-not-found error otherwise (no silent
-    fallback — the caller chose this source)."""
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_source_options(bootstrap_servers, topic, **overrides).items():
-        reader = reader.option(k, v)
-    return reader.load().selectExpr(
-        "CAST(value AS STRING) AS line", "timestamp AS ingest_ts"
-    )

@@ -204,24 +204,6 @@ def test_dead_letter_split(spark):
     assert "{this is not json" in bad_rows
 
 
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """With dedupe_watermark set, replaying the same payload within one
-    stream run must NOT duplicate spans (contrast with the default
-    at-least-once behavior tested above)."""
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    (tmp_path / "in").mkdir()
-    # same payload twice in the same micro-batch window
-    (tmp_path / "in" / "a.jsonl").write_text(_payload() + "\n")
-    (tmp_path / "in" / "b.jsonl").write_text(_payload() + "\n")
-    q = start_file_ingest(
-        spark, in_dir, out_dir, str(tmp_path / "ck"), dedupe_watermark="10 minutes"
-    )
-    q.awaitTermination(120)
-    spans = read_spans(spark, out_dir)
-    assert spans.count() == 4                     # not 8
-    assert spans.select("span_id").distinct().count() == 4
-
-
 def test_anyvalue_reference_semantics(spark):
     """Exact extractAttributes parity (collector/service.go:184-258):
     stringified array elements, dropped empty extractions, unset keys,

@@ -408,48 +408,6 @@ def test_abc_classes_partition_and_share(spark, sf_dir):
     assert rows["A"].revenue_share_pct > rows["B"].revenue_share_pct > rows["C"].revenue_share_pct
 
 
-def test_prefix_filter_jaccard_subset_of_posting_join(spark, sf_dir):
-    """With a df cap the prefix-filtered operator's recall is strictly
-    weaker (it misses a pair when all its prefix-shared shingles are
-    hot; the posting join misses only when ALL shared shingles are
-    hot), so the differential contract is CONTAINMENT, not equality:
-    capped-prefix ⊆ capped-posting, with identical jaccard values on
-    the common pairs. Exact equality with no cap is asserted by
-    test_prefix_filter_jaccard_no_cap_matches."""
-    from nabatshy_spark.operators import dedup
-
-    docs = load(spark, sf_dir, "documents")
-    old = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", 3, 0.5, 200
-        ).collect()
-    }
-    new = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs_prefix(
-            docs, "doc_id", "text", 3, 0.5, 200
-        ).collect()
-    }
-    assert set(new) <= set(old) and len(new) > 0
-    assert all(old[k] == v for k, v in new.items())
-
-
-def test_prefix_filter_jaccard_no_cap_matches(spark, sf_dir):
-    from nabatshy_spark.operators import dedup
-
-    docs = load(spark, sf_dir, "documents").limit(150)
-    old = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.3).collect()
-    )
-    new = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs_prefix(docs, "doc_id", "text", 3, 0.3).collect()
-    )
-    assert old == new
-
-
 def test_psi_baseline_year_is_zero_and_nonnegative(spark, sf_dir):
     rows = QUERIES["psi_order_value_drift"](spark, sf_dir).collect()
     assert rows[0].psi == 0.0  # baseline vs itself

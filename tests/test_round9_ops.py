@@ -337,46 +337,6 @@ def test_cross_corpus_probe_prunes_before_shuffle(spark):
     assert out.count() == 0  # nothing shared → nothing emitted
 
 
-def test_sink_epoch_dispatch_by_required_args(spark, tmp_path):
-    """Epoch-id injection keys on REQUIRED positional arity: a sink
-    with a defaulted second parameter keeps the one-arg contract (the
-    batch id must never land in a config slot), while a two-required-
-    arg sink receives the epoch id."""
-    import json
-    import os
-
-    from nabatshy_spark.streaming.ingest import start_file_ingest
-    from tests.test_otlp_ingest import _payload
-
-    spool = tmp_path / "spool"
-    spool.mkdir()
-    (spool / "req-0.jsonl").write_text(
-        json.dumps(json.loads(_payload()), separators=(",", ":")) + "\n"
-    )
-    seen = {}
-
-    def one_arg_with_default(batch, flag="default-untouched"):
-        seen["one"] = (batch.count(), flag)
-
-    q = start_file_ingest(
-        spark, str(spool), str(tmp_path / "o1"), str(tmp_path / "c1"),
-        sink_fn=one_arg_with_default,
-    )
-    q.awaitTermination(60)
-    assert seen["one"][0] > 0
-    assert seen["one"][1] == "default-untouched"  # pre-fix: epoch id 0
-
-    def two_required(batch, epoch_id):
-        seen["two"] = (batch.count(), epoch_id)
-
-    q = start_file_ingest(
-        spark, str(spool), str(tmp_path / "o2"), str(tmp_path / "c2"),
-        sink_fn=two_required,
-    )
-    q.awaitTermination(60)
-    assert seen["two"] == (seen["one"][0], 0)
-
-
 def test_window_hash_postings_chunked_identical_to_naive(spark):
     """The chunked two-step explode (per-row memory O(chunk), ADVICE
     r9) must emit exactly the naive per-position window relation —

@@ -134,6 +134,8 @@ def test_error_codes(api):
         ("/api/metrics/traces?timeRange=-5h", 400),
         ("/api/metrics/avg?start=2024-02-01T02:00:00Z&end=2024-02-01T01:00:00Z", 400),
         ("/v1/search?timeRange=-2h", 400),
+        # RFC 3339 times carry an offset
+        ("/api/metrics/avg?start=2024-02-01T01:00:00&end=2024-02-01T02:00:00Z", 400),
         # row counts past Spark's 32-bit LIMIT/OFFSET
         ("/v1/traces/slowest?n=99999999999", 400),
         ("/v1/search?timeRange=24h&pageSize=99999999999", 400),

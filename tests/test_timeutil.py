@@ -10,7 +10,6 @@ from nabatshy_spark.functions.timeutil import (
     align_epoch,
     interval_seconds,
     parse_time_range,
-    range_to_interval,
 )
 
 
@@ -52,5 +51,14 @@ def test_parse_bad_unit_raises():
 
 
 def test_range_to_interval():
+    """A requested range maps to its bucket width the way the series
+    routes compute it: ``interval_seconds`` over the range's epoch
+    seconds."""
     start = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    assert range_to_interval(start, start + timedelta(minutes=15)) == 60
+    for span, width in [
+        (timedelta(minutes=15), 60),
+        (timedelta(hours=24), 5760),
+        (timedelta(seconds=10), 1),
+    ]:
+        end = start + span
+        assert interval_seconds(int(end.timestamp()) - int(start.timestamp())) == width
