@@ -14,16 +14,22 @@ Param semantics mirror api/controller.go: ``n`` (slowest), ``query`` /
 functions/timeutil.parse_time_range), ``percentile`` for pseries and
 search metrics.
 
-Serving note for scale: each request runs an interactive Spark job on a
-cached spans table; a production deployment fronts this with Spark
-Connect or a thrift/JDBC gateway, but the route → plan mapping is
-exactly this module.
+Serving note for scale: each request runs interactive Spark jobs on a
+cached spans table. The cache holds the table in one partition per
+``spark.sql.autoBroadcastJoinThreshold`` of its size estimate, so a
+table under the threshold is one ``SinglePartition`` and every request
+is one job of one task, with no exchange; a larger table keeps several
+partitions (never more than its scan's) and its routes shuffle as
+before. A production deployment fronts this with Spark Connect or a
+thrift/JDBC gateway, but the route → plan mapping is exactly this
+module.
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import math
 import threading
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -38,6 +44,8 @@ from nabatshy_spark.operators import spans as S
 MAX_ROWS = 10_000  # serving cap: an API response is not a bulk export
 # Spark's row counts (LIMIT, OFFSET and their sum) are 32-bit ints
 MAX_INT = 2**31 - 1
+# the latest second whose epoch nanoseconds fit Spark's 64-bit long
+MAX_EPOCH_S = (2**63 - 1) // 1_000_000_000
 log = logging.getLogger(__name__)
 
 
@@ -74,6 +82,23 @@ def _rfc3339(s: str) -> datetime:
     return t.astimezone(timezone.utc)
 
 
+def _served_partitions(scan: DataFrame) -> DataFrame:
+    """``scan`` in as few partitions as Spark would broadcast whole:
+    one per ``spark.sql.autoBroadcastJoinThreshold`` of the planner's
+    size estimate (the number its broadcast decision reads). A table
+    under the threshold becomes one partition, which reports
+    ``SinglePartition``: that meets every distribution an aggregate,
+    join, distinct or sort requires, so no route plans an exchange and
+    each request is one job of one task. With the threshold disabled
+    (at most 0) the scan's own partitions stay."""
+    threshold = scan.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold <= 0:
+        return scan
+    size = scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    # coalesce never adds partitions: a larger n keeps the scan's count
+    return scan.coalesce(max(1, math.ceil(size / threshold)))
+
+
 class TelemetryAPI:
     """The 16-route query API over a spans DataFrame."""
 
@@ -88,7 +113,7 @@ class TelemetryAPI:
         self.spark = spark
         # cached: every route re-reads this table; the cache holds the
         # columnar batches, not per-request copies
-        self.spans = spark.read.parquet(spans_path).cache()
+        self.spans = _served_partitions(spark.read.parquet(spans_path)).cache()
         self._now = now  # fixed clock for deterministic tests
         api = self
 
@@ -111,8 +136,11 @@ class TelemetryAPI:
                     self.send_error(404)
                     return
                 except ValueError as e:
-                    self.send_error(400, str(e))
-                    return
+                    # the message goes in the body: it can echo a
+                    # parameter, which a Latin-1 reason phrase cannot
+                    # always carry
+                    body = json.dumps({"error": str(e)})
+                    status = 400
                 except Exception as e:
                     # a failed plan or job answers 500 instead of
                     # dropping the connection
@@ -141,12 +169,20 @@ class TelemetryAPI:
         try:
             start = _rfc3339(q["start"]) if "start" in q else None
             end = _rfc3339(q["end"]) if "end" in q else None
-        except ValueError as e:
+        except (ValueError, OverflowError) as e:
             raise ValueError(f"invalid start/end: {e}") from None
-        lo, hi = parse_time_range(q.get("timeRange"), start, end, now=self._now)
+        outside = "time range reaches outside the span table's dates (1677-2262)"
+        try:
+            lo, hi = parse_time_range(q.get("timeRange"), start, end, now=self._now)
+        except OverflowError:
+            raise ValueError(outside) from None
         if lo > hi:
             raise ValueError("time range starts after it ends")
-        return int(lo.timestamp()), int(hi.timestamp())
+        lo_s, hi_s = int(lo.timestamp()), int(hi.timestamp())
+        # the routes compare epoch nanoseconds, which Spark holds in longs
+        if lo_s < -MAX_EPOCH_S or hi_s > MAX_EPOCH_S:
+            raise ValueError(outside)
+        return lo_s, hi_s
 
     def _route(self, path: str, q: dict[str, str]) -> DataFrame:
         df = self.spans

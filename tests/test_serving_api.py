@@ -25,6 +25,7 @@ from tools.route_profile import engine_counts, engine_delta
 
 SPANS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "spans.parquet")
 NOW = datetime(2024, 2, 1, 6, 0, 0, tzinfo=timezone.utc)  # fixture day
+NON_LATIN1 = urllib.parse.quote("日")
 
 ROUTES = [
     "/v1/traces/slowest?n=5",
@@ -140,10 +141,24 @@ def test_error_codes(api):
         ("/v1/traces/slowest?n=99999999999", 400),
         ("/v1/search?timeRange=24h&pageSize=99999999999", 400),
         ("/v1/search?timeRange=24h&page=107374183&pageSize=20", 400),
+        # messages that echo a non-Latin-1 parameter
+        (f"/api/metrics/avg?start={NON_LATIN1}&end=2024-02-01T02:00:00Z", 400),
+        (f"/api/metrics/avg?timeRange={NON_LATIN1}h", 400),
+        (f"/v1/search?timeRange=24h&sortField={NON_LATIN1}", 400),
+        # times outside the dates Python represents
+        ("/api/metrics/avg?timeRange=1000000d", 400),
+        ("/api/metrics/avg?timeRange=10000000000s", 400),
+        ("/api/metrics/avg?start=0001-01-01T00:00:00%2B14:00&end=2024-02-01T02:00:00Z", 400),
+        # epoch nanoseconds past a 64-bit long, relative and absolute
+        ("/v1/search?timeRange=700000d", 400),
+        ("/api/metrics/endpoints?start=2024-02-01T00:00:00Z&end=9999-12-31T23:59:59Z", 400),
     ]:
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(api, path)
-        assert e.value.code == code
+        assert e.value.code == code, path
+        if code == 400:
+            assert e.value.headers["Content-Type"] == "application/json"
+            assert json.load(e.value)["error"], path
 
 
 def test_zero_length_range_answers_empty(api):
@@ -182,27 +197,59 @@ def test_bodies_equal_the_route_dataframe_as_json(api):
 
 
 def test_route_jobs_and_stages(api, spark):
-    """A series route is one aggregation shuffle (2 jobs, at most 3
-    stages, none wider than the cached table's partitions plus the gap
-    rows' one); a sort route is one stage. Counts are read from the
-    status store around one sequential request."""
+    """The fixture is served from one partition, so no route plans an
+    exchange: every series, sort, trace-id and span-id request is one
+    job of one stage and one task, and shuffles nothing. Counts are
+    read from the status store around one sequential request."""
     sc = spark.sparkContext
-    parts = api.spans.rdd.getNumPartitions()
-    trace_route = _detail_routes(api)[0]
+    assert api.spans.rdd.getNumPartitions() == 1
+    one = {"jobs": 1, "stages": 1, "tasks": 1, "widest": 1, "shuffle_bytes": 0}
 
     def counts(route):
         _raw(api, route)  # warm: the cache is filled, the plan compiled
         before = engine_counts(sc)
         _raw(api, route)
-        return engine_delta(before, engine_counts(sc))
+        c = engine_delta(before, engine_counts(sc))
+        return {k: c[k] for k in one}
 
-    for route in SERIES_ROUTES:
-        c = counts(route)
-        assert c["jobs"] <= 2 and c["stages"] <= 3, (route, c)
-        assert c["widest"] <= parts + 1, (route, c)
-    for route in SORT_ROUTES + [trace_route]:
-        c = counts(route)
-        assert c["jobs"] == 1 and c["stages"] == 1, (route, c)
+    for route in SERIES_ROUTES + SORT_ROUTES + _detail_routes(api):
+        assert counts(route) == one, route
+
+
+def _split_fixture(tmp_path, files: int) -> str:
+    """The fixture rewritten as ``files`` parquet files."""
+    table = pq.read_table(SPANS)
+    out = tmp_path / "spans"
+    out.mkdir()
+    step = -(-table.num_rows // files)
+    for i in range(files):
+        pq.write_table(table.slice(i * step, step), str(out / f"part-{i}.parquet"))
+    return str(out)
+
+
+def test_table_above_the_broadcast_threshold_keeps_partitions(spark, tmp_path):
+    """The served table holds one partition per
+    ``spark.sql.autoBroadcastJoinThreshold`` of the scan's size
+    estimate, never more than the scan's own: a 4-file table just under
+    twice the threshold is served from 2 partitions, and from its 4
+    scan partitions with the threshold disabled."""
+    path = _split_fixture(tmp_path, 4)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 4
+    size = scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for threshold, want in [(size // 2 + 1, 2), (-1, 4)]:
+            spark.conf.set(key, str(threshold))
+            a = TelemetryAPI(spark, path, host="127.0.0.1", port=0, now=NOW)
+            try:
+                assert a.spans.rdd.getNumPartitions() == want, threshold
+                assert a.spans.count() == scan.count()
+            finally:
+                a.stop()
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_series_fills_empty_edge_buckets_in_order(api):

@@ -14,10 +14,13 @@ other 15 routes in Spark's codegen cache. Around each request of the
 last cycle the status store (it works with the UI off) and the codegen
 compile count are read, so the counts are exactly that request's
 engine work. Prints one JSON object: route → ``{"ms_p50", "jobs",
-"stages", "tasks", "widest", "compiles"}`` (``widest``: the most tasks
-in one stage; ``compiles``: classes compiled, 0 when every one came
-from the cache), plus the session's ``cores``. Skipped stages are not
-counted.
+"stages", "tasks", "widest", "shuffle_bytes", "compiles"}``
+(``widest``: the most tasks in one stage; ``shuffle_bytes``: shuffle
+bytes read plus written; ``compiles``: classes compiled, 0 when every
+one came from the cache), the session's ``cores``, and ``totals``: the
+cycle's jobs, stages, tasks and shuffle bytes summed over the routes,
+with ``ms_p50_sum``, the sum of the route medians. Skipped stages are
+not counted.
 """
 
 from __future__ import annotations
@@ -59,10 +62,11 @@ NOW = datetime(2024, 2, 1, 6, 0, 0, tzinfo=timezone.utc)
 REPS = 9
 
 
-def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str]], int]:
-    """Job ids and stage id → (tasks, status) in the status store, once
-    the listener bus has delivered every event posted so far, and the
-    number of classes the JVM's code generator has compiled."""
+def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str, int]], int]:
+    """Job ids and stage id → (tasks, status, shuffle bytes read plus
+    written) in the status store, once the listener bus has delivered
+    every event posted so far, and the number of classes the JVM's code
+    generator has compiled."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -74,19 +78,26 @@ def engine_counts(sc) -> tuple[set[int], dict[int, tuple[int, str]], int]:
     stages = {}
     while it.hasNext():
         s = it.next()
-        stages[s.stageId()] = (s.numTasks(), s.status().toString())
+        stages[s.stageId()] = (
+            s.numTasks(), s.status().toString(),
+            s.shuffleReadBytes() + s.shuffleWriteBytes(),
+        )
     codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return job_ids, stages, codegen.METRIC_COMPILATION_TIME().getCount()
 
 
 def engine_delta(before, after) -> dict[str, int]:
     """Jobs, stages and tasks that ran between two ``engine_counts``,
-    the task count of the widest stage, and the classes compiled."""
+    the task count of the widest stage, the shuffle bytes, and the
+    classes compiled."""
     jobs = after[0] - before[0]
-    ran = [t for sid, (t, status) in after[1].items()
+    ran = [(t, b) for sid, (t, status, b) in after[1].items()
            if sid not in before[1] and status != "SKIPPED"]
-    return {"jobs": len(jobs), "stages": len(ran), "tasks": sum(ran),
-            "widest": max(ran, default=0), "compiles": after[2] - before[2]}
+    tasks = [t for t, _ in ran]
+    return {"jobs": len(jobs), "stages": len(ran), "tasks": sum(tasks),
+            "widest": max(tasks, default=0),
+            "shuffle_bytes": sum(b for _, b in ran),
+            "compiles": after[2] - before[2]}
 
 
 def route_urls(spans) -> dict[str, str]:
@@ -137,6 +148,12 @@ def main() -> None:
                 "ms_p50": round(statistics.median(times[route]), 1),
                 **engine_delta(before, engine_counts(sc)),
             }
+        out["totals"] = {
+            k: sum(r[k] for r in out["routes"].values())
+            for k in ("jobs", "stages", "tasks", "shuffle_bytes")
+        }
+        out["totals"]["ms_p50_sum"] = round(
+            sum(r["ms_p50"] for r in out["routes"].values()), 1)
     finally:
         api.stop()
     print(json.dumps(out, indent=1))
