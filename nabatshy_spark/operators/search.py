@@ -2,9 +2,11 @@
 pagination (SURVEY §2.2 P8–P10, §2.6 O3–O4; reference api/service.go:
 642-696 parser, 698-891 SearchTraces).
 
-The parser is driver-side string work producing Column predicates — no
-Catalyst extension needed; the resulting plan is an ordinary
-filter/orderBy/offset/limit that Catalyst pushes down.
+The parser is driver-side string work. The span routes render its
+conditions as SQL fragments whose keys and values are named parameter
+markers (operators/spans.py), never pasted text; the events adapter
+below turns them into Column predicates. Either way the plan is an
+ordinary filter/orderBy/offset/limit that Catalyst pushes down.
 """
 
 from __future__ import annotations

@@ -2,6 +2,16 @@
 (api/service.go) re-expressed over the denormalized span DataFrame
 (schema: nabatshy_spark.schema.SPAN_SCHEMA).
 
+Each API route is one SQL text with named parameter markers, built
+here by a ``*_sql`` function that returns ``(text, args)``; the text
+reads the span table as ``{spans}``. The serving layer fills that with
+its registered view, and the operator of the same name runs the text
+over any span DataFrame with ``spark.sql(text, args, spans=df)``, so a
+route and its registry query share one definition. Every value from
+outside (DSL keys and values, ids, times, counts, the percentile) is a
+parameter; only a sort column from :data:`SEARCH_COLUMNS` and the
+ASC/DESC keyword are spliced into a text.
+
 Attribute-predicate semantics replicate the reference *exactly*,
 including its independent-arrays quirk: ClickHouse stores attributes
 as parallel key/value arrays and the reference tests
@@ -17,130 +27,146 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nabatshy_spark.functions.timeutil import align_epoch, interval_seconds
 from nabatshy_spark.operators.search import AttributeQuery, parse_attribute_query
 
 NS_PER_MS = 1_000_000.0
+NS_PER_S = 1_000_000_000
 
 
-# The span-table predicates. Each encodes a decision about the stored
-# format, so each has this one definition; every query and route uses it.
+# The span-table predicates, as SQL fragments. Each encodes a decision
+# about the stored format, so each has this one definition; every route
+# text embeds it, and the Column helpers below parse it.
+
+# P2: a root span has an empty parent id (api/service.go:183)
+IS_ROOT = "parent_span_id = ''"
+IS_CHILD = "parent_span_id != ''"
+# F10: the span carries an event named 'exception'
+# (api/service.go:808-820, 1255); events is
+# array<struct<time_unix_nano,name,attributes>>
+HAS_EXCEPTION = "exists(events, e -> e.name = 'exception')"
+# P1: duration_ns / 1000000 (api/service.go:181). Float division, as
+# ClickHouse's ``/``: a 1.5 ms span is 1.5, not 1. Each caller rounds
+# as its oracle pins.
+DURATION_MS = f"duration_ns / {NS_PER_MS!r}D"
+# the columns of a span row on the search and detail routes
+SPAN_ROW = (
+    "trace_id, span_id, parent_span_id, name, scope_name, start_time_unix_nano"
+)
+DURATION_MS_COL = f"round({DURATION_MS}, 6) AS duration_ms"
+HAS_ERROR_COL = f"{HAS_EXCEPTION} AS has_error"
+
+
+def _has_key(attrs: str, key: str) -> str:
+    return f"array_contains(map_keys({attrs}), {key})"
+
+
+def _has_value(attrs: str, value: str) -> str:
+    return f"array_contains(map_values({attrs}), {value})"
+
+
+def attr_pair_sql(attrs: str, key: str, value: str) -> str:
+    """P6 as the reference does it: key present AND value present —
+    checked independently (api/service.go:744-751). ``key`` and
+    ``value`` are SQL expressions, parameter markers on the routes."""
+    return f"({_has_key(attrs, key)} AND {_has_value(attrs, value)})"
+
+
+def attr_pair_negated_sql(attrs: str, key: str, value: str) -> str:
+    """P7: ``NOT has(key,k) OR (has(key,k) AND NOT has(value,v))``
+    (api/service.go:753-771)."""
+    k = _has_key(attrs, key)
+    return f"(NOT {k} OR ({k} AND NOT {_has_value(attrs, value)}))"
 
 
 def is_root() -> Column:
-    """P2: a root span has an empty parent id (api/service.go:183)."""
-    return F.col("parent_span_id") == ""
+    return F.expr(IS_ROOT)
 
 
 def is_child() -> Column:
-    """The complement of :func:`is_root`: the span has a parent."""
-    return F.col("parent_span_id") != ""
+    return F.expr(IS_CHILD)
 
 
 def has_exception() -> Column:
-    """F10: the span carries an event named 'exception'
-    (api/service.go:808-820, 1255). ``events`` is
-    array<struct<time_unix_nano,name,attributes>>. One SQL expression:
-    a Python lambda in ``F.exists`` costs ~25 more py4j round trips per use."""
-    return F.expr("exists(events, e -> e.name = 'exception')")
+    return F.expr(HAS_EXCEPTION)
 
 
 def duration_ms() -> Column:
-    """P1: ``duration_ns / 1000000`` (api/service.go:181). Float
-    division, as ClickHouse's ``/``: a 1.5 ms span is 1.5, not 1. Each
-    caller rounds as its oracle pins."""
-    return F.col("duration_ns") / F.lit(NS_PER_MS)
+    return F.expr(DURATION_MS)
 
 
-def duration_ms_col() -> Column:
-    return F.round(duration_ms(), 6).alias("duration_ms")
-
-
-def _has_key(attrs: Column, key: str) -> Column:
-    return F.array_contains(F.map_keys(attrs), F.lit(key))
-
-
-def _has_value(attrs: Column, value: str) -> Column:
-    return F.array_contains(F.map_values(attrs), F.lit(value))
-
-
-def attr_pair(attrs: Column, key: str, value: str) -> Column:
-    """P6 as the reference does it: key present AND value present —
-    checked independently (api/service.go:744-751)."""
-    return _has_key(attrs, key) & _has_value(attrs, value)
-
-
-def attr_pair_negated(attrs: Column, key: str, value: str) -> Column:
-    """P7: ``NOT has(key,k) OR (has(key,k) AND NOT has(value,v))``
-    (api/service.go:753-771)."""
-    return (~_has_key(attrs, key)) | (_has_key(attrs, key) & ~_has_value(attrs, value))
-
-
-def has_error_col() -> Column:
-    """The F10 projection (api/service.go:808-820)."""
-    return has_exception().alias("has_error")
-
-
-def _condition(c: AttributeQuery) -> Column:
-    """One DSL condition over a span row (api/service.go:707-771):
-    special keys ``name``/``scope`` hit scalar columns; generic keys
-    check span AND resource attributes (match in either; negation must
-    hold in both)."""
-    if c.key == "name":
-        col = F.col("name")
-        return col != F.lit(c.value) if c.negate else col == F.lit(c.value)
-    if c.key == "scope":
-        col = F.col("scope_name")
-        return col != F.lit(c.value) if c.negate else col == F.lit(c.value)
-    span_attrs, res_attrs = F.col("span_attributes"), F.col("resource_attributes")
+def _condition(c: AttributeQuery, i: int, args: dict) -> str:
+    """One DSL condition over a span row (api/service.go:707-771),
+    its key and value bound as ``:k{i}`` and ``:v{i}``: special keys
+    ``name``/``scope`` hit scalar columns; generic keys check span AND
+    resource attributes (match in either; negation must hold in both)."""
+    v = f":v{i}"
+    args[f"v{i}"] = c.value
+    if c.key in ("name", "scope"):
+        col = "name" if c.key == "name" else "scope_name"
+        return f"{col} {'!=' if c.negate else '='} {v}"
+    k = f":k{i}"
+    args[f"k{i}"] = c.key
     if c.negate:
-        return attr_pair_negated(span_attrs, c.key, c.value) & attr_pair_negated(
-            res_attrs, c.key, c.value
+        return (
+            f"({attr_pair_negated_sql('span_attributes', k, v)}"
+            f" AND {attr_pair_negated_sql('resource_attributes', k, v)})"
         )
-    return attr_pair(span_attrs, c.key, c.value) | attr_pair(res_attrs, c.key, c.value)
-
-
-def _broad_search(q: str) -> Column:
-    """P8 broad OR search (api/service.go:778-789): name, scope,
-    trace_id, span_id, or any attribute key/value."""
-    lit = F.lit(q)
     return (
-        (F.col("name") == lit)
-        | (F.col("scope_name") == lit)
-        | (F.col("trace_id") == lit)
-        | (F.col("span_id") == lit)
-        | _has_key(F.col("span_attributes"), q)
-        | _has_value(F.col("span_attributes"), q)
-        | _has_key(F.col("resource_attributes"), q)
-        | _has_value(F.col("resource_attributes"), q)
+        f"({attr_pair_sql('span_attributes', k, v)}"
+        f" OR {attr_pair_sql('resource_attributes', k, v)})"
     )
 
 
-def search_predicate(
-    query: str = "",
-    trace_or_span: str = "trace",
-    start_ns: int | None = None,
-    end_ns: int | None = None,
-) -> Column:
-    """The WHERE clause shared by search and the search-metrics
-    endpoints (api/service.go:698-811 and :1341-1428 paste the same
-    SQL fragments; here it's one Column builder)."""
-    pred = F.lit(True)
+def _search_conditions(query: str, trace_or_span: str, args: dict) -> list[str]:
+    """The WHERE conditions shared by search and the search-metrics
+    routes (api/service.go:698-811 and :1341-1428 paste the same SQL
+    fragments): the DSL's conditions, else the P8 broad OR search
+    (api/service.go:778-789: name, scope, trace_id, span_id, or any
+    attribute key/value) bound as ``:q``, then trace/span mode (P10).
+    Their values go into ``args``."""
+    conds = []
     if query:
-        conds = parse_attribute_query(query)
-        if conds is None:
-            pred = _broad_search(query)
+        parsed = parse_attribute_query(query)
+        if parsed is None:
+            args["q"] = query
+            conds.append(
+                "(name = :q OR scope_name = :q OR trace_id = :q OR span_id = :q"
+                f" OR {_has_key('span_attributes', ':q')}"
+                f" OR {_has_value('span_attributes', ':q')}"
+                f" OR {_has_key('resource_attributes', ':q')}"
+                f" OR {_has_value('resource_attributes', ':q')})"
+            )
         else:
-            for c in conds:
-                pred = pred & _condition(c)
+            conds += [_condition(c, i, args) for i, c in enumerate(parsed)]
     if trace_or_span == "trace":
-        pred = pred & is_root()
+        conds.append(IS_ROOT)
     elif trace_or_span == "span":
-        pred = pred & is_child()
+        conds.append(IS_CHILD)
+    return conds
+
+
+def _where(conds: list[str]) -> str:
+    return f"WHERE {' AND '.join(conds)}" if conds else ""
+
+
+def _in_range(start_ns: int | None, end_ns: int | None, args: dict) -> list[str]:
+    """``start_ns <= start_time_unix_nano < end_ns``, bound as
+    ``:lo_ns``/``:hi_ns``; a missing end is unbounded."""
+    conds = []
     if start_ns is not None:
-        pred = pred & (F.col("start_time_unix_nano") >= F.lit(start_ns))
+        args["lo_ns"] = start_ns
+        conds.append("start_time_unix_nano >= :lo_ns")
     if end_ns is not None:
-        pred = pred & (F.col("end_time_unix_nano") <= F.lit(end_ns))
-    return pred
+        args["hi_ns"] = end_ns
+        conds.append("start_time_unix_nano < :hi_ns")
+    return conds
+
+
+def _run(df: DataFrame, route: tuple[str, dict]) -> DataFrame:
+    """A route's text over ``df``, bound to its parameters."""
+    text, args = route
+    return df.sparkSession.sql(text, args, spans=df)
 
 
 # the columns search_spans returns, and so its valid sort fields
@@ -148,6 +174,41 @@ SEARCH_COLUMNS = (
     "trace_id", "span_id", "parent_span_id", "name", "scope_name",
     "start_time_unix_nano", "duration_ms", "has_error",
 )
+
+
+def search_spans_sql(
+    query: str = "",
+    trace_or_span: str = "trace",
+    start_ns: int | None = None,
+    end_ns: int | None = None,
+    sort_field: str = "start_time_unix_nano",
+    sort_order: str = "desc",
+    page: int = 1,
+    page_size: int = 20,
+) -> tuple[str, dict]:
+    """The full search lifecycle (§3.2, api/service.go:698-891):
+    DSL parse (fallback → broad search), trace/span mode (P10), time
+    range (P3: started at or after ``start_ns``, ended by ``end_ns``),
+    has_error projection, dynamic sort (O3), pagination (O4; span_id
+    appended as total-order tiebreaker)."""
+    if sort_field not in SEARCH_COLUMNS:
+        raise ValueError(f"invalid sort field '{sort_field}'")
+    args: dict = {}
+    conds = _search_conditions(query, trace_or_span, args)
+    if start_ns is not None:
+        args["lo_ns"] = start_ns
+        conds.append("start_time_unix_nano >= :lo_ns")
+    if end_ns is not None:
+        args["hi_ns"] = end_ns
+        conds.append("end_time_unix_nano <= :hi_ns")
+    args["page_size"] = page_size
+    args["page_offset"] = (page - 1) * page_size
+    order = "DESC" if sort_order == "desc" else "ASC"
+    return (
+        f"SELECT {SPAN_ROW}, {DURATION_MS_COL}, {HAS_ERROR_COL} FROM {{spans}}"
+        f" {_where(conds)} ORDER BY {sort_field} {order}, span_id ASC"
+        " LIMIT :page_size OFFSET :page_offset"
+    ), args
 
 
 def search_spans(
@@ -161,101 +222,186 @@ def search_spans(
     page: int = 1,
     page_size: int = 20,
 ) -> DataFrame:
-    """The full search lifecycle (§3.2, api/service.go:698-891):
-    DSL parse (fallback → broad search), trace/span mode (P10), time
-    range (P3), has_error projection, dynamic sort (O3), pagination
-    (O4; span_id appended as total-order tiebreaker)."""
-    if sort_field not in SEARCH_COLUMNS:
-        raise ValueError(f"invalid sort field '{sort_field}'")
-    pred = search_predicate(query, trace_or_span, start_ns, end_ns)
-    sort_col = F.col(sort_field)
-    primary = sort_col.desc() if sort_order == "desc" else sort_col.asc()
-    return (
-        df.filter(pred)
-        .select(
-            "trace_id",
-            "span_id",
-            "parent_span_id",
-            "name",
-            "scope_name",
-            "start_time_unix_nano",
-            duration_ms_col(),
-            has_error_col(),
-        )
-        .orderBy(primary, F.col("span_id").asc())
-        .offset((page - 1) * page_size)
-        .limit(page_size)
-    )
+    """:func:`search_spans_sql` over ``df``."""
+    return _run(df, search_spans_sql(
+        query, trace_or_span, start_ns, end_ns, sort_field, sort_order,
+        page, page_size,
+    ))
 
 
-def slowest_traces(df: DataFrame, n: int) -> DataFrame:
+def slowest_traces_sql(n: int) -> tuple[str, dict]:
     """P1/P2/O1/O2 (api/service.go:177-185): the ``n`` slowest root
     spans; start time then trace id break duration ties."""
     return (
-        df.filter(is_root())
-        .select(
-            "trace_id", "name", "scope_name", duration_ms_col(),
-            "start_time_unix_nano",
-        )
-        .orderBy(
-            F.col("duration_ms").desc(),
-            F.col("start_time_unix_nano").desc(),
-            F.col("trace_id").asc(),
-        )
-        .limit(n)
-    )
+        f"SELECT trace_id, name, scope_name, {DURATION_MS_COL},"
+        f" start_time_unix_nano FROM {{spans}} WHERE {IS_ROOT}"
+        " ORDER BY duration_ms DESC, start_time_unix_nano DESC, trace_id ASC"
+        " LIMIT :n"
+    ), {"n": n}
+
+
+def slowest_traces(df: DataFrame, n: int) -> DataFrame:
+    return _run(df, slowest_traces_sql(n))
+
+
+def endpoint_latency_sql(
+    start_ns: int | None = None, end_ns: int | None = None
+) -> tuple[str, dict]:
+    """Per-endpoint stats (api/service.go:315-363) of the spans started
+    in [start_ns, end_ns): count, avg, min, max, p50/p95/p99 over
+    duration_ms."""
+    args: dict = {}
+    # percentiles unrounded: interpolation is bit-identical across
+    # engines, and rounding midpoints of 6-decimal ms values hits the
+    # 7th-digit-5 boundary where engine rounding modes diverge (see
+    # plans/queries.py policy)
+    return (
+        "SELECT name, call_count, avg_ms, min_ms, max_ms,"
+        " __p[0] AS p50_ms, __p[1] AS p95_ms, __p[2] AS p99_ms FROM ("
+        f"SELECT name, count(*) AS call_count,"
+        f" round(avg({DURATION_MS}), 6) AS avg_ms,"
+        f" round(min({DURATION_MS}), 6) AS min_ms,"
+        f" round(max({DURATION_MS}), 6) AS max_ms,"
+        f" percentile({DURATION_MS}, array(0.5D, 0.95D, 0.99D)) AS __p"
+        f" FROM {{spans}} {_where(_in_range(start_ns, end_ns, args))}"
+        " GROUP BY name)"
+    ), args
 
 
 def endpoint_latency(df: DataFrame) -> DataFrame:
-    """Per-endpoint stats (api/service.go:315-363): count, avg, min,
-    max, p50/p95/p99 over duration_ms, sorted by avg desc."""
-    dur = duration_ms()
-    p = F.percentile(dur, F.lit([0.5, 0.95, 0.99]))
-    return (
-        df.groupBy("name")
-        .agg(
-            F.count("*").alias("call_count"),
-            F.round(F.avg(dur), 6).alias("avg_ms"),
-            F.round(F.min(dur), 6).alias("min_ms"),
-            F.round(F.max(dur), 6).alias("max_ms"),
-            p.alias("__p"),
-        )
-        .select(
-            "name",
-            "call_count",
-            "avg_ms",
-            "min_ms",
-            "max_ms",
-            # percentiles unrounded: interpolation is bit-identical
-            # across engines, and rounding midpoints of 6-decimal ms
-            # values hits the 7th-digit-5 boundary where engine
-            # rounding modes diverge (see plans/queries.py policy)
-            F.col("__p")[0].alias("p50_ms"),
-            F.col("__p")[1].alias("p95_ms"),
-            F.col("__p")[2].alias("p99_ms"),
-        )
-    )
+    return _run(df, endpoint_latency_sql())
 
 
-def service_dependency_graph(df: DataFrame) -> DataFrame:
+def service_dependency_graph_sql() -> tuple[str, dict]:
     """J1 (api/service.go:365-398): self equi-join child.parent_span_id
     = parent.span_id, keep cross-service edges, count call pairs.
 
     Shuffle partitions on the join key; the ≠ predicate stays a
     post-join filter exactly like the reference's SQL.
     """
-    s1 = df.select(
-        F.col("span_id").alias("__pid"), F.col("scope_name").alias("parent_service")
-    )
-    s2 = df.select(
-        F.col("parent_span_id").alias("__pid"), F.col("scope_name").alias("child_service")
-    ).filter(F.col("__pid") != "")
     return (
-        s1.join(s2, "__pid")
-        .filter(F.col("parent_service") != F.col("child_service"))
-        .groupBy("parent_service", "child_service")
-        .agg(F.count("*").alias("call_count"))
+        "SELECT parent_service, child_service, count(*) AS call_count FROM"
+        " (SELECT span_id AS __pid, scope_name AS parent_service FROM {spans}) p"
+        " JOIN (SELECT parent_span_id AS __pid, scope_name AS child_service"
+        f" FROM {{spans}} WHERE {IS_CHILD}) c USING (__pid)"
+        " WHERE parent_service != child_service"
+        " GROUP BY parent_service, child_service"
+    ), {}
+
+
+def service_dependency_graph(df: DataFrame) -> DataFrame:
+    return _run(df, service_dependency_graph_sql())
+
+
+def trace_details_sql(trace_id: str) -> tuple[str, dict]:
+    """P11 point lookup: every span of one trace, time-ordered
+    (api/service.go:262, GetTraceSpans)."""
+    return (
+        f"SELECT {SPAN_ROW}, {DURATION_MS_COL}, {HAS_ERROR_COL} FROM {{spans}}"
+        " WHERE trace_id = :trace_id ORDER BY start_time_unix_nano, span_id"
+    ), {"trace_id": trace_id}
+
+
+def trace_details(df: DataFrame, trace_id: str) -> DataFrame:
+    return _run(df, trace_details_sql(trace_id))
+
+
+def span_details_sql(span_id: str) -> tuple[str, dict]:
+    """One span by id, with its end time (getSpanDetails)."""
+    return (
+        f"SELECT {SPAN_ROW}, end_time_unix_nano, {DURATION_MS_COL},"
+        f" {HAS_ERROR_COL} FROM {{spans}} WHERE span_id = :span_id"
+    ), {"span_id": span_id}
+
+
+def distinct_services_sql() -> tuple[str, dict]:
+    """A9 (api/service.go:1541-1546): DISTINCT resource attr
+    'service.name' — `arrayElement(value, indexOf(key, ...))` becomes
+    a map lookup."""
+    return (
+        "SELECT DISTINCT service_name FROM (SELECT"
+        " element_at(resource_attributes, 'service.name') AS service_name"
+        " FROM {spans}) s WHERE service_name IS NOT NULL"
+    ), {}
+
+
+def distinct_services(df: DataFrame) -> DataFrame:
+    return _run(df, distinct_services_sql())
+
+
+def search_metric_series_sql(
+    start_s: int,
+    end_s: int,
+    query: str = "",
+    trace_or_span: str = "",
+    percentile: float = 0.95,
+    include_errors: bool = False,
+) -> tuple[str, dict]:
+    """Search-scoped metric time series (api/service.go:1341-1428 +
+    1431-1531, backing /api/metrics/{search,pseries,avg,traces,errors}):
+    the search predicate slices the spans started in [start_s, end_s),
+    rows bucket by start time at the dynamic range/15 interval (T2),
+    and each bucket aggregates percentile + count + avg (+ error
+    count), gap-filled with zeros (T5).
+
+    The gap fill is ``timeutil.gap_fill``'s, in SQL: one null row per
+    bucket from a one-partition ``range`` is unioned into the one
+    aggregation, so an empty bucket aggregates only its null row and
+    each aggregate's null becomes 0; the few dozen buckets are then
+    ordered inside one partition instead of by a global sort."""
+    iv = interval_seconds(end_s - start_s)
+    # the column name: a percentile is an integer fraction in [0, 1]
+    pcol = f"p{int(round(percentile * 100))}_ms"
+    args: dict = {}
+    conds = _search_conditions(query, trace_or_span, args)
+    conds += _in_range(start_s * NS_PER_S, end_s * NS_PER_S, args)
+    # an inverted (zero-length) range is an empty range: no gap rows
+    args.update(
+        iv=iv, pct=percentile,
+        gap_lo=align_epoch(start_s, iv), gap_end=align_epoch(end_s - 1, iv) + 1,
     )
+    err_agg, err_col, err_gap = "", "", ""
+    if include_errors:
+        err_agg = ", coalesce(sum(CAST(__e AS BIGINT)), 0) AS n_errors"
+        err_col, err_gap = f", {HAS_EXCEPTION} AS __e", ", NULL"
+    epoch = f"(start_time_unix_nano div {NS_PER_S})"
+    return (
+        "SELECT /*+ COALESCE(1) */ bucket_epoch,"
+        f" coalesce(percentile(__d, :pct), 0.0D) AS {pcol},"
+        " coalesce(count(__row), 0) AS n,"
+        f" coalesce(round(avg(__d), 6), 0.0D) AS avg_ms{err_agg} FROM ("
+        f"SELECT {epoch} - {epoch} % :iv AS bucket_epoch, true AS __row,"
+        f" {DURATION_MS} AS __d{err_col} FROM {{spans}} {_where(conds)}"
+        f" UNION ALL SELECT id, NULL, NULL{err_gap}"
+        " FROM range(:gap_lo, :gap_end, :iv, 1))"
+        " GROUP BY bucket_epoch SORT BY bucket_epoch"
+    ), args
+
+
+def search_metric_series(
+    df: DataFrame, start_s: int, end_s: int, query: str = ""
+) -> DataFrame:
+    return _run(df, search_metric_series_sql(start_s, end_s, query))
+
+
+def service_metrics_sql(start_s: int, end_s: int) -> tuple[str, dict]:
+    """Per-service rollup of the spans started in [start_s, end_s)
+    (api/service.go GetServiceMetrics, /api/metrics/services): count,
+    avg, p95, error count — one partial-agg shuffle of |services|
+    groups."""
+    args: dict = {}
+    conds = _in_range(start_s * NS_PER_S, end_s * NS_PER_S, args)
+    return (
+        f"SELECT scope_name AS service, count(*) AS n,"
+        f" round(avg({DURATION_MS}), 6) AS avg_ms,"
+        f" round(percentile({DURATION_MS}, 0.95D), 6) AS p95_ms,"
+        f" sum(CAST({HAS_EXCEPTION} AS BIGINT)) AS n_errors"
+        f" FROM {{spans}} {_where(conds)} GROUP BY scope_name ORDER BY service"
+    ), args
+
+
+def service_metrics(df: DataFrame, start_s: int, end_s: int) -> DataFrame:
+    return _run(df, service_metrics_sql(start_s, end_s))
 
 
 def dependency_drift(df: DataFrame) -> DataFrame:
@@ -318,40 +464,6 @@ def error_traces(df: DataFrame) -> DataFrame:
     )
 
 
-def trace_details(df: DataFrame, trace_id: str) -> DataFrame:
-    """P11 point lookup: every span of one trace, time-ordered
-    (api/service.go:262, GetTraceSpans)."""
-    return (
-        df.filter(F.col("trace_id") == trace_id)
-        .select(
-            "trace_id",
-            "span_id",
-            "parent_span_id",
-            "name",
-            "scope_name",
-            "start_time_unix_nano",
-            duration_ms_col(),
-            has_error_col(),
-        )
-        .orderBy("start_time_unix_nano", "span_id")
-    )
-
-
-def distinct_services(df: DataFrame) -> DataFrame:
-    """A9 (api/service.go:1541-1546): DISTINCT resource attr
-    'service.name' — `arrayElement(value, indexOf(key, ...))` becomes
-    a map lookup."""
-    return (
-        df.select(
-            F.element_at(F.col("resource_attributes"), F.lit("service.name")).alias(
-                "service_name"
-            )
-        )
-        .filter(F.col("service_name").isNotNull())
-        .distinct()
-    )
-
-
 def slow_vs_baseline(df: DataFrame, pct: float = 0.95) -> DataFrame:
     """Slow-spans-vs-baseline (api/service.go:560-592): spans slower
     than their endpoint's p95, with the percent-over-baseline (F11).
@@ -375,67 +487,6 @@ def slow_vs_baseline(df: DataFrame, pct: float = 0.95) -> DataFrame:
                 "pct_over"
             ),
         )
-    )
-
-
-def search_metric_series(
-    df: DataFrame,
-    start_s: int,
-    end_s: int,
-    query: str = "",
-    trace_or_span: str = "",
-    percentile: float = 0.95,
-    include_errors: bool = False,
-) -> DataFrame:
-    """Search-scoped metric time series (api/service.go:1341-1428 +
-    1431-1531, backing /api/metrics/{search,pseries,avg,traces,errors}):
-    the search predicate slices the spans, rows bucket by start time at
-    the dynamic range/15 interval (T2), and each bucket aggregates
-    percentile + count + avg (+ error count), gap-filled with zeros
-    (T5). The reference string-pastes this SQL per endpoint; here every
-    metrics route is the same single-scan, single-shuffle DataFrame
-    plan (timeutil.gap_fill)."""
-    from nabatshy_spark.functions.timeutil import ROW, gap_fill, interval_seconds
-
-    iv = interval_seconds(end_s - start_s)
-    pcol = f"p{int(round(percentile * 100))}_ms"
-    sliced = df.filter(
-        search_predicate(query, trace_or_span)
-        & (F.col("start_time_unix_nano") >= F.lit(start_s * 1_000_000_000))
-        & (F.col("start_time_unix_nano") < F.lit(end_s * 1_000_000_000))
-    )
-    ep = F.expr("start_time_unix_nano div 1000000000")
-    dur_ms = duration_ms()
-    aggs = {
-        pcol: (F.percentile(dur_ms, F.lit(percentile)), 0.0),
-        "n": (F.count(ROW), 0),
-        "avg_ms": (F.round(F.avg(dur_ms), 6), 0.0),
-    }
-    if include_errors:
-        aggs["n_errors"] = (F.sum(has_exception().cast("long")), 0)
-    return gap_fill(sliced, ep, aggs, start_s, end_s - 1, iv)
-
-
-def service_metrics(
-    df: DataFrame, start_s: int, end_s: int
-) -> DataFrame:
-    """Per-service rollup in a time range (api/service.go
-    GetServiceMetrics, /api/metrics/services): count, avg, p95, error
-    count — one partial-agg shuffle of |services| groups."""
-    dur_ms = duration_ms()
-    return (
-        df.filter(
-            (F.col("start_time_unix_nano") >= F.lit(start_s * 1_000_000_000))
-            & (F.col("start_time_unix_nano") < F.lit(end_s * 1_000_000_000))
-        )
-        .groupBy(F.col("scope_name").alias("service"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg(dur_ms), 6).alias("avg_ms"),
-            F.round(F.percentile(dur_ms, F.lit(0.95)), 6).alias("p95_ms"),
-            F.sum(has_error_col().cast("long")).alias("n_errors"),
-        )
-        .orderBy("service")
     )
 
 
@@ -700,3 +751,4 @@ def overlap_pairs(df: DataFrame) -> DataFrame:
         .orderBy(F.col("n_overlap_pairs").desc(), F.col("trace_id").asc())
         .limit(50)
     )
+

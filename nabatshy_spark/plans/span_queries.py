@@ -72,20 +72,22 @@ def spans_attr_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value array contains 'postgres'), where map-pair semantics would
     keep them; spans with no db.system key at all are kept by the
     key-absent branch."""
-    df = load_spans(spark)
-    return df.filter(
-        S.attr_pair_negated(F.col("span_attributes"), "db.system", "postgres")
-    ).select("span_id", "trace_id", "name")
+    where = S.attr_pair_negated_sql("span_attributes", ":k", ":v")
+    return spark.sql(
+        f"SELECT span_id, trace_id, name FROM {{spans}} WHERE {where}",
+        {"k": "db.system", "v": "postgres"}, spans=load_spans(spark),
+    )
 
 
 @query("spans_attr_pair", headline=True)
 def spans_attr_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 independent-arrays equality (api/service.go:744-751):
     ``env=prod`` over resource attributes."""
-    df = load_spans(spark)
-    return df.filter(
-        S.attr_pair(F.col("resource_attributes"), "env", "prod")
-    ).select("span_id", "scope_name")
+    where = S.attr_pair_sql("resource_attributes", ":k", ":v")
+    return spark.sql(
+        f"SELECT span_id, scope_name FROM {{spans}} WHERE {where}",
+        {"k": "env", "v": "prod"}, spans=load_spans(spark),
+    )
 
 
 @query("spans_search_page")

@@ -2,17 +2,23 @@
 (api/receiver.go:12-29 on :3000, route table api/controller.go:380-397)
 over the Spark engine, stdlib-only.
 
-Every route maps to the operator that already backs the corresponding
-registry query — this layer only parses URL params, calls the operator,
-and answers the result as a JSON array whose elements the plan itself
-encodes (S9: ``to_json(struct(*))`` under the row cap, so a response
-runs the route's own stages and no more).
+Every route is one parameterized SQL text, as the reference's are
+(api/service.go): this layer only parses URL params and picks the
+route's ``(text, args)`` from ``operators/spans.py`` — the text the
+registry query behind that route also runs. A request is then one
+``SparkSession.sql`` call over the API's own temp view of the served
+table, with the row encoding and the row cap in the same text
+(``SELECT to_json(struct(*)) FROM (…) LIMIT 10000``), and its collect.
+Every outside value (DSL keys and values, ids, the service path
+segment, times, counts, the percentile) is a named parameter, never
+pasted into the text.
 Param semantics mirror api/controller.go: ``n`` (slowest), ``query`` /
 ``page`` / ``pageSize`` / ``sortField`` / ``sortOrder`` /
 ``traceOrSpan`` (search), RFC3339 ``start``/``end`` or relative
 ``timeRange`` for every metrics endpoint (utils/utils.go:87-135 →
 functions/timeutil.parse_time_range), ``percentile`` for pseries and
-search metrics.
+search metrics. Path segments are percent-decoded one by one, so an id
+holding an encoded ``/`` is one segment.
 
 Serving note for scale: each request runs interactive Spark jobs on a
 cached spans table. The cache holds the table in one partition per
@@ -21,7 +27,7 @@ table under the threshold is one ``SinglePartition`` and every request
 is one job of one task, with no exchange; a larger table keeps several
 partitions (never more than its scan's) and its routes shuffle as
 before. A production deployment fronts this with Spark Connect or a
-thrift/JDBC gateway, but the route → plan mapping is exactly this
+thrift/JDBC gateway, but the route → SQL mapping is exactly this
 module.
 """
 
@@ -31,12 +37,12 @@ import json
 import logging
 import math
 import threading
+import uuid
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import parse_qs, urlparse
+from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from nabatshy_spark.functions.timeutil import parse_time_range
 from nabatshy_spark.operators import spans as S
@@ -114,6 +120,9 @@ class TelemetryAPI:
         # cached: every route re-reads this table; the cache holds the
         # columnar batches, not per-request copies
         self.spans = _served_partitions(spark.read.parquet(spans_path)).cache()
+        # the routes' texts read the table under a name of this API's own
+        self.view = f"served_spans_{uuid.uuid4().hex}"
+        self.spans.createOrReplaceTempView(self.view)
         self._now = now  # fixed clock for deterministic tests
         api = self
 
@@ -122,14 +131,8 @@ class TelemetryAPI:
                 pass
 
             def do_GET(self) -> None:
-                url = urlparse(self.path)
-                q = {k: v[0] for k, v in parse_qs(url.query).items()}
                 try:
-                    df = api._route(url.path, q)
-                    # each row encoded inside the plan, so the row cap
-                    # stays its root: a CollectLimit or
-                    # TakeOrderedAndProject, not an extra exchange
-                    rows = df.select(F.to_json(F.struct("*"))).limit(MAX_ROWS).collect()
+                    rows = api.plan(self.path).collect()
                     body = "[" + ",".join(r[0] for r in rows) + "]"
                     status = 200
                 except KeyError:
@@ -184,44 +187,56 @@ class TelemetryAPI:
             raise ValueError(outside)
         return lo_s, hi_s
 
-    def _route(self, path: str, q: dict[str, str]) -> DataFrame:
-        df = self.spans
-        parts = [p for p in path.split("/") if p]
+    def plan(self, target: str) -> DataFrame:
+        """What a GET of ``target`` (path and query string) collects:
+        the route's text over this API's view, one JSON string per row.
+        Each row is encoded inside the plan, so the row cap stays its
+        root: a CollectLimit or TakeOrderedAndProject, not an extra
+        exchange."""
+        url = urlparse(target)
+        q = {k: v[0] for k, v in parse_qs(url.query).items()}
+        text, args = self._route(url.path, q)
+        sql = f"SELECT to_json(struct(*)) FROM ({text.format(spans=self.view)}) LIMIT {MAX_ROWS}"
+        # the values go to the JVM as they are, where each becomes a
+        # literal; PySpark's spark.sql first wraps each in a lit Column,
+        # 4 py4j round trips per parameter instead of 1
+        return DataFrame(self.spark._jsparkSession.sql(sql, args), self.spark)
+
+    def _route(self, path: str, q: dict[str, str]) -> tuple[str, dict]:
+        """The route's SQL text and its parameters; ``KeyError`` for no
+        route, ``ValueError`` for a bad parameter."""
+        # decoded after the split, so an id with an encoded '/' stays
+        # one segment; unquote, not unquote_plus: '+' is base64
+        parts = [unquote(p) for p in path.split("/") if p]
         # --- /v1/traces/* (api/controller.go:381-386) ---
         if path == "/v1/traces/slowest":
-            return S.slowest_traces(df, _positive_int(q, "n", 10))
+            return S.slowest_traces_sql(_positive_int(q, "n", 10))
         if path == "/v1/traces/endpoints":
-            return S.endpoint_latency(df)
+            return S.endpoint_latency_sql()
         if path == "/v1/traces/dependencies":
-            return S.service_dependency_graph(df)
+            return S.service_dependency_graph_sql()
         if path == "/v1/traces/heatmap":
             lo, hi = self._range_s(q)
-            return S.search_metric_series(df, lo, hi)
+            return S.search_metric_series_sql(lo, hi)
         if len(parts) == 4 and parts[:3] == ["v1", "traces", "service"]:
-            return S.search_spans(
-                df, query=f"scope={parts[3]}", trace_or_span="trace",
-                page_size=100,
+            return S.search_spans_sql(
+                query=f"scope={parts[3]}", trace_or_span="trace", page_size=100
             )
         if len(parts) == 3 and parts[:2] == ["v1", "traces"]:
-            return S.trace_details(df, parts[2])
+            return S.trace_details_sql(parts[2])
         if len(parts) == 3 and parts[:2] == ["v1", "spans"]:
-            return df.filter(F.col("span_id") == parts[2]).select(
-                "trace_id", "span_id", "parent_span_id", "name",
-                "scope_name", "start_time_unix_nano", "end_time_unix_nano",
-                S.duration_ms_col(), S.has_error_col(),
-            )
+            return S.span_details_sql(parts[2])
         if path == "/v1/search":
             lo, hi = self._range_s(q)
             page = _positive_int(q, "page", 1)
             page_size = _positive_int(q, "pageSize", 20)
             if page * page_size > MAX_INT:  # offset + limit
                 raise ValueError(f"page * pageSize must be at most {MAX_INT}")
-            return S.search_spans(
-                df,
+            return S.search_spans_sql(
                 query=q.get("query", ""),
                 trace_or_span=q.get("traceOrSpan", "trace"),
-                start_ns=lo * 1_000_000_000,
-                end_ns=hi * 1_000_000_000,
+                start_ns=lo * S.NS_PER_S,
+                end_ns=hi * S.NS_PER_S,
                 sort_field=q.get("sortField", "start_time_unix_nano"),
                 sort_order=q.get("sortOrder", "desc"),
                 page=page,
@@ -230,34 +245,29 @@ class TelemetryAPI:
         # --- /api/metrics/* (api/controller.go:390-397) ---
         if path in ("/api/metrics/traces", "/api/metrics/avg"):
             lo, hi = self._range_s(q)
-            return S.search_metric_series(df, lo, hi)
+            return S.search_metric_series_sql(lo, hi)
         if path == "/api/metrics/errors":
             lo, hi = self._range_s(q)
-            return S.search_metric_series(df, lo, hi, include_errors=True)
+            return S.search_metric_series_sql(lo, hi, include_errors=True)
         if path == "/api/metrics/pseries":
             lo, hi = self._range_s(q)
-            return S.search_metric_series(df, lo, hi, percentile=_percentile(q))
+            return S.search_metric_series_sql(lo, hi, percentile=_percentile(q))
         if path == "/api/metrics/search":
             lo, hi = self._range_s(q)
-            return S.search_metric_series(
-                df, lo, hi,
+            return S.search_metric_series_sql(
+                lo, hi,
                 query=q.get("query", ""),
                 trace_or_span=q.get("traceOrSpan", ""),
                 percentile=_percentile(q),
             )
         if path == "/api/metrics/services":
             lo, hi = self._range_s(q)
-            return S.service_metrics(df, lo, hi)
+            return S.service_metrics_sql(lo, hi)
         if path == "/api/metrics/endpoints":
             lo, hi = self._range_s(q)
-            return S.endpoint_latency(
-                df.filter(
-                    (F.col("start_time_unix_nano") >= lo * 1_000_000_000)
-                    & (F.col("start_time_unix_nano") < hi * 1_000_000_000)
-                )
-            )
+            return S.endpoint_latency_sql(lo * S.NS_PER_S, hi * S.NS_PER_S)
         if path == "/api/services":
-            return S.distinct_services(df)
+            return S.distinct_services_sql()
         raise KeyError(path)
 
     # -- lifecycle -------------------------------------------------------
@@ -272,4 +282,5 @@ class TelemetryAPI:
         if self._thread.is_alive():
             self._server.shutdown()
         self._server.server_close()
+        self.spark.catalog.dropTempView(self.view)
         self.spans.unpersist()

@@ -4,6 +4,7 @@ operators they wrap."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import shutil
@@ -13,6 +14,7 @@ import urllib.parse
 import urllib.request
 from datetime import datetime, timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -191,7 +193,8 @@ def test_bodies_equal_the_route_dataframe_as_json(api):
     for route in routes:
         url = urllib.parse.urlparse(route)
         q = {k: v[0] for k, v in urllib.parse.parse_qs(url.query).items()}
-        df = api._route(url.path, q)
+        text, args = api._route(url.path, q)
+        df = api.spark.sql(text.format(spans=api.view), args)
         want = "[" + ",".join(df.limit(MAX_ROWS).toJSON().collect()) + "]"
         assert _raw(api, route) == want, route
 
@@ -328,3 +331,113 @@ def test_stop_without_start_returns(spark, tmp_path):
     assert not t.is_alive(), "stop() blocked"
     assert a._server.socket.fileno() == -1
     assert not a.spans.storageLevel.useMemory
+
+
+GOLDEN = os.path.join(os.path.dirname(SPANS), "route_bodies.json")
+# DSL queries holding SQL metacharacters in keys and values
+HOSTILE = [
+    "x' OR '1'='1", "name=a'b", "k!=v)--", "k!=v)--,scope=svc-db",
+    'scope=svc-db,db.statement!=x";--', "a:b=c\\d", ":k0=:v0", "name={spans}",
+    "db.statement=SELECT * FROM t WHERE id = ?", "'); DROP TABLE t; --",
+    "svc-db' --", "name!=a\\',scope=svc-api",
+]
+
+
+def _golden():
+    with open(GOLDEN) as f:
+        return json.load(f)
+
+
+def test_bodies_equal_the_golden_file(api):
+    """Every body in ``tests/data/route_bodies.json`` (the 16 routes and
+    their other parameterizations on the fixture, captured from the
+    DataFrame-built routes) comes back byte for byte."""
+    golden = _golden()
+    assert len(golden) >= 70
+    for route, body in golden.items():
+        assert _raw(api, route) == body, route
+
+
+def test_sql_metacharacters_are_parameters(api):
+    """Quotes, comments, colons, braces and parentheses in DSL keys and
+    values, and in the service segment, are bound as values: each
+    request answers 200 with the golden rows, and the negated ones
+    still match spans."""
+    golden = _golden()
+    routes = ["/v1/traces/service/svc-api,svc-db", "/v1/traces/service/x');--"]
+    for h in HOSTILE:
+        q = urllib.parse.quote(h)
+        routes += [f"/v1/search?timeRange=24h&query={q}&pageSize=25",
+                   f"/api/metrics/search?timeRange=24h&query={q}"]
+    for route in routes:
+        assert _raw(api, route) == golden[route], route
+    assert _get(api, "/v1/search?timeRange=24h&query=" + urllib.parse.quote("k!=v)--"))
+
+
+def test_path_segments_are_percent_decoded(api, spark, tmp_path):
+    """Ids are base64, so they can hold '/', '+' and '='. A segment is
+    decoded after the path is split: ``%2F`` stays inside the id and a
+    literal '+' stays '+'."""
+    assert _raw(api, "/v1/traces/tr%30000") == _raw(api, "/v1/traces/tr0000")
+    assert _raw(api, "/v1/traces/service/svc%2Dapi") == _raw(api, "/v1/traces/service/svc-api")
+    table = pq.read_table(SPANS)
+    ids = {"tr0000": "a/b+c==", "sp00000": "x/y+z="}
+
+    def swap(col):
+        return [ids.get(v, v) for v in table.column(col).to_pylist()]
+
+    for col in ("trace_id", "span_id", "parent_span_id"):
+        table = table.set_column(table.schema.get_field_index(col), col,
+                                 pa.array(swap(col), pa.string()))
+    path = str(tmp_path / "spans.parquet")
+    pq.write_table(table, path)
+    a = TelemetryAPI(spark, path, host="127.0.0.1", port=0, now=NOW).start()
+    try:
+        trace = _get(a, "/v1/traces/a%2Fb+c%3D%3D")
+        assert len(trace) == table.column("trace_id").to_pylist().count("a/b+c==") > 1
+        assert {r["trace_id"] for r in trace} == {"a/b+c=="}
+        span = _get(a, "/v1/spans/x%2Fy+z%3D")
+        assert [r["span_id"] for r in span] == ["x/y+z="]
+    finally:
+        a.stop()
+
+
+def test_request_py4j_budget(api, spark, monkeypatch):
+    """A request is one SQL call plus its collect: at most 30 py4j
+    round trips on the handler thread for each of the 16 routes,
+    counted with the GC off (its finalizers send detach commands)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*a, **k):
+        if threading.current_thread().name.endswith("(process_request_thread)"):
+            calls.append(1)
+        return send(*a, **k)
+
+    routes = ROUTES + _detail_routes(api)
+    assert len(routes) == 16
+    for route in routes:
+        _raw(api, route)
+    monkeypatch.setattr(client, "send_command", counting)
+    gc.disable()
+    try:
+        for route in routes:
+            calls.clear()
+            _raw(api, route)
+            assert 0 < len(calls) <= 30, (route, len(calls))
+    finally:
+        gc.enable()
+
+
+def test_stop_drops_the_view(api, spark, tmp_path):
+    """Each API reads its table under a temp view of its own name;
+    ``stop()`` drops it."""
+    path = str(tmp_path / "spans.parquet")
+    shutil.copy(SPANS, path)
+    a = TelemetryAPI(spark, path, host="127.0.0.1", port=0, now=NOW)
+    assert a.view != api.view
+    assert spark.catalog.tableExists(a.view)
+    a.stop()
+    assert not spark.catalog.tableExists(a.view)
+    assert spark.catalog.tableExists(api.view)

@@ -13,23 +13,30 @@ cycle, then REPS timed cycles, so a route's classes must survive the
 other 15 routes in Spark's codegen cache. Around each request of the
 last cycle the status store (it works with the UI off) and the codegen
 compile count are read, so the counts are exactly that request's
-engine work. Prints one JSON object: route → ``{"ms_p50", "jobs",
+engine work. Then each route's builder (``TelemetryAPI.plan``, the one
+SQL call of a request, without its collect) runs REPS times on a
+non-main thread, as the handler threads run it, with Python's GC off,
+counting the py4j round trips that thread makes. Prints one JSON
+object: route → ``{"ms_p50", "build_ms", "py4j_calls", "jobs",
 "stages", "tasks", "widest", "shuffle_bytes", "compiles"}``
 (``widest``: the most tasks in one stage; ``shuffle_bytes``: shuffle
 bytes read plus written; ``compiles``: classes compiled, 0 when every
 one came from the cache), the session's ``cores``, and ``totals``: the
 cycle's jobs, stages, tasks and shuffle bytes summed over the routes,
-with ``ms_p50_sum``, the sum of the route medians. Skipped stages are
-not counted.
+with ``ms_p50_sum``, the sum of the route medians, ``build_ms`` (the
+sum of the median builds) and ``py4j_calls``. Skipped stages are not
+counted.
 """
 
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import statistics
 import sys
+import threading
 import time
 import urllib.request
 from datetime import datetime, timezone
@@ -100,6 +107,42 @@ def engine_delta(before, after) -> dict[str, int]:
             "compiles": after[2] - before[2]}
 
 
+def build_cost(api, target: str) -> tuple[float, int]:
+    """Milliseconds and py4j round trips of one ``api.plan(target)``
+    on a new thread, with Python's GC off (its finalizers send detach
+    commands from whichever thread they run on)."""
+    client = api.spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    out = {}
+
+    def run():
+        calls = 0
+
+        def counting(*a, **k):
+            nonlocal calls
+            if threading.current_thread() is worker:
+                calls += 1
+            return send(*a, **k)
+
+        client.send_command = counting
+        try:
+            t = time.perf_counter()
+            api.plan(target)
+            out["ms"] = (time.perf_counter() - t) * 1e3
+        finally:
+            del client.send_command
+        out["calls"] = calls
+
+    worker = threading.Thread(target=run, name="route-build")
+    gc.disable()
+    try:
+        worker.start()
+        worker.join()
+    finally:
+        gc.enable()
+    return out["ms"], out["calls"]
+
+
 def route_urls(spans) -> dict[str, str]:
     """Each route's path, bound to the table's first trace and span
     (by id) and its first service."""
@@ -125,8 +168,8 @@ def main() -> None:
     api.spans.count()
     api.start()
     try:
-        urls = {r: f"http://127.0.0.1:{api.port}{p}"
-                for r, p in route_urls(api.spans).items()}
+        paths = route_urls(api.spans)
+        urls = {r: f"http://127.0.0.1:{api.port}{p}" for r, p in paths.items()}
 
         def get(url) -> float:
             t = time.perf_counter()
@@ -148,10 +191,17 @@ def main() -> None:
                 "ms_p50": round(statistics.median(times[route]), 1),
                 **engine_delta(before, engine_counts(sc)),
             }
+        for route, path in paths.items():
+            costs = [build_cost(api, path) for _ in range(REPS)]
+            out["routes"][route]["build_ms"] = round(
+                statistics.median(ms for ms, _ in costs), 1)
+            out["routes"][route]["py4j_calls"] = costs[-1][1]
         out["totals"] = {
             k: sum(r[k] for r in out["routes"].values())
-            for k in ("jobs", "stages", "tasks", "shuffle_bytes")
+            for k in ("jobs", "stages", "tasks", "shuffle_bytes", "py4j_calls")
         }
+        out["totals"]["build_ms"] = round(
+            sum(r["build_ms"] for r in out["routes"].values()), 1)
         out["totals"]["ms_p50_sum"] = round(
             sum(r["ms_p50"] for r in out["routes"].values()), 1)
     finally:
