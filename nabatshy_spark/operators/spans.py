@@ -350,7 +350,7 @@ def search_metric_series_sql(
     each aggregate's null becomes 0; the few dozen buckets are then
     ordered inside one partition instead of by a global sort."""
     iv = interval_seconds(end_s - start_s)
-    # the column name: a percentile is an integer fraction in [0, 1]
+    # the column name, from the whole percent (the API takes 0-100)
     pcol = f"p{int(round(percentile * 100))}_ms"
     args: dict = {}
     conds = _search_conditions(query, trace_or_span, args)
