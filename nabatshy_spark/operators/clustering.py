@@ -102,13 +102,12 @@ def kmeans(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 4,
     iters: int = 2,
 ) -> DataFrame:
-    """Deterministic Lloyd's k-means; returns (id, cluster) after
-    ``iters`` assignment rounds (the last round's centroids are the
-    second-to-last round's means)."""
-    centroids = kmeans_centroids(df, id_col, vec_col, k, iters)
+    """Deterministic Lloyd's k-means into 4 clusters; returns (id,
+    cluster) after ``iters`` assignment rounds (the last round's
+    centroids are the second-to-last round's means)."""
+    centroids = kmeans_centroids(df, id_col, vec_col, 4, iters)
     if not centroids:
         # empty input: no seeds to assign against — empty result with
         # the contract schema

@@ -36,6 +36,20 @@ from pyspark.sql import functions as F
 from nabatshy_spark import artifacts
 from nabatshy_spark.catalog import load, table_path
 
+# One value per decision of the served relations: word 3-gram
+# shingles, the document-frequency cap of SCALE.md, the near-dup
+# thresholds (n-gram Jaccard, embedding cosine, n-gram containment),
+# the MinHash budget and band height, and the duplicated char-window
+# width.
+SHINGLE_N = 3
+MAX_DF = 200
+JACCARD_THRESHOLD = 0.5
+COSINE_THRESHOLD = 0.45
+CONTAINMENT_THRESHOLD = 0.6
+NUM_HASHES = 128
+ROWS_PER_BAND = 2
+CHAR_WINDOW = 20
+
 # ---------------------------------------------------------------------------
 # building blocks
 # ---------------------------------------------------------------------------
@@ -50,8 +64,9 @@ def tokens(col: Column) -> Column:
     return F.split(col, " ")
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram strings (space-joined) of a text column.
+def shingles(col: Column) -> Column:
+    """Distinct word ``SHINGLE_N``-gram strings (space-joined) of a text
+    column.
 
     The token array is bound ONCE through a single-element-array
     ``transform`` so the lambda variable ``t`` is a materialized value:
@@ -59,6 +74,8 @@ def shingles(col: Column, n: int = 3) -> Column:
     lambda instead re-evaluates the split per ``element_at`` (HOFs are
     interpreted, no common-subexpression elimination) — measured 9×
     slower at sf0.1."""
+
+    n = SHINGLE_N
 
     def gram_of(t: Column) -> Column:
         idx = F.sequence(F.lit(1), F.size(t) - (n - 1))
@@ -136,8 +153,7 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
+    threshold: float = JACCARD_THRESHOLD,
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact near-dup pairs: word-n-gram Jaccard ≥ threshold.
@@ -159,7 +175,7 @@ def ngram_jaccard_pairs(
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     sh = (
         df.repartition(parallelism, id_col)
-        .select(F.col(id_col), shingles(F.col(text_col), n).alias("__sh"))
+        .select(F.col(id_col), shingles(F.col(text_col)).alias("__sh"))
         .localCheckpoint(eager=False)  # read by sizes + both explode sides
     )
     if max_df is None:
@@ -300,12 +316,11 @@ _CURATED_PAIRS_VERSION = 1
 def shared_ngram_pairs(
     spark,
     sf_dir: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 200,
+    threshold: float = JACCARD_THRESHOLD,
+    max_df: int | None = MAX_DF,
 ) -> DataFrame:
     """Fingerprint-keyed materialization of
-    ``ngram_jaccard_pairs(documents, n, threshold, max_df)`` — the one
+    ``ngram_jaccard_pairs(documents, threshold, max_df)`` — the one
     pair relation the dedup-derived queries read (dedup_ngram_jaccard,
     dedup_components, dedup_cluster_stats, dedup_keep_best,
     source_overlap_matrix, dup_threshold_curve, split_leakage_audit,
@@ -327,7 +342,6 @@ def shared_ngram_pairs(
             load(spark, sf_dir, "documents"),
             "doc_id",
             "text",
-            n=n,
             threshold=threshold,
             max_df=max_df,
         )
@@ -342,7 +356,7 @@ def shared_ngram_pairs(
         "ngram_pairs",
         table_path(sf_dir, "documents"),
         _PAIRS_VERSION,
-        {"n": n, "threshold": threshold, "max_df": max_df},
+        {"n": SHINGLE_N, "threshold": threshold, "max_df": max_df},
         _build,
     )
     return spark.read.parquet(path)
@@ -405,13 +419,7 @@ def curation_survivor_ids(flags: DataFrame) -> DataFrame:
     )
 
 
-def shared_curated_pairs(
-    spark,
-    sf_dir: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 200,
-) -> DataFrame:
+def shared_curated_pairs(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of the CURATION pair relation:
     ``ngram_jaccard_pairs`` over the exact-dedup survivors of the
     quality/lang-kept documents — the near-dup stage of both
@@ -438,7 +446,7 @@ def shared_curated_pairs(
             "left_semi",
         )
         pairs = ngram_jaccard_pairs(
-            sur_docs, "doc_id", "text", n=n, threshold=threshold, max_df=max_df
+            sur_docs, "doc_id", "text", JACCARD_THRESHOLD, MAX_DF
         )
         # output-bounded like the corpus pair relation — see the
         # coalesce note on shared_ngram_pairs
@@ -448,7 +456,7 @@ def shared_curated_pairs(
         "curated_pairs",
         table_path(sf_dir, "documents"),
         _CURATED_PAIRS_VERSION,
-        {"n": n, "threshold": threshold, "max_df": max_df},
+        {"n": SHINGLE_N, "threshold": JACCARD_THRESHOLD, "max_df": MAX_DF},
         _build,
     )
     return spark.read.parquet(path)
@@ -550,8 +558,7 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    num_hashes: int = 128,
+    num_hashes: int = NUM_HASHES,
 ) -> DataFrame:
     """(id, __hs, __sig) per document with a non-empty shingle set:
     the distinct 63-bit shingle hashes and the ``num_hashes``-entry
@@ -571,9 +578,9 @@ def minhash_signatures(
         df.repartition(parallelism, id_col)
         .select(
             F.col(id_col),
-            _shingle_sig_udf(n, _hash_family(num_hashes))(F.col(text_col)).alias(
-                "__hsig"
-            ),
+            _shingle_sig_udf(SHINGLE_N, _hash_family(num_hashes))(
+                F.col(text_col)
+            ).alias("__hsig"),
         )
         .select(
             F.col(id_col),
@@ -587,9 +594,7 @@ def minhash_signatures(
 def minhash_lsh_pairs(
     sigs: DataFrame,
     id_col: str,
-    threshold: float = 0.5,
-    num_hashes: int = 128,
-    rows_per_band: int = 2,
+    num_hashes: int = NUM_HASHES,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash signatures + banded LSH, with exact
@@ -616,7 +621,7 @@ def minhash_lsh_pairs(
     references indices below ``num_hashes``, so one full-budget
     signature serves every smaller budget unchanged.
     """
-    bands = num_hashes // rows_per_band
+    bands = num_hashes // ROWS_PER_BAND
     # read four times in the DAG (banding + both join sides of
     # candidate verification): materialized once, not per reference
     hs = sigs.select(F.col(id_col), "__hs", "__sig").localCheckpoint(eager=False)
@@ -635,7 +640,7 @@ def minhash_lsh_pairs(
     # — it cannot lose a true pair except through the max_bucket cap,
     # at odds far below the banding scheme's own 1e-8 miss floor.
     row_refs = ", ".join(
-        f"__sig[b * {rows_per_band} + {r}]" for r in range(rows_per_band)
+        f"__sig[b * {ROWS_PER_BAND} + {r}]" for r in range(ROWS_PER_BAND)
     )
     band_keys = F.expr(
         f"transform(sequence(0, {bands - 1}), b -> xxhash64(b, {row_refs}))"
@@ -694,7 +699,7 @@ def minhash_lsh_pairs(
             "jaccard",
             F.round(F.col("__i") / (F.col("__sa") + F.col("__sb") - F.col("__i")), 6),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     return verified.select("doc_a", "doc_b", "jaccard")
 
@@ -704,14 +709,9 @@ def minhash_lsh_pairs(
 _MINHASH_SIG_VERSION = 1
 
 
-def shared_minhash_signatures(
-    spark,
-    sf_dir: str,
-    n: int = 3,
-    num_hashes: int = 128,
-) -> DataFrame:
+def shared_minhash_signatures(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of
-    ``minhash_signatures(documents, "doc_id", "text", n, num_hashes)``.
+    ``minhash_signatures(documents, "doc_id", "text")``.
 
     Why: the signature UDF + its Arrow boundary are ~60% of
     dedup_minhash_lsh's 2.5 s/run at sf0.1 (cold cache), for a
@@ -729,14 +729,14 @@ def shared_minhash_signatures(
 
     def _build(staging: str) -> None:
         minhash_signatures(
-            load(spark, sf_dir, "documents"), "doc_id", "text", n, num_hashes
+            load(spark, sf_dir, "documents"), "doc_id", "text"
         ).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
         "minhash_sigs",
         table_path(sf_dir, "documents"),
         _MINHASH_SIG_VERSION,
-        {"n": n, "num_hashes": num_hashes},
+        {"n": SHINGLE_N, "num_hashes": NUM_HASHES},
         _build,
     )
     return spark.read.schema(
@@ -866,9 +866,8 @@ def embedding_dup_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.45,
 ) -> DataFrame:
-    """Embedding near-dup pairs: EXACT cosine ≥ threshold over all
+    """Embedding near-dup pairs: EXACT cosine ≥ ``COSINE_THRESHOLD`` over all
     pairs, computed as a blocked matrix product.
 
     Why exact and not LSH here: the test corpus (and most embedding
@@ -921,11 +920,11 @@ def embedding_dup_pairs(
     )
 
     return tasks.groupBy("__task").applyInPandas(
-        _block_pair_fn(threshold), schema="doc_a long, doc_b long, cos double"
+        _block_pair_fn(), schema="doc_a long, doc_b long, cos double"
     )
 
 
-def _block_pair_fn(threshold: float):
+def _block_pair_fn():
     """One all-pairs task: rows grouped by ``__task`` = "lo_hi" with
     ``__b`` ∈ {lo, hi} → unit-normalize, ONE BLAS matmul (triangular for
     lo==hi, cross otherwise), emit canonical (doc_a < doc_b, cos≥t)
@@ -942,12 +941,12 @@ def _block_pair_fn(threshold: float):
         ids = pdf["__id"].to_numpy()
         if lo == hi:
             sims = np.round(mat @ mat.T, 6)
-            ia, ib = np.nonzero(np.triu(sims >= threshold, k=1))
+            ia, ib = np.nonzero(np.triu(sims >= COSINE_THRESHOLD, k=1))
             da, db, cos = ids[ia], ids[ib], sims[ia, ib]
         else:
             left = pdf["__b"].to_numpy() == lo
             sims = np.round(mat[left] @ mat[~left].T, 6)
-            ia, ib = np.nonzero(sims >= threshold)
+            ia, ib = np.nonzero(sims >= COSINE_THRESHOLD)
             da, db, cos = ids[left][ia], ids[~left][ib], sims[ia, ib]
         a = np.minimum(da, db)
         b = np.maximum(da, db)
@@ -960,7 +959,6 @@ def embedding_dup_pairs_clustered(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.45,
     k: int = 8,
 ) -> DataFrame:
     """Cluster-pruned EXACT embedding near-dup pairs — the sub-quadratic
@@ -998,7 +996,7 @@ def embedding_dup_pairs_clustered(
     from nabatshy_spark.operators import clustering
 
     spark = df.sparkSession
-    R = math.sqrt(max(0.0, 2.0 - 2.0 * threshold))
+    R = math.sqrt(max(0.0, 2.0 - 2.0 * COSINE_THRESHOLD))
 
     sq_norm = F.aggregate(
         F.transform(F.col(vec_col), lambda x: x.cast("double") * x.cast("double")),
@@ -1063,7 +1061,7 @@ def embedding_dup_pairs_clustered(
         "__id", F.col("__raw").alias("__v"), F.col("__c").alias("__b"), "__task"
     )
     return tasks.groupBy("__task").applyInPandas(
-        _block_pair_fn(threshold), schema="doc_a long, doc_b long, cos double"
+        _block_pair_fn(), schema="doc_a long, doc_b long, cos double"
     )
 
 
@@ -1260,7 +1258,6 @@ def decontaminate(
     bench: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     min_hits: int = 1,
 ) -> DataFrame:
     """Flag training documents that overlap an evaluation/benchmark set
@@ -1268,7 +1265,7 @@ def decontaminate(
     every release (no reference counterpart, SURVEY §2.11).
 
     A corpus document is contaminated when it shares ≥ ``min_hits``
-    distinct word ``n``-grams with ANY benchmark document. Returns
+    distinct word ``SHINGLE_N``-grams with ANY benchmark document. Returns
     (id, n_hits) for contaminated documents only.
 
     Scale shape: the benchmark side is orders of magnitude smaller
@@ -1280,10 +1277,10 @@ def decontaminate(
     equi-join on the shingle.
     """
     c = corpus.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("__s")
+        F.col(id_col), F.explode(shingles(F.col(text_col))).alias("__s")
     )
     b = (
-        bench.select(F.explode(shingles(F.col(text_col), n)).alias("__s"))
+        bench.select(F.explode(shingles(F.col(text_col))).alias("__s"))
         .distinct()
     )
     return (
@@ -1298,7 +1295,6 @@ def incremental_corpus_index(
     corpus: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     max_df: int | None = None,
 ) -> dict[str, DataFrame]:
     """The CORPUS-side relations :func:`incremental_dedup` checks a
@@ -1320,7 +1316,7 @@ def incremental_corpus_index(
         corpus.repartition(parallelism, id_col)
         .select(
             F.col(id_col).alias("__cid"),
-            shingles(F.col(text_col), n).alias("__sh"),
+            shingles(F.col(text_col)).alias("__sh"),
         )
         .select("__cid", F.size("__sh").alias("__csz"), "__sh")
         .localCheckpoint(eager=False)
@@ -1358,20 +1354,17 @@ def incremental_corpus_index(
 # Bump when incremental_corpus_index's relations change shape or
 # semantics.
 _INCR_INDEX_VERSION = 1
+# The standing corpus of the incremental contract: doc_id % 10 >= 2
+# (the batch is the other fifth).
+INCR_MOD = 10
+INCR_BATCH_LT = 2
 
 
-def shared_incremental_corpus_index(
-    spark,
-    sf_dir: str,
-    n: int = 3,
-    max_df: int | None = 200,
-    mod: int = 10,
-    batch_lt: int = 2,
-) -> dict[str, DataFrame]:
+def shared_incremental_corpus_index(spark, sf_dir: str) -> dict[str, DataFrame]:
     """Fingerprint-keyed materialization of
     ``incremental_corpus_index`` over the standing corpus of the
     incremental-dedup contract (``documents`` rows with
-    ``doc_id % mod >= batch_lt``).
+    ``doc_id % INCR_MOD >= INCR_BATCH_LT``), capped at ``MAX_DF``.
 
     Why: the steady-state production mode is "the corpus was indexed
     long ago; each batch checks against it", but deriving the index
@@ -1393,8 +1386,8 @@ def shared_incremental_corpus_index(
 
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        corpus = docs.filter(F.col("doc_id") % mod >= batch_lt)
-        rel = incremental_corpus_index(corpus, "doc_id", "text", n, max_df)
+        corpus = docs.filter(F.col("doc_id") % INCR_MOD >= INCR_BATCH_LT)
+        rel = incremental_corpus_index(corpus, "doc_id", "text", MAX_DF)
         # digests / hot set / hot counts are vocabulary- or
         # doc-bounded → single file; shingle arrays and rare
         # postings are corpus-proportional → parallel-readable but
@@ -1413,13 +1406,12 @@ def shared_incremental_corpus_index(
         rel["rare"].repartition(nf, "__s").write.mode(
             "overwrite"
         ).parquet(os.path.join(staging, "rare"))
-        if rel["hot"] is not None:
-            rel["hot"].repartition(1).write.mode("overwrite").parquet(
-                os.path.join(staging, "hot")
-            )
-            rel["hot_counts"].repartition(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(staging, "hot_counts"))
+        rel["hot"].repartition(1).write.mode("overwrite").parquet(
+            os.path.join(staging, "hot")
+        )
+        rel["hot_counts"].repartition(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(staging, "hot_counts"))
         # Multi-relation artifact: each parquet dir has its own
         # _SUCCESS; the lifecycle gate checks the top level.
         with open(os.path.join(staging, "_SUCCESS"), "w"):
@@ -1429,30 +1421,20 @@ def shared_incremental_corpus_index(
         "incr_corpus",
         table_path(sf_dir, "documents"),
         _INCR_INDEX_VERSION,
-        {"n": n, "max_df": max_df, "mod": mod, "batch_lt": batch_lt},
+        {"n": SHINGLE_N, "max_df": MAX_DF, "mod": INCR_MOD, "batch_lt": INCR_BATCH_LT},
         _build,
     )
-    out: dict[str, DataFrame] = {
-        "hashes": spark.read.schema("__cid bigint, __h string").parquet(
-            os.path.join(path, "hashes")
-        ),
-        "shingles": spark.read.schema(
-            "__cid bigint, __csz int, __sh array<string>"
-        ).parquet(os.path.join(path, "shingles")),
-        "rare": spark.read.schema("__cid bigint, __s string").parquet(
-            os.path.join(path, "rare")
-        ),
-        "hot": None,
-        "hot_counts": None,
+    schemas = {
+        "hashes": "__cid bigint, __h string",
+        "shingles": "__cid bigint, __csz int, __sh array<string>",
+        "rare": "__cid bigint, __s string",
+        "hot": "__s string",
+        "hot_counts": "__cid bigint, __hc bigint",
     }
-    if max_df is not None:
-        out["hot"] = spark.read.schema("__s string").parquet(
-            os.path.join(path, "hot")
-        )
-        out["hot_counts"] = spark.read.schema(
-            "__cid bigint, __hc bigint"
-        ).parquet(os.path.join(path, "hot_counts"))
-    return out
+    return {
+        name: spark.read.schema(schema).parquet(os.path.join(path, name))
+        for name, schema in schemas.items()
+    }
 
 
 def incremental_dedup(
@@ -1460,8 +1442,6 @@ def incremental_dedup(
     batch: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the steady-state
     production mode of a crawl pipeline: the corpus was deduped long
@@ -1472,12 +1452,12 @@ def incremental_dedup(
     computed in-plan or read from its fingerprint-keyed artifact
     (:func:`shared_incremental_corpus_index` — byte-identical:
     deterministic digests / shingles / counts through parquet). It must
-    have been built with the same ``n``; its ``max_df`` cap (None: no
+    have been built by it; its ``max_df`` cap (None: no
     ``hot`` relation) is the cap this check applies.
 
     Returns one row per batch document: (id, status, match_id) with
     status 'dup_exact' (byte-identical to a corpus doc), 'dup_near'
-    (n-gram Jaccard ≥ threshold against a corpus doc), or 'kept';
+    (n-gram Jaccard ≥ ``JACCARD_THRESHOLD`` against a corpus doc), or 'kept';
     match_id is the smallest matching corpus id (null when kept).
 
     Scale shape — the corpus is the big side and it is never shuffled
@@ -1510,7 +1490,7 @@ def incremental_dedup(
     parallelism = batch.sparkSession.sparkContext.defaultParallelism
     bsh = (
         batch.repartition(parallelism, id_col)
-        .select(F.col(id_col), shingles(F.col(text_col), n).alias("__sh"))
+        .select(F.col(id_col), shingles(F.col(text_col)).alias("__sh"))
         .localCheckpoint(eager=False)  # read by explode, sizes and verify
     )
     bex = bsh.select(F.col(id_col), F.explode("__sh").alias("__s"))
@@ -1525,7 +1505,7 @@ def incremental_dedup(
         near_pairs = scored.withColumn(
             "jaccard",
             F.col("__i") / (F.col("__bsz") + F.col("__csz") - F.col("__i")),
-        ).filter(F.round("jaccard", 6) >= threshold)
+        ).filter(F.round("jaccard", 6) >= JACCARD_THRESHOLD)
     else:
         bhot = (
             bex.join(F.broadcast(hot), "__s")
@@ -1551,7 +1531,7 @@ def incremental_dedup(
                     F.col("__ub") / (F.col("__bsz") + F.col("__csz") - F.col("__ub")),
                     6,
                 )
-                >= threshold
+                >= JACCARD_THRESHOLD
             )
             # read by both the exact and the slack branch
             .localCheckpoint(eager=False)
@@ -1568,7 +1548,7 @@ def incremental_dedup(
                     / (F.size("__sh") + F.size("__csh") - F.col("__it")),
                     6,
                 )
-                >= threshold
+                >= JACCARD_THRESHOLD
             )
             .select(id_col, "__cid")
         )
@@ -1593,11 +1573,10 @@ def ngram_containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.6,
 ) -> DataFrame:
-    """Directed near-CONTAINMENT pairs: |A∩B| / |A| ≥ threshold means
-    document A is (mostly) contained in document B — the asymmetric
+    """Directed near-CONTAINMENT pairs: |A∩B| / |A| ≥
+    ``CONTAINMENT_THRESHOLD`` means document A is (mostly) contained in
+    document B — the asymmetric
     dedup mode (CCNet/RefinedWeb-style pipelines drop quotes, mirrors
     and snippet pages that Jaccard misses when the container is much
     longer than the contained doc).
@@ -1608,7 +1587,7 @@ def ngram_containment_pairs(
     direction is a projection, not a second join.
     """
     sh = df.select(
-        F.col(id_col), shingles(F.col(text_col), n).alias("__sh")
+        F.col(id_col), shingles(F.col(text_col)).alias("__sh")
     ).filter(F.size("__sh") > 0)
     ex = sh.select(F.col(id_col), F.explode("__sh").alias("__s"))
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("__sz"))
@@ -1641,7 +1620,7 @@ def ngram_containment_pairs(
         F.col("__ida").alias("container"),
         F.round(F.col("__i") / F.col("__sb"), 6).alias("containment"),
     )
-    return ab.unionByName(ba).filter(F.col("containment") >= threshold)
+    return ab.unionByName(ba).filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------
@@ -1676,7 +1655,7 @@ def _char_windows(
 
 
 def dup_char_vocab(
-    df: DataFrame, id_col: str, text_col: str, k: int = 20
+    df: DataFrame, id_col: str, text_col: str, k: int = CHAR_WINDOW
 ) -> DataFrame:
     """The DUPLICATED char-window vocabulary (__sh): the ``k``-char
     substrings occurring in ≥ 2 distinct documents — the input of
@@ -1700,15 +1679,14 @@ def duplicate_ngram_coverage(
     dup_vocab: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 20,
 ) -> DataFrame:
-    """Per-document fraction of character ``k``-gram windows that also
+    """Per-document fraction of character ``CHAR_WINDOW``-gram windows that also
     occur in at least one OTHER document — the per-doc "how much of me
     is boilerplate/copied" signal used to decide span-level scrubbing
     vs whole-doc dropping in training-data curation (the document-level
     view of what substring-dedup papers remove span-wise).
 
-    ``dup_vocab`` is :func:`dup_char_vocab` for the same ``k``
+    ``dup_vocab`` is :func:`dup_char_vocab` for the same width
     (in-plan, or read from :func:`shared_dup_char_vocab`). Plan: ONE
     explode of each doc into its window positions (narrow, no
     shuffle), a broadcast-sized probe of the vocabulary, one doc-keyed
@@ -1718,6 +1696,7 @@ def duplicate_ngram_coverage(
     overcount duplication by ~1e-9); the string key is kept here so the
     DuckDB oracle is exact.
     """
+    k = CHAR_WINDOW
     docs, windows = _char_windows(df, id_col, text_col, k)
     dupw = (
         windows.join(dup_vocab, "__sh")
@@ -1744,7 +1723,7 @@ def duplicate_span_stats(
     dup_vocab: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 20,
+    k: int = CHAR_WINDOW,
 ) -> DataFrame:
     """Character-level duplicated-SPAN coverage per document: the union
     of all duplicated ``k``-gram windows (gaps-and-islands over window
@@ -1795,9 +1774,9 @@ def duplicate_span_stats(
 _DUP_VOCAB_VERSION = 1
 
 
-def shared_dup_char_vocab(spark, sf_dir: str, k: int = 20) -> DataFrame:
+def shared_dup_char_vocab(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of
-    ``dup_char_vocab(documents, "doc_id", "text", k)``.
+    ``dup_char_vocab(documents, "doc_id", "text")``.
 
     Why: without it each of dup_ngram_coverage and dup_span_chars
     explodes the corpus twice per run — once to compute this
@@ -1808,7 +1787,7 @@ def shared_dup_char_vocab(spark, sf_dir: str, k: int = 20) -> DataFrame:
 
     def _build(staging: str) -> None:
         (
-            dup_char_vocab(load(spark, sf_dir, "documents"), "doc_id", "text", k)
+            dup_char_vocab(load(spark, sf_dir, "documents"), "doc_id", "text")
             # bounded file count, parallel reduce (the repartition(1)
             # vs coalesce(1) lesson — the distinct keeps its width)
             .repartition(8)
@@ -1817,6 +1796,10 @@ def shared_dup_char_vocab(spark, sf_dir: str, k: int = 20) -> DataFrame:
         )
 
     path = artifacts.ensure(
-        "dup_vocab", table_path(sf_dir, "documents"), _DUP_VOCAB_VERSION, {"k": k}, _build
+        "dup_vocab",
+        table_path(sf_dir, "documents"),
+        _DUP_VOCAB_VERSION,
+        {"k": CHAR_WINDOW},
+        _build,
     )
     return spark.read.schema("__sh string").parquet(path)

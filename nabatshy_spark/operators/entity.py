@@ -25,7 +25,17 @@ from pyspark.sql import functions as F
 
 from nabatshy_spark import artifacts
 from nabatshy_spark.catalog import load, table_path
-from nabatshy_spark.operators.dedup import connected_components
+from nabatshy_spark.operators.dedup import SHINGLE_N, connected_components
+
+# One value per decision of the served ER relations: the
+# document-frequency cap on blocking postings, the representative cap
+# of the canonical pass, the part and document match thresholds, and
+# the threshold of the part cluster rollup.
+MAX_DF = 200
+REP_CAP = 8
+PART_THRESHOLD = 0.8
+DOC_THRESHOLD = 0.5
+CLUSTER_THRESHOLD = 0.9
 
 
 def candidate_pairs_from_sets(
@@ -334,9 +344,7 @@ def blocked_candidate_pairs(
     )
 
 
-def _score_part_candidates(
-    pairs: DataFrame, extra_cols: list[str] | None = None
-) -> DataFrame:
+def _score_part_candidates(pairs: DataFrame, extra_cols: list[str]) -> DataFrame:
     """THE part-ER score — 0.5·Jaccard(name tokens) + 0.3·[brand equal]
     + 0.2·(1 − min(|Δsize|, 10)/10) — over a candidate relation
     carrying (inter, n_a, n_b, p_brand_a/b, p_size_a/b). One
@@ -348,7 +356,7 @@ def _score_part_candidates(
     return pairs.select(
         "id_a",
         "id_b",
-        *(extra_cols or []),
+        *extra_cols,
         (
             F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
         ).alias("name_jaccard"),
@@ -371,7 +379,7 @@ def _score_part_candidates(
 
 def part_matched_pairs(
     part: DataFrame,
-    threshold: float = 0.8,
+    threshold: float = PART_THRESHOLD,
     max_df: int | None = None,
     rep_cap: int | None = None,
     rep_flag_cap: int | None = None,
@@ -411,13 +419,13 @@ def part_matched_pairs(
         rep_flag_cap=rep_flag_cap,
     )
     return _score_part_candidates(
-        pairs, extra_cols=(["in_rep_cap"] if rep_flag_cap is not None else None)
+        pairs, ["in_rep_cap"] if rep_flag_cap is not None else []
     ).filter(F.col("score") >= threshold)
 
 
 def score_part_pairs(
     part: DataFrame,
-    threshold: float = 0.8,
+    threshold: float = PART_THRESHOLD,
     max_df: int | None = None,
 ) -> DataFrame:
     """Multi-attribute ER scoring for the ``part`` table.
@@ -448,10 +456,9 @@ def score_part_pairs(
 
 def part_topk_matches(
     part: DataFrame,
-    threshold: float = 0.8,
     k: int = 3,
-    max_df: int | None = 200,
-    rep_cap: int = 8,
+    max_df: int | None = MAX_DF,
+    rep_cap: int = REP_CAP,
 ) -> DataFrame:
     """Per-record top-``k`` scored matches — the OUTPUT-BOUNDED ER
     surface.
@@ -480,20 +487,15 @@ def part_topk_matches(
     (p_partkey, match_key, score, rank) with rank 1..k by
     (score DESC, match_key ASC).
 
-    Brand equality is threshold-necessary above 0.7 (see
-    :func:`score_part_pairs`), so both passes block on it.
+    The threshold is ``PART_THRESHOLD``; brand equality is
+    threshold-necessary above 0.7 (see :func:`score_part_pairs`), so
+    both passes block on it.
     """
-    if threshold <= 0.7:
-        raise ValueError(
-            "part_topk_matches requires threshold > 0.7 (brand-equality "
-            "blocking is threshold-derived; below 0.7 use the all-pairs "
-            "contract)"
-        )
     # Same candidate machinery and score definition as the all-pairs
     # contract — only the canonical pass runs rep-capped (see
     # part_matched_pairs for the skipped-prune plan note).
     matched = part_matched_pairs(
-        part, threshold=threshold, max_df=max_df, rep_cap=rep_cap
+        part, threshold=PART_THRESHOLD, max_df=max_df, rep_cap=rep_cap
     )
     return directed_topk(
         matched, "score", "p_partkey", "match_key", k, score_out="score"
@@ -551,18 +553,12 @@ def directed_topk(
 
 
 _MATCHES_VERSION = 1
-# The unified part_matches artifact: one exact t0.8 build
-# with an in_rep_cap flag serves every (threshold ≥ 0.8) ×
-# (rep_cap ∈ {None, 8}) consumer as a filter — see shared_part_matches.
-_UNIFIED_THRESHOLD = 0.8
-_UNIFIED_REP_CAP = 8
 
 
 def shared_part_matches(
     spark,
     sf_dir: str,
-    threshold: float = 0.8,
-    max_df: int | None = 200,
+    threshold: float = PART_THRESHOLD,
     rep_cap: int | None = None,
 ) -> DataFrame:
     """Fingerprint-keyed materialization of
@@ -583,35 +579,24 @@ def shared_part_matches(
     t0.9/rcNone) built separately are three expansions of the same
     blocking DAG (15.9 s of builds at sf0.1). They are all filters of
     ONE relation: the unified
-    t0.8 build runs the exact uncapped pass once with an ``in_rep_cap``
-    flag (see :func:`candidate_pairs_from_sets`), and
+    ``PART_THRESHOLD`` build runs the exact uncapped pass once with an
+    ``in_rep_cap`` flag (see :func:`candidate_pairs_from_sets`), and
 
-    - ``threshold > 0.8`` is a score filter (every pair scoring ≥ t
-      also scores ≥ 0.8 and candidate generation is
+    - ``threshold > PART_THRESHOLD`` is a score filter (every pair
+      scoring ≥ t also scores ≥ 0.8 and candidate generation is
       threshold-independent above 0.7 — brand blocking + the
       recall-lossless prune, see :func:`part_matched_pairs`);
-    - ``rep_cap = _UNIFIED_REP_CAP`` is the flag filter (token-pass
+    - ``rep_cap = REP_CAP`` is the flag filter (token-pass
       candidates are shared; a canonical pair is rep-capped iff an
       endpoint ranks ≤ cap — the flag's definition).
 
     Any other configuration still gets its own per-config build.
     """
-    # max_df is not None: rep_flag_cap requires a df cap (the flag's
-    # canonical-pass rank only bounds candidate cost alongside one), so
-    # df-uncapped configs keep their own per-config build.
-    unified = (
-        threshold >= _UNIFIED_THRESHOLD
-        and rep_cap in (None, _UNIFIED_REP_CAP)
-        and max_df is not None
-    )
+    unified = threshold >= PART_THRESHOLD and rep_cap in (None, REP_CAP)
     params = (
-        {
-            "threshold": _UNIFIED_THRESHOLD,
-            "max_df": max_df,
-            "rep_flag_cap": _UNIFIED_REP_CAP,
-        }
+        {"threshold": PART_THRESHOLD, "max_df": MAX_DF, "rep_flag_cap": REP_CAP}
         if unified
-        else {"threshold": threshold, "max_df": max_df, "rep_cap": rep_cap}
+        else {"threshold": threshold, "max_df": MAX_DF, "rep_cap": rep_cap}
     )
 
     def _build(staging: str) -> None:
@@ -623,10 +608,10 @@ def shared_part_matches(
         # upstream keeps its parallelism and only the write is single.
         part_matched_pairs(
             load(spark, sf_dir, "part"),
-            threshold=_UNIFIED_THRESHOLD if unified else threshold,
-            max_df=max_df,
+            threshold=PART_THRESHOLD if unified else threshold,
+            max_df=MAX_DF,
             rep_cap=None if unified else rep_cap,
-            rep_flag_cap=_UNIFIED_REP_CAP if unified else None,
+            rep_flag_cap=REP_CAP if unified else None,
         ).repartition(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
@@ -638,9 +623,9 @@ def shared_part_matches(
     )
     m = spark.read.parquet(path)
     if unified:
-        if threshold > _UNIFIED_THRESHOLD:
+        if threshold > PART_THRESHOLD:
             m = m.filter(F.col("score") >= threshold)
-        if rep_cap == _UNIFIED_REP_CAP:
+        if rep_cap == REP_CAP:
             m = m.filter(F.col("in_rep_cap"))
         m = m.select(
             "id_a", "id_b", "name_jaccard", "brand_eq", "size_sim", "score"
@@ -648,22 +633,15 @@ def shared_part_matches(
     return m
 
 
-def doc_matched_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 200,
-    rep_cap: int = 8,
-) -> DataFrame:
-    """RAW matched document pairs (id_a, id_b, jac ≥ threshold) by
-    exact word n-gram Jaccard over BOUNDED candidates — the matching
-    stage of the document-ER contract (see :func:`doc_topk_matches`).
+def doc_matched_pairs(docs: DataFrame) -> DataFrame:
+    """RAW matched document pairs (id_a, id_b, jac ≥ ``DOC_THRESHOLD``)
+    of a (doc_id, text) relation by exact word n-gram Jaccard over
+    BOUNDED candidates — the matching stage of the document-ER
+    contract (see :func:`doc_topk_matches`).
     Candidate generation: df-capped shingle postings (Σ min(df, cap)²,
     the same inverted-index bound as dedup.ngram_jaccard_pairs) ∪
     record×group-representative pairs over identical-shingle-set
-    groups (rep_cap lowest ids — Σ g·rep_cap, linear; exactly the
+    groups (``REP_CAP`` lowest ids — Σ g·rep_cap, linear; exactly the
     bound that keeps exact-duplicate clusters from going quadratic).
 
     Wired to the existing machinery, not a re-implementation: shingles
@@ -683,8 +661,8 @@ def doc_matched_pairs(
     # 6.5 s vs 3.7 s materialized at sf0.1.
     sets = (
         docs.select(
-            F.col(id_col).alias("id"),
-            shingles(F.col(text_col), n).alias("ts"),
+            F.col("doc_id").alias("id"),
+            shingles(F.col("text")).alias("ts"),
         )
         .filter(F.size("ts") > 0)
         .localCheckpoint(eager=False)
@@ -699,9 +677,9 @@ def doc_matched_pairs(
     # and "every pair sharing one common 3-gram".
     pairs = candidate_pairs_from_sets(
         sets,
-        max_df=max_df,
-        min_jaccard=threshold,
-        rep_cap=rep_cap,
+        max_df=MAX_DF,
+        min_jaccard=DOC_THRESHOLD,
+        rep_cap=REP_CAP,
         hash_canon_key=True,
     )
     return pairs.select(
@@ -710,20 +688,13 @@ def doc_matched_pairs(
         (
             F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
         ).alias("jac"),
-    ).filter(F.col("jac") >= threshold)
+    ).filter(F.col("jac") >= DOC_THRESHOLD)
 
 
 _DOC_MATCHES_VERSION = 1
 
 
-def shared_doc_matches(
-    spark,
-    sf_dir: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 200,
-    rep_cap: int = 8,
-) -> DataFrame:
+def shared_doc_matches(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of :func:`doc_matched_pairs`
     over the ``documents`` table — the document twin of
     :func:`shared_part_matches`, same rationale: near-dup matching is
@@ -734,36 +705,29 @@ def shared_doc_matches(
 
     def _build(staging: str) -> None:
         # repartition(1), not coalesce(1) — see shared_part_matches.
-        doc_matched_pairs(
-            load(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            n=n,
-            threshold=threshold,
-            max_df=max_df,
-            rep_cap=rep_cap,
-        ).repartition(1).write.mode("overwrite").parquet(staging)
+        pairs = doc_matched_pairs(load(spark, sf_dir, "documents"))
+        pairs.repartition(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
         "doc_matches",
         table_path(sf_dir, "documents"),
         _DOC_MATCHES_VERSION,
-        {"n": n, "threshold": threshold, "max_df": max_df, "rep_cap": rep_cap},
+        {
+            "n": SHINGLE_N,
+            "threshold": DOC_THRESHOLD,
+            "max_df": MAX_DF,
+            "rep_cap": REP_CAP,
+        },
         _build,
     )
     return spark.read.parquet(path)
 
 
-def doc_topk_matches(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    k: int = 3,
-    rep_cap: int = 8,
-) -> DataFrame:
-    """Per-document top-``k`` near-duplicate matches by exact word
+def doc_topk_matches(docs: DataFrame) -> DataFrame:
+    """Per-document top-3 near-duplicate matches by exact word
     n-gram Jaccard — the output-bounded ER contract generalized from
     ``part`` to the LLM-pipeline consumer, DOCUMENT entity resolution:
-    ≤ k rows per document; bounded candidate generation documented on
+    ≤ 3 rows per document; bounded candidate generation documented on
     :func:`doc_matched_pairs`.
 
     Deterministic miss condition (encoded identically in the DuckDB
@@ -771,15 +735,11 @@ def doc_topk_matches(
     AND a non-representative of its over-cap identical-set group.
     Scoring is the exact Jaccard from full shingle arrays, so reported
     values are exact for every emitted pair. Emits
-    (doc_id, match_id, rank, jaccard), rank 1..k by
+    (doc_id, match_id, rank, jaccard), rank 1..3 by
     (jaccard DESC, match_id ASC).
     """
-    matched = doc_matched_pairs(
-        docs, "doc_id", "text",
-        n=3, threshold=threshold, max_df=200, rep_cap=rep_cap,
-    )
     return directed_topk(
-        matched, "jac", "doc_id", "match_id", k, score_out="jaccard"
+        doc_matched_pairs(docs), "jac", "doc_id", "match_id", 3, score_out="jaccard"
     )
 
 
@@ -810,17 +770,14 @@ def cluster_histogram(matched: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def part_entity_clusters(
-    part: DataFrame,
-    threshold: float = 0.9,
-) -> DataFrame:
+def part_entity_clusters(part: DataFrame) -> DataFrame:
     """Cluster-size histogram of matched part entities.
 
-    Edges = scored pairs ≥ threshold; components + singleton handling
+    Edges = scored pairs ≥ ``CLUSTER_THRESHOLD``; components + singleton handling
     via :func:`cluster_histogram` — the shape reviewers actually look
     at for an ER run.
     """
     return cluster_histogram(
-        score_part_pairs(part, threshold=threshold),
+        score_part_pairs(part, threshold=CLUSTER_THRESHOLD),
         part.select(F.col("p_partkey").alias("node")),
     )

@@ -65,8 +65,8 @@ def pagerank(
     # distinct nation pairs) that turns five fact-sized iteration
     # shuffles into catalog-sized ones; the one fact-sized pass left
     # is this aggregation, whose partial (map-side) combine shrinks
-    # the shuffle to the distinct pairs per task (guide §2.3
-    # "aggregate before you shuffle"). The per-edge sum Σ r/outdeg
+    # the shuffle to the distinct pairs per task ("aggregate before
+    # you shuffle"). The per-edge sum Σ r/outdeg
     # regroups to r·m/outdeg — same value up to FP reassociation,
     # which the 6-dp output round absorbs (the unrolled SQL oracle
     # already sums in its own order).
@@ -228,13 +228,8 @@ def bfs_hops(
     return visited
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 4,
-) -> DataFrame:
-    """Synchronous label propagation (Raghavan et al. 2007) with a
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """Synchronous label propagation over (src, dst) edges (Raghavan et al. 2007) with a
     deterministic tie-break — community detection, the question
     connected components can't answer on a dense graph (everything is
     one component; communities are where the edges CLUSTER).
@@ -243,7 +238,7 @@ def label_propagation(
     previous round's labels — no update-order dependence): a node
     adopts the label most frequent among its neighbors, ties broken by
     the smallest label. Labels start as the node ids. The round count
-    is a fixed budget like :func:`pagerank`, so the output is exactly
+    is a fixed budget of 4 like :func:`pagerank`, so the output is exactly
     reproducible by an unrolled SQL oracle.
 
     Scale shape: state is one (node, label) frame; each round is one
@@ -255,8 +250,8 @@ def label_propagation(
     """
     from pyspark.sql.window import Window
 
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col(src) != F.col(dst)
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
+        F.col("src") != F.col("dst")
     )
     und = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -269,7 +264,7 @@ def label_propagation(
     w = Window.partitionBy("node").orderBy(
         F.col("__c").desc(), F.col("label").asc()
     )
-    for _ in range(iterations):
+    for _ in range(4):
         nb = und.join(
             labels.withColumnRenamed("node", "__n"), und.b == F.col("__n")
         ).select(F.col("a").alias("node"), "label")
@@ -377,7 +372,7 @@ def shared_trade_edges(spark, sf_dir: str) -> DataFrame:
     trade_reach_hops' per-pair revenue sum; counts are integers and the
     revenue doubles round-trip parquet bit-exactly, so every consumer
     is unchanged. At 100 TB the graph projection of the fact table is
-    the scheduled once-per-corpus job (guide §8: decide on small rows —
+    the scheduled once-per-corpus job (decide on small rows —
     the graph analytics never need the fact rows, only this relation).
     """
 

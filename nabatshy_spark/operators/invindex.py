@@ -92,9 +92,8 @@ def search_bm25(
     postings: DataFrame,
     doc_lens: DataFrame,
     terms: list[str],
-    k: int = 20,
 ) -> DataFrame:
-    """BM25-ranked disjunctive (OR) search — the standard relevance
+    """BM25-ranked disjunctive (OR) top-20 search — the standard relevance
     ranking (Robertson/Spärck Jones, public) over the same postings
     layout as :func:`search_and`.
 
@@ -107,7 +106,7 @@ def search_bm25(
     Scale shape: the scan is filtered to the queried terms' posting
     lists (partition-pruned under a term-partitioned layout); df per
     term is a window count over that small relation; one groupBy(doc)
-    sums the per-term contributions, then TakeOrdered for top-k.
+    sums the per-term contributions, then TakeOrdered for the top 20.
     """
     from pyspark.sql import Window
 
@@ -134,7 +133,7 @@ def search_bm25(
         .groupBy("doc")
         .agg(F.round(F.sum("__s"), 6).alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc").asc())
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -200,9 +199,8 @@ def hybrid_search(
     embeddings: DataFrame,
     terms: list[str],
     query_vec_id: int,
-    k: int = 10,
 ) -> DataFrame:
-    """Hybrid lexical+semantic retrieval via reciprocal rank fusion
+    """Hybrid lexical+semantic top-10 via reciprocal rank fusion
     (Cormack/Clarke/Büttcher, public): the BM25 top-20 and the cosine top-20
     merge on 1/(60 + rank) — the standard
     score-scale-free fusion every hybrid search stack runs.
@@ -216,7 +214,7 @@ def hybrid_search(
 
     from nabatshy_spark.operators.similarity import cosine_topk
 
-    lex = search_bm25(postings, doc_lens, terms, k=_RRF_DEPTH)
+    lex = search_bm25(postings, doc_lens, terms)  # _RRF_DEPTH rows
     sem = cosine_topk(embeddings, "vec_id", "embedding", query_vec_id, k=_RRF_DEPTH)
     wl = Window.orderBy(F.col("score").desc(), F.col("doc").asc())
     ws = Window.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
@@ -232,7 +230,7 @@ def hybrid_search(
             6,
         ).alias("rrf_score"),
     )
-    return fused.orderBy(F.col("rrf_score").desc(), F.col("doc").asc()).limit(k)
+    return fused.orderBy(F.col("rrf_score").desc(), F.col("doc").asc()).limit(10)
 
 
 def build_positional_postings(

@@ -187,18 +187,16 @@ def rules_from_supports(
 # dedup-within-basket, in-array pair expansion). Bump on any change
 # there, or a warm artifact root serves pre-change supports.
 _BASKET_STATS_VERSION = 1
-# basket-size cap of the shared supports (see the module docstring)
+# basket-size cap and support floor of the shared supports (see the
+# module docstring)
 _MAX_BASKET = 1000
+_MIN_SUPPORT = 3
 
 
-def shared_part_basket_stats(
-    spark,
-    sf_dir: str,
-    min_support: int = 3,
-):
+def shared_part_basket_stats(spark, sf_dir: str):
     """Fingerprint-keyed materialization of the A-priori support
     relations over the (order, part) baskets: pair supports (already
-    filtered to >= min_support), frequent-item supports, and the
+    filtered to >= ``_MIN_SUPPORT``), frequent-item supports, and the
     capped-basket grand total — the three outputs of
     :func:`_pair_support_relations` that frequent_part_pairs and
     association_rules_parts each re-mined from the fact table per run
@@ -217,7 +215,7 @@ def shared_part_basket_stats(
             load(spark, sf_dir, "lineitem"),
             "l_orderkey",
             "l_partkey",
-            min_support,
+            _MIN_SUPPORT,
             _MAX_BASKET,
         )
         pair_sup.coalesce(1).write.mode("overwrite").parquet(
@@ -238,7 +236,7 @@ def shared_part_basket_stats(
         "basket_stats",
         table_path(sf_dir, "lineitem"),
         _BASKET_STATS_VERSION,
-        {"min_support": min_support, "max_basket": _MAX_BASKET},
+        {"min_support": _MIN_SUPPORT, "max_basket": _MAX_BASKET},
         _build,
     )
     return (

@@ -3,7 +3,7 @@ LSH cell, so a top-k query prunes at the FILE level — the storage-side
 upgrade of the LSH bucket join (SCALE.md "similarity" section made
 executable).
 
-Cell id = the first ``cell_bits`` of the random-hyperplane signature
+Cell id = the first ``_CELL_BITS`` of the random-hyperplane signature
 (deterministic planes, same family as operators/similarity.py). A
 query reads only the cells sharing its id — with multi-probe widening
 (flip one bit at a time) to recover recall near cell boundaries, the
@@ -31,26 +31,17 @@ from pyspark.sql import functions as F
 
 from nabatshy_spark import artifacts
 from nabatshy_spark.operators.dedup import cosine
-from nabatshy_spark.operators.similarity import lsh_signature
+from nabatshy_spark.operators.similarity import PQ_KS, PQ_M, lsh_signature
 
 CELL_COL = "cell"
-# the served index: 2^4 cells over 64-d embeddings; IVF+PQ codes are
-# 8 subspaces of 16 centroids each
+# the served index: 2^4 cells over 64-d embeddings
 _CELL_BITS = 4
 _DIM = 64
-_PQ_M = 8
-_PQ_KS = 16
 
 
-def build_ivf(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    cell_bits: int = 4,
-    dim: int = 64,
-) -> None:
+def build_ivf(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
     """Write the vector table partitioned by its coarse LSH cell."""
-    signed = lsh_signature(df, vec_col, num_planes=cell_bits, dim=dim)
+    signed = lsh_signature(df, vec_col, num_planes=_CELL_BITS, dim=_DIM)
     (
         signed.withColumn(CELL_COL, F.col("__sig").cast("int"))
         .drop("__sig")
@@ -89,9 +80,7 @@ def ensure_ivf(
         source_path,
         _IVF_VERSION,
         {"vec_col": vec_col, "cell_bits": _CELL_BITS, "dim": _DIM},
-        lambda staging: build_ivf(
-            spark.read.parquet(source_path), staging, vec_col, _CELL_BITS, _DIM
-        ),
+        lambda staging: build_ivf(spark.read.parquet(source_path), staging, vec_col),
     )
 
 
@@ -108,7 +97,6 @@ def ivf_topk(
     path: str,
     query_vec: list[float],
     k: int = 10,
-    cell_bits: int = 4,
     nprobe: int = 3,
 ) -> DataFrame:
     """Top-k by cosine, scanning only the probed cells.
@@ -120,10 +108,10 @@ def ivf_topk(
     sig = 0
     from nabatshy_spark.operators.similarity import _planes
 
-    for i, plane in enumerate(_planes(len(query_vec), cell_bits)):
+    for i, plane in enumerate(_planes(len(query_vec), _CELL_BITS)):
         if sum(a * b for a, b in zip(query_vec, plane)) > 0:
             sig |= 1 << i
-    cells = _probe_cells(sig, cell_bits, nprobe)
+    cells = _probe_cells(sig, _CELL_BITS, nprobe)
     df = spark.read.parquet(path).filter(F.col(CELL_COL).isin(cells))
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
@@ -139,16 +127,7 @@ def ivf_topk(
 # --- IVF + PQ composition (the FAISS IVFPQ architecture, public) ----------
 
 
-def build_ivfpq(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_bits: int = 4,
-    dim: int = 64,
-    m: int = 8,
-    ks: int = 16,
-) -> None:
+def build_ivfpq(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
     """Write an IVF+PQ index: rows partitioned by coarse LSH cell, each
     row carrying its PQ ``code`` next to the raw vector (Jégou et al.
     IVFADC). The trained codebooks (m·ks·(dim/m) doubles) land as a
@@ -162,9 +141,9 @@ def build_ivfpq(
 
     from nabatshy_spark.operators.similarity import pq_codebooks, pq_encode
 
-    books = pq_codebooks(df, id_col, vec_col, dim, m=m, ks=ks)
-    encoded = pq_encode(df, id_col, vec_col, books)
-    signed = lsh_signature(encoded, vec_col, num_planes=cell_bits, dim=dim)
+    books = pq_codebooks(df, "vec_id", vec_col, _DIM)
+    encoded = pq_encode(df, "vec_id", vec_col, books)
+    signed = lsh_signature(encoded, vec_col, num_planes=_CELL_BITS, dim=_DIM)
     (
         signed.withColumn(CELL_COL, F.col("__sig").cast("int"))
         .drop("__sig")
@@ -254,11 +233,8 @@ def ensure_ivfpq(
             "vec_col": vec_col,
             "cell_bits": _CELL_BITS,
             "dim": _DIM,
-            "m": _PQ_M,
-            "ks": _PQ_KS,
+            "m": PQ_M,
+            "ks": PQ_KS,
         },
-        lambda staging: build_ivfpq(
-            spark.read.parquet(source_path), staging, "vec_id", vec_col,
-            _CELL_BITS, _DIM, _PQ_M, _PQ_KS,
-        ),
+        lambda staging: build_ivfpq(spark.read.parquet(source_path), staging, vec_col),
     )

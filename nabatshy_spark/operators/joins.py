@@ -142,7 +142,6 @@ def semi_join_ids(
     ids: DataFrame,
     key: str,
     n_ids_estimate: int,
-    force: str | None = None,
 ) -> DataFrame:
     """LEFT SEMI join ``big`` against a (usually small) id relation,
     picking the physical strategy by estimated id-list size — the
@@ -161,18 +160,11 @@ def semi_join_ids(
       builds a hash set from its id partition only — bounded memory,
       no driver collect. (merge-sort semi would also work; hash avoids
       sorting the big side.)
-
-    ``force`` ('broadcast' | 'shuffle') pins a branch for testing.
     """
-    if force not in (None, "broadcast", "shuffle"):
-        raise ValueError(f"force must be broadcast|shuffle, got {force!r}")
     threshold = _parse_byte_size(
         big.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     )
     est_bytes = int(n_ids_estimate) * _ID_WIDTH_BYTES
-    use_broadcast = threshold >= 0 and est_bytes <= threshold
-    if force is not None:
-        use_broadcast = force == "broadcast"
-    if use_broadcast:
+    if threshold >= 0 and est_bytes <= threshold:
         return big.join(F.broadcast(ids), key, "left_semi")
     return big.join(ids.hint("shuffle_hash"), key, "left_semi")

@@ -18,6 +18,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# temperature mixing: a token budget of half the corpus, shares
+# ∝ tokens^(1/2)
+BUDGET_FRAC = 0.5
+TEMPERATURE = 2.0
+
 
 def hash_sample(df: DataFrame, key_col: str, bps: int) -> DataFrame:
     """Keep ~``bps``/65536 of rows, decided by the first 4 hex chars of
@@ -41,7 +46,7 @@ def hash_sample_pred(key_col: str, bps: int) -> Column:
     materializing the sample). One definition — a filter-vs-count_if
     divergence would silently break the funnel's accounting.
 
-    Validates the full [0, 65536] range itself (ADVICE r8): relying on
+    Validates the full [0, 65536] range itself: relying on
     :func:`hash_sample` for validation left the bare predicate unsafe —
     format(65536,'04x') == '10000' is FIVE chars, and the lexicographic
     compare of 4-char md5 prefixes against it silently drops ~94% of
@@ -193,15 +198,14 @@ def temperature_mixture_rates(
     df: DataFrame,
     source_col: str,
     n_tokens: Column,
-    budget_frac: float = 0.5,
-    temperature: float = 2.0,
 ) -> DataFrame:
     """Token-budget data mixing: allocate a total token budget
-    (``budget_frac`` × corpus tokens) across sources by
+    (``BUDGET_FRAC`` × corpus tokens) across sources by
     temperature-scaled sampling — target share p_s ∝ tokens_s^(1/τ)
-    (τ=2 ⇒ √, the standard multilingual/multi-domain rebalancing that
-    upweights small sources without drowning large ones) — and emit the
-    per-source keep-rate min(1, budget·p_s / tokens_s).
+    (τ = ``TEMPERATURE`` = 2 ⇒ √, the standard multilingual/multi-domain
+    rebalancing that upweights small sources without drowning large
+    ones) — and emit the per-source keep-rate
+    min(1, budget·p_s / tokens_s).
 
     One aggregation over the scan (partial agg on the source key), then
     a 1-row grand-total broadcast back onto the per-source relation —
@@ -213,13 +217,13 @@ def temperature_mixture_rates(
         F.count("*").alias("n_docs"),
         F.sum(n_tokens.cast("long")).alias("tokens"),
     )
-    raw = F.pow(F.col("tokens").cast("double"), F.lit(1.0 / temperature))
+    raw = F.pow(F.col("tokens").cast("double"), F.lit(1.0 / TEMPERATURE))
     totals = per_source.agg(
         F.sum(raw).alias("__raw_total"), F.sum("tokens").alias("__tok_total")
     )
     per_source = per_source.join(F.broadcast(totals))
     share = raw / F.col("__raw_total")
-    budget = F.lit(budget_frac) * F.col("__tok_total")
+    budget = F.lit(BUDGET_FRAC) * F.col("__tok_total")
     rate = F.round(
         F.least(F.lit(1.0), budget * share / F.col("tokens")), 6
     )
@@ -238,8 +242,6 @@ def mixture_sample(
     id_col: str,
     source_col: str,
     n_tokens: Column,
-    budget_frac: float = 0.5,
-    temperature: float = 2.0,
 ) -> DataFrame:
     """Apply the temperature-mixture plan: keep each document with its
     source's rate, decided by the deterministic per-key uniform — the
@@ -251,9 +253,9 @@ def mixture_sample(
     :func:`weighted_sample`, so the selected subset is bit-reproducible
     anywhere.
     """
-    rates = temperature_mixture_rates(
-        df, source_col, n_tokens, budget_frac, temperature
-    ).select(source_col, "rate")
+    rates = temperature_mixture_rates(df, source_col, n_tokens).select(
+        source_col, "rate"
+    )
     return (
         df.join(F.broadcast(rates), source_col)
         .filter(_u01(F.col(id_col)) < F.col("rate"))

@@ -89,16 +89,13 @@ def events_predicate(conds: list[AttributeQuery] | None, raw_query: str) -> Colu
     return pred
 
 
-def search_events(
-    df: DataFrame,
-    query: str,
-    page: int = 1,
-    page_size: int = 20,
-    sort_field: str = "ts",
-    sort_order: str = "desc",
-) -> DataFrame:
-    """Full search lifecycle (reference §3.2): parse → filter → dynamic
-    sort (O3) → offset/limit pagination (O4, api/service.go:806-846).
+# rows per search page; pages sort by ts descending, event_id ascending
+PAGE_SIZE = 20
+
+
+def search_events(df: DataFrame, query: str, page: int) -> DataFrame:
+    """Full search lifecycle (reference §3.2): parse → filter → sort
+    (O3) → offset/limit pagination (O4, api/service.go:806-846).
 
     ``event_id`` is appended as a total-order tiebreaker so pagination
     is deterministic (the reference has the same caveat and relies on
@@ -106,48 +103,26 @@ def search_events(
     """
     conds = parse_attribute_query(query)
     filtered = df.filter(events_predicate(conds, query))
-    sort_col = F.col(sort_field)
-    primary = sort_col.desc() if sort_order == "desc" else sort_col.asc()
-    ordered = filtered.orderBy(primary, F.col("event_id").asc())
-    return ordered.offset((page - 1) * page_size).limit(page_size)
+    ordered = filtered.orderBy(F.col("ts").desc(), F.col("event_id").asc())
+    return ordered.offset((page - 1) * PAGE_SIZE).limit(PAGE_SIZE)
 
 
-def keyset_page(
-    df: DataFrame,
-    sort_field: str,
-    sort_order: str,
-    tiebreak_field: str,
-    after: tuple | None,
-    page_size: int,
-) -> DataFrame:
-    """Keyset (seek) pagination — the scale-safe twin of offset/limit
-    (O4). ``after`` is the previous page's last ``(sort value,
-    tiebreak)`` pair, exactly what a serving API hands back as a page
-    token. The page is then a FILTER + top-k: TakeOrderedAndProject
-    over the rows past the token, so page 1000 costs the same as page
-    1 — offset pagination skip-scans (page-1)×size rows first, linear
-    in page depth. Requires what search already guarantees: a total
-    order via the unique tiebreaker."""
-    sc, tc = F.col(sort_field), F.col(tiebreak_field)
-    if after is not None:
-        v, tb = after
-        past_token = sc < F.lit(v) if sort_order == "desc" else sc > F.lit(v)
-        df = df.filter(past_token | ((sc == F.lit(v)) & (tc > F.lit(tb))))
-    primary = sc.desc() if sort_order == "desc" else sc.asc()
-    return df.orderBy(primary, tc.asc()).limit(page_size)
-
-
-def search_events_keyset(
-    df: DataFrame,
-    query: str,
-    after: tuple | None = None,
-    page_size: int = 20,
-    sort_field: str = "ts",
-    sort_order: str = "desc",
-) -> DataFrame:
-    """``search_events`` with keyset pagination (same parse → filter →
-    dynamic sort pipeline; the offset form stays for reference
-    parity)."""
+def search_events_keyset(df: DataFrame, query: str, after: tuple) -> DataFrame:
+    """``search_events`` with keyset (seek) pagination — the scale-safe
+    twin of offset/limit (O4). ``after`` is the previous page's last
+    ``(ts, event_id)`` pair, exactly what a serving API hands back as a
+    page token. The page is then a FILTER + top-k:
+    TakeOrderedAndProject over the rows past the token, so page 1000
+    costs the same as page 1 — offset pagination skip-scans
+    (page-1)×size rows first, linear in page depth. Requires what
+    search already guarantees: a total order via the unique
+    tiebreaker."""
     conds = parse_attribute_query(query)
-    filtered = df.filter(events_predicate(conds, query))
-    return keyset_page(filtered, sort_field, sort_order, "event_id", after, page_size)
+    ts, eid = F.col("ts"), F.col("event_id")
+    v, tb = after
+    past_token = (ts < F.lit(v)) | ((ts == F.lit(v)) & (eid > F.lit(tb)))
+    return (
+        df.filter(events_predicate(conds, query) & past_token)
+        .orderBy(ts.desc(), eid.asc())
+        .limit(PAGE_SIZE)
+    )

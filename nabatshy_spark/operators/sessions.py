@@ -11,23 +11,24 @@ from pyspark.sql import functions as F
 
 # a session ends after this long without an event from its user
 GAP_MINUTES = 30
+# rows kept per group by topk_per_group
+TOPK = 3
+# events per path of top_session_paths: the sessions of the events
+# table are short enough that longer paths are all unique
+PATH_LEN = 2
 
 
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Assign session ids: a new session starts when the gap since the
-    user's previous event exceeds ``GAP_MINUTES`` (lag + running sum —
-    the classic batch sessionization).
+def sessionize(df: DataFrame) -> DataFrame:
+    """Assign session ids over (user_id, ts): a new session starts when
+    the gap since the user's previous event exceeds ``GAP_MINUTES``
+    (lag + running sum — the classic batch sessionization).
 
     One shuffle on user_id; both window functions share the same
     partitioning and ordering, so Catalyst plans a single sort+exchange.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    gap = F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(
-        F.lag(ts_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gap = F.unix_timestamp(F.col("ts")) - F.unix_timestamp(
+        F.lag("ts").over(w)
     )
     new_session = F.when(
         gap.isNull() | (gap > GAP_MINUTES * 60), 1
@@ -40,7 +41,7 @@ def sessionize(
 
 def session_stats(df: DataFrame) -> DataFrame:
     """Per-session rollup: event count, start/end, duration seconds."""
-    s = sessionize(df, "user_id", "ts")
+    s = sessionize(df)
     return s.groupBy(F.col("user_id"), F.col("session_seq")).agg(
         F.count("*").alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -115,29 +116,24 @@ def topk_per_group(
     group_col: str,
     order_col: str,
     tiebreak_col: str,
-    k: int = 3,
 ) -> DataFrame:
-    """Top-K rows per group via row_number — per-group heaps after one
-    shuffle on the group key; never a global sort."""
+    """Top-``TOPK`` rows per group via row_number — per-group heaps
+    after one shuffle on the group key; never a global sort."""
     w = Window.partitionBy(group_col).orderBy(
         F.col(order_col).desc(), F.col(tiebreak_col).asc()
     )
     return (
         df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
     )
 
 
-def top_session_paths(
-    df: DataFrame,
-    n: int = 3,
-    k: int = 20,
-) -> DataFrame:
-    """Most common length-``n`` event-type paths WITHIN sessions — the
-    sequence-mining rollup behind "what do users do next" analyses.
-    Composes :func:`sessionize` with a lead-window n-gram: every
-    window of ``n`` consecutive events inside one session becomes a
-    '>'-joined path, counted corpus-wide, top ``k``.
+def top_session_paths(df: DataFrame, k: int = 20) -> DataFrame:
+    """Most common length-``PATH_LEN`` event-type paths WITHIN sessions
+    — the sequence-mining rollup behind "what do users do next"
+    analyses. Composes :func:`sessionize` with a lead-window n-gram:
+    every window of ``PATH_LEN`` consecutive events inside one session
+    becomes a '>'-joined path, counted corpus-wide, top ``k``.
 
     The sequence order is (ts, id) — the id tiebreak makes paths
     deterministic under equal timestamps (session ASSIGNMENT is
@@ -145,15 +141,15 @@ def top_session_paths(
     session window (user key) and the path count; leads never cross a
     session boundary because the window partitions on (user, session).
     """
-    s = sessionize(df, "user_id", "ts")
+    s = sessionize(df)
     w = Window.partitionBy("user_id", "session_seq").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
     steps = [F.col("event_type")] + [
-        F.lead("event_type", i).over(w) for i in range(1, n)
+        F.lead("event_type", i).over(w) for i in range(1, PATH_LEN)
     ]
     path = F.concat_ws(">", *steps)
-    complete = F.lead("event_type", n - 1).over(w).isNotNull()
+    complete = F.lead("event_type", PATH_LEN - 1).over(w).isNotNull()
     return (
         s.select(path.alias("path"), complete.alias("__ok"))
         .filter(F.col("__ok"))

@@ -20,13 +20,16 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nabatshy_spark.operators.dedup import cosine
+from nabatshy_spark.operators.dedup import COSINE_THRESHOLD, cosine
 
 # LSH banding: lsh_topk's signature width, and the band count both
 # LSH operators split a signature into
 _LSH_TOPK_PLANES = 64
 _LSH_BANDS = 16
-# Lloyd rounds of pq_codebooks
+# PQ codes: 8 subspaces of 16 centroids each, trained in 3 Lloyd
+# rounds
+PQ_M = 8
+PQ_KS = 16
 _PQ_ITERS = 3
 
 
@@ -109,7 +112,7 @@ def lsh_signature(df: DataFrame, vec_col: str, num_planes: int = 16, dim: int = 
     strictly positive dots set a bit) — but near-zero dots are NOT
     bit-identical to the old sequential HOF fold: numpy's matmul
     accumulates in a different order, so a dot within float rounding
-    of 0 can flip sign vs the previous signatures (ADVICE r8). Only
+    of 0 can flip sign vs a sequential fold. Only
     approximate/rows-only consumers read signatures, and recall gates
     (ann_recall_report) are the contract, not bit-stability across
     implementations. Null or wrong-dimension vectors raise with the
@@ -160,10 +163,9 @@ def lsh_topk(
     id_col: str,
     vec_col: str,
     query_id: int,
-    k: int = 10,
     signed: DataFrame | None = None,
 ) -> DataFrame:
-    """Approximate top-k: candidates share at least one signature band
+    """Approximate top-10: candidates share at least one signature band
     with the query (64 planes → 16 bands of 4 bits), then exact cosine
     on candidates only. Returns the same schema as ``cosine_topk``;
     recall is probabilistic (hence no SQL oracle — the driver records
@@ -217,19 +219,14 @@ def lsh_topk(
             F.round(cosine(F.col(vec_col), F.col("__q")), 6).alias("cos"),
         )
         .orderBy(F.col("cos").desc(), F.col(id_col).asc())
-        .limit(k)
+        .limit(10)
     )
 
 
-def lsh_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.45,
-) -> DataFrame:
+def lsh_dup_pairs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Embedding near-dup pairs, LSH-bucketed (the scale path for
     ``dedup.embedding_dup_pairs``): candidates share a signature band,
-    then exact cosine ≥ threshold on candidates only; verification is
+    then exact cosine ≥ ``COSINE_THRESHOLD`` on candidates only; verification is
     exact, so precision is 1 and only recall is probabilistic.
 
     Parameter rule (EXECUTED here, not just documented): bits-per-band
@@ -278,7 +275,7 @@ def lsh_dup_pairs(
     # Verification is the volume stage when the corpus has no cosine
     # gap (candidates ≈ all pairs): one Arrow-batched numpy einsum per
     # batch instead of an interpreted per-element HOF fold — same
-    # round-6 values, measured ~3× on 12M candidates at sf0.1.
+    # values, measured ~3× on 12M candidates at sf0.1.
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -307,7 +304,7 @@ def lsh_dup_pairs(
             "doc_b",
         )
         .withColumn("cos", _cos6(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= COSINE_THRESHOLD)
         .select("doc_a", "doc_b", "cos")
     )
 
@@ -430,7 +427,7 @@ def _sqdist_sql(vec_sql: str, centroid: list[float]) -> str:
     repr (shortest round-trip) with the D suffix, so the JVM sees the
     exact same IEEE values F.lit would ship.
 
-    Non-finite components are rejected up front (ADVICE r8): repr()
+    Non-finite components are rejected up front: repr()
     renders them 'nan'/'inf', whose D-suffixed forms do not parse in
     Spark SQL — and a NaN centroid means the k-means training data
     contained non-finite values, which every downstream distance
@@ -456,13 +453,12 @@ def pq_codebooks(
     id_col: str,
     vec_col: str,
     dim: int,
-    m: int = 8,
-    ks: int = 16,
 ) -> list[list[list[float]]]:
     """Train per-subspace PQ codebooks (Jégou, Douze, Schmid, "Product
     quantization for nearest neighbor search", TPAMI 2011): split the
-    ``dim`` dimensions into ``m`` contiguous subspaces and run the
-    deterministic Lloyd's k-means (operators/clustering.py) in each.
+    ``dim`` dimensions into ``m`` = ``PQ_M`` contiguous subspaces and
+    run the deterministic Lloyd's k-means (operators/clustering.py)
+    with ``ks`` = ``PQ_KS`` centroids in each.
 
     The result is m × ks × (dim/m) doubles — O(1) driver data (1 KB
     here). At corpus scale, train on a consistent hash sample
@@ -475,7 +471,7 @@ def pq_codebooks(
     means come back in one two-level aggregate keyed by (subspace,
     cluster, dim)). Numerically IDENTICAL to running
     clustering.kmeans_centroids per subspace — same first-ks-ids init,
-    same round-9 distance tie-break, same round-6 means, asserted
+    same distance tie-break, same means, asserted
     bit-equal by a differential unit in tests/test_round8_ops.py.
     The m×ks distance expressions are built as ONE SQL string
     (F.expr), not composed F-calls: each F call is a py4j round trip,
@@ -485,6 +481,7 @@ def pq_codebooks(
     Measured 18.2 s → 6.5 s for the m=8 default at sf0.01 (the
     remainder is parse+analysis of the still-large tree; steady-state
     execution is ~0.3 s/round)."""
+    m, ks = PQ_M, PQ_KS
     sub = dim // m
     init = df.orderBy(id_col).limit(ks).select(vec_col).collect()
     books = [
@@ -594,8 +591,6 @@ def pq_topk(
     vec_col: str,
     query_id: int,
     k: int = 10,
-    m: int = 8,
-    ks: int = 16,
     rerank: int = 8,
     books: list[list[list[float]]] | None = None,
     encoded: DataFrame | None = None,
@@ -630,7 +625,7 @@ def pq_topk(
     dim = len(q)
 
     if books is None:
-        books = pq_codebooks(df, id_col, vec_col, dim, m=m, ks=ks)
+        books = pq_codebooks(df, id_col, vec_col, dim)
     m = len(books)
     sub = dim // m
     if encoded is None:

@@ -25,6 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# count-min: 4 hash rows of 64 counters, 512 for join-size estimates;
+# Bloom filters probe 5 bits per key, 1,024 bits in the packed form
+CMS_DEPTH = 4
+CMS_WIDTH = 64
+JOIN_CMS_WIDTH = 512
+BLOOM_HASHES = 5
+BLOOM_BITS = 1024
+
 
 def _h(key: Column, seed: int, modulus: int) -> Column:
     """Engine-portable hash: first 8 md5 hex chars of "<seed>:<key>"
@@ -42,10 +50,8 @@ def _h(key: Column, seed: int, modulus: int) -> Column:
     )
 
 
-def cms_counters(
-    df: DataFrame, key_col: str, depth: int = 4, width: int = 64
-) -> DataFrame:
-    """The count-min sketch itself: (row, col, c) counters — depth
+def cms_counters(df: DataFrame, key_col: str, width: int = CMS_WIDTH) -> DataFrame:
+    """The count-min sketch itself: (row, col, c) counters — ``CMS_DEPTH``
     independent hash rows, each key adding its multiplicity to one cell
     per row. One explode (×depth) + one partial-agg shuffle of d·w
     groups; shard sketches merge by summing cells."""
@@ -54,7 +60,7 @@ def cms_counters(
             F.struct(
                 F.lit(d).alias("row"), _h(F.col(key_col), d, width).alias("col")
             )
-            for d in range(depth)
+            for d in range(CMS_DEPTH)
         ]
     )
     return (
@@ -64,15 +70,13 @@ def cms_counters(
     )
 
 
-def cms_estimates(
-    df: DataFrame, key_col: str, depth: int = 4, width: int = 64
-) -> DataFrame:
+def cms_estimates(df: DataFrame, key_col: str) -> DataFrame:
     """Per-distinct-key count-min estimate: min over the key's cells —
     ≥ the true count always (collisions only inflate), with the classic
     (ε=e/width, δ=e^-depth) overestimate bound. The distinct-key probe
     relation joins the d·w counter table (broadcast — the sketch is
     O(1) size by construction)."""
-    sketch = cms_counters(df, key_col, depth, width)
+    sketch = cms_counters(df, key_col)
     keys = df.select(F.col(key_col).alias("key")).distinct()
     probes = keys.select(
         "key",
@@ -81,9 +85,9 @@ def cms_estimates(
                 *[
                     F.struct(
                         F.lit(d).alias("row"),
-                        _h(F.col("key"), d, width).alias("col"),
+                        _h(F.col("key"), d, CMS_WIDTH).alias("col"),
                     )
-                    for d in range(depth)
+                    for d in range(CMS_DEPTH)
                 ]
             )
         ).alias("p"),
@@ -98,14 +102,12 @@ def cms_estimates(
     )
 
 
-def bloom_bits(
-    df: DataFrame, key_col: str, num_hashes: int = 5, num_bits: int = 1024
-) -> DataFrame:
+def bloom_bits(df: DataFrame, key_col: str, num_bits: int = BLOOM_BITS) -> DataFrame:
     """The Bloom filter's set-bit relation: distinct bit positions from
-    ``num_hashes`` probes per key. ≤ m rows regardless of input size;
+    ``BLOOM_HASHES`` probes per key. ≤ m rows regardless of input size;
     shard filters merge by union (distinct)."""
     probes = F.array(
-        *[_h(F.col(key_col), d, num_bits) for d in range(num_hashes)]
+        *[_h(F.col(key_col), d, num_bits) for d in range(BLOOM_HASHES)]
     )
     return (
         df.select(F.explode(probes).alias("bit"))
@@ -117,7 +119,6 @@ def bloom_probe(
     filter_bits: DataFrame,
     candidates: DataFrame,
     key_col: str,
-    num_hashes: int = 5,
     num_bits: int = 1024,
 ) -> DataFrame:
     """Membership test: a candidate "may be present" iff ALL its probe
@@ -128,7 +129,7 @@ def bloom_probe(
     probes = keys.select(
         "key",
         F.explode(
-            F.array(*[_h(F.col("key"), d, num_bits) for d in range(num_hashes)])
+            F.array(*[_h(F.col("key"), d, num_bits) for d in range(BLOOM_HASHES)])
         ).alias("bit"),
     )
     hits = (
@@ -140,7 +141,7 @@ def bloom_probe(
         keys.join(hits, "key", "left")
         .select(
             "key",
-            (F.coalesce(F.col("__set"), F.lit(0)) == num_hashes).alias(
+            (F.coalesce(F.col("__set"), F.lit(0)) == BLOOM_HASHES).alias(
                 "may_contain"
             ),
         )
@@ -187,15 +188,10 @@ def hll_rollup(
     )
 
 
-def cms_inner_product(
-    a: DataFrame,
-    b: DataFrame,
-    key_col: str = "key",
-    depth: int = 4,
-    width: int = 64,
-) -> DataFrame:
-    """Join-size estimation from two count-min sketches (Cormode &
-    Muthukrishnan 2005 §4.2; the AGMS-style inner-product estimator):
+def cms_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Join-size estimation from two ``key``-column count-min sketches
+    of width ``JOIN_CMS_WIDTH`` (Cormode & Muthukrishnan 2005 §4.2; the
+    AGMS-style inner-product estimator):
     |A ⋈ B| = Σ_k f_A(k)·f_B(k) is estimated per hash row as
     Σ_col cmsA[row,col]·cmsB[row,col], taking the MIN over rows.
     Collisions only ever add mass, so the estimate ≥ the true join
@@ -208,8 +204,8 @@ def cms_inner_product(
     two d·w-cell relations — O(1) work. Returns one row per hash row
     (``est`` per row); min over rows is the estimate.
     """
-    sa = cms_counters(a, key_col, depth, width)
-    sb = cms_counters(b, key_col, depth, width).select(
+    sa = cms_counters(a, "key", JOIN_CMS_WIDTH)
+    sb = cms_counters(b, "key", JOIN_CMS_WIDTH).select(
         F.col("row"), F.col("col"), F.col("c").alias("c_b")
     )
     return (
@@ -219,27 +215,29 @@ def cms_inner_product(
     )
 
 
-def bloom_bitmap(bits, num_bits: int = 1024) -> list[int]:
-    """Pack a set-bit list (bloom_bits rows) into ⌈num_bits/64⌉ SIGNED
-    64-bit words for the O(1) scan-side probe (:func:`bloom_pred`)."""
-    words = [0] * ((num_bits + 63) // 64)
+def bloom_bitmap(bits) -> list[int]:
+    """Pack a ``BLOOM_BITS``-bit set-bit list (bloom_bits rows) into
+    ⌈BLOOM_BITS/64⌉ SIGNED 64-bit words for the O(1) scan-side probe
+    (:func:`bloom_pred`)."""
+    words = [0] * ((BLOOM_BITS + 63) // 64)
     for b in bits:
         words[int(b) // 64] |= 1 << (int(b) % 64)
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def bloom_pred(key, bitmap_words: list[int], num_hashes: int = 5, num_bits: int = 1024):
-    """Codegen'd Bloom membership predicate over a packed bitmap —
-    each of the ``num_hashes`` probes is element_at + shift + AND
-    (O(1)), NOT an array_contains scan of the set-bit list (which is a
-    LINEAR walk of up to ``num_bits`` literals per probe: measured
-    4.49 s → sub-second on the fact scan at sf0.1). The words enter
-    the plan as a literal array (⌈num_bits/64⌉ longs — config-bounded
+def bloom_pred(key, bitmap_words: list[int]):
+    """Codegen'd Bloom membership predicate over a packed
+    ``BLOOM_BITS``-bit bitmap — each of the ``BLOOM_HASHES`` probes is
+    element_at + shift + AND (O(1)), NOT an array_contains scan of the
+    set-bit list (which is a LINEAR walk of up to ``BLOOM_BITS``
+    literals per probe: measured 4.49 s → sub-second on the fact scan
+    at sf0.1). The words enter the plan as a literal array
+    (⌈BLOOM_BITS/64⌉ longs — config-bounded
     like the CMS sketch), so the filter rides the scan with no join."""
     wl = F.array(*[F.lit(int(w)).cast("long") for w in bitmap_words])
     pred = None
-    for d in range(num_hashes):
-        h = _h(key, d, num_bits)
+    for d in range(BLOOM_HASHES):
+        h = _h(key, d, BLOOM_BITS)
         word = F.element_at(wl, (h / 64).cast("int") + 1)
         term = F.getbit(word, F.pmod(h, F.lit(64))) == 1
         pred = term if pred is None else (pred & term)

@@ -11,21 +11,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+SALT_BUCKETS = 16
 
-def salted_count_sum(
-    df: DataFrame,
-    keys: list[str],
-    sum_col: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
+
+def salted_count_sum(df: DataFrame, keys: list[str], sum_col: str) -> DataFrame:
     """Two-phase skew-proof count+sum: groupBy(keys + salt) partial,
     then groupBy(keys) final. A hot key's rows split across
-    ``salt_buckets`` reducers in phase one; phase two merges
-    ``salt_buckets`` partials per key — O(buckets), trivial.
+    ``SALT_BUCKETS`` reducers in phase one; phase two merges
+    ``SALT_BUCKETS`` partials per key — O(buckets), trivial.
 
     Rows spread by a deterministic hash over all their columns.
     """
-    salt = F.pmod(F.hash(F.concat_ws("\x00", *df.columns)), F.lit(salt_buckets))
+    salt = F.pmod(F.hash(F.concat_ws("\x00", *df.columns)), F.lit(SALT_BUCKETS))
     partial = (
         df.withColumn("__salt", salt)
         .groupBy(*keys, "__salt")

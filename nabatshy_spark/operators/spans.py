@@ -193,6 +193,9 @@ def search_spans_sql(
     appended as total-order tiebreaker)."""
     if sort_field not in SEARCH_COLUMNS:
         raise ValueError(f"invalid sort field '{sort_field}'")
+    order = sort_order.upper()
+    if order not in ("ASC", "DESC"):
+        raise ValueError(f"invalid sort order '{sort_order}'")
     args: dict = {}
     conds = _search_conditions(query, trace_or_span, args)
     if start_ns is not None:
@@ -203,7 +206,6 @@ def search_spans_sql(
         conds.append("end_time_unix_nano <= :hi_ns")
     args["page_size"] = page_size
     args["page_offset"] = (page - 1) * page_size
-    order = "DESC" if sort_order == "desc" else "ASC"
     return (
         f"SELECT {SPAN_ROW}, {DURATION_MS_COL}, {HAS_ERROR_COL} FROM {{spans}}"
         f" {_where(conds)} ORDER BY {sort_field} {order}, span_id ASC"
@@ -464,7 +466,7 @@ def error_traces(df: DataFrame) -> DataFrame:
     )
 
 
-def slow_vs_baseline(df: DataFrame, pct: float = 0.95) -> DataFrame:
+def slow_vs_baseline(df: DataFrame) -> DataFrame:
     """Slow-spans-vs-baseline (api/service.go:560-592): spans slower
     than their endpoint's p95, with the percent-over-baseline (F11).
     The reference issues a second aggregate query and compares
@@ -475,7 +477,7 @@ def slow_vs_baseline(df: DataFrame, pct: float = 0.95) -> DataFrame:
     dur = duration_ms()
     w = Window.partitionBy("name")
     return (
-        df.withColumn("p95_ms", F.percentile(dur, F.lit(pct)).over(w))
+        df.withColumn("p95_ms", F.percentile(dur, F.lit(0.95)).over(w))
         .filter(dur > F.col("p95_ms"))
         .select(
             "span_id",
@@ -607,13 +609,13 @@ def critical_path_grouped(df: DataFrame, buckets: int = 256) -> DataFrame:
     to :func:`critical_path` for adversarial traces too big for one
     task.
 
-    The per-bucket DP is vectorized (round 12, guide §4.2): the former
-    per-trace Python recursion walked every span in interpreted code
-    (~30 µs/span); this version factorizes (trace, span) keys once per
-    bucket, resolves parent row indices with one sorted lookup, levels
-    the forest by parent-pointer propagation, and folds children into
-    parents level-by-level with ``np.maximum.at`` — O(depth) numpy
-    passes over the whole bucket instead of O(spans) interpreter steps.
+    The per-bucket DP is vectorized: a per-trace Python recursion
+    walks every span in interpreted code (~30 µs/span); instead, (trace,
+    span) keys are factorized once per bucket, parent row indices
+    resolved with one sorted lookup, the forest levelled by
+    parent-pointer propagation, and children folded into parents
+    level-by-level with ``np.maximum.at`` — O(depth) numpy passes over
+    the whole bucket instead of O(spans) interpreter steps.
     Identical arithmetic: each span's best is still
     ``duration + max(children best, default 0)`` evaluated bottom-up,
     and per-trace results are max-over-roots (orphan subtrees — parents

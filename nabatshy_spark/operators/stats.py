@@ -67,10 +67,8 @@ def zscore_outliers(
     )
 
 
-def equi_width_histogram(
-    df: DataFrame, value_col: str, buckets: int = 20
-) -> DataFrame:
-    """Equi-width histogram: global min/max (one O(1)-output agg,
+def equi_width_histogram(df: DataFrame, value_col: str) -> DataFrame:
+    """Equi-width 20-bucket histogram: global min/max (one O(1)-output agg,
     broadcast back as a 1-row join) then width_bucket per row and a
     bucket count — two scans, no sort, no driver loop. The max value
     lands in the top bucket (width_bucket's half-open upper edge is
@@ -78,6 +76,7 @@ def equi_width_histogram(
     bounds = df.agg(
         F.min(value_col).alias("__lo"), F.max(value_col).alias("__hi")
     )
+    buckets = 20
     width = (F.col("__hi") - F.col("__lo")) / buckets
     # explicit floor arithmetic (≡ width_bucket for in-range values)
     # so an oracle can replicate the exact same FP operations
@@ -202,19 +201,16 @@ def cumulative_sum_ordered(
     df: DataFrame,
     order_cols: list,
     value_col: str,
-    n_rows_estimate: int = 0,
-    single_sort_max: int = 1 << 16,
-    force: str | None = None,
     extra_value_cols: list[str] | None = None,
 ) -> DataFrame:
     """Running sum of ``value_col`` over a GLOBAL total order, plus the
     grand total — appended as ``__cum`` / ``__tot`` — without ever
     sorting the whole relation on one task.
 
-    The naive form (``Window.orderBy(...)`` with no partition) moves
-    every row to a single partition: fine for a config-bounded input,
-    a scale-killer for a data-sized one (a 20B-row part dimension at
-    100 TB). The two-phase form is the classic partitioned prefix sum:
+    A plain ``Window.orderBy(...)`` with no partition moves every row
+    to a single partition: fine for a config-bounded input, a
+    scale-killer for a data-sized one (a 20B-row part dimension at
+    100 TB). This is the classic partitioned prefix sum instead:
 
     1. ``repartitionByRange`` on the order — partitions are globally
        ordered ranges, rows sort locally within each;
@@ -226,50 +222,25 @@ def cumulative_sum_ordered(
        single-partition WindowExec warning fires), broadcast-joined
        back: ``__cum = local_cum + offset``.
 
-    Both branches are exact for DECIMAL values (decimal addition is
-    associative, so regrouping by partition cannot change the sum) and
-    identical whenever ``order_cols`` define a TOTAL order — include a
-    unique tiebreaker; a tie straddling a range boundary would
-    otherwise split its running sum nondeterministically.
-
-    ``force`` ('window' | 'twophase') pins a branch (the same testing
-    shape as joins.semi_join_ids); otherwise ``n_rows_estimate`` vs
-    ``single_sort_max`` picks: estimates that fit one task's sort use
-    the plain window (fewer shuffles), anything larger goes two-phase.
+    The result equals the global window exactly for DECIMAL values
+    (decimal addition is associative, so regrouping by partition cannot
+    change the sum) whenever ``order_cols`` define a TOTAL order —
+    include a unique tiebreaker; a tie straddling a range boundary
+    would otherwise split its running sum nondeterministically.
 
     Alongside ``__cum`` / ``__tot`` the operator emits ``__rank`` (the
     1-based position in the global order — a running COUNT through the
     same two phases) and ``__n`` (total rows), so rank-arithmetic
     consumers (revenue_gini's Lorenz index) scale the same way.
+    ``__rank`` is LONG: the operator exists for dimensions past one
+    task's sort (billions of rows), where an int rank — and consumer
+    arithmetic like 4·rank — would overflow at 2^31.
     ``extra_value_cols`` adds further running sums over the SAME order
     as ``__cum_<name>`` columns in the same pass (heaps_law_fit
     cumulates tokens and new-term introductions together).
     """
-    if force not in (None, "window", "twophase"):
-        raise ValueError(f"force must be window|twophase, got {force!r}")
     extra = list(extra_value_cols or [])
-    use_window = int(n_rows_estimate) <= int(single_sort_max)
-    if force is not None:
-        use_window = force == "window"
-    if use_window:
-        w = Window.orderBy(*order_cols)
-        wc = w.rowsBetween(Window.unboundedPreceding, 0)
-        # __rank is LONG in both branches: the operator exists for
-        # dimensions past one task's sort (billions of rows), where an
-        # int rank — and any consumer arithmetic like 4·rank — would
-        # overflow at 2^31 (ADVICE r8).
-        out = (
-            df.withColumn("__cum", F.sum(value_col).over(wc))
-            .withColumn("__rank", F.row_number().over(w).cast("long"))
-            .withColumn(
-                "__tot", F.sum(value_col).over(Window.partitionBy())
-            )
-            .withColumn("__n", F.count("*").over(Window.partitionBy()))
-        )
-        for c in extra:
-            out = out.withColumn(f"__cum_{c}", F.sum(c).over(wc))
-        return out
-    # Pin the range-partitioned relation ONCE (ADVICE r8):
+    # Pin the range-partitioned relation ONCE:
     # repartitionByRange samples nondeterministically for its bounds,
     # and `ranged` feeds two separate plan subtrees (`local` windows
     # and the `psums` aggregate). Without pinning, consistent __pid
@@ -372,37 +343,24 @@ def running_min_prev_ordered(
     df: DataFrame,
     order_cols: list,
     value_col: str,
-    force: str | None = None,
 ) -> DataFrame:
     """EXCLUSIVE-prefix running minimum over a global total order,
     appended as ``__prevmin`` (NULL for the globally first row) — the
     staircase primitive behind 2-D skylines (pareto_suppliers), in the
-    same two-branch shape as :func:`cumulative_sum_ordered`: the plain
-    window unless ``force='twophase'`` pins the two-phase form.
+    same two-phase shape as :func:`cumulative_sum_ordered`.
 
-    Two-phase form: range-partition on the order; within each
-    partition take the local exclusive-prefix min; per-partition FULL
-    mins (a config-bounded aggregate) give each partition the min over
-    all earlier partitions; ``least`` of the two (Spark's least skips
-    NULLs) is the global exclusive-prefix min. Min is associative and
-    idempotent, so regrouping cannot change it, and the exclusive
-    frame splits cleanly: rows before row r are exactly the rows
-    before it in its own partition plus every row of earlier
-    partitions.
+    Range-partition on the order; within each partition take the local
+    exclusive-prefix min; per-partition FULL mins (a config-bounded
+    aggregate) give each partition the min over all earlier
+    partitions; ``least`` of the two (Spark's least skips NULLs) is the
+    global exclusive-prefix min. Min is associative and idempotent, so
+    regrouping cannot change it, and the exclusive frame splits
+    cleanly: rows before row r are exactly the rows before it in its
+    own partition plus every row of earlier partitions.
     """
-    if force not in (None, "window", "twophase"):
-        raise ValueError(f"force must be window|twophase, got {force!r}")
-    if force != "twophase":
-        w = Window.orderBy(*order_cols)
-        return df.withColumn(
-            "__prevmin",
-            F.min(value_col).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-        )
     # Pinned once for the same two-consumer reason as
-    # cumulative_sum_ordered (ADVICE r8): `local` and `pmins` must see
-    # identical sampled range bounds by construction.
+    # cumulative_sum_ordered: `local` and `pmins` must see identical
+    # sampled range bounds by construction.
     ranged = (
         df.repartitionByRange(*order_cols)
         .withColumn("__pid", F.spark_partition_id())

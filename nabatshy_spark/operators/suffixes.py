@@ -50,12 +50,23 @@ from pyspark.sql import functions as F
 from nabatshy_spark import artifacts
 from nabatshy_spark.catalog import load, table_path
 
+# One value per decision of the served relations: the 50-char window
+# and its document-frequency cap, the 62259/1638 basis-point train/val
+# split of decontamination, and the 20-char window and occurrence cap
+# of the intra-document repeats.
+MIN_LEN = 50
+MAX_DF = 200
+TRAIN_BPS = 62259
+VAL_BPS = 1638
+INTRA_MIN_LEN = 20
+INTRA_MAX_OCC = 50
+
 
 def window_hash_postings(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_len: int = 50,
+    min_len: int = MIN_LEN,
     chunk: int = 16384,
 ) -> DataFrame:
     """(id, pos, h) for every ``min_len``-char window of every document
@@ -117,8 +128,8 @@ def duplicated_substring_runs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_len: int = 50,
-    max_df: int | None = 200,
+    min_len: int = MIN_LEN,
+    max_df: int | None = MAX_DF,
 ) -> DataFrame:
     """All maximal cross-document duplicated substrings of length ≥
     ``min_len``: one row per (doc_a < doc_b, diagonal, run) with the
@@ -229,14 +240,13 @@ def cross_corpus_substring_runs(
     bench: DataFrame,
     id_col: str,
     text_col: str,
-    min_len: int = 50,
-    max_df: int | None = 200,
+    max_df: int | None = MAX_DF,
 ) -> DataFrame:
-    """Verbatim ≥``min_len``-char overlaps BETWEEN two relations — the
+    """Verbatim ≥``MIN_LEN``-char overlaps BETWEEN two relations — the
     char-level decontamination check (did benchmark text leak into the
     training corpus verbatim?), the ExactSubstr complement of the
     n-gram `dedup.decontaminate`: that one needs a fixed n, this finds
-    arbitrary-length leaks ≥ min_len and their exact spans.
+    arbitrary-length leaks ≥ MIN_LEN and their exact spans.
 
     Same diagonal-run machinery as :func:`duplicated_substring_runs`,
     but the posting join is corpus×bench instead of a self-join — cost
@@ -265,7 +275,7 @@ def cross_corpus_substring_runs(
     every post-scan stage operates on the shared-hash subset only. At
     100 TB this is the shape actually run before every training export.
     """
-    bw = window_hash_postings(bench, id_col, text_col, min_len).localCheckpoint(
+    bw = window_hash_postings(bench, id_col, text_col, MIN_LEN).localCheckpoint(
         eager=False
     )
     bench_hashes = bw.select("__h").distinct()
@@ -289,11 +299,11 @@ def cross_corpus_substring_runs(
     # and the pair join each re-run the corpus window scan with the
     # probe fused into it, so the broadcast semi-join stays in the plan
     # and a non-shared window is dropped where it is generated.
-    cw = window_hash_postings(corpus, id_col, text_col, min_len).join(
+    cw = window_hash_postings(corpus, id_col, text_col, MIN_LEN).join(
         probe, "__h", "left_semi"
     )
     return _cross_runs_from_postings(
-        cw, bw, corpus, bench, id_col, text_col, min_len, max_df
+        cw, bw, corpus, bench, id_col, text_col, MIN_LEN, max_df
     )
 
 
@@ -365,8 +375,8 @@ def intra_doc_repeat_runs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_len: int = 20,
-    max_occ: int | None = 50,
+    min_len: int = INTRA_MIN_LEN,
+    max_occ: int | None = INTRA_MAX_OCC,
 ) -> DataFrame:
     """Maximal WITHIN-document repeated substrings of length ≥
     ``min_len`` — the self-repeat half of ExactSubstr (Lee et al. also
@@ -525,9 +535,7 @@ _IREPEAT_VERSION = 1
 _DUP_WINDOWS_VERSION = 1
 
 
-def shared_dup_window_postings(
-    spark, sf_dir: str, min_len: int = 50
-) -> DataFrame:
+def shared_dup_window_postings(spark, sf_dir: str) -> DataFrame:
     """LEVEL-1 of the two-level ExactSubstr scheme: the
     (doc_id, pos, __h, __c) posting relation restricted to
     window hashes seen in ≥2 DISTINCT documents — UNCAPPED (no df cap;
@@ -560,7 +568,7 @@ def shared_dup_window_postings(
     inverted-index trade, documented rather than hidden."""
     def _build(staging: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        wins = window_hash_postings(docs, "doc_id", "text", min_len).localCheckpoint(
+        wins = window_hash_postings(docs, "doc_id", "text", MIN_LEN).localCheckpoint(
             eager=False
         )
         freq = wins.groupBy("__h").agg(
@@ -588,7 +596,7 @@ def shared_dup_window_postings(
         "dup_windows",
         table_path(sf_dir, "documents"),
         _DUP_WINDOWS_VERSION,
-        {"min_len": min_len},
+        {"min_len": MIN_LEN},
         _build,
     )
     return spark.read.schema(
@@ -596,12 +604,7 @@ def shared_dup_window_postings(
     ).parquet(path)
 
 
-def shared_substring_runs(
-    spark,
-    sf_dir: str,
-    min_len: int = 50,
-    max_df: int | None = 200,
-) -> DataFrame:
+def shared_substring_runs(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of
     ``duplicated_substring_runs(documents, ...)`` — the exact-substring
     twin of dedup.shared_ngram_pairs, with the same lifecycle (content
@@ -619,15 +622,15 @@ def shared_substring_runs(
         # identical (exact equality pinned by a test), and the corpus
         # window scan runs once per corpus version instead of once per
         # build (builds 4.2+3.0 s → 3.6 shared + 0.7 + 1.4 s at sf0.1).
-        posts = shared_dup_window_postings(spark, sf_dir, min_len)
-        if max_df is not None:
-            posts = posts.filter(F.col("__c") <= max_df)
+        posts = shared_dup_window_postings(spark, sf_dir).filter(
+            F.col("__c") <= MAX_DF
+        )
         runs = _runs_from_dup_posts(
             posts.select("__h", "doc_id", "pos"),
             load(spark, sf_dir, "documents"),
             "doc_id",
             "text",
-            min_len,
+            MIN_LEN,
         )
         runs.coalesce(1).write.mode("overwrite").parquet(staging)
 
@@ -635,20 +638,13 @@ def shared_substring_runs(
         "substr_runs",
         table_path(sf_dir, "documents"),
         _RUNS_VERSION,
-        {"min_len": min_len, "max_df": max_df},
+        {"min_len": MIN_LEN, "max_df": MAX_DF},
         _build,
     )
     return spark.read.parquet(path)
 
 
-def shared_decontamination_runs(
-    spark,
-    sf_dir: str,
-    min_len: int = 50,
-    max_df: int | None = 200,
-    train_bps: int = 62259,
-    val_bps: int = 1638,
-) -> DataFrame:
+def shared_decontamination_runs(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of the train/test
     cross-corpus runs over the deterministic hash split of
     ``documents`` — decontamination is a once-per-corpus-version job
@@ -671,12 +667,10 @@ def shared_decontamination_runs(
         # cross_corpus_substring_runs operator is unchanged — this is
         # the artifact build's derivation only.
         docs = load(spark, sf_dir, "documents")
-        splits = sampling.split_corpus(
-            docs, "doc_id", train_bps=train_bps, val_bps=val_bps
-        )
+        splits = sampling.split_corpus(docs, "doc_id", TRAIN_BPS, VAL_BPS)
         train = splits.filter(F.col("split") == "train")
         test = splits.filter(F.col("split") == "test")
-        lvl1 = shared_dup_window_postings(spark, sf_dir, min_len).join(
+        lvl1 = shared_dup_window_postings(spark, sf_dir).join(
             splits.select("doc_id", "split"), "doc_id"
         )
         trainw = lvl1.filter(F.col("split") == "train").select(
@@ -695,7 +689,7 @@ def shared_decontamination_runs(
         )
         cw = trainw.join(probe, "__h", "left_semi")
         runs = _cross_runs_from_postings(
-            cw, testw, train, test, "doc_id", "text", min_len, max_df
+            cw, testw, train, test, "doc_id", "text", MIN_LEN, MAX_DF
         )
         runs.coalesce(1).write.mode("overwrite").parquet(staging)
 
@@ -704,40 +698,29 @@ def shared_decontamination_runs(
         table_path(sf_dir, "documents"),
         _XCORPUS_VERSION,
         {
-            "min_len": min_len,
-            "max_df": max_df,
-            "train_bps": train_bps,
-            "val_bps": val_bps,
+            "min_len": MIN_LEN,
+            "max_df": MAX_DF,
+            "train_bps": TRAIN_BPS,
+            "val_bps": VAL_BPS,
         },
         _build,
     )
     return spark.read.parquet(path)
 
 
-def shared_intra_repeat_runs(
-    spark,
-    sf_dir: str,
-    min_len: int = 20,
-    max_occ: int | None = 50,
-) -> DataFrame:
+def shared_intra_repeat_runs(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of
     ``intra_doc_repeat_runs(documents, ...)`` — same lifecycle and
     rationale as :func:`shared_decontamination_runs`."""
     def _build(staging: str) -> None:
-        runs = intra_doc_repeat_runs(
-            load(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            min_len=min_len,
-            max_occ=max_occ,
-        )
+        runs = intra_doc_repeat_runs(load(spark, sf_dir, "documents"), "doc_id", "text")
         runs.coalesce(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
         "intra_runs",
         table_path(sf_dir, "documents"),
         _IREPEAT_VERSION,
-        {"min_len": min_len, "max_occ": max_occ},
+        {"min_len": INTRA_MIN_LEN, "max_occ": INTRA_MAX_OCC},
         _build,
     )
     return spark.read.parquet(path)

@@ -24,6 +24,16 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "is", "of", "and", "to", "in"]
 # Jelinek-Mercer weight λ of bigram_logprob_scores
 _JM_LAMBDA = 0.8
+# terms kept per document by tfidf_top_terms; the count floor and size
+# of the vocab_top_terms vocabulary; the pair-count floor of
+# pmi_collocations
+TFIDF_K = 3
+VOCAB_MIN_COUNT = 2
+VOCAB_K = 500
+PMI_MIN_COUNT = 5
+# boilerplate: 5-word chunks found in more than 2 documents
+CHUNK_WORDS = 5
+HOT_MAX_DOCS = 2
 
 
 def _tokens(col: Column) -> Column:
@@ -128,8 +138,8 @@ def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """Top-k TF-IDF terms per document — corpus-statistics scoring for
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Top-``TFIDF_K`` TF-IDF terms per document — corpus-statistics scoring for
     training-data curation (which documents are dominated by which
     rare terms).
 
@@ -158,19 +168,17 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> Da
     w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_K)
         .select(id_col, "term", "rank", "score")
     )
 
 
-def vocab_top_terms(
-    df: DataFrame, id_col: str, text_col: str, min_count: int = 2, k: int = 500
-) -> DataFrame:
+def vocab_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Corpus vocabulary builder: global term frequency + document
-    frequency per token, keep terms with total count ≥ ``min_count``,
-    return the top ``k`` by (count desc, term asc) with a dense rank —
-    the first step of training any tokenizer / building a frequency
-    vocab over a crawl.
+    frequency per token, keep terms with total count ≥
+    ``VOCAB_MIN_COUNT``, return the top ``VOCAB_K`` by (count desc,
+    term asc) with a dense rank — the first step of training any
+    tokenizer / building a frequency vocab over a crawl.
 
     Scale shape: explode → partial-agg-heavy groupBy on the term (the
     map-side combine collapses each partition's repeats before the
@@ -187,9 +195,9 @@ def vocab_top_terms(
         F.countDistinct("__id").alias("doc_freq"),
     )
     top = (
-        stats.filter(F.col("term_count") >= min_count)
+        stats.filter(F.col("term_count") >= VOCAB_MIN_COUNT)
         .orderBy(F.col("term_count").desc(), F.col("term").asc())
-        .limit(k)
+        .limit(VOCAB_K)
     )
     from pyspark.sql import Window
 
@@ -374,10 +382,10 @@ def unigram_logprob_scores(df: DataFrame, id_col: str, text_col: str) -> DataFra
     )
 
 
-def _chunks(text_col: str, chunk_words: int) -> tuple[Column, Column]:
+def _chunks(text_col: str) -> tuple[Column, Column]:
     """(n_chunks, chunks) expressions for the boilerplate operators: the
-    text split into non-overlapping ``chunk_words``-word chunks."""
-    W = chunk_words
+    text split into non-overlapping ``CHUNK_WORDS``-word chunks."""
+    W = CHUNK_WORDS
     toks = _tokens(F.col(text_col))
     n_chunks = F.ceil(F.size(toks) / F.lit(W)).cast("int")
     chunk_arr = F.transform(
@@ -387,28 +395,22 @@ def _chunks(text_col: str, chunk_words: int) -> tuple[Column, Column]:
     return n_chunks, chunk_arr
 
 
-def hot_chunks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_words: int = 5,
-    max_docs: int = 2,
-) -> DataFrame:
+def hot_chunks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The boilerplate vocabulary (h): md5 hashes of the
-    ``chunk_words``-word chunks appearing in more than ``max_docs``
+    ``CHUNK_WORDS``-word chunks appearing in more than ``HOT_MAX_DOCS``
     distinct documents — headers, footers, license blurbs. The input of
     :func:`boilerplate_scrub` and the producer of
     :func:`shared_hot_chunks`. A HAVING-filtered aggregate over the
     16-byte chunk hash (partial agg combines map-side), tiny by
     construction: boilerplate is frequent, so there are few distinct
     hot hashes."""
-    _, chunk_arr = _chunks(text_col, chunk_words)
+    _, chunk_arr = _chunks(text_col)
     return (
         df.select(F.col(id_col), F.explode(chunk_arr).alias("chunk"))
         .select(id_col, F.md5("chunk").alias("h"))
         .groupBy("h")
         .agg(F.countDistinct(id_col).alias("__df"))
-        .filter(F.col("__df") > max_docs)
+        .filter(F.col("__df") > HOT_MAX_DOCS)
         .select("h")
     )
 
@@ -418,13 +420,12 @@ def boilerplate_scrub(
     hot: DataFrame,
     id_col: str,
     text_col: str,
-    chunk_words: int = 5,
 ) -> DataFrame:
     """Paragraph/chunk-level exact dedup (the RefinedWeb / C4 move):
-    split every document into non-overlapping ``chunk_words``-word
-    chunks, drop the chunks whose hash is in ``hot`` (:func:`hot_chunks`
-    for the same ``chunk_words``, in-plan or read from
-    :func:`shared_hot_chunks`), and rebuild each document from the rest.
+    split every document into non-overlapping ``CHUNK_WORDS``-word
+    chunks, drop the chunks whose hash is in ``hot`` (:func:`hot_chunks`,
+    in-plan or read from :func:`shared_hot_chunks`), and rebuild each
+    document from the rest.
 
     Returns per-document scrub accounting — ``n_chunks``, ``n_kept``,
     ``n_removed``, ``clean_md5`` (md5 of the reassembled text, '' when
@@ -437,7 +438,7 @@ def boilerplate_scrub(
     by doc id: one row-proportional shuffle total. Never shuffles
     document bodies keyed by content.
     """
-    n_chunks, chunk_arr = _chunks(text_col, chunk_words)
+    n_chunks, chunk_arr = _chunks(text_col)
     base = df.select(
         F.col(id_col), n_chunks.cast("long").alias("n_chunks"), chunk_arr.alias("__chunks")
     )
@@ -489,14 +490,9 @@ def boilerplate_scrub(
 _HOT_CHUNKS_VERSION = 1
 
 
-def shared_hot_chunks(
-    spark,
-    sf_dir: str,
-    chunk_words: int = 5,
-    max_docs: int = 2,
-) -> DataFrame:
+def shared_hot_chunks(spark, sf_dir: str) -> DataFrame:
     """Fingerprint-keyed materialization of
-    ``hot_chunks(documents, "doc_id", "text", chunk_words, max_docs)``.
+    ``hot_chunks(documents, "doc_id", "text")``.
 
     Why: deriving the hot set in-plan makes the scrub consume its
     chunk-exploded relation twice per run — once to aggregate chunk
@@ -511,14 +507,14 @@ def shared_hot_chunks(
 
     def _build(staging: str) -> None:
         hot_chunks(
-            load(spark, sf_dir, "documents"), "doc_id", "text", chunk_words, max_docs
+            load(spark, sf_dir, "documents"), "doc_id", "text"
         ).repartition(1).write.mode("overwrite").parquet(staging)
 
     path = artifacts.ensure(
         "hot_chunks",
         table_path(sf_dir, "documents"),
         _HOT_CHUNKS_VERSION,
-        {"chunk_words": chunk_words, "max_docs": max_docs},
+        {"chunk_words": CHUNK_WORDS, "max_docs": HOT_MAX_DOCS},
         _build,
     )
     return spark.read.schema("h string").parquet(path)
@@ -627,9 +623,7 @@ def source_kl_drift(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
     )
 
 
-def pmi_collocations(
-    df: DataFrame, text_col: str, min_count: int = 5, k: int = 20
-) -> DataFrame:
+def pmi_collocations(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
     """Top-k adjacent-word collocations by pointwise mutual information
     (Church & Hanks 1990) — the phrase-mining pass that feeds tokenizer
     vocabularies and stop-phrase lists.
@@ -640,7 +634,7 @@ def pmi_collocations(
 
     One explode into adjacent pairs (zip_with over the shifted token
     array — narrow), one (x, y) partial agg; marginals are aggregates
-    over the pair relation, joined back. min_count floors noise; the
+    over the pair relation, joined back. ``PMI_MIN_COUNT`` floors noise; the
     final ranking is TakeOrdered k, never a full sort.
     """
     toks = _tokens(F.col(text_col))
@@ -658,7 +652,7 @@ def pmi_collocations(
     cy = xy.groupBy("y").agg(F.sum("cxy").alias("cy"))
     n = xy.agg(F.sum("cxy").alias("n"))
     return (
-        xy.filter(F.col("cxy") >= min_count)
+        xy.filter(F.col("cxy") >= PMI_MIN_COUNT)
         .join(cx, "x")
         .join(cy, "y")
         .join(F.broadcast(n))

@@ -104,7 +104,7 @@ def lpa_trade_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__v") > F.col("__m"))
         .select("src", "dst")
     )
-    out = label_propagation(strong, "src", "dst", iterations=4)
+    out = label_propagation(strong)
     return out.select(
         F.col("node").cast("long").alias("node"),
         F.col("community").cast("long").alias("community"),

@@ -215,12 +215,12 @@ def search_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.2 search lifecycle: typed DSL filter + dynamic sort O3 +
     pagination O4 (api/service.go:698-846). Page 3 of click events."""
     ev = load(spark, sf_dir, "events")
-    return search_events(ev, "type=click", page=3, page_size=20, sort_field="ts", sort_order="desc")
+    return search_events(ev, "type=click", page=3)
 
 
 @query("search_page_keyset", headline=True)
 def search_page_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O4 keyset twin (operators/search.py:keyset_page): DEEP page —
+    """O4 keyset twin (operators/search.py:search_events_keyset): DEEP page —
     page 100 of click events. The token is the last (ts, event_id) of
     page 99, exactly what a serving API returns to the client; the
     measured query is then filter + top-20 (TakeOrderedAndProject), so
@@ -231,9 +231,7 @@ def search_page_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators.search import search_events_keyset
 
     ev = load(spark, sf_dir, "events")
-    prev_page = search_events(
-        ev, "type=click", page=99, page_size=20, sort_field="ts", sort_order="desc"
-    ).collect()
+    prev_page = search_events(ev, "type=click", page=99).collect()
     if not prev_page:
         # tiny SFs don't have 99 pages of clicks: clamp to the deepest
         # non-empty previous page (sf0.01+ never takes this branch, so
@@ -244,18 +242,12 @@ def search_page_keyset(spark: SparkSession, sf_dir: str) -> DataFrame:
             events_predicate(parse_attribute_query("type=click"), "type=click")
         ).count()
         prev_page = search_events(
-            ev, "type=click", page=min(99, max(1, (n - 1) // 20)),
-            page_size=20, sort_field="ts", sort_order="desc",
+            ev, "type=click", page=min(99, max(1, (n - 1) // 20))
         ).collect()
     if not prev_page:  # empty table: no pages at all
-        return search_events(
-            ev, "type=click", page=1, page_size=20,
-            sort_field="ts", sort_order="desc",
-        )
+        return search_events(ev, "type=click", page=1)
     token = (prev_page[-1].ts, prev_page[-1].event_id)
-    return search_events_keyset(
-        ev, "type=click", after=token, page_size=20, sort_field="ts", sort_order="desc"
-    )
+    return search_events_keyset(ev, "type=click", token)
 
 
 @query("search_dsl_typed")
@@ -572,7 +564,7 @@ def topk_per_group_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators.sessions import topk_per_group
 
     return topk_per_group(
-        load(spark, sf_dir, "events"), "event_type", "value", "event_id", k=3
+        load(spark, sf_dir, "events"), "event_type", "value", "event_id"
     ).select("event_type", "event_id", "value", "rank")
 
 
@@ -718,7 +710,7 @@ def skew_salted_value_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators.skew import salted_count_sum
 
     ev = load(spark, sf_dir, "events")
-    out = salted_count_sum(ev, ["user_id"], "value", salt_buckets=16)
+    out = salted_count_sum(ev, ["user_id"], "value")
     return out.select(
         "user_id", "n", F.round(F.col("sum_value"), 6).alias("sum_value")
     )
@@ -759,7 +751,7 @@ def bucketed_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     j = bucketed.bucketed_join(
         spark, sf_dir, "orders", "lineitem",
-        ["o_orderkey"], ["l_orderkey"], num_buckets=8,
+        ["o_orderkey"], ["l_orderkey"],
     )
     return (
         j.groupBy("o_orderpriority")
@@ -910,7 +902,7 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import stats
 
     return stats.equi_width_histogram(
-        load(spark, sf_dir, "orders").select("o_totalprice"), "o_totalprice", 20
+        load(spark, sf_dir, "orders").select("o_totalprice"), "o_totalprice"
     )
 
 
@@ -1321,7 +1313,7 @@ def cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import sketches
 
     ev = load(spark, sf_dir, "events")
-    return sketches.cms_estimates(ev, "user_id", depth=4, width=64).select(
+    return sketches.cms_estimates(ev, "user_id").select(
         F.col("key").cast("string").alias("key"), "est"
     )
 
@@ -1343,9 +1335,9 @@ def bloom_purchase_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # m=256 keeps a real (bounded) false-positive rate in play at this
     # SF, so the query exercises the probabilistic side too; the
     # no-false-negative guarantee is exact regardless.
-    bits = sketches.bloom_bits(big_buyers, "user_id", num_hashes=5, num_bits=256)
+    bits = sketches.bloom_bits(big_buyers, "user_id", num_bits=256)
     return sketches.bloom_probe(
-        bits, ev.select("user_id"), "user_id", num_hashes=5, num_bits=256
+        bits, ev.select("user_id"), "user_id", num_bits=256
     ).select(F.col("key").cast("string").alias("key"), "may_contain")
 
 
@@ -1359,9 +1351,7 @@ def frequent_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pair supports from the shared basket-stats artifact
     # (one A-priori mining pass per corpus, shared with
     # association_rules_parts — itemsets.shared_part_basket_stats).
-    pair_sup, _, _ = itemsets.shared_part_basket_stats(
-        spark, sf_dir, min_support=3
-    )
+    pair_sup, _, _ = itemsets.shared_part_basket_stats(spark, sf_dir)
     return itemsets.topk_pairs(pair_sup, k=100)
 
 
@@ -1504,13 +1494,10 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("top_session_paths", headline=True)
 def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 2-step event-type paths within sessions
-    (sessions.top_session_paths; n is a parameter — 2 here because
-    this corpus's sessions are short enough that longer paths are
-    all-unique): sessionize → lead-window n-gram → corpus count.
-    Deterministic sequence order via the event_id tiebreak."""
-    return sessions.top_session_paths(
-        load(spark, sf_dir, "events"), n=2, k=20
-    )
+    (sessions.top_session_paths): sessionize → lead-window n-gram →
+    corpus count. Deterministic sequence order via the event_id
+    tiebreak."""
+    return sessions.top_session_paths(load(spark, sf_dir, "events"), k=20)
 
 
 @query("association_rules_parts", headline=True)
@@ -1525,9 +1512,7 @@ def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Support relations from the shared basket-stats
     # artifact (one mining pass per corpus, shared with
     # frequent_part_pairs).
-    pair_sup, item_sup, n_baskets = itemsets.shared_part_basket_stats(
-        spark, sf_dir, min_support=3
-    )
+    pair_sup, item_sup, n_baskets = itemsets.shared_part_basket_stats(spark, sf_dir)
     return itemsets.rules_from_supports(pair_sup, item_sup, n_baskets, k=100)
 
 
@@ -1954,7 +1939,6 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         rev,
         [F.col("rev").asc(), F.col("o_custkey").asc()],
         "rev",
-        force="twophase",
     ).select(
         "rev", F.col("__rank").alias("i"), F.col("__n").alias("n")
     )
@@ -3152,7 +3136,6 @@ def pareto_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         sup.groupBy("__rev").agg(F.min("return_rate").alias("__lvl_min")),
         [F.col("__rev").desc()],
         "__lvl_min",
-        force="twophase",
     ).withColumnRenamed("__prevmin", "__runmin_prev")
     supplier = load(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("suppkey"), "s_name"
@@ -3205,7 +3188,7 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_custkey") % 150).cast("string").alias("key")
     )
     est = (
-        sketches.cms_inner_product(ev, od, "key", depth=4, width=512)
+        sketches.cms_inner_product(ev, od)
         .agg(F.min("est").alias("cms_estimate"))
     )
     fa = ev.groupBy("key").agg(F.count("*").alias("fa"))
@@ -3451,7 +3434,6 @@ def part_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
             per_part,
             [F.col("__rev").desc(), F.col("l_partkey").asc()],
             "__rev",
-            force="twophase",
         )
         .withColumn("__share", F.col("__cum") / F.col("__tot"))
         .withColumn(
@@ -3769,7 +3751,6 @@ def supplier_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         s,
         [F.col("bal").asc(), F.col("s_suppkey").asc()],
         "bal",
-        force="twophase",
     )
     q = ranked.withColumn(
         "quartile",
@@ -3844,19 +3825,13 @@ def bloom_pruned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_pred,
     )
 
-    num_hashes, num_bits = 5, 1024
     cust = load(spark, sf_dir, "customer")
     seg = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
         "c_custkey"
     )
-    words = bloom_bitmap(
-        (r.bit for r in bloom_bits(seg, "c_custkey", num_hashes, num_bits).collect()),
-        num_bits,
-    )
+    words = bloom_bitmap(r.bit for r in bloom_bits(seg, "c_custkey").collect())
     o = load(spark, sf_dir, "orders")
-    pruned = o.filter(
-        bloom_pred(F.col("o_custkey"), words, num_hashes, num_bits)
-    )
+    pruned = o.filter(bloom_pred(F.col("o_custkey"), words))
     exact = pruned.join(
         F.broadcast(seg),
         pruned.o_custkey == seg.c_custkey,

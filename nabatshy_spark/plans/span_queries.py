@@ -140,7 +140,7 @@ def spans_hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("spans_slow_vs_baseline")
 def spans_slow_vs_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F11/A3 percentile-vs-self comparison (api/service.go:560-592)."""
-    return S.slow_vs_baseline(load_spans(spark), 0.95)
+    return S.slow_vs_baseline(load_spans(spark))
 
 
 @query("spans_service_issues")

@@ -69,8 +69,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, so the pandas-UDF stage is the once-per-corpus build;
     banding + candidate expansion + exact verification stay per-run."""
     return dedup.minhash_lsh_pairs(
-        dedup.shared_minhash_signatures(spark, sf_dir, n=3), "doc_id",
-        threshold=0.5, max_bucket=200,
+        dedup.shared_minhash_signatures(spark, sf_dir), "doc_id", max_bucket=200,
     )
 
 
@@ -92,7 +91,7 @@ def decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     return dedup.decontaminate(
-        corpus, bench, "doc_id", "text", n=3, min_hits=3
+        corpus, bench, "doc_id", "text", min_hits=3
     )
 
 
@@ -181,7 +180,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (corpus-statistics text
     analysis; single corpus explode, df via window count — no join)."""
     return textanalysis.tfidf_top_terms(
-        load(spark, sf_dir, "documents"), "doc_id", "text", k=3
+        load(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -241,7 +240,7 @@ def dedup_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_semi",
     )
     pairs = dedup.ngram_jaccard_pairs(
-        survivors, "doc_id", "text", n=3, threshold=0.5, max_df=200
+        survivors, "doc_id", "text", threshold=0.5, max_df=200
     )
     return dedup.dedup_pipeline(survivors, pairs, "doc_id").select(
         "doc_id", "lang", "source"
@@ -320,10 +319,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator docstring always promised."""
     batch = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 < 2)
     return dedup.incremental_dedup(
-        dedup.shared_incremental_corpus_index(
-            spark, sf_dir, n=3, max_df=200, mod=10, batch_lt=2
-        ),
-        batch, "doc_id", "text", n=3, threshold=0.5,
+        dedup.shared_incremental_corpus_index(spark, sf_dir),
+        batch, "doc_id", "text",
     )
 
 
@@ -369,7 +366,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run (the build is itemized once per corpus in the bench).
     survivors = dedup.dedup_pipeline(
         kept.join(dedup.curation_survivor_ids(flags), "doc_id", "left_semi"),
-        dedup.shared_curated_pairs(spark, sf_dir, n=3, threshold=0.5, max_df=200),
+        dedup.shared_curated_pairs(spark, sf_dir),
         "doc_id",
     )
     return sampling.hash_sample(survivors, "doc_id", bps=6554).select(
@@ -394,7 +391,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_count=2, global top-500 via TakeOrdered (never a full-vocab
     sort)."""
     return textanalysis.vocab_top_terms(
-        load(spark, sf_dir, "documents"), "doc_id", "text", min_count=2, k=500
+        load(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -436,7 +433,7 @@ def text_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact (see text_search_and).
     terms = ["join", "hash", "vector"]
     postings, doc_lens = invindex.shared_postings(spark, sf_dir, terms=terms)
-    return invindex.search_bm25(postings, doc_lens, terms, k=20)
+    return invindex.search_bm25(postings, doc_lens, terms)
 
 
 @query("fuzzy_prefix_pairs")
@@ -462,7 +459,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings, doc_lens = invindex.shared_postings(spark, sf_dir, terms=terms)
     return invindex.hybrid_search(
         postings, doc_lens, load(spark, sf_dir, "embeddings"),
-        terms, query_vec_id=0, k=10,
+        terms, query_vec_id=0,
     )
 
 
@@ -472,7 +469,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymmetric near-dup mode Jaccard misses when the container is much
     longer; one intersection join scores both directions."""
     return dedup.ngram_containment_pairs(
-        load(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.6
+        load(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
@@ -519,8 +516,8 @@ def boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe stays a broadcast."""
     return textanalysis.boilerplate_scrub(
         load(spark, sf_dir, "documents"),
-        textanalysis.shared_hot_chunks(spark, sf_dir, chunk_words=5, max_docs=2),
-        "doc_id", "text", chunk_words=5,
+        textanalysis.shared_hot_chunks(spark, sf_dir),
+        "doc_id", "text",
     )
 
 
@@ -542,8 +539,7 @@ def token_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand total — no empty-frame window, no driver collect."""
     docs = load(spark, sf_dir, "documents")
     return sampling.temperature_mixture_rates(
-        docs, "source", F.size(F.split(F.col("text"), " ")),
-        budget_frac=0.5, temperature=2.0,
+        docs, "source", F.size(F.split(F.col("text"), " "))
     )
 
 
@@ -554,8 +550,7 @@ def sample_token_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 uniform — reproducible corpus rebalancing."""
     docs = load(spark, sf_dir, "documents")
     return sampling.mixture_sample(
-        docs, "doc_id", "source", F.size(F.split(F.col("text"), " ")),
-        budget_frac=0.5, temperature=2.0,
+        docs, "doc_id", "source", F.size(F.split(F.col("text"), " "))
     )
 
 
@@ -605,7 +600,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     textanalysis.pmi_collocations, min_count=5): narrow pair explode,
     partial-agg counts, marginals joined back, TakeOrdered ranking."""
     return textanalysis.pmi_collocations(
-        load(spark, sf_dir, "documents"), "text", min_count=5, k=20
+        load(spark, sf_dir, "documents"), "text", k=20
     )
 
 
@@ -731,7 +726,7 @@ def er_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     are stored raw and rounded here, bit-identical to the direct
     operator."""
     m = entity.shared_part_matches(
-        spark, sf_dir, threshold=0.8, max_df=200, rep_cap=None
+        spark, sf_dir, threshold=0.8, rep_cap=None
     )
     return m.select(
         "id_a",
@@ -757,7 +752,7 @@ def er_part_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds run over the tiny matched set."""
     return entity.cluster_histogram(
         entity.shared_part_matches(
-            spark, sf_dir, threshold=0.9, max_df=200, rep_cap=None
+            spark, sf_dir, threshold=0.9, rep_cap=None
         ),
         load(spark, sf_dir, "part").select(
             F.col("p_partkey").alias("node")
@@ -776,8 +771,8 @@ def dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle to int64."""
     return dedup.duplicate_ngram_coverage(
         load(spark, sf_dir, "documents"),
-        dedup.shared_dup_char_vocab(spark, sf_dir, k=20),
-        "doc_id", "text", k=20,
+        dedup.shared_dup_char_vocab(spark, sf_dir),
+        "doc_id", "text",
     )
 
 
@@ -791,8 +786,8 @@ def dup_span_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus explode per run instead of two."""
     return dedup.duplicate_span_stats(
         load(spark, sf_dir, "documents"),
-        dedup.shared_dup_char_vocab(spark, sf_dir, k=20),
-        "doc_id", "text", k=20,
+        dedup.shared_dup_char_vocab(spark, sf_dir),
+        "doc_id", "text",
     )
 
 
@@ -852,7 +847,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text; `kept` is consumed once, so it needs no cache).
     near = dedup.dedup_pipeline(
         kept.join(dedup.curation_survivor_ids(flags), "doc_id", "left_semi"),
-        dedup.shared_curated_pairs(spark, sf_dir, n=3, threshold=0.5, max_df=200),
+        dedup.shared_curated_pairs(spark, sf_dir),
         "doc_id",
     )
     tail = near.agg(
@@ -1251,7 +1246,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_doc,
         [F.col("doc_id").asc()],
         "n_tokens",
-        force="twophase",
         extra_value_cols=["new_terms"],
     ).select(
         F.col("__cum").alias("N"),
@@ -2113,14 +2107,11 @@ def minhash_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seeded hash family is prefix-stable, so sig[:32]/sig[:64] ARE the
     # 32-/64-hash signatures and banding only reads indices below each
     # budget (see minhash_lsh_pairs).
-    sigs = dedup.shared_minhash_signatures(spark, sf_dir, n=3, num_hashes=128)
+    sigs = dedup.shared_minhash_signatures(spark, sf_dir)
     reports = []
     for n_hashes in [32, 64, 128]:
         got = (
-            dedup.minhash_lsh_pairs(
-                sigs, "doc_id", threshold=0.5,
-                num_hashes=n_hashes, rows_per_band=2,
-            )
+            dedup.minhash_lsh_pairs(sigs, "doc_id", num_hashes=n_hashes)
             .select("doc_a", "doc_b")
             .localCheckpoint(eager=False)  # counted, then joined
         )
@@ -2167,7 +2158,7 @@ def sequence_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.ceil(F.col("n_chars") / F.lit(4.0)).alias("__tok")
     )
     cum = cumulative_sum_ordered(
-        docs, [F.col("doc_id").asc()], "__tok", force="twophase"
+        docs, [F.col("doc_id").asc()], "__tok"
     ).withColumn(
         "__seq",
         F.floor((F.col("__cum") - F.col("__tok")) / F.lit(budget)),
@@ -2212,7 +2203,7 @@ def longest_dup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import suffixes
 
     docs = load(spark, sf_dir, "documents")
-    runs = suffixes.shared_substring_runs(spark, sf_dir, 50, 200)
+    runs = suffixes.shared_substring_runs(spark, sf_dir)
     da = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("__t"))
     return (
         runs.join(da, "doc_a")
@@ -2248,7 +2239,7 @@ def dup_substring_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (suffixes.shared_substring_runs)."""
     from nabatshy_spark.operators import suffixes
 
-    runs = suffixes.shared_substring_runs(spark, sf_dir, 50, 200)
+    runs = suffixes.shared_substring_runs(spark, sf_dir)
     per_side = runs.select(
         F.col("doc_a").alias("doc_id"),
         F.col("doc_b").alias("partner"),
@@ -2288,7 +2279,7 @@ def exactsubstr_cut_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import suffixes
 
     docs = load(spark, sf_dir, "documents")
-    runs = suffixes.shared_substring_runs(spark, sf_dir, 50, 200)
+    runs = suffixes.shared_substring_runs(spark, sf_dir)
     return suffixes.exactsubstr_cut_stats(docs, "doc_id", runs)
 
 
@@ -2305,9 +2296,7 @@ def intra_doc_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Served from the fingerprint-keyed artifact: the window pass is a
     # once-per-corpus-version job.
-    runs = suffixes.shared_intra_repeat_runs(
-        spark, sf_dir, min_len=20, max_occ=50
-    )
+    runs = suffixes.shared_intra_repeat_runs(spark, sf_dir)
     return runs.orderBy(
         F.col("rep_len").desc(),
         F.col("doc_id").asc(),
@@ -2330,7 +2319,7 @@ def exactsubstr_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import suffixes
 
     docs = load(spark, sf_dir, "documents")
-    runs = suffixes.shared_substring_runs(spark, sf_dir, 50, 200)
+    runs = suffixes.shared_substring_runs(spark, sf_dir)
     ivals = runs.select(
         F.col("doc_a").alias("doc_id"),
         F.col("pos_a").alias("__s"),
@@ -2384,10 +2373,7 @@ def decontaminate_exactsubstr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Served from the fingerprint-keyed artifact (built once per corpus
     # version over the deterministic hash split; leak-bounded output) —
     # see shared_decontamination_runs for why it is not per-run.
-    runs = suffixes.shared_decontamination_runs(
-        spark, sf_dir, min_len=50, max_df=200, train_bps=62259,
-        val_bps=1638,
-    )
+    runs = suffixes.shared_decontamination_runs(spark, sf_dir)
     return (
         runs.select(
             F.col("corpus_id").alias("train_doc"),
@@ -2430,7 +2416,7 @@ def er_part_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical bit-for-bit."""
     return entity.directed_topk(
         entity.shared_part_matches(
-            spark, sf_dir, threshold=0.8, max_df=200, rep_cap=8
+            spark, sf_dir, threshold=0.8, rep_cap=8
         ),
         "score",
         "p_partkey",
@@ -2459,7 +2445,7 @@ def er_topk_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     paid once per catalog version."""
     capped = entity.directed_topk(
         entity.shared_part_matches(
-            spark, sf_dir, threshold=0.8, max_df=200, rep_cap=8
+            spark, sf_dir, threshold=0.8, rep_cap=8
         ),
         "score",
         "p_partkey",
@@ -2469,7 +2455,7 @@ def er_topk_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     true_topk = (
         entity.directed_topk(
             entity.shared_part_matches(
-                spark, sf_dir, threshold=0.8, max_df=200, rep_cap=None
+                spark, sf_dir, threshold=0.8, rep_cap=None
             ),
             "score",
             "p_partkey",
@@ -2562,9 +2548,7 @@ def er_doc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     direct operator (unit-asserted). The direct contract's own scale
     curve lives in SCALE.md (sf0.001→1)."""
     return entity.directed_topk(
-        entity.shared_doc_matches(
-            spark, sf_dir, n=3, threshold=0.5, max_df=200, rep_cap=8
-        ),
+        entity.shared_doc_matches(spark, sf_dir),
         "jac",
         "doc_id",
         "match_id",
@@ -2626,9 +2610,7 @@ def er_doc_topk_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncapped Σ df² expansion runs once per corpus version instead of
     # per invocation (as for the part family's eval gate). The gate still deliberately PAYS the unbounded cost —
     # in the build, where it belongs.
-    exact = dedup.shared_ngram_pairs(
-        spark, sf_dir, n=3, threshold=0.5, max_df=None
-    ).select(
+    exact = dedup.shared_ngram_pairs(spark, sf_dir, max_df=None).select(
         F.col("doc_a").alias("id_a"),
         F.col("doc_b").alias("id_b"),
         F.col("jaccard").alias("jac"),

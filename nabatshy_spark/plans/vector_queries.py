@@ -24,7 +24,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, so LSH with recall≈1 would degenerate to all-candidates
     (measured; see operators/dedup.py docstring)."""
     return dedup.embedding_dup_pairs(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", threshold=0.45
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding"
     )
 
 
@@ -37,8 +37,7 @@ def dedup_embedding_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.py::embedding_dup_pairs_clustered, curve in
     SCALE.md)."""
     return dedup.embedding_dup_pairs_clustered(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        threshold=0.45, k=8,
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=8
     )
 
 
@@ -75,7 +74,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nabatshy_spark.operators import clustering
 
     return clustering.kmeans(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=4, iters=2
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", iters=2
     )
 
 
@@ -94,7 +93,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank of candidates. Probabilistic recall → no SQL oracle (driver
     records a rows-only check); tests measure recall vs brute force."""
     return similarity.lsh_topk(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", query_id=0, k=10
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", query_id=0
     )
 
 
@@ -114,7 +113,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_embedding (probabilistic recall ⇒ rows-only check; overlap
     measured in tests)."""
     return similarity.lsh_dup_pairs(
-        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", threshold=0.45
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding"
     )
 
 
@@ -139,7 +138,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame([], "vec_id: long, cos: double")
     path = ivf.ensure_ivf(spark, _os.path.join(sf_dir, "embeddings.parquet"))
     qvec = [float(x) for x in qrow["embedding"]]
-    return ivf.ivf_topk(spark, path, qvec, k=10, cell_bits=4, nprobe=8)
+    return ivf.ivf_topk(spark, path, qvec, k=10, nprobe=8)
 
 
 @query("embedding_centroids")
@@ -189,7 +188,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall unit test pins quality against brute force."""
     return similarity.pq_topk(
         load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        query_id=0, k=10, m=8, ks=16, rerank=8,
+        query_id=0, k=10, rerank=8,
     )
 
 
@@ -278,8 +277,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.col("vec_id").alias("nbr"))
         approx = {
             "lsh": similarity.lsh_topk(
-                emb, "vec_id", "embedding", query_id=qid, k=10,
-                signed=signed,
+                emb, "vec_id", "embedding", query_id=qid, signed=signed
             ),
         }
         if have_pq:

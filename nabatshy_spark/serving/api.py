@@ -13,8 +13,8 @@ Every outside value (DSL keys and values, ids, the service path
 segment, times, counts, the percentile) is a named parameter, never
 pasted into the text.
 Param semantics mirror api/controller.go: ``n`` (slowest), ``query`` /
-``page`` / ``pageSize`` / ``sortField`` / ``sortOrder`` /
-``traceOrSpan`` (search), RFC3339 ``start``/``end`` or relative
+``page`` / ``pageSize`` / ``sortField`` / ``sortOrder`` (``asc`` or
+``desc``, any case) / ``traceOrSpan`` (search), RFC3339 ``start``/``end`` or relative
 ``timeRange`` for every metrics endpoint (utils/utils.go:87-135 →
 functions/timeutil.parse_time_range), ``percentile`` for pseries and
 search metrics. Path segments are percent-decoded one by one, so an id

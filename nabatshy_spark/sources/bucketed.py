@@ -136,15 +136,14 @@ def bucketed_join(
     right: str,
     left_keys: list[str],
     right_keys: list[str],
-    num_buckets: int = 8,
 ) -> DataFrame:
-    """Equi-join two sources through their bucketed layouts — no
+    """Equi-join two sources through their 8-bucket layouts — no
     Exchange on either side of the join. Key NAMES may differ per side
     (o_orderkey vs l_orderkey); what matters is that each side is
     bucketed on its own join key, so both scans already satisfy the
     join's required hash distribution."""
-    lt = ensure_bucketed(spark, sf_dir, left, left_keys, num_buckets)
-    rt = ensure_bucketed(spark, sf_dir, right, right_keys, num_buckets)
+    lt = ensure_bucketed(spark, sf_dir, left, left_keys)
+    rt = ensure_bucketed(spark, sf_dir, right, right_keys)
     ldf, rdf = spark.table(lt), spark.table(rt)
     cond = None
     for lk, rk in zip(left_keys, right_keys):

@@ -163,7 +163,7 @@ def _scalar(v: dict) -> str | None:
     return _text(v.get("bytesValue"))
 
 
-def normalize_anyvalue(v: Any, depth: int = _ANYVALUE_DEPTH) -> str | None:
+def normalize_anyvalue(v: Any, depth: int) -> str | None:
     """OTLP AnyValue → string, with the reference's rules
     (collector/service.go:184-258):
 
@@ -386,10 +386,9 @@ def parse_otlp_json(df: DataFrame, json_col: str = "value") -> DataFrame:
     return decode_requests(df, json_col, json_request)
 
 
-def parse_otlp_json_with_dead_letter(
-    df: DataFrame, json_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """Like ``parse_otlp_json`` but splits out undecodable documents.
+def parse_otlp_json_with_dead_letter(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Like ``parse_otlp_json`` over the ``value`` column, but splits
+    out undecodable documents.
 
     The reference panics the handler on decode errors
     (collector/controller.go:83) — no retry, no dead letter. Here the
@@ -397,7 +396,7 @@ def parse_otlp_json_with_dead_letter(
     as a second DataFrame with the raw payload, for replay or
     inspection, while the good path proceeds unchanged.
     """
-    rows = decode_requests(df, json_col, json_request, dead_letter=True)
+    rows = decode_requests(df, "value", json_request, dead_letter=True)
     good = rows.filter("__error IS NULL").select(*PARSED_COLUMNS)
     bad = rows.filter("__error IS NOT NULL").selectExpr("CAST(__raw AS STRING) AS raw_payload")
     return good, bad

@@ -50,15 +50,10 @@ def with_partition_col(df: DataFrame) -> DataFrame:
     )
 
 
-def append_spans(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Append a batch of wide span rows, time-partitioned and
-    row-group-sorted. At-least-once (no dedup), matching the
+def append_spans(df: DataFrame, path: str) -> None:
+    """Append a batch of wide span rows as parquet, time-partitioned
+    and row-group-sorted. At-least-once (no dedup), matching the
     reference's replay behavior (SURVEY §2.9).
-
-    ``fmt`` selects the columnar file format: ``parquet`` (default) or
-    ``orc`` — both stripe/row-group indexed, so the sort-within-
-    partition min/max pruning works identically; ORC is the drop-in
-    for Hive-ecosystem consumers.
 
     Appends to the same path from threads of this process run one at a
     time (writers in other processes: ``idempotent_append``)."""
@@ -67,14 +62,13 @@ def append_spans(df: DataFrame, path: str, fmt: str = "parquet") -> None:
         .sortWithinPartitions("start_time_unix_nano", "trace_id")
         .write.mode("append")
         .partitionBy(PARTITION_COL)
-        .format(fmt)
     )
     with _append_lock(path):
-        writer.save(path)
+        writer.parquet(path)
 
 
-def read_spans(spark, path: str, fmt: str = "parquet") -> DataFrame:
-    df = spark.read.format(fmt).load(path)
+def read_spans(spark, path: str) -> DataFrame:
+    df = spark.read.parquet(path)
     return df.drop(PARTITION_COL) if PARTITION_COL in df.columns else df
 
 

@@ -1,39 +1,34 @@
 """Streaming observability: a StreamingQueryListener that records
 per-micro-batch progress (input rows, processing rate, batch duration,
-state size) into a driver-side buffer, plus a report view over it —
-the numbers an operator alerts on (falling rate, growing batch
-duration, state blow-up).
+state size) into a driver-side buffer — the numbers an operator alerts
+on (falling rate, growing batch duration, state blow-up).
 
 Driver-side by design: progress events are emitted once per batch on
 the driver regardless of cluster size, so the buffer grows at
 batches/sec, not data volume — the one place collecting to the driver
-is the RIGHT scale shape. A production deployment points `sink_fn` at
-its metrics system (StatsD/Prometheus push) instead of the buffer.
+is the RIGHT scale shape.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
 class ProgressRecorder(StreamingQueryListener):
-    """Buffers one row per micro-batch; optionally tees each progress
-    event to ``sink_fn`` (e.g. a metrics push)."""
+    """Buffers one row per micro-batch in ``rows``."""
 
-    def __init__(self, sink_fn: Callable[[dict], None] | None = None) -> None:
+    def __init__(self) -> None:
         self.rows: list[dict] = []
-        self._sink_fn = sink_fn
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
-        row = {
+        self.rows.append({
             "query_name": p.get("name") or p.get("id", ""),
             "batch_id": int(p.get("batchId", -1)),
             "input_rows": int(p.get("numInputRows", 0)),
@@ -47,10 +42,7 @@ class ProgressRecorder(StreamingQueryListener):
                     for s in (p.get("stateOperators") or [])
                 )
             ),
-        }
-        self.rows.append(row)
-        if self._sink_fn is not None:
-            self._sink_fn(row)
+        })
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
@@ -59,20 +51,9 @@ class ProgressRecorder(StreamingQueryListener):
         pass
 
 
-def attach(spark: SparkSession, sink_fn: Callable[[dict], None] | None = None):
+def attach(spark: SparkSession) -> ProgressRecorder:
     """Register a recorder on the session; returns it (detach with
     ``spark.streams.removeListener``)."""
-    rec = ProgressRecorder(sink_fn)
+    rec = ProgressRecorder()
     spark.streams.addListener(rec)
     return rec
-
-
-def progress_report(spark: SparkSession, rec: ProgressRecorder) -> DataFrame:
-    """The buffered progress as a relation (one row per micro-batch)."""
-    schema = (
-        "query_name string, batch_id long, input_rows long, "
-        "rows_per_sec double, batch_duration_ms long, state_rows long"
-    )
-    return spark.createDataFrame(
-        [tuple(r.values()) for r in rec.rows] or [], schema=schema
-    )

@@ -26,18 +26,14 @@ from nabatshy_spark.operators.stats import (
 
 
 def test_two_phase_rank_is_long_both_branches(spark):
+    """__rank is LONG (the operator has one, two-phase, form)."""
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )
-    for force in ("window", "twophase"):
-        out = cumulative_sum_ordered(
-            df, [F.col("v").asc(), F.col("k").asc()], "v", force=force
-        )
-        assert dict(out.dtypes)["__rank"] == "bigint", force
+    out = cumulative_sum_ordered(df, [F.col("v").asc(), F.col("k").asc()], "v")
+    assert dict(out.dtypes)["__rank"] == "bigint"
     # quartile-style arithmetic on the long rank stays exact
-    out = cumulative_sum_ordered(
-        df, [F.col("v").asc(), F.col("k").asc()], "v", force="twophase"
-    ).withColumn("q", F.ceil(F.lit(4) * F.col("__rank") / F.col("__n")))
+    out = out.withColumn("q", F.ceil(F.lit(4) * F.col("__rank") / F.col("__n")))
     qs = {r.q for r in out.select("q").distinct().collect()}
     assert qs == {1, 2, 3, 4}
 
@@ -51,7 +47,7 @@ def test_two_phase_ranged_relation_is_pinned(spark):
         F.col("id").alias("k"), (F.col("id") % 13).alias("v")
     )
     for op in (cumulative_sum_ordered, running_min_prev_ordered):
-        out = op(df, [F.col("v").asc(), F.col("k").asc()], "v", force="twophase")
+        out = op(df, [F.col("v").asc(), F.col("k").asc()], "v")
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" in plan or "LogicalRDD" in plan, op.__name__
         # and the checkpointed relation is evaluated consistently: the

@@ -74,7 +74,7 @@ def test_clusters_include_singletons(spark):
     )
     hist = {
         r.cluster_size: r.n_clusters
-        for r in entity.part_entity_clusters(df, threshold=0.9).collect()
+        for r in entity.part_entity_clusters(df).collect()
     }
     assert hist == {1: 1, 2: 1}
 
@@ -167,7 +167,7 @@ def test_part_topk_matches_bounded_and_consistent(spark):
     df = spark.createDataFrame(rows)
     k = 3
     got = entity.part_topk_matches(
-        df, threshold=0.8, k=k, max_df=200, rep_cap=100  # cap unbound
+        df, k=k, max_df=200, rep_cap=100  # cap unbound
     ).collect()
     per = {}
     for r in got:
@@ -199,7 +199,7 @@ def test_part_topk_rep_cap_bounds_candidates(spark):
     ]
     df = spark.createDataFrame(rows)
     got = entity.part_topk_matches(
-        df, threshold=0.8, k=3, max_df=2, rep_cap=4
+        df, k=3, max_df=2, rep_cap=4
     ).collect()
     per = {}
     for r in got:
@@ -240,7 +240,7 @@ def test_er_topk_oracle_agrees_where_cap_binds(spark, tmp_path):
     got = sorted(
         tuple(str(x) for x in r)
         for r in entity.part_topk_matches(
-            df, threshold=0.8, k=3, max_df=200, rep_cap=8
+            df, k=3, max_df=200, rep_cap=8
         ).collect()
     )
     con = duckdb.connect()

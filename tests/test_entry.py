@@ -331,7 +331,6 @@ REFERENCE_ALLOWLIST = {
     "parse_otlp_protobuf_with_dead_letter": "malformed input: dead-letter split of the protobuf decoder",
     "ingest_batch": "test entry point: OTLP documents to span rows without a stream",
     "read_spans": "test entry point: reader of the partitioned span sink",
-    "progress_report": "pending caller: the observability item (ROADMAP)",
     "start_collector": "pending caller: the one-process collector + API item (ROADMAP)",
 }
 # Deleted because nothing but their own tests called them; none may
@@ -350,7 +349,7 @@ DELETED = {
     "session_window_rollup", "start_rollup_to_memory", "start_gated_ingest",
     "gated_sink", "kafka_spool_stream", "kafka_source_options",
     "sessionize_stream", "merge_sketch", "stream_interval_join",
-    "dedup_stream",
+    "dedup_stream", "progress_report",
 }
 
 
@@ -383,53 +382,86 @@ def test_every_top_level_definition_is_referenced():
 
 
 # Options a deployment sets: the listening port and the trigger
-# interval.
+# interval. ``parse_otlp_json(json_col=)`` is set only positionally by
+# the benchmark harness, which changes only with the benchmark.
 DEPLOYMENT_OPTIONS = {
     ("start_collector", "port"),
     ("start_collector", "trigger_interval"),
+    ("parse_otlp_json", "json_col"),
 }
+ALL_CAPS = re.compile(r"[A-Z][A-Z0-9_]*$")
 
 
-def _passes(call: ast.Call, index, name: str) -> bool:
-    if any(k.arg in (name, None) for k in call.keywords):
+def _is_constant(node: ast.expr) -> bool:
+    """A literal (signed number, string, None, tuple or list of them)
+    or an ALL_CAPS name."""
+    if isinstance(node, ast.Constant):
         return True
-    return index is not None and (
-        len(call.args) > index
+    if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
+        return _is_constant(node.operand)
+    if isinstance(node, (ast.Tuple, ast.List)):
+        return all(_is_constant(e) for e in node.elts)
+    name = node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+    return isinstance(node, (ast.Name, ast.Attribute)) and bool(ALL_CAPS.match(name))
+
+
+def _value(call: ast.Call, index, name: str, default: ast.expr, where: str) -> str:
+    """What one call passes for an option: the source text of a literal
+    or ALL_CAPS constant (the default's when the call omits it), else a
+    value of its own."""
+    node = next((k.value for k in call.keywords if k.arg == name), None)
+    if node is None and index is not None and len(call.args) > index:
+        node = call.args[index]
+    if node is None and (
+        any(k.arg is None for k in call.keywords)
         or any(isinstance(a, ast.Starred) for a in call.args)
-    )
+    ):
+        return f"{where}:{call.lineno}:{call.col_offset}"
+    if node is None:
+        node = default
+    if _is_constant(node):
+        return ast.unparse(node)
+    return f"{where}:{node.lineno}:{node.col_offset}"
 
 
 def test_every_keyword_option_is_set_by_a_caller():
-    """A defaulted parameter of a top-level function is passed, by
-    keyword or by position, by some call in the package, tests, tools,
-    perfbench, bench.py or ``__spark_entry__.py``; otherwise it is a
-    constant. Calls resolve by name, so a call counts toward every
-    definition of that name."""
+    """A defaulted parameter of a top-level function takes at least two
+    distinct values across the calls in the package, tests, tools,
+    perfbench, bench.py and ``__spark_entry__.py``; an option that
+    every call sets the same way is a constant. Calls resolve by name,
+    so a call counts toward every definition of that name."""
     calls = {}
-    for _, tree in _source_trees():
+    for rel, tree in _source_trees():
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 f = n.func
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-                calls.setdefault(name, []).append(n)
-    never_set = []
+                calls.setdefault(name, []).append((rel, n))
+    one_value = []
     for rel, fn in _top_level_defs():
         if not isinstance(fn, ast.FunctionDef):
             continue
         args = fn.args
         pos = args.posonlyargs + args.args
         first = len(pos) - len(args.defaults)
-        options = [(i, a.arg) for i, a in enumerate(pos) if i >= first] + [
-            (None, a.arg)
+        options = [
+            (i, a.arg, d)
+            for i, (a, d) in enumerate(zip(pos[first:], args.defaults), first)
+        ] + [
+            (None, a.arg, d)
             for a, d in zip(args.kwonlyargs, args.kw_defaults)
             if d is not None
         ]
-        for index, name in options:
+        for index, name, default in options:
             if (fn.name, name) in DEPLOYMENT_OPTIONS:
                 continue
-            if not any(_passes(c, index, name) for c in calls.get(fn.name, [])):
-                never_set.append(f"{rel}:{fn.lineno} {fn.name}({name}=)")
-    assert not never_set
+            values = {
+                _value(c, index, name, default, where)
+                for where, c in calls.get(fn.name, [])
+            }
+            if len(values) < 2:
+                one_value.append(f"{rel}:{fn.lineno} {fn.name}({name}=)")
+    assert not one_value
 
 
 def test_span_fixture_path_follows_the_importing_checkout(tmp_path):

@@ -22,7 +22,7 @@ def test_lsh_topk_recall(spark, sf_dir):
     }
     approx = {
         r.vec_id
-        for r in similarity.lsh_topk(emb, "vec_id", "embedding", 0, 10).collect()
+        for r in similarity.lsh_topk(emb, "vec_id", "embedding", 0).collect()
     }
     assert len(approx) == 10
     assert len(exact & approx) / len(exact) >= 0.5
@@ -216,14 +216,14 @@ def test_kmeans_deterministic_and_sane(spark, sf_dir):
     from nabatshy_spark.operators.clustering import kmeans
 
     emb = load(spark, sf_dir, "embeddings")
-    a = {(r.vec_id, r.cluster) for r in kmeans(emb, "vec_id", "embedding", k=4, iters=4).collect()}
-    b = {(r.vec_id, r.cluster) for r in kmeans(emb, "vec_id", "embedding", k=4, iters=4).collect()}
+    a = {(r.vec_id, r.cluster) for r in kmeans(emb, "vec_id", "embedding", iters=4).collect()}
+    b = {(r.vec_id, r.cluster) for r in kmeans(emb, "vec_id", "embedding", iters=4).collect()}
     assert a == b                                   # deterministic across runs
     assert {c for _, c in a} <= {0, 1, 2, 3}
     assert len(a) == emb.count()                    # every vector assigned
     # more rounds only refine: round-4 assignment differs from round-2
     # for some points but cluster count stays k
-    two = {(r.vec_id, r.cluster) for r in kmeans(emb, "vec_id", "embedding", k=4, iters=2).collect()}
+    two = {(r.vec_id, r.cluster) for r in kmeans(emb, "vec_id", "embedding", iters=2).collect()}
     assert len({c for _, c in two}) == len({c for _, c in a}) == 4
 
 
@@ -241,7 +241,7 @@ def test_decontaminate_flags_overlap(spark):
         ["doc_id", "text"],
     )
     got = {r.doc_id: r.n_hits for r in
-           decontaminate(corpus, bench, "doc_id", "text", n=3, min_hits=2).collect()}
+           decontaminate(corpus, bench, "doc_id", "text", min_hits=2).collect()}
     assert 1 in got and got[1] >= 5
     assert 2 not in got and 3 not in got
 
@@ -688,8 +688,7 @@ def test_boilerplate_scrub_removes_hot_chunks(spark):
     out = {
         r["doc_id"]: r
         for r in boilerplate_scrub(
-            df, hot_chunks(df, "doc_id", "text", chunk_words=5, max_docs=2),
-            "doc_id", "text", chunk_words=5,
+            df, hot_chunks(df, "doc_id", "text"), "doc_id", "text",
         ).collect()
     }
     md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
@@ -737,8 +736,7 @@ def test_temperature_mixture_upweights_small_sources(spark):
     plan = {
         r["source"]: r
         for r in temperature_mixture_rates(
-            df, "source", F.size(F.split(F.col("text"), " ")),
-            budget_frac=0.5, temperature=2.0,
+            df, "source", F.size(F.split(F.col("text"), " "))
         ).collect()
     }
     assert plan["small"]["rate"] > plan["big"]["rate"]
@@ -843,7 +841,7 @@ def test_cms_overestimates_and_merges(spark, sf_dir):
     from nabatshy_spark.operators import sketches
 
     ev = load(spark, sf_dir, "events")
-    est = {r["key"]: r["est"] for r in sketches.cms_estimates(ev, "user_id", 4, 64).collect()}
+    est = {r["key"]: r["est"] for r in sketches.cms_estimates(ev, "user_id").collect()}
     true = {r["user_id"]: r["n"] for r in ev.groupBy("user_id").agg(F.count("*").alias("n")).collect()}
     assert set(est) == set(true)
     assert all(est[k] >= true[k] for k in true)
@@ -851,9 +849,9 @@ def test_cms_overestimates_and_merges(spark, sf_dir):
 
     a = ev.filter(F.col("user_id") % 2 == 0)
     b = ev.filter(F.col("user_id") % 2 == 1)
-    whole = {(r["row"], r["col"]): r["c"] for r in sketches.cms_counters(ev, "user_id", 4, 64).collect()}
-    sa = {(r["row"], r["col"]): r["c"] for r in sketches.cms_counters(a, "user_id", 4, 64).collect()}
-    sb = {(r["row"], r["col"]): r["c"] for r in sketches.cms_counters(b, "user_id", 4, 64).collect()}
+    whole = {(r["row"], r["col"]): r["c"] for r in sketches.cms_counters(ev, "user_id", 64).collect()}
+    sa = {(r["row"], r["col"]): r["c"] for r in sketches.cms_counters(a, "user_id", 64).collect()}
+    sb = {(r["row"], r["col"]): r["c"] for r in sketches.cms_counters(b, "user_id", 64).collect()}
     merged = {k: sa.get(k, 0) + sb.get(k, 0) for k in set(sa) | set(sb)}
     assert merged == whole
 
@@ -866,11 +864,11 @@ def test_bloom_no_false_negatives(spark):
 
     members = spark.createDataFrame([(i,) for i in range(50)], "k long")
     others = spark.createDataFrame([(i,) for i in range(1000, 1020)], "k long")
-    bits = sketches.bloom_bits(members, "k", num_hashes=5, num_bits=2048)
+    bits = sketches.bloom_bits(members, "k", num_bits=2048)
     out = {
         r["key"]: r["may_contain"]
         for r in sketches.bloom_probe(
-            bits, members.union(others), "k", num_hashes=5, num_bits=2048
+            bits, members.union(others), "k", num_bits=2048
         ).collect()
     }
     assert all(out[i] for i in range(50))
@@ -901,7 +899,7 @@ def test_pmi_ranks_true_collocation_first(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     from nabatshy_spark.operators.textanalysis import pmi_collocations
 
-    top = pmi_collocations(df, "text", min_count=5, k=5).collect()
+    top = pmi_collocations(df, "text", k=5).collect()
     assert (top[0]["x"], top[0]["y"]) == ("new", "york")
     assert top[0]["pmi"] > 0
 
@@ -1011,7 +1009,7 @@ def test_dedup_cluster_stats_rollup(spark):
         ],
         ["doc_id", "text", "source", "n_chars"],
     )
-    pairs = dedup.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.5)
+    pairs = dedup.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5)
     comp = dedup.connected_components(pairs)
     out = (
         df.join(comp, "doc_id")
@@ -1082,7 +1080,7 @@ def test_split_leakage_audit_hand_case(spark):
         ],
         ["doc_id", "text"],
     )
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
+    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
     sp = sampling.split_corpus(docs, "doc_id", train_bps=62259, val_bps=1638)
     got = {
         (r.split_a, r.split_b): r.n_dup_pairs
@@ -1145,10 +1143,10 @@ def test_text_operators_survive_null_text(spark):
         "doc_id long, text string",
     )
     pairs = dedup.minhash_lsh_pairs(
-        dedup.minhash_signatures(df, "doc_id", "text", n=3), "doc_id", threshold=0.5
+        dedup.minhash_signatures(df, "doc_id", "text"), "doc_id"
     )
     assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 3)}
-    exact = dedup.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.5)
+    exact = dedup.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5)
     assert {(r.doc_a, r.doc_b) for r in exact.collect()} == {(1, 3)}
     assert textanalysis.text_stats(df, "doc_id", "text").count() == 3
     assert textanalysis.cross_doc_ngram_dup(df, "doc_id", "text").count() == 2
@@ -1166,14 +1164,14 @@ def test_embedding_dedup_survives_null_vectors(spark):
     got = {
         (r.doc_a, r.doc_b)
         for r in dedup.embedding_dup_pairs(
-            emb, "vec_id", "embedding", threshold=0.45
+            emb, "vec_id", "embedding"
         ).collect()
     }
     assert got == {(0, 2)}
     got_c = {
         (r.doc_a, r.doc_b)
         for r in dedup.embedding_dup_pairs_clustered(
-            emb, "vec_id", "embedding", threshold=0.45, k=2
+            emb, "vec_id", "embedding", k=2
         ).collect()
     }
     assert got_c == {(0, 2)}
@@ -1209,6 +1207,6 @@ def test_session_paths_respect_boundaries(spark):
     df = spark.createDataFrame(rows, ["user_id", "event_id", "ts", "event_type"])
     got = {
         (r.path, r.n_occurrences)
-        for r in sessions.top_session_paths(df, n=2, k=10).collect()
+        for r in sessions.top_session_paths(df, k=10).collect()
     }
     assert got == {("a>b", 1), ("c>d", 1)}

@@ -197,7 +197,7 @@ def test_dead_letter_split(spark):
         '{"unrelated": true}',           # valid JSON, not OTLP
     ]
     df = spark.createDataFrame([(d,) for d in docs], RAW_SCHEMA)
-    good, bad = parse_otlp_json_with_dead_letter(df, "value")
+    good, bad = parse_otlp_json_with_dead_letter(df)
     assert good.count() == 4
     bad_rows = [r.raw_payload for r in bad.collect()]
     assert len(bad_rows) == 2

@@ -109,7 +109,7 @@ def test_part_topk_matches_pure_python_reference(spark, rows, cap_pair):
     got = {
         (r.p_partkey, r.match_key, r.rank, r.score)
         for r in entity.part_topk_matches(
-            df, threshold=0.8, k=2, max_df=max_df, rep_cap=rep_cap
+            df, k=2, max_df=max_df, rep_cap=rep_cap
         ).collect()
     }
     want = _ref_topk(rows, threshold=0.8, k=2, max_df=max_df, rep_cap=rep_cap)

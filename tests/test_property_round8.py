@@ -1,6 +1,6 @@
 """Property tests for round-8 operators against pure-Python references:
 the two-phase partitioned prefix sum / rank / exclusive-prefix min vs
-sorted-list references on random data (both branches), and the bloom
+sorted-list references on random data, and the bloom
 probe's no-false-negative contract on random key sets."""
 
 from __future__ import annotations
@@ -34,8 +34,8 @@ def _reference(data):
 
 
 @SLOW
-@given(rows, st.sampled_from(["window", "twophase"]))
-def test_cumulative_sum_ordered_matches_reference(spark, data, force):
+@given(rows)
+def test_cumulative_sum_ordered_matches_reference(spark, data):
     from pyspark.sql import functions as F
 
     from nabatshy_spark.operators.stats import cumulative_sum_ordered
@@ -44,7 +44,7 @@ def test_cumulative_sum_ordered_matches_reference(spark, data, force):
     got = {
         r.k: (r["__cum"], r["__rank"], r["__tot"], r["__n"])
         for r in cumulative_sum_ordered(
-            df, [F.col("v").desc(), F.col("k").asc()], "v", force=force
+            df, [F.col("v").desc(), F.col("k").asc()], "v"
         ).collect()
     }
     assert got == _reference(data)
@@ -60,8 +60,8 @@ def _ref_prevmin(data):
 
 
 @SLOW
-@given(rows, st.sampled_from(["window", "twophase"]))
-def test_running_min_prev_ordered_matches_reference(spark, data, force):
+@given(rows)
+def test_running_min_prev_ordered_matches_reference(spark, data):
     from pyspark.sql import functions as F
 
     from nabatshy_spark.operators.stats import running_min_prev_ordered
@@ -70,7 +70,7 @@ def test_running_min_prev_ordered_matches_reference(spark, data, force):
     got = {
         r.k: r["__prevmin"]
         for r in running_min_prev_ordered(
-            df, [F.col("v").desc(), F.col("k").asc()], "v", force=force
+            df, [F.col("v").desc(), F.col("k").asc()], "v"
         ).collect()
     }
     assert got == _ref_prevmin(data)
@@ -94,9 +94,9 @@ def test_bloom_probe_never_false_negative(spark, keys):
     pdf = spark.createDataFrame(
         [(k,) for k in members | probes], "key long"
     )
-    bits = bloom_bits(mdf, "key", 5, 256)
+    bits = bloom_bits(mdf, "key", 256)
     got = {
         r.key: r.may_contain
-        for r in bloom_probe(bits, pdf, "key", 5, 256).collect()
+        for r in bloom_probe(bits, pdf, "key", 256).collect()
     }
     assert all(got[k] for k in members)

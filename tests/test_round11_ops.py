@@ -26,11 +26,11 @@ def test_cross_corpus_shuffle_fallback_same_result(spark, monkeypatch):
         [Row(doc_id=9, text="the quick brown fox jumps over the lazy dog " * 3)]
     )
     base = suffixes.cross_corpus_substring_runs(
-        corpus, bench, "doc_id", "text", min_len=50
+        corpus, bench, "doc_id", "text"
     ).collect()
     monkeypatch.setattr(suffixes, "_BENCH_BROADCAST_MAX_HASHES", 0)
     fallback = suffixes.cross_corpus_substring_runs(
-        corpus, bench, "doc_id", "text", min_len=50
+        corpus, bench, "doc_id", "text"
     ).collect()
     assert sorted(map(tuple, base)) == sorted(map(tuple, fallback))
     assert len(base) >= 1
@@ -67,7 +67,7 @@ def test_doc_topk_matches_reference_small(spark):
     )
     got = {
         (r.doc_id, r.rank): (r.match_id, r.jaccard)
-        for r in entity.doc_topk_matches(docs, threshold=0.5, k=3).collect()
+        for r in entity.doc_topk_matches(docs).collect()
     }
     # brute-force reference
     import itertools
@@ -108,9 +108,7 @@ def test_doc_topk_rep_cap_binds_like_oracle(spark, tmp_path):
 
     got = [
         (r.doc_id, r.match_id, r.rank, r.jaccard)
-        for r in entity.doc_topk_matches(
-            spark.read.parquet(pq), threshold=0.5, k=3, rep_cap=8
-        ).collect()
+        for r in entity.doc_topk_matches(spark.read.parquet(pq)).collect()
     ]
     con = duckdb.connect()
     con.execute(
@@ -137,11 +135,11 @@ def test_part_topk_artifact_serves_identical_results(spark, sf_dir, monkeypatch,
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     part = load(spark, sf_dir, "part")
     direct = entity.part_topk_matches(
-        part, threshold=0.8, k=3, max_df=200, rep_cap=8
+        part, k=3, max_df=200, rep_cap=8
     ).collect()
     via_artifact = entity.directed_topk(
         entity.shared_part_matches(
-            spark, sf_dir, threshold=0.8, max_df=200, rep_cap=8
+            spark, sf_dir, threshold=0.8, rep_cap=8
         ),
         "score",
         "p_partkey",
@@ -168,7 +166,7 @@ def test_unified_matches_filters_equal_direct_builds(
             part, threshold=thr, max_df=200, rep_cap=rc
         ).collect()
         via = entity.shared_part_matches(
-            spark, sf_dir, threshold=thr, max_df=200, rep_cap=rc
+            spark, sf_dir, threshold=thr, rep_cap=rc
         ).collect()
         assert sorted(map(tuple, direct)) == sorted(map(tuple, via)), (
             thr,
@@ -185,9 +183,7 @@ def test_doc_matches_artifact_serves_identical_results(
     from nabatshy_spark.catalog import load
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
-    direct = entity.doc_topk_matches(
-        load(spark, sf_dir, "documents"), threshold=0.5, k=3
-    ).collect()
+    direct = entity.doc_topk_matches(load(spark, sf_dir, "documents")).collect()
     via_artifact = entity.directed_topk(
         entity.shared_doc_matches(spark, sf_dir),
         "jac",
@@ -283,8 +279,8 @@ def test_shared_postings_pruned_reads_equal_direct_build(
         map(tuple, art_dl.collect())
     )
     # end-to-end: BM25 over artifact == BM25 over inline build
-    d_bm = invindex.search_bm25(direct_p, direct_dl, terms, k=20).collect()
-    a_bm = invindex.search_bm25(art_p, art_dl, terms, k=20).collect()
+    d_bm = invindex.search_bm25(direct_p, direct_dl, terms).collect()
+    a_bm = invindex.search_bm25(art_p, art_dl, terms).collect()
     assert [tuple(r) for r in d_bm] == [tuple(r) for r in a_bm]
     # driver-side bucket twin really is the layout's bucket fn
     from pyspark.sql import functions as F

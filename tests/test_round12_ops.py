@@ -29,22 +29,14 @@ def test_incremental_corpus_index_serves_identical_results(
     docs = load(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 < 2)
     corpus = docs.filter(F.col("doc_id") % 10 >= 2)
-    in_plan = dedup.incremental_corpus_index(
-        corpus, "doc_id", "text", n=3, max_df=200
-    )
-    shared = dedup.shared_incremental_corpus_index(
-        spark, sf_dir, n=3, max_df=200, mod=10, batch_lt=2
-    )
+    in_plan = dedup.incremental_corpus_index(corpus, "doc_id", "text", max_df=200)
+    shared = dedup.shared_incremental_corpus_index(spark, sf_dir)
     for name, rel in in_plan.items():
         assert sorted(map(tuple, rel.collect())) == sorted(
             map(tuple, shared[name].collect())
         ), name
-    inline = dedup.incremental_dedup(
-        in_plan, batch, "doc_id", "text", n=3, threshold=0.5
-    ).collect()
-    via = dedup.incremental_dedup(
-        shared, batch, "doc_id", "text", n=3, threshold=0.5
-    ).collect()
+    inline = dedup.incremental_dedup(in_plan, batch, "doc_id", "text").collect()
+    via = dedup.incremental_dedup(shared, batch, "doc_id", "text").collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
 
@@ -69,18 +61,16 @@ def test_minhash_sig_artifact_serves_identical_pairs(
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
-    shared = dedup.shared_minhash_signatures(spark, sf_dir, n=3, num_hashes=128)
+    shared = dedup.shared_minhash_signatures(spark, sf_dir)
     if num_hashes == 128:
         assert sorted(
             map(tuple, dedup.minhash_signatures(docs, "doc_id", "text").collect())
         ) == sorted(map(tuple, shared.collect()))
     inline = dedup.minhash_lsh_pairs(
-        dedup.minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=num_hashes),
-        "doc_id", threshold=0.5, num_hashes=num_hashes, rows_per_band=2,
+        dedup.minhash_signatures(docs, "doc_id", "text", num_hashes=num_hashes),
+        "doc_id", num_hashes=num_hashes,
     ).collect()
-    via = dedup.minhash_lsh_pairs(
-        shared, "doc_id", threshold=0.5, num_hashes=num_hashes, rows_per_band=2,
-    ).collect()
+    via = dedup.minhash_lsh_pairs(shared, "doc_id", num_hashes=num_hashes).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
 
@@ -123,11 +113,9 @@ def test_curated_pairs_build_from_flags_identical(
     exact_sur = dedup.exact_dedup(kept, "doc_id", "text").select("doc_id")
     sur_docs = kept.join(exact_sur, "doc_id", "left_semi")
     inline = dedup.ngram_jaccard_pairs(
-        sur_docs, "doc_id", "text", n=3, threshold=0.5, max_df=200
+        sur_docs, "doc_id", "text", threshold=0.5, max_df=200
     ).collect()
-    via = dedup.shared_curated_pairs(
-        spark, sf_dir, n=3, threshold=0.5, max_df=200
-    ).collect()
+    via = dedup.shared_curated_pairs(spark, sf_dir).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
 
 
@@ -140,11 +128,9 @@ def test_curated_and_corpus_pair_keys_disambiguated(
     the other's consumers."""
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     corpus_pairs = dedup.shared_ngram_pairs(
-        spark, sf_dir, n=3, threshold=0.5, max_df=200
+        spark, sf_dir, threshold=0.5, max_df=200
     ).collect()
-    curated_pairs = dedup.shared_curated_pairs(
-        spark, sf_dir, n=3, threshold=0.5, max_df=200
-    ).collect()
+    curated_pairs = dedup.shared_curated_pairs(spark, sf_dir).collect()
     # one artifact dir was published per family, each under its family
     published = {
         p.name: [a.name for a in p.iterdir()]
@@ -171,10 +157,10 @@ def test_uncapped_pair_artifact_matches_inline(
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     inline = dedup.ngram_jaccard_pairs(
         load(spark, sf_dir, "documents"), "doc_id", "text",
-        n=3, threshold=0.5, max_df=None,
+        threshold=0.5, max_df=None,
     ).collect()
     via = dedup.shared_ngram_pairs(
-        spark, sf_dir, n=3, threshold=0.5, max_df=None
+        spark, sf_dir, threshold=0.5, max_df=None
     ).collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
@@ -190,21 +176,13 @@ def test_hot_chunk_artifact_and_one_pass_scrub_identical(
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
-    in_plan = textanalysis.hot_chunks(
-        docs, "doc_id", "text", chunk_words=5, max_docs=2
-    )
-    shared = textanalysis.shared_hot_chunks(
-        spark, sf_dir, chunk_words=5, max_docs=2
-    )
+    in_plan = textanalysis.hot_chunks(docs, "doc_id", "text")
+    shared = textanalysis.shared_hot_chunks(spark, sf_dir)
     assert sorted(map(tuple, in_plan.collect())) == sorted(
         map(tuple, shared.collect())
     )
-    inline = textanalysis.boilerplate_scrub(
-        docs, in_plan, "doc_id", "text", chunk_words=5
-    ).collect()
-    via = textanalysis.boilerplate_scrub(
-        docs, shared, "doc_id", "text", chunk_words=5
-    ).collect()
+    inline = textanalysis.boilerplate_scrub(docs, in_plan, "doc_id", "text").collect()
+    via = textanalysis.boilerplate_scrub(docs, shared, "doc_id", "text").collect()
     assert sorted(map(tuple, inline)) == sorted(map(tuple, via))
     assert len(inline) > 0
 
@@ -223,7 +201,7 @@ def test_substr_runs_artifact_two_level_identical(
     direct = suffixes.duplicated_substring_runs(
         docs, "doc_id", "text", min_len=50, max_df=200
     ).collect()
-    via = suffixes.shared_substring_runs(spark, sf_dir, 50, 200).collect()
+    via = suffixes.shared_substring_runs(spark, sf_dir).collect()
     assert sorted(map(tuple, direct)) == sorted(map(tuple, via))
 
 
@@ -245,12 +223,9 @@ def test_decon_runs_artifact_two_level_identical(
     train = splits.filter(F.col("split") == "train")
     test = splits.filter(F.col("split") == "test")
     direct = suffixes.cross_corpus_substring_runs(
-        train, test, "doc_id", "text", min_len=50, max_df=200
+        train, test, "doc_id", "text", max_df=200
     ).collect()
-    via = suffixes.shared_decontamination_runs(
-        spark, sf_dir, min_len=50, max_df=200,
-        train_bps=62259, val_bps=1638,
-    ).collect()
+    via = suffixes.shared_decontamination_runs(spark, sf_dir).collect()
     assert sorted(map(tuple, direct)) == sorted(map(tuple, via))
 
 
@@ -264,14 +239,14 @@ def test_dup_char_vocab_serves_both_window_queries_identically(
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
     docs = load(spark, sf_dir, "documents")
-    vocab = dedup.shared_dup_char_vocab(spark, sf_dir, k=20)
+    vocab = dedup.shared_dup_char_vocab(spark, sf_dir)
     in_plan = dedup.dup_char_vocab(docs, "doc_id", "text", k=20)
     assert sorted(map(tuple, in_plan.collect())) == sorted(
         map(tuple, vocab.collect())
     )
     for fn in (dedup.duplicate_ngram_coverage, dedup.duplicate_span_stats):
-        inline = fn(docs, in_plan, "doc_id", "text", k=20).collect()
-        via = fn(docs, vocab, "doc_id", "text", k=20).collect()
+        inline = fn(docs, in_plan, "doc_id", "text").collect()
+        via = fn(docs, vocab, "doc_id", "text").collect()
         assert sorted(map(tuple, inline)) == sorted(map(tuple, via)), fn
         assert len(inline) > 0
 

@@ -110,7 +110,7 @@ def test_dedup_keep_best_prefers_longest_then_min_id(spark):
             Row(doc_id=12, text=base, n_chars=len(base)),
         ]
     )
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5)
+    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", 0.5)
     comp = dedup.connected_components(pairs)
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window

@@ -28,12 +28,17 @@ def test_parse_byte_size_units():
 
 def test_semi_join_ids_both_branches_identical(spark, sf_dir):
     """The broadcast and shuffle-hash branches must return identical
-    rows, and the physical plan must actually switch strategy."""
+    rows, and the physical plan must actually switch strategy: an
+    estimate of 10 ids broadcasts, one above the broadcast threshold
+    shuffles."""
     docs = load(spark, sf_dir, "documents")
     ids = docs.filter(F.col("n_chars") > 500).select("doc_id")
+    thr = _parse_byte_size(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    )
 
-    bcast = semi_join_ids(docs, ids, "doc_id", 10, force="broadcast")
-    shuf = semi_join_ids(docs, ids, "doc_id", 10, force="shuffle")
+    bcast = semi_join_ids(docs, ids, "doc_id", 10)
+    shuf = semi_join_ids(docs, ids, "doc_id", (abs(thr) // 24) + 10_000_000)
 
     assert "BroadcastHashJoin" in bcast._jdf.queryExecution().executedPlan().toString()
     shuf_plan = shuf._jdf.queryExecution().executedPlan().toString()
@@ -47,7 +52,7 @@ def test_semi_join_ids_both_branches_identical(spark, sf_dir):
 
 def test_semi_join_ids_threshold_picks_shuffle(spark, sf_dir):
     """An id-count estimate above autoBroadcastJoinThreshold must select
-    the shuffle branch without any force flag."""
+    the shuffle branch."""
     docs = load(spark, sf_dir, "documents")
     ids = docs.select("doc_id").limit(10)
     thr = _parse_byte_size(

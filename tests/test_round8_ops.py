@@ -7,12 +7,28 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nabatshy_spark.catalog import load
 from nabatshy_spark.operators.stats import cumulative_sum_ordered
 from nabatshy_spark.plans.queries import QUERIES
 
+
+def _global_window_cum(df, order, value_col, extra=()):
+    """The single-sort form of cumulative_sum_ordered: one global
+    ``Window.orderBy`` (every row on one task)."""
+    w = Window.orderBy(*order)
+    wc = w.rowsBetween(Window.unboundedPreceding, 0)
+    out = (
+        df.withColumn("__cum", F.sum(value_col).over(wc))
+        .withColumn("__rank", F.row_number().over(w).cast("long"))
+        .withColumn("__tot", F.sum(value_col).over(Window.partitionBy()))
+        .withColumn("__n", F.count("*").over(Window.partitionBy()))
+    )
+    for c in extra:
+        out = out.withColumn(f"__cum_{c}", F.sum(c).over(wc))
+    return out
 
 
 def _cum_rows(df):
@@ -42,40 +58,11 @@ def test_cumulative_sum_two_phase_matches_global_window(spark, sf_dir):
         ).alias("__rev")
     )
     order = [F.col("__rev").desc(), F.col("l_partkey").asc()]
-    win = cumulative_sum_ordered(per_part, order, "__rev", force="window")
-    two = cumulative_sum_ordered(per_part, order, "__rev", force="twophase")
+    win = _global_window_cum(per_part, order, "__rev")
+    two = cumulative_sum_ordered(per_part, order, "__rev")
     a, b = _cum_rows(win), _cum_rows(two)
     assert len(a) > 100
     assert a == b
-
-
-def test_cumulative_sum_auto_switch():
-    """n_rows_estimate vs single_sort_max picks the branch; force
-    overrides. The two-phase plan must contain the range exchange and
-    no empty-partition-spec window."""
-    from nabatshy_spark.session import get_spark
-
-    spark = get_spark("nabatshy_tests", cpus=8)
-    df = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).cast("long").alias("v")
-    )
-    order = [F.col("v").desc(), F.col("k").asc()]
-    small = cumulative_sum_ordered(df, order, "v", n_rows_estimate=10)
-    big = cumulative_sum_ordered(
-        df, order, "v", n_rows_estimate=10, single_sort_max=5
-    )
-    small_plan = small._jdf.queryExecution().executedPlan().toString()
-    big_plan = big._jdf.queryExecution().executedPlan().toString()
-    # The two-phase branch range-partitions INSIDE a pinned
-    # localCheckpoint (ADVICE r8), so the SQL plan shows the checkpoint
-    # scan, not the repartitionByRange itself; its unique marker is the
-    # __pid partition-id column that only the two-phase form carries.
-    assert "rangepartitioning" not in small_plan.lower()
-    assert "__pid" not in small_plan
-    assert "existingrdd" in big_plan.lower() and "__pid" in big_plan
-    rows_small = sorted((r.k, r["__cum"], r["__tot"]) for r in small.collect())
-    rows_big = sorted((r.k, r["__cum"], r["__tot"]) for r in big.collect())
-    assert rows_small == rows_big
 
 
 def test_cumulative_sum_two_phase_no_single_partition_window():
@@ -88,9 +75,7 @@ def test_cumulative_sum_two_phase_no_single_partition_window():
     df = spark.range(100).select(
         F.col("id").alias("k"), F.col("id").cast("long").alias("v")
     )
-    two = cumulative_sum_ordered(
-        df, [F.col("v").asc(), F.col("k").asc()], "v", force="twophase"
-    )
+    two = cumulative_sum_ordered(df, [F.col("v").asc(), F.col("k").asc()], "v")
     plan = two._jdf.queryExecution().executedPlan().toString()
     # Every Window node in the physical plan must carry a partition
     # spec: "windowspecdefinition(" directly followed by the order
@@ -117,13 +102,16 @@ def test_running_min_prev_two_phase_matches_window(spark, sf_dir):
         )
     )
     order = [F.col("v").desc(), F.col("k").asc()]
-    a = sorted(
-        (r.k, r.v, r["__prevmin"])
-        for r in running_min_prev_ordered(lvl, order, "v", force="window").collect()
+    window = lvl.withColumn(
+        "__prevmin",
+        F.min("v").over(
+            Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
+        ),
     )
+    a = sorted((r.k, r.v, r["__prevmin"]) for r in window.collect())
     b = sorted(
         (r.k, r.v, r["__prevmin"])
-        for r in running_min_prev_ordered(lvl, order, "v", force="twophase").collect()
+        for r in running_min_prev_ordered(lvl, order, "v").collect()
     )
     assert len(a) > 50 and a == b
     assert sum(1 for _, _, p in a if p is None) == 1  # exactly the first row
@@ -131,19 +119,15 @@ def test_running_min_prev_two_phase_matches_window(spark, sf_dir):
 
 def test_cumulative_sum_extra_value_cols(spark, sf_dir):
     """extra_value_cols running sums must match per-column single-sort
-    windows in both branches."""
+    windows."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).alias("a"),
         F.length("text").alias("b"),
     )
     order = [F.col("doc_id").asc()]
-    win = cumulative_sum_ordered(
-        docs, order, "a", force="window", extra_value_cols=["b"]
-    )
-    two = cumulative_sum_ordered(
-        docs, order, "a", force="twophase", extra_value_cols=["b"]
-    )
+    win = _global_window_cum(docs, order, "a", extra=["b"])
+    two = cumulative_sum_ordered(docs, order, "a", extra_value_cols=["b"])
     rows_w = sorted(
         (r.doc_id, r["__cum"], r["__cum_b"], r["__rank"]) for r in win.collect()
     )
@@ -202,11 +186,9 @@ def test_bloom_prune_actually_prunes(spark, sf_dir):
 
     cust = load(spark, sf_dir, "customer")
     seg = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    words = bloom_bitmap(
-        (r.bit for r in bloom_bits(seg, "c_custkey", 5, 1024).collect()), 1024
-    )
+    words = bloom_bitmap(r.bit for r in bloom_bits(seg, "c_custkey").collect())
     o = load(spark, sf_dir, "orders")
-    pred = bloom_pred(F.col("o_custkey"), words, 5, 1024)
+    pred = bloom_pred(F.col("o_custkey"), words)
     total = o.count()
     pruned = o.filter(pred).count()
     true_n = o.join(
@@ -248,13 +230,11 @@ def test_cumulative_sum_two_phase_edge_cases(spark):
     from nabatshy_spark.operators.stats import cumulative_sum_ordered
 
     empty = spark.createDataFrame([], "k long, v long")
-    out = cumulative_sum_ordered(
-        empty, [F.col("v").asc(), F.col("k").asc()], "v", force="twophase"
-    )
+    out = cumulative_sum_ordered(empty, [F.col("v").asc(), F.col("k").asc()], "v")
     assert out.count() == 0
     one = spark.createDataFrame([(7, 42)], "k long, v long")
     rows = cumulative_sum_ordered(
-        one, [F.col("v").asc(), F.col("k").asc()], "v", force="twophase"
+        one, [F.col("v").asc(), F.col("k").asc()], "v"
     ).collect()
     assert len(rows) == 1
     r = rows[0]

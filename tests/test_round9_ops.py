@@ -23,7 +23,6 @@ def test_shared_ngram_pairs_identical_to_direct(spark, sf_dir, tmp_path):
             load(spark, sf_dir, "documents"),
             "doc_id",
             "text",
-            n=3,
             threshold=0.5,
             max_df=200,
         )
@@ -303,7 +302,7 @@ def test_cross_corpus_runs_planted_leak(spark):
     )
     bench = _mkdocs(spark, [(100, f"benchmark question {passage} answer")])
     out = suffixes.cross_corpus_substring_runs(
-        corpus, bench, "doc_id", "text", min_len=50, max_df=None
+        corpus, bench, "doc_id", "text", max_df=None
     ).collect()
     assert len(out) == 1
     r = out[0]
@@ -330,7 +329,7 @@ def test_cross_corpus_probe_prunes_before_shuffle(spark):
     )
     bench = _mkdocs(spark, [(100, "benchmark only words that match nothing " * 6)])
     out = suffixes.cross_corpus_substring_runs(
-        corpus, bench, "doc_id", "text", min_len=50, max_df=200
+        corpus, bench, "doc_id", "text", max_df=200
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan and "BroadcastHashJoin" in plan

@@ -127,6 +127,7 @@ def test_error_codes(api):
         ("/v1/traces/slowest?n=x", 400),
         ("/v1/traces/slowest?n=-3", 400),
         ("/v1/search?timeRange=24h&sortField=bogus", 400),
+        ("/v1/search?timeRange=24h&sortOrder=sideways", 400),
         ("/v1/search?timeRange=24h&pageSize=-1", 400),
         ("/v1/search?timeRange=24h&page=0", 400),
         # percentile outside [0, 100]
@@ -161,6 +162,10 @@ def test_error_codes(api):
         if code == 400:
             assert e.value.headers["Content-Type"] == "application/json"
             assert json.load(e.value)["error"], path
+    # sortOrder is read in any case; only asc and desc are valid
+    route = "/v1/search?timeRange=24h&sortField=name&pageSize=15&sortOrder="
+    assert _raw(api, route + "DESC") == _raw(api, route + "desc")
+    assert _raw(api, route + "DESC") != _raw(api, route + "asc")
 
 
 def test_zero_length_range_answers_empty(api):

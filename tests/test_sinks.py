@@ -95,34 +95,6 @@ def test_schema_evolution_append_and_merged_read(spark):
         assert merged.filter(F.col("deployment_env") == "prod").count() == n
 
 
-def test_orc_sink_roundtrip_matches_parquet(spark, tmp_path):
-    """The ORC format option writes the same partitioned layout and
-    reads back identical rows."""
-    from tests.test_otlp_ingest import _payload
-
-    batch = ingest_batch(spark, [_payload()])
-    append_spans(batch, str(tmp_path / "p"))
-    append_spans(batch, str(tmp_path / "o"), fmt="orc")
-    # Scalar columns only: map-typed attr columns stringify with
-    # engine-dependent key order, which is not a data difference.
-    cols = [
-        c
-        for c, t in read_spans(spark, str(tmp_path / "p")).dtypes
-        if not t.startswith(("map", "array", "struct"))
-    ]
-    pq = {
-        tuple(str(v) for v in r)
-        for r in read_spans(spark, str(tmp_path / "p")).select(cols).collect()
-    }
-    orc = {
-        tuple(str(v) for v in r)
-        for r in read_spans(spark, str(tmp_path / "o"), fmt="orc")
-        .select(cols)
-        .collect()
-    }
-    assert orc == pq and len(orc) > 0
-
-
 def test_concurrent_appends_to_one_path_all_land(spark, tmp_path):
     """Threads (as the JSON and protobuf ingest streams do) append to
     one table path; Spark stages every append under the same

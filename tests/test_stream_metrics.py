@@ -1,5 +1,5 @@
 """StreamingQueryListener-based progress metrics: one row per
-micro-batch with input rows and duration; the tee sink fires."""
+micro-batch with input rows and duration."""
 
 from __future__ import annotations
 
@@ -12,8 +12,7 @@ def test_progress_recorder_captures_batches(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     schema = "id long"
-    teed = []
-    rec = metrics.attach(spark, sink_fn=teed.append)
+    rec = metrics.attach(spark)
     try:
         stream = spark.readStream.schema(schema).parquet(str(src))
         q = (
@@ -46,8 +45,5 @@ def test_progress_recorder_captures_batches(spark, tmp_path):
         assert [r["input_rows"] for r in rows] == [3, 5]
         assert all(r["query_name"] == "metered" for r in rows)
         assert all(r["batch_duration_ms"] >= 0 for r in rows)
-        assert [t["input_rows"] for t in teed if t["input_rows"] > 0] == [3, 5]
-        report = metrics.progress_report(spark, rec)
-        assert report.filter("input_rows > 0").count() == 2
     finally:
         spark.streams.removeListener(rec)
